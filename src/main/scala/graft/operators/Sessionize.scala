@@ -37,7 +37,7 @@ object Sessionize {
 
   /**
    * Stateful form: identical semantics computed by a streaming
-   * per-partition fold ([[StatefulFold.foldPartitions]]) — the shape
+   * per-key fold ([[StatefulFold.foldPartitions]]) — the shape
    * the truly non-relational state machines use. Exists so the fold
    * machinery has an independently-checkable oracle (its output must
    * match [[byGap]] row for row).

@@ -18,11 +18,11 @@ import org.apache.spark.sql.types.StructType
  *     group. Right when a single group (a game, a user's day) is
  *     bounded; 100 TB of games is fine because no executor ever holds
  *     more than one game.
- *  2. [[foldPartitions]] — `repartition(key).sortWithinPartitions
- *     (key, order)` + streaming `mapPartitions` that resets state on
- *     key change. Never materializes a group at all, so it also
- *     survives pathological groups; this is the shape to prefer for
- *     skew-prone keys.
+ *  2. [[foldPartitions]] — `groupBy(key).flatMapSortedGroups(order)`:
+ *     the sort runs in the operator and each group streams through
+ *     the fold, resetting state per key. Never materializes a group at
+ *     all, so it also survives pathological groups; this is the shape
+ *     to prefer for skew-prone keys.
  */
 object StatefulFold {
 
@@ -35,58 +35,35 @@ object StatefulFold {
     }
 
   /**
-   * Shape 2: streaming fold over sorted partitions. `step` receives
-   * the running state (fresh from `init` whenever the key columns
-   * change) and emits zero or more output rows per input row.
+   * Shape 2: streaming fold over each key group in `orderCols` order.
+   * `step` receives the running state (fresh from `init` at the first
+   * row of every group) and emits zero or more output rows per input
+   * row.
+   *
+   * The grouping is on the existing key attributes, so the planner
+   * adds a hash exchange only when the input is not already clustered
+   * on them: an upstream window or aggregate keyed on the same columns
+   * (or a subset) is reused, anything else is shuffled. The sorted
+   * group streams through the fold and is never held in memory.
    */
   def foldPartitions[S](
       df: DataFrame,
       keyCols: Seq[String],
       orderCols: Seq[Column],
-      outSchema: StructType,
-      alreadyPartitioned: Boolean = false)(
+      outSchema: StructType)(
       init: Row => S,
       step: (S, Row) => (S, Iterator[Row])): DataFrame = {
-
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    // `alreadyPartitioned = true` skips the shuffle: the CALLER asserts
-    // every row of a key group is already in one partition (e.g. the
-    // pbp chain, where an upstream window exchange hash-partitioned on
-    // the same key and nothing reshuffled since). The local sort still
-    // runs — only the exchange of the full-width rows is saved.
-    val clustered =
-      if (alreadyPartitioned) df else df.repartition(keyCols.map(col): _*)
-    val sorted = clustered
-      .sortWithinPartitions(keyCols.map(col) ++ orderCols: _*)
-
-    implicit val enc: Encoder[Row] = Encoders.row(outSchema)
-    val keyIdxArr = keyIdx.toArray
-    sorted.mapPartitions { rows =>
-      // per-row key compare without a Seq allocation (hot path: the
-      // fold runs per play; boxing the key tuple per row showed up in
-      // the sf0.1 profile)
-      var currentKey: Array[Any] = null
-      var state: S = null.asInstanceOf[S]
-      rows.flatMap { row =>
-        var changed = currentKey == null
-        if (!changed) {
-          var i = 0
-          while (i < keyIdxArr.length && !changed) {
-            if (row.get(keyIdxArr(i)) != currentKey(i)) changed = true
-            i += 1
-          }
+    val keyEnc = Encoders.row(StructType(keyCols.map(df.schema(_))))
+    df.groupBy(keyCols.map(col): _*).as(keyEnc, Encoders.row(df.schema))
+      .flatMapSortedGroups(orderCols: _*) { (_: Row, rows: Iterator[Row]) =>
+        var state: S = null.asInstanceOf[S]
+        var first = true
+        rows.flatMap { row =>
+          if (first) { state = init(row); first = false }
+          val (s2, out) = step(state, row)
+          state = s2
+          out
         }
-        if (changed) {
-          val k = new Array[Any](keyIdxArr.length)
-          var i = 0
-          while (i < keyIdxArr.length) { k(i) = row.get(keyIdxArr(i)); i += 1 }
-          currentKey = k
-          state = init(row)
-        }
-        val (s2, out) = step(state, row)
-        state = s2
-        out
-      }
-    }
+      }(Encoders.row(outSchema))
   }
 }

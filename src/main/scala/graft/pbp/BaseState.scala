@@ -6,8 +6,8 @@ package graft.pbp
  * `determine_batter_and_runners`) as a pure fold
  * `(State, Play) => (State, Out)` — deterministic, unit-testable
  * without Spark, and executed per game via
- * [[graft.operators.StatefulFold]] (`groupByKey(contest_id)` — no
- * executor ever holds more than one game).
+ * [[graft.operators.StatefulFold.foldPartitions]] (grouped on
+ * contest_id, each game streamed through the fold in play order).
  *
  * Semantics preserved exactly, including the reference's quirks:
  *  - runner state resets on new game OR new inning;

@@ -1,7 +1,7 @@
 package graft.pbp
 
 import graft.operators.StatefulFold
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
  * [[Parsing]] functions; the only non-codegen island is the X1 fold,
  * exactly as SURVEY §4 plans. Ordering key inside a game is
  * `play_id`; the state machine runs via [[StatefulFold.foldPartitions]]
- * (repartition by contest_id + streaming fold — no per-game
- * materialization).
+ * (grouped on contest_id, which the window chain has already
+ * partitioned on + streaming fold — no per-game materialization).
  *
  * Input schema: contest_id (long), inning (int), away_text, home_text
  * (strings, one null per row).
@@ -214,15 +214,11 @@ object PbpPipeline {
     "r1_after", "r2_after", "r3_after", "bases_after")
 
   /** base state (X1): the fold over plays per game, via the streaming
-    * partition fold. In the [[parse]] chain the metadata window has
-    * already hash-partitioned rows by contest_id (and later windows
-    * key on supersets, which reuse that exchange), so the fold passes
-    * `alreadyPartitioned = true` and skips re-shuffling the full-width
-    * rows — callers outside the chain get the safe default. */
-  def baseState(df: DataFrame): DataFrame = baseState(df, alreadyPartitioned = false)
-
-  def baseState(df: DataFrame, alreadyPartitioned: Boolean): DataFrame = {
-    val inCols = df.columns
+    * group fold. In the [[parse]] chain the metadata window has already
+    * hash-partitioned rows by contest_id (and later windows key on
+    * supersets, which reuse that exchange), so the planner adds no
+    * exchange below the fold; any other input is shuffled by game. */
+  def baseState(df: DataFrame): DataFrame = {
     val outSchema = StructType(df.schema.fields ++
       stateOutFields.map(f => StructField(f, StringType, nullable = true)))
     val idx = Map(
@@ -238,7 +234,7 @@ object PbpPipeline {
 
     val inWidth = df.schema.length
     StatefulFold.foldPartitions[BaseState.State](
-      df, Seq("contest_id"), Seq(col("play_id")), outSchema, alreadyPartitioned)(
+      df, Seq("contest_id"), Seq(col("play_id")), outSchema)(
       init = _ => BaseState.emptyState,
       step = { (st, row) =>
         def s(f: String) = Option(row.getString(idx(f))).getOrElse("")
@@ -274,12 +270,54 @@ object PbpPipeline {
       .drop("__ebb")
 
   /**
+   * Per-game enrichment of full play rows against a game-keyed
+   * dimension: ONE cogroup, both sides grouped on their `contest_id`
+   * column (the dimension's cast to the plays' key type so both sides
+   * hash alike). Grouping on the existing attribute lets the planner
+   * reuse whatever game partitioning the play side already has (the
+   * parse chain's window exchange), so only the dimension shuffles.
+   *
+   * `enrich` sees one game's plays and all of its dimension rows and
+   * returns each play with the values of `added` (string columns).
+   * Plays of a game without dimension rows still reach `enrich`;
+   * dimension-only games emit nothing. Output layout is the one a
+   * left USING join on (contest_id, play_id) gives: contest_id,
+   * play_id, the other input columns minus `drop` in input order, then
+   * `added`.
+   */
+  private[pbp] def enrichByGame(
+      plays: DataFrame, dim: DataFrame, drop: Seq[String], added: Seq[String])(
+      enrich: (Iterator[Row], Seq[Row]) => Iterator[(Row, Array[Any])]): DataFrame = {
+    val key = plays.schema("contest_id")
+    val keyEnc = Encoders.row(StructType(Seq(key)))
+    val front = Seq("contest_id", "play_id")
+    val kept = plays.schema.fields.filterNot(f => front.contains(f.name) || drop.contains(f.name))
+    val outSchema = StructType(front.map(plays.schema(_)) ++ kept ++
+      added.map(StructField(_, StringType, nullable = true)))
+    val srcIdx = (front ++ kept.map(_.name)).map(plays.schema.fieldIndex).toArray
+    val dimByGame = dim.withColumn("contest_id", col("contest_id").cast(key.dataType))
+    plays.groupBy(col("contest_id")).as(keyEnc, Encoders.row(plays.schema))
+      .cogroup(dimByGame.groupBy(col("contest_id")).as(keyEnc, Encoders.row(dimByGame.schema))) {
+        (_: Row, ps: Iterator[Row], ds: Iterator[Row]) =>
+          enrich(ps, ds.toSeq).map { case (row, vals) =>
+            val arr = new Array[Any](srcIdx.length + vals.length)
+            var i = 0
+            while (i < srcIdx.length) { arr(i) = row.get(srcIdx(i)); i += 1 }
+            System.arraycopy(vals, 0, arr, srcIdx.length, vals.length)
+            Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
+          }
+      }(Encoders.row(outSchema))
+  }
+
+  /**
    * X2 integration — the standardize_names stage's pitcher assignment
    * (reference `names/names.py:40-97,210-293`): per game, fold plays
-   * through the pitcher-queue machine against the ordered pitching
-   * lineups. Lineups are game-keyed dimension data: grouped per game
-   * and joined through one cogroup on contest_id (both sides shuffle
-   * once on the game key; queue state never leaves one group).
+   * in play_id order through the pitcher-queue machine against the
+   * ordered pitching lineups, inside one [[enrichByGame]] cogroup on
+   * contest_id. The full parsed rows go through the cogroup and come
+   * out with `pitcher_name`, `pitcher_id` appended; on the parse chain
+   * the play side is not re-shuffled, only the lineups are. Queue state
+   * never leaves one game.
    *
    * @param parsed   parse() output with a `pitch_team_id` column
    *                 (away/home team by half — derive upstream)
@@ -287,35 +325,26 @@ object PbpPipeline {
    *                 player_id, pitch_order)
    */
   def withPitchers(parsed: DataFrame, pitchingLineups: DataFrame): DataFrame = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-
-    val plays = parsed
-      .select(col("contest_id").cast("long"), col("play_id").cast("int"),
-        col("pitch_team_id").cast("string"),
-        (col("pitcher_sub_fl") === 1).as("is_sub"), col("sub_in"))
-      .as[(Long, Int, String, Boolean, String)]
     val lineups = pitchingLineups
-      .select(col("contest_id").cast("long"), col("team_id").cast("string"),
+      .select(col("contest_id"), col("team_id").cast("string"),
         col("player_name").cast("string"), col("player_id").cast("string"),
         col("pitch_order").cast("int"))
-      .as[(Long, String, String, String, Int)]
+    val Seq(playIdx, teamIdx, subFlIdx, subInIdx) =
+      Seq("play_id", "pitch_team_id", "pitcher_sub_fl", "sub_in").map(parsed.schema.fieldIndex)
 
-    val assigned = plays.groupByKey(_._1).cogroup(lineups.groupByKey(_._1)) {
-      (contestId, ps, ls) =>
-        val queues = ls.toSeq.groupBy(_._2).map { case (team, rows) =>
-          team -> rows.sortBy(_._5).map(r => (r._3, r._4))
-        }
-        val ordered = ps.toSeq.sortBy(_._2)
-        val out = PitcherQueue.runGame(
-          ordered.map(p => PitcherQueue.PlayRow(Option(p._3), p._4, Option(p._5).getOrElse(""))),
-          queues)
-        ordered.zip(out).iterator.map { case (p, a) =>
-          (contestId, p._2, a.pitcherName, a.pitcherId.orNull)
-        }
-    }.toDF("contest_id", "play_id", "pitcher_name", "pitcher_id")
-
-    parsed.join(assigned, Seq("contest_id", "play_id"), "left")
+    enrichByGame(parsed, lineups, Nil, Seq("pitcher_name", "pitcher_id")) { (ps, ls) =>
+      val queues = ls.groupBy(_.getString(1)).map { case (team, rows) =>
+        team -> rows.sortBy(_.getInt(4)).map(r => (r.getString(2), r.getString(3)))
+      }
+      val ordered = ps.toVector.sortBy(_.getInt(playIdx))
+      val out = PitcherQueue.runGame(
+        ordered.map(p => PitcherQueue.PlayRow(Option(p.getString(teamIdx)),
+          p.getInt(subFlIdx) == 1, Option(p.getString(subInIdx)).getOrElse(""))),
+        queues)
+      ordered.iterator.zip(out).map { case (p, a) =>
+        (p, Array[Any](a.pitcherName, a.pitcherId.orNull))
+      }
+    }
   }
 
   /** The season from which raw feeds carry scraped `away_score`/
@@ -325,7 +354,7 @@ object PbpPipeline {
   /** Full parser stage over raw (contest_id, seq, away_text,
     * home_text, inning) rows — text-derived runs branch. */
   def parse(raw: DataFrame): DataFrame =
-    batOrder(scores(classify(baseState(runs(outs(flags(metadata(raw)))), alreadyPartitioned = true))))
+    batOrder(scores(classify(baseState(runs(outs(flags(metadata(raw))))))))
 
   /**
    * Year-gated parse (reference `pbp_parser/main.py:41-89`
@@ -339,6 +368,6 @@ object PbpPipeline {
     val withRuns =
       if (year >= currentYear && hasScores) runsFromScores(pre)
       else scores(runs(pre))
-    batOrder(classify(baseState(withRuns, alreadyPartitioned = true)))
+    batOrder(classify(baseState(withRuns)))
   }
 }

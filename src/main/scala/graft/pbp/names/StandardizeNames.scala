@@ -1,6 +1,7 @@
 package graft.pbp.names
 
 import graft.functions.Fuzzy
+import graft.pbp.PbpPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,11 +16,12 @@ import org.apache.spark.sql.functions._
  * null id.
  *
  * Spark shape: lineups are game-keyed dims, so per-game matching runs
- * inside ONE cogroup on contest_id (the [[graft.pbp.PbpPipeline
- * .withPitchers]] pattern) — lookups never leave their task; the
- * team-wide fallback lookup is roster-scale and BROADCAST. The
- * matched columns join back on (contest, play) — two dim-sized
- * shuffles total, independent of pbp volume.
+ * inside ONE cogroup on contest_id over the full play rows (the
+ * [[graft.pbp.PbpPipeline.withPitchers]] pattern) — lookups never
+ * leave their task and each play row comes out once with its matched
+ * columns. The team-wide fallback lookup is roster-scale and
+ * BROADCAST. The lineups always shuffle by game; the plays shuffle
+ * only when their input is not already partitioned on contest_id.
  */
 object StandardizeNames {
 
@@ -96,8 +98,6 @@ object StandardizeNames {
    */
   def apply(spark: SparkSession, parsed: DataFrame, battingLineups: DataFrame,
       threshold: Double = 70.0, maxBroadcastRows: Long = 2000000L): DataFrame = {
-    import spark.implicits._
-
     // team-wide fallback lookup: roster-scale dim, broadcast — but
     // NEVER an unconditional collect of an input table: probe with
     // limit(max+1) first, and beyond the threshold degrade to
@@ -122,47 +122,37 @@ object StandardizeNames {
     val fullOrdered = NameVariants.orderedKeys(rosterRows)
     val bcLookup = spark.sparkContext.broadcast((fullLookup, fullOrdered))
 
-    val plays = parsed.select(
-      col("contest_id").cast("long"), col("play_id").cast("int"),
-      col("bat_team_id").cast("string"),
-      col("batter_name").cast("string"), col("r1_name").cast("string"),
-      col("r2_name").cast("string"), col("r3_name").cast("string"),
-      col("player_of_interest").cast("string"))
-      .as[(Long, Int, String, String, String, String, String, String)]
     val lineups = battingLineups.select(
-      col("contest_id").cast("long"), col("team_id").cast("string"),
+      col("contest_id"), col("team_id").cast("string"),
       col("player_name").cast("string"), col("player_id").cast("string"))
-      .as[(Long, String, String, String)]
+    val teamIdx = parsed.schema.fieldIndex("bat_team_id")
+    val nameIdx = nameCols.map { case (in, _, _) => parsed.schema.fieldIndex(in) }.toArray
+    val dropped = nameCols.flatMap { case (in, name, id) => Seq(in, name, id) }.distinct
+    val added = nameCols.flatMap { case (_, name, id) => Seq(name, id) }
 
-    val matched = plays.groupByKey(_._1).cogroup(lineups.groupByKey(_._1)) {
-      (contestId, ps, ls) =>
-        val (full, ordered) = bcLookup.value
-        // per-team game lookup, lineup rows in deterministic order
-        val byTeam = ls.toSeq.sortBy(r => (r._2, r._4, r._3)).groupBy(_._2)
-          .map { case (team, rows) =>
-            team -> buildGameLookup(rows.map(r => (r._3, r._4)))
-          }
-        val emptyLookup = scala.collection.mutable.LinkedHashMap
-          .empty[String, (String, String)]
-        ps.map { p =>
-          val team = p._3
-          val gl = byTeam.getOrElse(team, emptyLookup)
-          def m(n: String) = matchPlayerInGame(n, team, gl, full, ordered, threshold)
-          val (bn, bi) = m(p._4)
-          val (r1n, r1i) = m(p._5)
-          val (r2n, r2i) = m(p._6)
-          val (r3n, r3i) = m(p._7)
-          val (pn, pi) = m(p._8)
-          (contestId, p._2, bn, bi, r1n, r1i, r2n, r2i, r3n, r3i, pn, pi)
+    PbpPipeline.enrichByGame(parsed, lineups, dropped, added) { (ps, ls) =>
+      val (full, ordered) = bcLookup.value
+      // per-team game lookup, lineup rows in deterministic order
+      val byTeam = ls.sortBy(r => (r.getString(1), r.getString(3), r.getString(2)))
+        .groupBy(_.getString(1))
+        .map { case (team, rows) =>
+          team -> buildGameLookup(rows.map(r => (r.getString(2), r.getString(3))))
         }
-    }.toDF("contest_id", "play_id", "batter_name", "batter_id",
-      "r1_name", "r1_id", "r2_name", "r2_id", "r3_name", "r3_id",
-      "player_name", "player_id")
-
-    parsed
-      .drop("batter_name", "r1_name", "r2_name", "r3_name",
-        "player_of_interest", "batter_id", "r1_id", "r2_id", "r3_id",
-        "player_name", "player_id")
-      .join(matched, Seq("contest_id", "play_id"), "left")
+      val emptyLookup = scala.collection.mutable.LinkedHashMap
+        .empty[String, (String, String)]
+      ps.map { p =>
+        val team = p.getString(teamIdx)
+        val gl = byTeam.getOrElse(team, emptyLookup)
+        val vals = new Array[Any](2 * nameIdx.length)
+        var i = 0
+        while (i < nameIdx.length) {
+          val (n, id) = matchPlayerInGame(
+            p.getString(nameIdx(i)), team, gl, full, ordered, threshold)
+          vals(2 * i) = n; vals(2 * i + 1) = id
+          i += 1
+        }
+        (p, vals)
+      }
+    }
   }
 }

@@ -562,7 +562,7 @@ object QJoin {
 
     // X-family fold machinery with a relational oracle: a running
     // balance that RESETS on signup events, computed by the streaming
-    // per-partition fold ([[StatefulFold.foldPartitions]] — the same
+    // per-key fold ([[StatefulFold.foldPartitions]] — the same
     // execution shape as the base-runner machine X1) and checked
     // against a segmented window-sum in SQL.
     QueryDef.of("x01_stateful_fold_balance",

@@ -132,10 +132,7 @@ object QPbp {
     * PitcherQueue / StandardizeNames / the sub-line regex bank breaks
     * it. */
   def pitcherStandardizeSummary(s: SparkSession, dir: String): DataFrame = {
-    // pruned + cached (the pbp01 pattern): the parse chain feeds the
-    // pitcher cogroup, the standardize cogroup, AND both join-backs —
-    // uncached it re-runs once per consumer (~4× the whole UDF+window+
-    // fold pipeline); cache only the 11 columns those consumers read
+    // pruned to the 11 columns the two cogroups and the summary read
     val parsed = PbpPipeline.parse(rawPbpWithSubs(s, dir))
       .withColumns(Map(
         // pitch team = the side NOT batting: Top half → home pitches
@@ -146,7 +143,6 @@ object QPbp {
       .select("contest_id", "play_id", "pitch_team_id", "bat_team_id",
         "pitcher_sub_fl", "sub_in", "batter_name", "r1_name", "r2_name",
         "r3_name", "player_of_interest")
-      .cache()
     val std = StandardizeNames(s, PbpPipeline.withPitchers(parsed, pitchingLineups(s, dir)),
       battingLineups(s, dir))
     std.groupBy(col("pitcher_name"))

@@ -338,7 +338,7 @@ object StreamOps {
     // bounded input the watermark machinery is meaningless — fold each
     // game's complete history in order, one group in memory at a time
     // (the flatMapGroupsSorted shape; a game is bounded). Specced ≡
-    // the PbpPipeline.baseState partition fold.
+    // the PbpPipeline.baseState group fold.
     if (!plays.isStreaming)
       return plays.groupByKey(_.contest_id).flatMapGroups {
         (g: Long, it: Iterator[PlayEvent]) =>

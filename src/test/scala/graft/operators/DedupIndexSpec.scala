@@ -64,10 +64,11 @@ class DedupIndexSpec extends AnyFunSuite {
     // the grown stores are table-identical (the fused path appends the
     // gate's id-filtered shingle frame — a pure per-doc function, so
     // every row must match the re-shingled sequential path)
-    def rows(p: String, table: String): Set[String] = {
+    // compared as multisets (row -> count): a duplicated row must fail
+    def rows(p: String, table: String): Map[String, Int] = {
       val m = StoreManifest.current(spark, p)
       spark.read.parquet(s"$p/$table/v${m(table)}")
-        .collect().map(_.mkString("|")).toSet
+        .collect().map(_.mkString("|")).groupMapReduce(identity)(_ => 1)(_ + _)
     }
     for (t <- Seq("shingles", "sizes", "bands"))
       assert(rows(pathFus, t) === rows(pathSeq, t), s"table $t diverged")

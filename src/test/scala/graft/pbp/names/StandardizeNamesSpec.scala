@@ -54,4 +54,34 @@ class StandardizeNamesSpec extends AnyFunSuite {
     assert(out.getAs[String]("r3_name") === "")
     assert(out.getAs[String]("player_id") === "id_rj")
   }
+
+  test("games without lineup rows keep every play; lineup-only games emit nothing; layout") {
+    // game 3 has no lineup rows: its plays fall through to the
+    // team-wide tier (T1) or stay unmatched (T9); game 2 has lineup
+    // rows but no plays. Extra and stale id columns pin the layout.
+    val plays = Seq(
+      (7, 3L, "T1", 1, "John Smith", "x", "stale", "Carl Fisher", null, null, null),
+      (7, 3L, "T9", 2, "Zz Unknown Qq", "y", "stale", null, null, null, "J. Smith"),
+      (8, 1L, "T1", 1, "J. Smith", "z", "stale", null, null, null, null))
+      .toDF("inning", "contest_id", "bat_team_id", "play_id", "batter_name", "note",
+        "batter_id", "r1_name", "r2_name", "r3_name", "player_of_interest")
+    val out = StandardizeNames(spark, plays, lineups)
+    assert(out.columns.toSeq === Seq("contest_id", "play_id", "inning", "bat_team_id",
+      "note", "batter_name", "batter_id", "r1_name", "r1_id", "r2_name", "r2_id",
+      "r3_name", "r3_id", "player_name", "player_id"))
+    val rows = out.collect()
+    assert(rows.length === 3)
+    assert(!rows.exists(_.getAs[Long]("contest_id") == 2L))
+    val g3 = rows.filter(_.getAs[Long]("contest_id") == 3L)
+      .map(r => r.getAs[Int]("play_id") -> r).toMap
+    assert(g3(1).getAs[String]("batter_id") === "id_js")
+    assert(g3(1).getAs[String]("r1_id") === "id_cf")
+    assert(g3(1).getAs[Int]("inning") === 7)
+    assert(g3(1).getAs[String]("note") === "x")
+    assert(g3(2).getAs[String]("batter_name") === "Zz Unknown Qq")
+    assert(g3(2).getAs[String]("batter_id") === null)
+    assert(g3(2).getAs[String]("player_name") === "J. Smith")
+    assert(g3(2).getAs[String]("player_id") === null)
+    assert(g3(2).getAs[String]("r1_name") === "")
+  }
 }
