@@ -34,6 +34,11 @@ import graft.plans.{CharNgramsExpr, DotProductExpr, SimHash60Expr}
  * scoring) are deliberately NOT SQL functions — their model argument
  * is session state a SQL literal cannot carry; they stay DataFrame
  * API entry points.
+ *
+ * It also installs the planner strategy for the per-key append
+ * operator ([[org.apache.spark.sql.graft.PerKeyAppend]]) behind the
+ * pbp parse, pitcher and name passes. The strategy object loads when
+ * the session's planner is first built, not when the session starts.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -41,6 +46,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.PerKeyAppendStrategy)
     ext.injectFunction((FunctionIdentifier("graft_simhash60"),
       info("graft_simhash60", "graft_simhash60(tokens) - 60-bit simhash of a token array"),
       (args: Seq[Expression]) => {

@@ -47,13 +47,4 @@ object GraftSession {
     graft.util.Metrics.enableLogging(spark)
     spark
   }
-
-  /** Apply the engine's runtime confs to an externally-created session
-    * (the driver harness builds its own in Verify/Bench). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
 }

@@ -129,9 +129,9 @@ object RunAll {
     val parsed0 = addTeams(graft.pbp.PbpPipeline.parse(rawPbp), inputs.teams)
 
     // 1b. pitcher assignment (standardize_names X2 stage) when pitching
-    // lineups exist: the full parsed rows go through one per-game
-    // cogroup on contest_id that appends the pitcher columns, reusing
-    // the parse's game partitioning (only the lineups shuffle).
+    // lineups exist: one per-game pass over the full parsed rows
+    // appends the pitcher columns, reusing the parse's game
+    // partitioning (only the lineups shuffle).
     // Otherwise empty pitcher columns (round-2 stub, now only on the
     // degraded path)
     val parsed1 = inputs.pitchingLineups match {
@@ -145,8 +145,8 @@ object RunAll {
     // 1c. batter/runner standardization (standardize_names stage):
     // with game-keyed batting lineups, the full cascade resolves every
     // name column to canonical lineup names + real player ids in a
-    // second per-game cogroup over the full rows, so steps 1-1c read
-    // the parse once; otherwise the parser's names ARE the keys (reference
+    // second per-game pass over the full rows, so steps 1-1c shuffle
+    // the plays once; otherwise the parser's names ARE the keys (reference
     // pre-cube-mapping behavior)
     val lineupCols = Seq("contest_id", "team_id", "player_name", "player_id")
     val parsed2 = inputs.battingLineups match {

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /**
- * Ordered per-group state machines — the engine's home for the
- * reference's genuinely sequential logic (SURVEY §2.9): the
- * base-runner state machine (reference
- * `processors/pbp_parser/columns.py:332-529`) and the pitcher queue
- * (`processors/names/names.py:40-97`), and generically any
- * "fold rows in event order, carrying state" computation.
+ * Ordered per-group state machines over typed rows: any "fold rows in
+ * event order, carrying state" computation that emits its own rows —
+ * sessionization ([[Sessionize]]), sequence packing ([[Packing]]) and
+ * the x01 per-key fold. The pbp machines (base runners, pitcher
+ * queues) append columns to every play instead, and run in the
+ * per-game operator `org.apache.spark.sql.graft.PerKeyAppend`.
  *
  * Two execution shapes, both cluster-safe:
  *

@@ -5,9 +5,9 @@ package graft.pbp
  * `processors/pbp_parser/columns.py:332-529`,
  * `determine_batter_and_runners`) as a pure fold
  * `(State, Play) => (State, Out)` — deterministic, unit-testable
- * without Spark, and executed per game via
- * [[graft.operators.StatefulFold.foldPartitions]] (grouped on
- * contest_id, each game streamed through the fold in play order).
+ * without Spark, and executed per game inside the parser's one
+ * per-game pass ([[PbpPipeline.parse]], each game's plays folded in
+ * play order).
  *
  * Semantics preserved exactly, including the reference's quirks:
  *  - runner state resets on new game OR new inning;
@@ -65,8 +65,7 @@ object BaseState {
     // evaluate each regex gate ONCE per row: extractBatterName would
     // re-run both blankIfSubOrMeta and isRunnerOnlyEvent internally,
     // and the early-return below needs blankIfSubOrMeta again — the
-    // fold is the engine's non-codegen island, so per-row regex count
-    // is its constant factor
+    // per-row regex count is the fold's constant factor
     val isRunnerEvent = Parsing.isRunnerOnlyEvent(p1i)
     val blankMeta = Parsing.blankIfSubOrMeta(p1i, play.subFl)
 

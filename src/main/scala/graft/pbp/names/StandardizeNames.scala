@@ -2,7 +2,7 @@ package graft.pbp.names
 
 import graft.functions.Fuzzy
 import graft.pbp.PbpPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -16,12 +16,13 @@ import org.apache.spark.sql.functions._
  * null id.
  *
  * Spark shape: lineups are game-keyed dims, so per-game matching runs
- * inside ONE cogroup on contest_id over the full play rows (the
- * [[graft.pbp.PbpPipeline.withPitchers]] pattern) — lookups never
- * leave their task and each play row comes out once with its matched
- * columns. The team-wide fallback lookup is roster-scale and
- * BROADCAST. The lineups always shuffle by game; the plays shuffle
- * only when their input is not already partitioned on contest_id.
+ * in ONE per-game pass over the full play rows (the
+ * [[graft.pbp.PbpPipeline.withPitchers]] pattern,
+ * `PbpPipeline.enrichByGame`) — lookups never leave their task and
+ * each play row comes out once with its matched columns. The
+ * team-wide fallback lookup is roster-scale and BROADCAST. The lineups
+ * always shuffle by game; the plays shuffle only when their input is
+ * not already partitioned on contest_id.
  */
 object StandardizeNames {
 
@@ -108,13 +109,14 @@ object StandardizeNames {
       .select(col("team_id").cast("string"), col("player_name").cast("string"),
         col("player_id").cast("string"))
       .distinct()
-    val fits = rosterDim.limit(math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt).count() <= maxBroadcastRows
+    val probe = rosterDim.limit(math.min(maxBroadcastRows + 1, Int.MaxValue.toLong).toInt).collect()
+    val fits = probe.length <= maxBroadcastRows
     if (!fits) System.err.println(
       s"[graft-metric] standardize_names_fallback_disabled roster > $maxBroadcastRows rows; " +
         "cross-game fallback tier skipped (game-lookup matching only)")
     val rosterRows =
       if (!fits) Seq.empty
-      else rosterDim.collect()
+      else probe
         .map(r => (r.getString(0), r.getString(1), r.getString(2), Option.empty[String]))
         .sortBy(r => (r._1, r._3, r._2)) // deterministic insertion order
         .toSeq
@@ -125,12 +127,11 @@ object StandardizeNames {
     val lineups = battingLineups.select(
       col("contest_id"), col("team_id").cast("string"),
       col("player_name").cast("string"), col("player_id").cast("string"))
-    val teamIdx = parsed.schema.fieldIndex("bat_team_id")
-    val nameIdx = nameCols.map { case (in, _, _) => parsed.schema.fieldIndex(in) }.toArray
     val dropped = nameCols.flatMap { case (in, name, id) => Seq(in, name, id) }.distinct
     val added = nameCols.flatMap { case (_, name, id) => Seq(name, id) }
 
-    PbpPipeline.enrichByGame(parsed, lineups, dropped, added) { (ps, ls) =>
+    PbpPipeline.enrichByGame(parsed, lineups, Nil, "bat_team_id" +: nameCols.map(_._1),
+      dropped, added) { (ps, ls) =>
       val (full, ordered) = bcLookup.value
       // per-team game lookup, lineup rows in deterministic order
       val byTeam = ls.sortBy(r => (r.getString(1), r.getString(3), r.getString(2)))
@@ -141,17 +142,16 @@ object StandardizeNames {
       val emptyLookup = scala.collection.mutable.LinkedHashMap
         .empty[String, (String, String)]
       ps.map { p =>
-        val team = p.getString(teamIdx)
+        val team = p.getString(0)
         val gl = byTeam.getOrElse(team, emptyLookup)
-        val vals = new Array[Any](2 * nameIdx.length)
+        val vals = new Array[Any](2 * nameCols.length)
         var i = 0
-        while (i < nameIdx.length) {
-          val (n, id) = matchPlayerInGame(
-            p.getString(nameIdx(i)), team, gl, full, ordered, threshold)
+        while (i < nameCols.length) {
+          val (n, id) = matchPlayerInGame(p.getString(i + 1), team, gl, full, ordered, threshold)
           vals(2 * i) = n; vals(2 * i + 1) = id
           i += 1
         }
-        (p, vals)
+        Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
       }
     }
   }

@@ -132,7 +132,7 @@ object QPbp {
     * PitcherQueue / StandardizeNames / the sub-line regex bank breaks
     * it. */
   def pitcherStandardizeSummary(s: SparkSession, dir: String): DataFrame = {
-    // pruned to the 11 columns the two cogroups and the summary read
+    // pruned to the 11 columns the two per-game passes and the summary read
     val parsed = PbpPipeline.parse(rawPbpWithSubs(s, dir))
       .withColumns(Map(
         // pitch team = the side NOT batting: Top half → home pitches

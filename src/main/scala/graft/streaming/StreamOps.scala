@@ -17,16 +17,17 @@ final case class SessionSummary(
 private final case class SessionState(
     startUs: Long, lastUs: Long, n: Long, cents: Long)
 
-/** One raw play for the streaming X1 replay — exactly the columns
-  * [[graft.pbp.PbpPipeline.baseState]] folds, plus event time. */
+/** One raw play for the streaming X1 replay — exactly the columns the
+  * parser's base-state fold reads ([[graft.pbp.PbpPipeline.parse]]),
+  * plus event time. */
 final case class PlayEvent(
     contest_id: Long, play_id: Long, ts: java.sql.Timestamp,
     new_game_fl: Boolean, new_inn_fl: Boolean, sub_fl: Int,
     sub_in: String, sub_out: String,
     p1_text: String, p2_text: String, p3_text: String, p4_text: String)
 
-/** X1 output per play — the batch fold's ten state columns
-  * ([[graft.pbp.PbpPipeline]] `stateOutFields`) under the same names. */
+/** X1 output per play — the batch parse's ten state columns
+  * ([[graft.pbp.PbpPipeline]] `stateCols`) under the same names. */
 final case class BaseStateOut(
     contest_id: Long, play_id: Long,
     batter_name: String, player_of_interest: String,
@@ -338,7 +339,7 @@ object StreamOps {
     // bounded input the watermark machinery is meaningless — fold each
     // game's complete history in order, one group in memory at a time
     // (the flatMapGroupsSorted shape; a game is bounded). Specced ≡
-    // the PbpPipeline.baseState group fold.
+    // the base-state columns of PbpPipeline.parse.
     if (!plays.isStreaming)
       return plays.groupByKey(_.contest_id).flatMapGroups {
         (g: Long, it: Iterator[PlayEvent]) =>

@@ -5,16 +5,19 @@ import graft.app.RunAll
 import graft.pbp.names.StandardizeNames
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{CoGroupExec, InputAdapter, MapGroupsExec, MapPartitionsExec,
-  SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{CoGroupExec, InputAdapter, MapGroupsExec, SortExec,
+  SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.graft.PerKeyAppendExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end parser-stage test on a synthetic three-game fixture —
-  * exercises metadata → flags → outs → runs (window forms of the
-  * reference's O(n²) loops) → base state → classify through Spark. */
+  * exercises metadata → flags → outs → runs (the per-game pass's forms
+  * of the reference's O(n²) loops) → base state → classify through
+  * Spark. */
 class PbpPipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -167,36 +170,49 @@ class PbpPipelineSpec extends AnyFunSuite {
   }.toDF("contest_id", "seq", "inning", "away_text", "home_text")
     .repartition(7)
 
-  test("parse's shuffle-skipping fold ≡ the explicit-repartition fold on many games") {
-    // the parse chain's fold groups on the contest_id the metadata
-    // window already hash-partitioned on, so the planner adds no
-    // exchange for it; this must equal the fold over the same rows
-    // scattered round-robin, where the fold shuffles by game itself
-    val raw = manyGames
-    val viaChain = PbpPipeline.parse(raw)
-    val pre = PbpPipeline.runs(PbpPipeline.outs(PbpPipeline.flags(PbpPipeline.metadata(raw))))
-    val viaScattered = PbpPipeline.batOrder(PbpPipeline.scores(PbpPipeline.classify(
-      PbpPipeline.baseState(pre.repartition(7)))))
-
-    val cols = Seq("contest_id", "play_id", "batter_name", "bases_before",
-      "bases_after", "outs_before", "runs_on_play", "event_type", "bat_order")
-    def run(df: DataFrame) =
-      PlanShape.run(df.select(cols.head, cols.tail: _*).orderBy("contest_id", "play_id"))
-    val (a, chainPlan) = run(viaChain)
-    val (b, scatteredPlan) = run(viaScattered)
-    assert(a.toSeq === b.toSeq)
-    assert(a.length === 24 * 30)
-
-    val chainFolds = PlanShape.folds(chainPlan)
-    assert(chainFolds.length === 1, chainPlan.treeString)
-    assert(PlanShape.exchangesOn(chainFolds.head, Set("contest_id")) === 1, chainPlan.treeString)
-    val scatteredFolds = PlanShape.folds(scatteredPlan)
-    assert(scatteredFolds.length === 1, scatteredPlan.treeString)
-    assert(PlanShape.exchangesOn(scatteredFolds.head, Set("contest_id")) === 2,
-      "the scattered input's fold must add its own exchange by game\n" + scatteredPlan.treeString)
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
-  test("parse → teams → pitchers → names runs the parse once, with no (contest_id, play_id) exchange") {
+  // clustered or scattered input, any shuffle width, AQE on or off
+  test("parse is partition-invariant") {
+    // every column of every play, in a fixed order
+    def rowsOf(raw: DataFrame): (Seq[Row], SparkPlan) = {
+      val (rows, plan) = PlanShape.run(PbpPipeline.parse(raw).orderBy("contest_id", "play_id"))
+      (rows.toSeq, plan)
+    }
+    val (base, basePlan) = rowsOf(manyGames)
+    assert(base.length === 24 * 30)
+    // the scattered input shuffles by game exactly once, under the pass
+    val passes = PlanShape.passes(basePlan)
+    assert(passes.length === 1, basePlan.treeString)
+    assert(PlanShape.shuffledInput(passes.head.children.head), basePlan.treeString)
+    assert(PlanShape.exchangesOn(basePlan, Set("contest_id")) === 1, basePlan.treeString)
+
+    // input already clustered by game: the pass adds no exchange
+    val (clustered, clusteredPlan) = rowsOf(manyGames.repartition(5, col("contest_id")))
+    assert(clustered === base)
+    assert(!PlanShape.shuffledInput(PlanShape.passes(clusteredPlan).head.children.head),
+      clusteredPlan.treeString)
+
+    for (conf <- Seq(
+        Seq("spark.sql.shuffle.partitions" -> "1"),
+        Seq("spark.sql.shuffle.partitions" -> "8"),
+        Seq("spark.sql.adaptive.enabled" -> "false"),
+        Seq("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "8"))) {
+      withConf(conf: _*) {
+        assert(rowsOf(manyGames)._1 === base, conf)
+        assert(rowsOf(manyGames.repartition(3, col("contest_id")))._1 === base, conf)
+      }
+    }
+  }
+
+  test("pbp chain: three per-game passes; the plays shuffle once") {
     val raw = manyGames
     val games = (1 to 24).map(_.toLong)
     val teams = games.map(g => (g, s"A$g", s"H$g", s"Away $g", s"Home $g"))
@@ -213,17 +229,120 @@ class PbpPipelineSpec extends AnyFunSuite {
 
     val (rows, plan) = PlanShape.run(named)
     assert(rows.length === 24 * 30)
-    val folds = PlanShape.folds(plan)
-    assert(folds.length === 1, plan.treeString)
+    assert(PlanShape.windows(plan) === 0, plan.treeString)
+    assert(PlanShape.typedGroupOps(plan) === 0, plan.treeString)
+    // parse, pitchers, names: the later two sit on the parse's game
+    // partitioning, and each of them shuffles only its lineup table
+    val passes = PlanShape.passes(plan)
+    assert(passes.length === 3, plan.treeString)
+    val (withDim, parse) = passes.partition(_.children.length == 2)
+    assert(parse.length === 1 && withDim.length === 2, plan.treeString)
+    assert(PlanShape.shuffledInput(parse.head.children.head), plan.treeString)
+    withDim.foreach { p =>
+      assert(!PlanShape.shuffledInput(p.children.head), plan.treeString)
+      assert(PlanShape.shuffledInput(p.children(1)), plan.treeString)
+    }
+    // one exchange over the play rows, one per lineup table
+    assert(PlanShape.exchangesOn(plan, Set("contest_id")) === 3, plan.treeString)
     assert(PlanShape.exchangesOn(plan, Set("contest_id", "play_id")) === 0, plan.treeString)
-    // the pitcher cogroup's play side sits on the parse's own game
-    // partitioning (no exchange of its own); its lineup side shuffles
-    val cogroups = PlanShape.cogroups(plan)
-    assert(cogroups.length === 2, plan.treeString)
-    val pitcher = cogroups.filter(c => PlanShape.cogroups(c.left).isEmpty)
-    assert(pitcher.length === 1, plan.treeString)
-    assert(!PlanShape.shuffledInput(pitcher.head.left), plan.treeString)
-    assert(PlanShape.shuffledInput(pitcher.head.right), plan.treeString)
+  }
+
+  test("pbp output schemas are pinned") {
+    // name:type, with ! marking a non-nullable column
+    def sig(df: DataFrame): Seq[String] = df.schema.fields.toSeq.map(f =>
+      s"${f.name}:${f.dataType.simpleString}" + (if (f.nullable) "" else "!"))
+    val raw = Seq(
+      (1L, 1, 1, "Adams singled to left", null: String),
+      (1L, 2, 1, "Brown walked", null))
+      .toDF("contest_id", "seq", "inning", "away_text", "home_text")
+    val p = PbpPipeline.parse(raw)
+    val scored = Seq((9L, 1, 1, "Ace homered", null: String, 1, 0))
+      .toDF("contest_id", "seq", "inning", "away_text", "home_text", "away_score", "home_score")
+    val teamed = p.withColumn("pitch_team_id", lit("H1")).withColumn("bat_team_id", lit("A1"))
+    val pitched = PbpPipeline.withPitchers(teamed,
+      Seq((1L, "H1", "S", "p1", 0))
+        .toDF("contest_id", "team_id", "player_name", "player_id", "pitch_order"))
+    val named = StandardizeNames(spark, pitched,
+      Seq((1L, "A1", "Adams", "a1")).toDF("contest_id", "team_id", "player_name", "player_id"))
+    val got = Map(
+      "parse" -> sig(p),
+      "parseScores" -> sig(PbpPipeline.parse(scored, 2026, 2026)),
+      "parseText" -> sig(PbpPipeline.parse(scored, 2024, 2026)),
+      "withPitchers" -> sig(pitched),
+      "names" -> sig(named))
+    val expected = Map(
+    "parse" -> Seq(
+      "contest_id:bigint!", "seq:int!", "inning:int!", "away_text:string", "home_text:string",
+      "half:string!", "play_description:string!", "play_id:int!", "new_inn_fl:boolean!",
+      "top_inning_fl:int!", "new_game_fl:boolean!", "game_end_fl:boolean!",
+      "inn_end_fl:boolean!", "int_bb_fl:int!", "sub_out:string", "p2_text:string", "sub_fl:int",
+      "sub_pos:string", "p3_text:string", "sub_in:string", "p1_text:string", "p4_text:string",
+      "sh_fl:int", "sf_fl:int", "pitcher_sub_fl:int", "outs_on_play:int", "outs_reason:string",
+      "outs_before:int!", "outs_after:int", "runs_on_play:int", "runs_this_inn:int",
+      "runs_roi:int", "batter_name:string", "player_of_interest:string", "r1_name:string",
+      "r2_name:string", "r3_name:string", "bases_before:string", "r1_after:string",
+      "r2_after:string", "r3_after:string", "bases_after:string", "event_type:string",
+      "batted_ball_type:string", "home_score_before:int!", "away_score_before:int!",
+      "home_score_after:int", "away_score_after:int", "bat_order:int"),
+    "parseScores" -> Seq(
+      "contest_id:bigint!", "seq:int!", "inning:int!", "away_text:string", "home_text:string",
+      "away_score:int!", "home_score:int!", "half:string!", "play_description:string!",
+      "play_id:int!", "new_inn_fl:boolean!", "top_inning_fl:int!", "new_game_fl:boolean!",
+      "game_end_fl:boolean!", "inn_end_fl:boolean!", "int_bb_fl:int!", "sub_out:string",
+      "p2_text:string", "sub_fl:int", "sub_pos:string", "p3_text:string", "sub_in:string",
+      "p1_text:string", "p4_text:string", "sh_fl:int", "sf_fl:int", "pitcher_sub_fl:int",
+      "outs_on_play:int", "outs_reason:string", "outs_before:int!", "outs_after:int",
+      "away_score_after:int!", "home_score_after:int!", "away_score_before:int!",
+      "home_score_before:int!", "runs_on_play:int!", "runs_this_inn:int", "runs_roi:int",
+      "batter_name:string", "player_of_interest:string", "r1_name:string", "r2_name:string",
+      "r3_name:string", "bases_before:string", "r1_after:string", "r2_after:string",
+      "r3_after:string", "bases_after:string", "event_type:string", "batted_ball_type:string",
+      "bat_order:int"),
+    "parseText" -> Seq(
+      "contest_id:bigint!", "seq:int!", "inning:int!", "away_text:string", "home_text:string",
+      "away_score:int!", "home_score:int!", "half:string!", "play_description:string!",
+      "play_id:int!", "new_inn_fl:boolean!", "top_inning_fl:int!", "new_game_fl:boolean!",
+      "game_end_fl:boolean!", "inn_end_fl:boolean!", "int_bb_fl:int!", "sub_out:string",
+      "p2_text:string", "sub_fl:int", "sub_pos:string", "p3_text:string", "sub_in:string",
+      "p1_text:string", "p4_text:string", "sh_fl:int", "sf_fl:int", "pitcher_sub_fl:int",
+      "outs_on_play:int", "outs_reason:string", "outs_before:int!", "outs_after:int",
+      "runs_on_play:int", "runs_this_inn:int", "runs_roi:int", "home_score_before:int!",
+      "away_score_before:int!", "home_score_after:int", "away_score_after:int",
+      "batter_name:string", "player_of_interest:string", "r1_name:string", "r2_name:string",
+      "r3_name:string", "bases_before:string", "r1_after:string", "r2_after:string",
+      "r3_after:string", "bases_after:string", "event_type:string", "batted_ball_type:string",
+      "bat_order:int"),
+    "withPitchers" -> Seq(
+      "contest_id:bigint!", "play_id:int!", "seq:int!", "inning:int!", "away_text:string",
+      "home_text:string", "half:string!", "play_description:string!", "new_inn_fl:boolean!",
+      "top_inning_fl:int!", "new_game_fl:boolean!", "game_end_fl:boolean!",
+      "inn_end_fl:boolean!", "int_bb_fl:int!", "sub_out:string", "p2_text:string", "sub_fl:int",
+      "sub_pos:string", "p3_text:string", "sub_in:string", "p1_text:string", "p4_text:string",
+      "sh_fl:int", "sf_fl:int", "pitcher_sub_fl:int", "outs_on_play:int", "outs_reason:string",
+      "outs_before:int!", "outs_after:int", "runs_on_play:int", "runs_this_inn:int",
+      "runs_roi:int", "batter_name:string", "player_of_interest:string", "r1_name:string",
+      "r2_name:string", "r3_name:string", "bases_before:string", "r1_after:string",
+      "r2_after:string", "r3_after:string", "bases_after:string", "event_type:string",
+      "batted_ball_type:string", "home_score_before:int!", "away_score_before:int!",
+      "home_score_after:int", "away_score_after:int", "bat_order:int", "pitch_team_id:string!",
+      "bat_team_id:string!", "pitcher_name:string", "pitcher_id:string"),
+    "names" -> Seq(
+      "contest_id:bigint!", "play_id:int!", "seq:int!", "inning:int!", "away_text:string",
+      "home_text:string", "half:string!", "play_description:string!", "new_inn_fl:boolean!",
+      "top_inning_fl:int!", "new_game_fl:boolean!", "game_end_fl:boolean!",
+      "inn_end_fl:boolean!", "int_bb_fl:int!", "sub_out:string", "p2_text:string", "sub_fl:int",
+      "sub_pos:string", "p3_text:string", "sub_in:string", "p1_text:string", "p4_text:string",
+      "sh_fl:int", "sf_fl:int", "pitcher_sub_fl:int", "outs_on_play:int", "outs_reason:string",
+      "outs_before:int!", "outs_after:int", "runs_on_play:int", "runs_this_inn:int",
+      "runs_roi:int", "bases_before:string", "r1_after:string", "r2_after:string",
+      "r3_after:string", "bases_after:string", "event_type:string", "batted_ball_type:string",
+      "home_score_before:int!", "away_score_before:int!", "home_score_after:int",
+      "away_score_after:int", "bat_order:int", "pitch_team_id:string!", "bat_team_id:string!",
+      "pitcher_name:string", "pitcher_id:string", "batter_name:string", "batter_id:string",
+      "r1_name:string", "r1_id:string", "r2_name:string", "r2_id:string", "r3_name:string",
+      "r3_id:string", "player_name:string", "player_id:string"))
+    expected.foreach { case (k, v) => assert(got(k) === v, k) }
+    assert(named.collect().head.getAs[String]("batter_id") === "a1")
   }
 
   test("scraped-scores runs branch: year gate picks score deltas over text") {
@@ -262,17 +381,17 @@ private object PlanShape extends AdaptiveSparkPlanHelper {
     (rows, df.queryExecution.executedPlan)
   }
 
-  private def isFold(p: SparkPlan): Boolean = {
-    val f = p match {
-      case m: MapGroupsExec => Some(m.func)
-      case m: MapPartitionsExec => Some(m.func)
-      case _ => None
-    }
-    f.exists(_.getClass.getName.startsWith("graft.operators.StatefulFold"))
-  }
+  /** The per-game operator nodes in `plan`. */
+  def passes(plan: SparkPlan): Seq[PerKeyAppendExec] =
+    collect(plan) { case p: PerKeyAppendExec => p }
 
-  /** The StatefulFold nodes in `plan`. */
-  def folds(plan: SparkPlan): Seq[SparkPlan] = collect(plan) { case p if isFold(p) => p }
+  def windows(plan: SparkPlan): Int = collect(plan) { case w: WindowExec => w }.length
+
+  /** Typed group operators: the Row-encoder folds and cogroups. */
+  def typedGroupOps(plan: SparkPlan): Int = collect(plan) {
+    case m: MapGroupsExec => m
+    case c: CoGroupExec => c
+  }.length
 
   /** Hash exchanges in `plan` whose key columns are exactly `keys`. */
   def exchangesOn(plan: SparkPlan, keys: Set[String]): Int = collect(plan) {
@@ -281,8 +400,6 @@ private object PlanShape extends AdaptiveSparkPlanHelper {
     case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name)).toSet == keys
     case _ => false
   }
-
-  def cogroups(plan: SparkPlan): Seq[CoGroupExec] = collect(plan) { case c: CoGroupExec => c }
 
   /** Whether `side` is fed straight by a shuffle (sorts aside). */
   def shuffledInput(side: SparkPlan): Boolean = side match {

@@ -294,17 +294,16 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming baseStateStream equals the batch X1 fold on the pbp fixture") {
     implicit val sqlCtx = spark.sqlContext
     import graft.pbp.PbpPipeline
-    // the REAL parse chain up to the X1 fold's input
-    val pre = PbpPipeline.runs(PbpPipeline.outs(PbpPipeline.flags(
-      PbpPipeline.metadata(
-        graft.queries.QPbp.rawPbpFromEvents(spark, SparkTestSession.sfDir)))))
+    // the REAL parse chain: its fold inputs and its X1 state columns
+    val parsed = PbpPipeline.parse(
+      graft.queries.QPbp.rawPbpFromEvents(spark, SparkTestSession.sfDir))
     val stateCols = Seq("batter_name", "player_of_interest",
       "r1_name", "r2_name", "r3_name", "bases_before",
       "r1_after", "r2_after", "r3_after", "bases_after")
     def keyOf(r: org.apache.spark.sql.Row): (Long, Long, Seq[String]) =
       (r.getLong(0), r.getLong(1), (2 until r.length).map(i =>
         Option(r.getString(i)).getOrElse("")))
-    val batch = PbpPipeline.baseState(pre)
+    val batch = parsed
       .select((Seq("contest_id", "play_id").map(c => col(c).cast("long")) ++
         stateCols.map(col)): _*)
       .collect().map(keyOf).toSet
@@ -312,7 +311,7 @@ class StreamingSpec extends AnyFunSuite {
     // stream input: event time monotone in play_id (1 s per play), so
     // the watermark seals plays in exactly the batch fold's order
     val base = 1700000000000L
-    val plays = pre.select(col("contest_id").cast("long"), col("play_id").cast("long"),
+    val plays = parsed.select(col("contest_id").cast("long"), col("play_id").cast("long"),
         col("new_game_fl"), col("new_inn_fl"), col("sub_fl").cast("int"),
         col("sub_in"), col("sub_out"),
         col("p1_text"), col("p2_text"), col("p3_text"), col("p4_text"))
