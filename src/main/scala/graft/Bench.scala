@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute system load average (from the OS MX bean; -1 if unavailable). */
   private def loadAvg: Double =
@@ -17,21 +16,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the box's full parallelism (the driver environment is
     // local[32]); SPARK_GRAFT_CPUS overrides for constrained runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Metrics.enableLogging(spark) // capped drops → stderr
+    val spark = GraftSession.local("graft-bench")
+    val cpus = spark.sparkContext.defaultParallelism
     // untimed warmup: JIT + codegen + parquet footer caches, so the
     // first timed query measures the engine, not JVM startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

@@ -24,16 +24,13 @@ import org.apache.spark.sql.SparkSession
  */
 object GraftSession {
 
-  def builder(
-      appName: String = "graft",
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .withExtensions(new GraftExtensions)
       .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
+      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -41,10 +38,21 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def get(appName: String = "graft"): SparkSession = {
-    val spark = builder(appName).getOrCreate()
+  def get(appName: String = "graft"): SparkSession = start(builder(appName))
+
+  /** The harness and tool session (Bench, Verify, `graft.tools`): the
+    * [[builder]] configuration on `local[SPARK_GRAFT_CPUS]` (default:
+    * every core) with one shuffle partition per core. */
+  def local(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    start(builder(appName).master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
+  }
+
+  private def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.util.Metrics.enableLogging(spark)
+    graft.util.Metrics.enableLogging(spark) // capped drops → stderr
     spark
   }
 }

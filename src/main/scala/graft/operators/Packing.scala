@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.ScalarFunctions
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PerKeyAppend
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
@@ -16,9 +17,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  * sharding), then each shard packs GREEDILY in id order — a document
  * opens a new pack when adding it would exceed `budget`; a document
  * larger than the budget gets a pack of its own (never split). Each
- * shard is an independent streaming fold ([[StatefulFold
- * .foldPartitions]]): one shuffle by shard, O(1) state, no group
- * materialization — 1000 executors pack 1000+ shards concurrently,
+ * shard is an independent streaming pass
+ * (`org.apache.spark.sql.graft.PerKeyAppend`): one shuffle by shard,
+ * O(1) state, no group materialization, and the output stays
+ * partitioned by shard — 1000 executors pack 1000+ shards concurrently,
  * and adding shards trades a little packing efficiency for linear
  * scale-out.
  */
@@ -28,7 +30,7 @@ object Packing {
    * Per-document pack assignment: (id, n_tokens, shard, carry...,
    * pack_seq) where `pack_seq` is 1-based within the shard —
    * (shard, pack_seq) is the global pack key. `carryCols` ride
-   * through the fold untouched (the fold copies whole rows), so
+   * through the pass untouched (it reads only `n_tokens`), so
    * downstream consumers that need e.g. the text avoid a
    * corpus-to-corpus re-attach join.
    */
@@ -37,11 +39,8 @@ object Packing {
       budget: Long, numShards: Int, carryCols: Seq[String] = Nil): DataFrame = {
     require(budget > 0, "budget must be positive")
     require(numShards > 0, "numShards must be positive")
-    require(idCol != nTokensCol,
-      s"idCol and nTokensCol must differ (both '$idCol'): the fold reads " +
-        "them by position and a shared column would silently misalign")
     // fail fast on null token counts: a null would otherwise surface as
-    // an opaque NPE deep inside the mapPartitions fold
+    // an opaque NPE deep inside the per-shard pass
     val base = df.select(col(idCol) +:
       coalesce(col(nTokensCol).cast("long"),
         raise_error(concat(lit(s"greedyPack: null $nTokensCol for id "),
@@ -49,19 +48,18 @@ object Packing {
       pmod(ScalarFunctions.md5Long(col(idCol).cast("string")), lit(numShards.toLong))
         .as("shard") +:
       carryCols.map(col): _*)
-    val outSchema = StructType(
-      base.schema.fields :+ StructField("pack_seq", LongType, nullable = false))
     // state = (tokens accumulated in the open pack, current pack seq);
     // pack 0 is the "nothing open yet" sentinel
-    StatefulFold.foldPartitions[(Long, Long)](
-      base, Seq("shard"), Seq(col(idCol)), outSchema)(
-      init = _ => (0L, 0L),
-      step = { case ((acc, pack), row) =>
-        val nt = row.getLong(1)
-        val (acc2, pack2) =
-          if (pack == 0L || acc + nt > budget) (nt, pack + 1) else (acc + nt, pack)
-        ((acc2, pack2), Iterator(Row.fromSeq(row.toSeq :+ pack2)))
-      })
+    PerKeyAppend(base, "shard", Seq(idCol), Seq("n_tokens"),
+        StructType(Seq(StructField("pack_seq", LongType, nullable = false)))) { (rows, _) =>
+      var acc = 0L
+      var pack = 0L
+      rows.map { row =>
+        val nt = row.getLong(0)
+        if (pack == 0L || acc + nt > budget) { acc = nt; pack += 1 } else acc += nt
+        Row(pack)
+      }
+    }
   }
 
   /**
@@ -112,11 +110,12 @@ object Packing {
    * between them — the final "write the pretokenization input"
    * step. Returns (shard, pack_seq, n_docs, pack_tokens, packed_text).
    *
-   * The text CARRIES THROUGH the pack fold (no corpus-to-corpus
-   * re-attach join), so the only shuffles are the fold's shard
-   * exchange and one groupBy((shard, pack_seq)); pack text size is
-   * bounded by the token budget (plus one oversize doc at most), so
-   * no group can blow up a reducer.
+   * The text CARRIES THROUGH the pack pass (no corpus-to-corpus
+   * re-attach join), and the pass keeps its input's shard
+   * partitioning, so the shard exchange is the only shuffle: the
+   * groupBy((shard, pack_seq)) runs on it; pack text size is bounded
+   * by the token budget (plus one oversize doc at most), so no group
+   * can blow up a reducer.
    */
   def packedText(
       docs: DataFrame, idCol: String, textCol: String,

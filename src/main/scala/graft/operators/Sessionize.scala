@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PerKeyAppend
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
@@ -37,28 +38,27 @@ object Sessionize {
 
   /**
    * Stateful form: identical semantics computed by a streaming
-   * per-key fold ([[StatefulFold.foldPartitions]]) — the shape
-   * the truly non-relational state machines use. Exists so the fold
-   * machinery has an independently-checkable oracle (its output must
-   * match [[byGap]] row for row).
+   * per-key pass (`org.apache.spark.sql.graft.PerKeyAppend`, the
+   * operator the pbp state machines run on) that reads only `tsCol`
+   * and carries the rest of each row through untouched. Exists so the
+   * per-key machinery has an independently-checkable oracle (its
+   * output must match [[byGap]] row for row).
    */
   def byGapStateful(
-      df: DataFrame, keyCol: String, tsCol: String, gapSeconds: Long): DataFrame = {
-
-    val outSchema = StructType(df.schema.fields :+ StructField("session_id", LongType, nullable = false))
-    val tsIdx = df.schema.fieldIndex(tsCol)
-
-    // state = (last event epoch-MICROseconds, current session id) —
-    // micros to match byGap exactly (getTime is millis; the nanos
-    // field carries the full fractional second)
-    StatefulFold.foldPartitions[(Long, Long)](
-      df, Seq(keyCol), Seq(col(tsCol)), outSchema)(
-      init = _ => (Long.MinValue, 0L),
-      step = { case ((lastTs, sid), row) =>
-        val t0 = row.getTimestamp(tsIdx)
+      df: DataFrame, keyCol: String, tsCol: String, gapSeconds: Long): DataFrame =
+    PerKeyAppend(df, keyCol, Seq(tsCol), Seq(tsCol),
+        StructType(Seq(StructField("session_id", LongType, nullable = false)))) { (rows, _) =>
+      // state = (last event epoch-MICROseconds, current session id) —
+      // micros to match byGap exactly (getTime is millis; the nanos
+      // field carries the full fractional second)
+      var lastTs = Long.MinValue
+      var sid = 0L
+      rows.map { row =>
+        val t0 = row.getTimestamp(0)
         val t = (t0.getTime / 1000L) * 1000000L + t0.getNanos / 1000L
-        val newSid = if (lastTs == Long.MinValue || t - lastTs > gapSeconds * 1000000L) sid + 1 else sid
-        ((t, newSid), Iterator(Row.fromSeq(row.toSeq :+ newSid)))
-      })
-  }
+        if (lastTs == Long.MinValue || t - lastTs > gapSeconds * 1000000L) sid += 1
+        lastTs = t
+        Row(sid)
+      }
+    }
 }

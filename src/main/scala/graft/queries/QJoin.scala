@@ -1,17 +1,18 @@
 package graft.queries
 
 import graft.functions.ScalarFunctions
-import graft.operators.{AsOfJoin, FuzzyJoin, Sessionize, StatefulFold}
+import graft.operators.{AsOfJoin, FuzzyJoin, Sessionize}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.graft.PerKeyAppend
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Join family J1–J8 (SURVEY §2.3) plus the sequential operators that
  * ride the same shuffle shapes: as-of join, gap sessionization, and a
- * stateful-fold analogue with a relational oracle.
+ * per-key state machine with a relational oracle (x01).
  *
  * Scale notes: every dimension join is explicitly `broadcast()` (the
  * dims are KB-to-MB at any scale factor; at 100 TB the fact side
@@ -22,6 +23,27 @@ import org.apache.spark.sql.types.{LongType, StructField}
 object QJoin {
 
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
+
+  /**
+   * The x01 machine: per `user_id` in `(ts_ns, event_id)` order, a
+   * running balance of `value` in cents that resets to 0 at every
+   * signup event. Returns `(event_id, user_id, ts_ns, event_type, c,
+   * balance_cents)`, `c` being the event's own cents. One pass of
+   * `org.apache.spark.sql.graft.PerKeyAppend` that reads only
+   * `event_type` and `c`.
+   */
+  def signupBalance(events: DataFrame): DataFrame = {
+    val in = events.select(col("event_id"), col("user_id"), col("ts_ns"), col("event_type"),
+      cents(col("value")).as("c"))
+    PerKeyAppend(in, "user_id", Seq("ts_ns", "event_id"), Seq("event_type", "c"),
+        StructType(Seq(StructField("balance_cents", LongType, nullable = false)))) { (rows, _) =>
+      var bal = 0L
+      rows.map { row =>
+        bal = if (row.getString(0) == "signup") 0L else bal + row.getLong(1)
+        Row(bal)
+      }
+    }
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -560,11 +582,10 @@ object QJoin {
         .select("fp").orderBy("fp")
     },
 
-    // X-family fold machinery with a relational oracle: a running
-    // balance that RESETS on signup events, computed by the streaming
-    // per-key fold ([[StatefulFold.foldPartitions]] — the same
-    // execution shape as the base-runner machine X1) and checked
-    // against a segmented window-sum in SQL.
+    // X-family per-key machinery with a relational oracle: a running
+    // balance that RESETS on signup events, computed by the per-key
+    // pass ([[signupBalance]] — the same operator as the base-runner
+    // machine X1) and checked against a segmented window-sum in SQL.
     QueryDef.of("x01_stateful_fold_balance",
       """WITH b AS (SELECT event_id, user_id, event_type,
         |    CAST(round(value*100) AS BIGINT) AS c, epoch_ns(ts) AS tn FROM events),
@@ -578,22 +599,7 @@ object QJoin {
         |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |  END AS balance_cents
         |FROM s ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val in = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("ts_ns"), col("event_type"),
-          cents(col("value")).as("c"))
-      val outSchema = org.apache.spark.sql.types.StructType(
-        in.schema.fields :+ StructField("balance_cents", LongType, nullable = false))
-      val typeIdx = in.schema.fieldIndex("event_type")
-      val cIdx = in.schema.fieldIndex("c")
-      StatefulFold.foldPartitions[Long](
-          in, Seq("user_id"), Seq(col("ts_ns"), col("event_id")), outSchema)(
-          init = _ => 0L,
-          step = { (bal, row) =>
-            val nb =
-              if (row.getString(typeIdx) == "signup") 0L
-              else bal + row.getLong(cIdx)
-            (nb, Iterator(Row.fromSeq(row.toSeq :+ nb)))
-          })
+      signupBalance(Tables.events(s, dir))
         .select("event_id", "balance_cents")
         .orderBy("event_id")
     })

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,14 +27,20 @@ object Tables {
     * whole table is one parquet row group, so the scan cannot split
     * and every downstream explode/projection/pair-join runs on ONE
     * task (StageAudit r19: t39 3.2 s, v03 2.8 s, t68 1.9 s single-task
-    * stages). The probe is static and must only be used on
-    * SCAN-ROOTED frames (scan + filter/project, no exchange): such a
-    * plan is not AQE-wrapped, so `.rdd` builds lineage without running
-    * a job. At real scale the scan already splits past the default
-    * parallelism and this is the identity — no shuffle is added
-    * (guide §2.5 input skew, §6 input splits; the scale-adaptive form
-    * of the glue-level `repartition(defaultParallelism)` idiom). */
+    * stages). The probe is static and only valid on SCAN-ROOTED frames
+    * (scan + filter/project, no exchange): such a plan is not
+    * AQE-wrapped, so `.rdd` builds lineage without running a job. A
+    * frame whose physical plan holds an exchange, or is AQE-wrapped,
+    * fails here. At real scale the scan already splits past the
+    * default parallelism and this is the identity — no shuffle is
+    * added (guide §2.5 input skew, §6 input splits; the scale-adaptive
+    * form of the glue-level `repartition(defaultParallelism)` idiom). */
   def rebalanced(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.executedPlan
+    val offending = plan.collect { case a: AdaptiveSparkPlanExec => a; case e: Exchange => e }
+    require(offending.isEmpty,
+      "Tables.rebalanced needs a scan-rooted frame (scan + filter/project, no exchange); " +
+        s"this plan has ${offending.map(_.nodeName).mkString(", ")}:\n${plan.treeString}")
     val p = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < p) df.repartition(p) else df
   }

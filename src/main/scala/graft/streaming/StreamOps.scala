@@ -338,7 +338,7 @@ object StreamOps {
     // batch/backfill dispatch (the dedupStream convention): on a
     // bounded input the watermark machinery is meaningless — fold each
     // game's complete history in order, one group in memory at a time
-    // (the flatMapGroupsSorted shape; a game is bounded). Specced ≡
+    // (`groupByKey` + an in-memory sort; a game is bounded). Specced ≡
     // the base-state columns of PbpPipeline.parse.
     if (!plays.isStreaming)
       return plays.groupByKey(_.contest_id).flatMapGroups {

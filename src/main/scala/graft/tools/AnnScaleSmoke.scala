@@ -73,7 +73,7 @@ object AnnScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-ann-scale-smoke")
+    val spark = graft.GraftSession.local("graft-ann-scale-smoke")
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 

@@ -4,7 +4,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = ToolSession.local("graft-bench-one")
+    val spark = graft.GraftSession.local("graft-bench-one")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     spark.catalog.clearCache()
     for (i <- 1 to args.lift(2).map(_.toInt).getOrElse(2)) {

@@ -1,10 +1,9 @@
 package graft.tools
 
-import graft.operators.{AsOfJoin, Sessionize, StatefulFold}
+import graft.operators.{AsOfJoin, Sessionize}
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /**
  * Events-family scale smoke — `runMain graft.tools.EventsScaleSmoke
@@ -50,7 +49,7 @@ object EventsScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-events-scale-smoke")
+    val spark = graft.GraftSession.local("graft-events-scale-smoke")
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 
@@ -109,21 +108,7 @@ object EventsScaleSmoke {
       val (winRows, winN) = (win.getLong(0), win.getLong(1))
 
       // per-user balance fold (the x01 machine); checksum = Σ|balance|
-      val in = evts.select(col("event_id"), col("user_id"), col("ts_ns"),
-        col("event_type"), round(col("value") * 100).cast("long").as("c"))
-      val outSchema = StructType(in.schema.fields :+
-        StructField("balance_cents", LongType, nullable = false))
-      val typeIdx = in.schema.fieldIndex("event_type")
-      val cIdx = in.schema.fieldIndex("c")
-      val foldSum = StatefulFold.foldPartitions[Long](
-          in, Seq("user_id"), Seq(col("ts_ns"), col("event_id")), outSchema)(
-          init = _ => 0L,
-          step = { (bal, row) =>
-            val nb =
-              if (row.getString(typeIdx) == "signup") 0L
-              else bal + row.getLong(cIdx)
-            (nb, Iterator(Row.fromSeq(row.toSeq :+ nb)))
-          })
+      val foldSum = graft.queries.QJoin.signupBalance(evts)
         .agg(sum(abs(col("balance_cents"))).cast("long")).first().getLong(0)
 
       // KMV sketches: distinct users (grows exactly c×, estimate must

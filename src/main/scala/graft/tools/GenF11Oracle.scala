@@ -8,7 +8,7 @@ object GenF11Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/f11_oracle.sql")
-    val spark = ToolSession.local("gen-f11-oracle")
+    val spark = graft.GraftSession.local("gen-f11-oracle")
     val rows = QScalar.fuzzyScoreSummary(spark, dir).collect()
     val cols = Seq("kind", "n", "ts_sum", "ts_min", "ts_max", "pr_sum", "pr_min",
       "pr_max", "wr_sum", "wr_min", "wr_max", "n_ge70", "n_ge85", "n_ge90")

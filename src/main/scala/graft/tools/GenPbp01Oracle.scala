@@ -7,7 +7,7 @@ object GenPbp01Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/pbp01_oracle.sql")
-    val spark = ToolSession.local("gen-pbp01-oracle")
+    val spark = graft.GraftSession.local("gen-pbp01-oracle")
     val rows = QPbp.parseEnrichSummary(spark, dir).collect()
     val values = rows.map { r =>
       val et = r.getString(0).replace("'", "''")

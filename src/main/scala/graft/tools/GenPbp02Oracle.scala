@@ -6,7 +6,7 @@ object GenPbp02Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/pbp02_oracle.sql")
-    val spark = ToolSession.local("gen-pbp02-oracle")
+    val spark = graft.GraftSession.local("gen-pbp02-oracle")
     val rows = QPbp.parseSummary(spark, dir).collect()
     val values = rows.map { r =>
       val et = r.getString(0).replace("'", "''")

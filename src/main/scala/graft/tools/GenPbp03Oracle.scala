@@ -7,7 +7,7 @@ object GenPbp03Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/pbp03_oracle.sql")
-    val spark = ToolSession.local("gen-pbp03-oracle")
+    val spark = graft.GraftSession.local("gen-pbp03-oracle")
     val rows = QPbp.pitcherStandardizeSummary(spark, dir).collect()
     val values = rows.map { r =>
       val pn = r.getString(0).replace("'", "''")

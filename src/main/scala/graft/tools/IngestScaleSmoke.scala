@@ -52,7 +52,7 @@ object IngestScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-ingest-scale-smoke")
+    val spark = graft.GraftSession.local("graft-ingest-scale-smoke")
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 

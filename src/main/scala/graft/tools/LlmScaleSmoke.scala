@@ -78,7 +78,7 @@ object LlmScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-llm-scale-smoke")
+    val spark = graft.GraftSession.local("graft-llm-scale-smoke")
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 

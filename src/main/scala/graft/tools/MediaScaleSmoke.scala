@@ -27,7 +27,7 @@ object MediaScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val scales = args.headOption.getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-media-scale-smoke")
+    val spark = graft.GraftSession.local("graft-media-scale-smoke")
     import spark.implicits._
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)

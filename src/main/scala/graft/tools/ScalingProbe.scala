@@ -38,7 +38,7 @@ object ScalingProbe {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val copies = args.lift(1).map(_.toInt).getOrElse(10)
     val names = if (args.length > 2) args.drop(2).toSeq else DefaultQueries
-    val spark = ToolSession.local("graft-scaling-probe")
+    val spark = graft.GraftSession.local("graft-scaling-probe")
     val cpus = spark.sparkContext.defaultParallelism
 
     // deterministic staging dir per (sf, copies): rebuilt only when

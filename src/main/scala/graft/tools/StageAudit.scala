@@ -12,7 +12,7 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = ToolSession.local("graft-stage-audit")
+    val spark = graft.GraftSession.local("graft-stage-audit")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     spark.catalog.clearCache()
 

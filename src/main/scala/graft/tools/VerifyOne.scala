@@ -8,7 +8,7 @@ object VerifyOne {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(2).getOrElse("/tmp/graft_verify")
-    val spark = ToolSession.local("graft-verify-one")
+    val spark = graft.GraftSession.local("graft-verify-one")
     SparkEntry.queries(name)(spark, sfDir).coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/$name")
     // drop operator-persisted intermediates (pbp parsed caches etc.) so

@@ -16,20 +16,22 @@ import org.apache.spark.sql.types.StructType
 
 /**
  * One pass over each key group of a frame that appends typed columns
- * to every row: the engine's operator for per-game sequential work
+ * to every row: the engine's operator for any ordered per-key state
+ * machine that emits one row per input row — per-game sequential work
  * (play numbering, the base-runner machine, pitcher queues, name
- * matching against a game's lineups).
+ * matching against a game's lineups), gap sessionization per user,
+ * greedy packing per shard, the x01 running balance per user.
  *
- * The play child must be clustered on the key and sorted by the key
- * plus `order`; the optional dimension child is clustered and sorted on
- * its key, so EnsureRequirements co-partitions the two and an input
- * already hash-partitioned on the key is not shuffled again. `fn` sees
- * one group's `needed` columns as narrow Rows in `order`, plus all of
- * the group's dimension rows, and returns exactly one Row of appended
- * values per input row, in input order. The rest of each input row is
- * carried through as UnsafeRow bytes, never deserialized. The output is
- * the play child's own attributes followed by the appended ones, with
- * the child's partitioning and ordering.
+ * The input ("play") child must be clustered on the key and sorted by
+ * the key plus `order`; the optional dimension child is clustered and
+ * sorted on its key, so EnsureRequirements co-partitions the two and
+ * an input already hash-partitioned on the key is not shuffled again.
+ * `fn` sees one group's `needed` columns as narrow Rows in `order`,
+ * plus all of the group's dimension rows, and returns exactly one Row
+ * of appended values per input row, in input order. The rest of each
+ * input row is carried through as UnsafeRow bytes, never deserialized.
+ * The output is the input child's own attributes followed by the
+ * appended ones, with the child's partitioning and ordering.
  *
  * Groups compare keys as Spark's grouping operators do: null keys form
  * one group, which meets the dimension's null-key rows. Keys present
@@ -65,8 +67,9 @@ object PerKeyAppend {
   type Fn = (Iterator[Row], Seq[Row]) => Iterator[Row]
 
   /**
-   * Appends `appended` to every row of `plays`, computed per `key`
-   * group by `fn` over the `needed` columns in ascending `order`. With
+   * Appends `appended` to every row of `plays` (the input frame,
+   * whatever its rows are), computed per `key` group by `fn` over the
+   * `needed` columns in ascending `order`. With
    * `dim = Some((frame, dimKey))` each group also gets its dimension
    * rows (all columns of `frame`, in its column order); the dimension
    * key is cast to the play key's type so both sides hash alike.

@@ -26,6 +26,36 @@ class OperatorSpecs extends AnyFunSuite {
     assert(stateful.exceptAll(declarative).count() === 0)
   }
 
+  test("per-key state machines run as one PerKeyAppend pass; output schemas are pinned") {
+    // name:type, with ! marking a non-nullable column
+    def sig(df: org.apache.spark.sql.DataFrame): Seq[String] = df.schema.fields.toSeq.map(f =>
+      s"${f.name}:${f.dataType.simpleString}" + (if (f.nullable) "" else "!"))
+    val docs = (1L to 200L).map(i => (i, (i % 120) + 1)).toDF("doc_id", "ntok")
+    val packed = Packing.greedyPack(docs, "doc_id", "ntok", budget = 256L, numShards = 4)
+    val x01 = graft.SparkEntry.queries("x01_stateful_fold_balance")(spark, SparkTestSession.sfDir)
+    Seq("greedyPack" -> packed, "x01" -> x01).foreach { case (name, df) =>
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val nodes = PlanNodes.all(plan).map(_.getClass.getSimpleName)
+      assert(nodes.count(_ == "PerKeyAppendExec") === 1, s"$name\n${plan.treeString}")
+      Seq("MapGroupsExec", "DeserializeToObjectExec", "SerializeFromObjectExec").foreach { n =>
+        assert(!nodes.contains(n), s"$name has $n\n${plan.treeString}")
+      }
+    }
+    val got = Map(
+      "byGapStateful" -> sig(Sessionize.byGapStateful(events, "user_id", "ts", 1800)),
+      "greedyPack" -> sig(packed),
+      "x01" -> sig(x01))
+    val expected = Map(
+      "byGapStateful" -> Seq("event_id:bigint", "ts:timestamp", "user_id:bigint",
+        "event_type:string", "value:double", "props:string", "ts_ns:bigint",
+        "session_id:bigint!"),
+      "greedyPack" -> Seq("doc_id:bigint!", "n_tokens:bigint!", "shard:bigint",
+        "pack_seq:bigint!"),
+      "x01" -> Seq("event_id:bigint", "balance_cents:bigint!"))
+    assert(got === expected)
+  }
+
   test("AsOfJoin.backward equals a naive per-key loop, including tolerance") {
     val left = Seq(
       ("a", 10L, 1), ("a", 20L, 2), ("a", 30L, 3), ("b", 5L, 4), ("c", 9L, 5))
@@ -2387,4 +2417,10 @@ class OperatorSpecs extends AnyFunSuite {
     assert(!byDoc.contains(3L), "empty doc must produce zero chunks")
     assert(byDoc(4L).map(_.getString(4)).toSeq === Seq("x"))
   }
+}
+
+/** Every node of an executed plan, AQE query stages included. */
+private object PlanNodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def all(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = collect(plan) { case p => p }
 }

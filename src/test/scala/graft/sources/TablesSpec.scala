@@ -16,6 +16,29 @@ class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = SparkTestSession.sfDir
 
+  test("rebalanced accepts its scan-rooted call sites and fails loudly on an exchanged frame") {
+    // the four call sites build their frames through the guard: the
+    // real probe frames, not reconstructions
+    Seq("v03_embed_neardup_brute", "t68_modified_kn5", "t24_dup_spans", "t39_dsir_resample")
+      .foreach(q => graft.SparkEntry.queries(q)(spark, sfDir))
+    val docs = Tables.documents(spark, sfDir)
+    assert(Tables.rebalanced(docs.filter(col("doc_id") > 3).select("doc_id")).rdd
+      .getNumPartitions === spark.sparkContext.defaultParallelism)
+    // built per setting: a frame plans once, under the conf of its first use
+    def misuse = Seq(
+      docs.groupBy("lang").count(),
+      docs.repartition(3, col("doc_id")),
+      docs.join(docs.select("doc_id"), "doc_id"))
+    for (aqe <- Seq("true", "false"); df <- misuse) {
+      val prev = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val e = intercept[IllegalArgumentException](Tables.rebalanced(df))
+        assert(e.getMessage.contains("needs a scan-rooted frame"), e.getMessage)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+  }
+
   test("canonical testdata loads with exactly the declared logical types") {
     for ((df, declared) <- Seq(
         Tables.lineitem(spark, sfDir) -> Tables.lineitemSchema,
