@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
  * the (lang, gram) count table (language-count-sized, not
  * corpus-sized); the profiles then ship as LITERAL maps, so
  * classification is a per-row fold with no join and no shuffle at
- * any corpus size.
+ * any corpus size. Classification has a COLUMN form,
+ * [[classifyColumn]] (a (pred_lang, dist) struct), and a FRAME form,
+ * [[classify]] (id, pred_lang, dist), which is one `select` over it.
  */
 object LangId {
 
@@ -58,19 +60,26 @@ object LangId {
       }
   }
 
-  /** (id, pred_lang, dist): argmin of summed profile ranks over the
-    * doc's gram occurrences (absent → topK+1), ties by language
-    * ascending; gramless docs predict "" with dist 0. Map-only via a
-    * NATIVE expression: the |langs| profiles collapse into one
-    * broadcast gram → rank-vector model ([[graft.plans.LangIdModel]])
-    * and [[graft.plans.LangIdDistsExpr]] walks each row's codepoint
-    * n-grams once with O(1) hash lookups inside WholeStageCodegen —
-    * the interpreted nested-HOF fold this replaces cost ~10 ms/row.
-    * Only the |langs|-sized argmin stays in column algebra. */
-  def classify(
-      docs: DataFrame, idCol: String, textCol: String,
-      profiles: Map[String, Map[String, Int]],
-      n: Int = 3, topK: Int = 40): DataFrame = {
+  /** (pred_lang, dist) struct column: argmin of summed profile ranks
+    * over the text's gram occurrences (absent → topK+1), ties by
+    * language ascending; gramless texts predict "" with dist 0.
+    * Map-only via a NATIVE expression: the |langs| profiles collapse
+    * into one broadcast gram → rank-vector model
+    * ([[graft.plans.LangIdModel]]) and [[graft.plans.LangIdDistsExpr]]
+    * walks each row's codepoint n-grams once with O(1) hash lookups
+    * inside WholeStageCodegen — the interpreted nested-HOF fold this
+    * replaces cost ~10 ms/row. Only the |langs|-sized argmin stays in
+    * column algebra. A pipeline routing on the prediction adds this
+    * column to its own projection instead of joining [[classify]]'s
+    * frame back on its id.
+    *
+    * A gramless text scores 0 against every language, so naming every
+    * language "" for it makes the argmin itself ("", 0): the scoring
+    * sits under no conditional, where subexpression elimination can
+    * share it between the two fields. */
+  def classifyColumn(
+      text: Column, profiles: Map[String, Map[String, Int]],
+      n: Int = 3, topK: Int = 40): Column = {
     require(profiles.nonEmpty, "no language profiles")
     val langs = profiles.keys.toSeq.sorted
     val pen = (topK + 1).toLong
@@ -78,22 +87,26 @@ object LangId {
       langs.flatMap(l => profiles(l).keys).distinct.map { g =>
         g -> langs.map(l => profiles(l).get(g).map(_.toLong).getOrElse(pen))
       }.toMap
-    val bc = docs.sparkSession.sparkContext.broadcast(
+    val bc = SparkSession.active.sparkContext.broadcast(
       graft.plans.LangIdModel(langs, n, pen, combined))
-    val langArr = typedlit(langs)
-    docs
-      .withColumn("__s", canonical(col(textCol)))
-      .withColumn("__d", org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.plans.LangIdDistsExpr(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("__s")), bc)))
-      .withColumn("__best", array_min(zip_with(col("__d"), langArr,
-        (d, l) => struct(d.as("dist"), l.as("lang")))))
-      .select(
-        col(idCol),
-        when(length(col("__s")) < n, lit(""))
-          .otherwise(col("__best").getField("lang")).as("pred_lang"),
-        when(length(col("__s")) < n, lit(0L))
-          .otherwise(col("__best").getField("dist")).as("dist"))
+    val s = canonical(text)
+    val names = when(length(s) < n, typedlit(langs.map(_ => "")))
+      .otherwise(typedlit(langs))
+    val best = array_min(zip_with(
+      org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.LangIdDistsExpr(
+        org.apache.spark.sql.graft.ColumnBridge.expression(s), bc)),
+      names, (d, l) => struct(d.as("dist"), l.as("lang"))))
+    struct(best.getField("lang").as("pred_lang"), best.getField("dist").as("dist"))
+  }
+
+  /** (id, pred_lang, dist): [[classifyColumn]] as a frame. */
+  def classify(
+      docs: DataFrame, idCol: String, textCol: String,
+      profiles: Map[String, Map[String, Int]],
+      n: Int = 3, topK: Int = 40): DataFrame = {
+    val lid = classifyColumn(col(textCol), profiles, n, topK)
+    docs.select(col(idCol), lid.getField("pred_lang").as("pred_lang"),
+      lid.getField("dist").as("dist"))
   }
 
   /** Train on the labeled corpus, classify every row. */

@@ -22,6 +22,14 @@ import org.apache.spark.sql.functions._
  *    fraction). The synthetic corpus carries no newlines, so the t69
  *    oracle derives a newline-bearing corpus first (the t67 idiom).
  *
+ * Each family has a FRAME form ([[gopher]], [[gopherByLang]],
+ * [[lineRules]], [[lineRulesByLang]]: id, measures, per-rule verdicts
+ * and `pass`) and a COLUMN form ([[gopherPass]], [[lineRulesPass]]:
+ * the `pass` verdict alone). Both are built from one column builder,
+ * so a frame form is a single `select`. A pipeline gating on the
+ * verdict adds the column form to its own projection; it never joins
+ * a frame form back onto the frame it came from.
+ *
  * Document rules ([[gopher]]):
  *  - word count within [minWords, maxWords];
  *  - mean word length within [minMeanLen, maxMeanLen] (characters per
@@ -60,16 +68,29 @@ object QualityRules {
       minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1, minAlphaFrac: Double = 0.8)
 
+  /** A rule table chosen per row: [[fixed]] applies one table to
+    * every row; [[keyed]] picks each row's table by its language as a
+    * literal CASE chain (no join, no broadcast, no shuffle). */
+  private type Pick[R] = (R => Column) => Column
+  private def fixed[R](r: R): Pick[R] = f => f(r)
+  private def keyed[R](lang: Column, rules: Map[String, R], default: R): Pick[R] =
+    f => rules.toSeq.sortBy(_._1).foldLeft(f(default)) {
+      case (acc, (l, r)) => when(lang === l, f(r)).otherwise(acc)
+    }
+  // an empty list must still be a STRING array (bare array() types
+  // as array<null> and fails array_intersect's type check)
+  private def arrOf(ws: Seq[String]): Column =
+    if (ws.isEmpty) typedlit(Seq.empty[String]) else array(ws.map(lit): _*)
+
   def gopher(
       docs: DataFrame, idCol: String, textCol: String,
       minWords: Int = 50, maxWords: Int = 100000,
       minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1, minAlphaFrac: Double = 0.8,
       minStopwords: Int = 2): DataFrame =
-    gopherFrame(docs, idCol, textCol, Nil,
-      array(GopherStopwords.map(lit): _*),
-      lit(minWords), lit(maxWords), lit(minMeanLen), lit(maxMeanLen),
-      lit(maxSymbolRatio), lit(minAlphaFrac), lit(minStopwords))
+    docs.select(col(idCol) +: gopherColumns(col(textCol), fixed(LangRules(
+      GopherStopwords, minStopwords, minWords, maxWords, minMeanLen, maxMeanLen,
+      maxSymbolRatio, minAlphaFrac))): _*)
 
   /**
    * [[gopher]] with PER-LANGUAGE rule tables — the post-routing half
@@ -85,34 +106,28 @@ object QualityRules {
    */
   def gopherByLang(
       docs: DataFrame, idCol: String, textCol: String, langCol: String,
-      rules: Map[String, LangRules], default: LangRules): DataFrame = {
-    def pick(f: LangRules => Column): Column =
-      rules.toSeq.sortBy(_._1).foldLeft(f(default)) {
-        case (acc, (lang, r)) => when(col(langCol) === lang, f(r)).otherwise(acc)
-      }
-    // an empty list must still be a STRING array (bare array() types
-    // as array<null> and fails array_intersect's type check)
-    def arrOf(ws: Seq[String]): Column =
-      if (ws.isEmpty) typedlit(Seq.empty[String]) else array(ws.map(lit): _*)
-    gopherFrame(docs, idCol, textCol, Seq(col(langCol)),
-      pick(r => arrOf(r.stopwords)),
-      pick(r => lit(r.minWords)), pick(r => lit(r.maxWords)),
-      pick(r => lit(r.minMeanLen)), pick(r => lit(r.maxMeanLen)),
-      pick(r => lit(r.maxSymbolRatio)), pick(r => lit(r.minAlphaFrac)),
-      pick(r => lit(r.minStopwords)))
-  }
+      rules: Map[String, LangRules], default: LangRules): DataFrame =
+    docs.select(Seq(col(idCol), col(langCol)) ++
+      gopherColumns(col(textCol), keyed(col(langCol), rules, default)): _*)
 
-  /** The shared measure+rule projection: thresholds arrive as COLUMNS
-    * so the per-language form can key them on the routed language
-    * while the scalar form passes literals. */
-  private def gopherFrame(
-      docs: DataFrame, idCol: String, textCol: String,
-      passthrough: Seq[Column], stopwordsArr: Column,
-      minWords: Column, maxWords: Column,
-      minMeanLen: Column, maxMeanLen: Column,
-      maxSymbolRatio: Column, minAlphaFrac: Column,
-      minStopwords: Column): DataFrame = {
-    val t = trim(col(textCol))
+  /** Column form of [[gopher]]'s `pass` under one rule table: a
+    * pipeline adds the verdict to its own projection instead of
+    * joining the frame form back on its id. */
+  def gopherPass(text: Column, rules: LangRules): Column =
+    gopherColumns(text, fixed(rules)).last
+
+  /** Column form of [[gopherByLang]]'s `pass`: each row judged by the
+    * table of its `lang` value. */
+  def gopherPass(
+      text: Column, lang: Column,
+      rules: Map[String, LangRules], default: LangRules): Column =
+    gopherColumns(text, keyed(lang, rules, default)).last
+
+  /** The measure, rule and `pass` columns of the document rules, with
+    * thresholds as COLUMNS so the per-language form can key them on
+    * the routed language while the one-table form passes literals. */
+  private def gopherColumns(text: Column, pick: Pick[LangRules]): Seq[Column] = {
+    val t = trim(text)
     def occurrences(needle: String, width: Int): Column =
       (length(t) - length(regexp_replace(t, java.util.regex.Pattern.quote(needle), ""))) / width
     val words = filter(split(t, "\\s+"), w => length(w) > 0)
@@ -131,20 +146,20 @@ object QualityRules {
         .otherwise(0.0), 6)
     val nStop = size(array_intersect(
       array_distinct(transform(words, w => lower(w))),
-      stopwordsArr)).cast("long")
-    docs.select(
-        (col(idCol) +: passthrough) ++ Seq(
-          nWords.as("n_words"), meanLen.as("mean_word_len"),
-          symbolRatio.as("symbol_ratio"), alphaFrac.as("alpha_frac"),
-          nStop.as("n_stopwords"),
-          (nWords >= minWords && nWords <= maxWords).as("pass_words"),
-          (meanLen >= minMeanLen && meanLen <= maxMeanLen).as("pass_mean_len"),
-          (symbolRatio <= maxSymbolRatio).as("pass_symbols"),
-          (alphaFrac >= minAlphaFrac).as("pass_alpha"),
-          (nStop >= minStopwords).as("pass_stopwords")): _*)
-      .withColumn("pass",
-        col("pass_words") && col("pass_mean_len") && col("pass_symbols") &&
-          col("pass_alpha") && col("pass_stopwords"))
+      pick(r => arrOf(r.stopwords)))).cast("long")
+    val rules = Seq(
+      "pass_words" ->
+        (nWords >= pick(r => lit(r.minWords)) && nWords <= pick(r => lit(r.maxWords))),
+      "pass_mean_len" ->
+        (meanLen >= pick(r => lit(r.minMeanLen)) && meanLen <= pick(r => lit(r.maxMeanLen))),
+      "pass_symbols" -> (symbolRatio <= pick(r => lit(r.maxSymbolRatio))),
+      "pass_alpha" -> (alphaFrac >= pick(r => lit(r.minAlphaFrac))),
+      "pass_stopwords" -> (nStop >= pick(r => lit(r.minStopwords))))
+    Seq(nWords.as("n_words"), meanLen.as("mean_word_len"),
+        symbolRatio.as("symbol_ratio"), alphaFrac.as("alpha_frac"),
+        nStop.as("n_stopwords")) ++
+      rules.map { case (name, rule) => rule.as(name) } :+
+      rules.map(_._2).reduce(_ && _).as("pass")
   }
 
   /**
@@ -187,10 +202,8 @@ object QualityRules {
       docs: DataFrame, idCol: String, textCol: String,
       maxBulletFrac: Double = 0.9, maxEllipsisFrac: Double = 0.3,
       minTerminalFrac: Double = 0.5, maxDupFrac: Double = 0.3): DataFrame =
-    lineRulesFrame(docs, idCol, textCol, Nil,
-      array(LatinTerminals.map(lit): _*),
-      lit(maxBulletFrac), lit(maxEllipsisFrac), lit(minTerminalFrac),
-      lit(maxDupFrac))
+    docs.select(col(idCol) +: lineRulesColumns(col(textCol), fixed(LineLangRules(
+      LatinTerminals, minTerminalFrac, maxBulletFrac, maxEllipsisFrac, maxDupFrac))): _*)
 
   /** [[lineRules]] with PER-LANGUAGE tables — each document judged by
     * ITS language's terminal set and thresholds (a CJK document's
@@ -199,49 +212,47 @@ object QualityRules {
     * as [[gopherByLang]]: no join, no shuffle. */
   def lineRulesByLang(
       docs: DataFrame, idCol: String, textCol: String, langCol: String,
-      rules: Map[String, LineLangRules], default: LineLangRules): DataFrame = {
-    def pick(f: LineLangRules => Column): Column =
-      rules.toSeq.sortBy(_._1).foldLeft(f(default)) {
-        case (acc, (lang, r)) => when(col(langCol) === lang, f(r)).otherwise(acc)
-      }
-    def arrOf(cs: Seq[String]): Column =
-      if (cs.isEmpty) typedlit(Seq.empty[String]) else array(cs.map(lit): _*)
-    lineRulesFrame(docs, idCol, textCol, Seq(col(langCol)),
-      pick(r => arrOf(r.terminalChars)),
-      pick(r => lit(r.maxBulletFrac)), pick(r => lit(r.maxEllipsisFrac)),
-      pick(r => lit(r.minTerminalFrac)), pick(r => lit(r.maxDupFrac)))
-  }
+      rules: Map[String, LineLangRules], default: LineLangRules): DataFrame =
+    docs.select(Seq(col(idCol), col(langCol)) ++
+      lineRulesColumns(col(textCol), keyed(col(langCol), rules, default)): _*)
 
-  /** Shared measure+rule projection of the line rules — thresholds
-    * and the terminal set arrive as COLUMNS (see [[gopherFrame]]). */
-  private def lineRulesFrame(
-      docs: DataFrame, idCol: String, textCol: String,
-      passthrough: Seq[Column], terminalArr: Column,
-      maxBulletFrac: Column, maxEllipsisFrac: Column,
-      minTerminalFrac: Column, maxDupFrac: Column): DataFrame = {
+  /** Column form of [[lineRules]]' `pass` under one rule table (see
+    * [[gopherPass]]). */
+  def lineRulesPass(text: Column, rules: LineLangRules): Column =
+    lineRulesColumns(text, fixed(rules)).last
+
+  /** Column form of [[lineRulesByLang]]'s `pass`. */
+  def lineRulesPass(
+      text: Column, lang: Column,
+      rules: Map[String, LineLangRules], default: LineLangRules): Column =
+    lineRulesColumns(text, keyed(lang, rules, default)).last
+
+  /** The measure, rule and `pass` columns of the line rules —
+    * thresholds and the terminal set arrive as COLUMNS (see
+    * [[gopherColumns]]). */
+  private def lineRulesColumns(text: Column, pick: Pick[LineLangRules]): Seq[Column] = {
     val lines = filter(
-      transform(split(col(textCol), "\n"), l => trim(l)), l => length(l) > 0)
+      transform(split(text, "\n"), l => trim(l)), l => length(l) > 0)
     val n = size(lines).cast("long")
     def frac(pred: Column => Column): Column =
       round(when(n > 0, size(filter(lines, pred)).cast("double") / n)
         .otherwise(0.0), 6)
+    val terminalArr = pick(r => arrOf(r.terminalChars))
     val bulletFrac = frac(l => substring(l, 1, 2).isin("- ", "* ", "• "))
     val ellipsisFrac = frac(l => l.endsWith("...") || l.endsWith("…"))
     val terminalFrac = frac(l => array_contains(terminalArr, substring(l, -1, 1)))
     val dupFrac = round(
       when(n > 0,
         (n - size(array_distinct(lines))).cast("double") / n).otherwise(0.0), 6)
-    docs.select(
-        (col(idCol) +: passthrough) ++ Seq(
-          n.as("n_lines"), bulletFrac.as("bullet_frac"),
-          ellipsisFrac.as("ellipsis_frac"), terminalFrac.as("terminal_frac"),
-          dupFrac.as("dup_line_frac"),
-          (bulletFrac <= maxBulletFrac).as("pass_bullets"),
-          (ellipsisFrac <= maxEllipsisFrac).as("pass_ellipsis"),
-          (terminalFrac >= minTerminalFrac).as("pass_terminal"),
-          (dupFrac <= maxDupFrac).as("pass_dup_lines")): _*)
-      .withColumn("pass",
-        col("pass_bullets") && col("pass_ellipsis") &&
-          col("pass_terminal") && col("pass_dup_lines"))
+    val rules = Seq(
+      "pass_bullets" -> (bulletFrac <= pick(r => lit(r.maxBulletFrac))),
+      "pass_ellipsis" -> (ellipsisFrac <= pick(r => lit(r.maxEllipsisFrac))),
+      "pass_terminal" -> (terminalFrac >= pick(r => lit(r.minTerminalFrac))),
+      "pass_dup_lines" -> (dupFrac <= pick(r => lit(r.maxDupFrac))))
+    Seq(n.as("n_lines"), bulletFrac.as("bullet_frac"),
+        ellipsisFrac.as("ellipsis_frac"), terminalFrac.as("terminal_frac"),
+        dupFrac.as("dup_line_frac")) ++
+      rules.map { case (name, rule) => rule.as(name) } :+
+      rules.map(_._2).reduce(_ && _).as("pass")
   }
 }

@@ -513,12 +513,11 @@ object TextModel {
       discount: Double, k: Double, langN: Int, langTopK: Int): DataFrame = {
     val profiles = LangId.trainProfiles(
       reference, refLangCol, refTextCol, langN, langTopK)
-    val routed = LangId.classify(docs, idCol, textCol, profiles, langN, langTopK)
-      .select(col(idCol), col("pred_lang"))
+    val routed = docs.withColumn("pred_lang",
+      LangId.classifyColumn(col(textCol), profiles, langN, langTopK).getField("pred_lang"))
     knFivegramCrossPerplexityByLang(
       reference, refLangCol, refTextCol,
-      docs.join(routed, Seq(idCol)), idCol, "pred_lang", textCol,
-      discount, k)
+      routed, idCol, "pred_lang", textCol, discount, k)
   }
 
   /** The Chen & Goodman (1999) closed-form discount estimates from an

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.functions.TextFunctions
-import graft.operators.Dedup
+import graft.operators.{Dedup, LangId, QualityRules}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -365,31 +365,15 @@ object QText {
               estimatedGrams = 1L << 16, numBits = 1L << 20))
           else Nil))
       val profiles = built(0).asInstanceOf[Map[String, Map[String, Int]]]
-      val routed = graft.operators.LangId
-        .classify(corpus, "doc_id", "text", profiles)
-        .select(col("doc_id"), col("pred_lang"))
-      // per-language Gopher tables, applied POST-ROUTING (the
-      // production multilingual discipline) — see [[Llm02LangRules]]
-      val gok = graft.operators.QualityRules.gopherByLang(
-          corpus.join(routed, Seq("doc_id")), "doc_id", "text", "pred_lang",
-          Llm02LangRules, Llm02DefaultRules)
-        .select(col("doc_id"), col("pass").as("g_ok"))
-      // eager localCheckpoint: `flags` roots BOTH the survivor chain
-      // (dedup → decontaminate → KN scoring) and the final disposition
-      // join, and its own subtree (quota semi-joins + langid classify
-      // + per-language gopher) is the widest part of the plan — left
-      // lazy, the initial physical plan carried 157 copies of the
-      // documents scan and the optimizer re-planned the whole tree
-      // under every consumer (guide §3.3: materialize an intermediate
-      // to truncate a very wide plan). Checkpointing computes it ONCE
-      // and truncates lineage; corpus-sized but column-pruned (4
-      // narrow cols + text). r18's negative result persisted the
-      // LAZY intermediates (cache + full re-plan per consumer, 22-63 s
-      // on llm04); the eager checkpoint is the opposite trade.
-      val flags = corpus.select(col("doc_id"), col("text"))
+      // routing and the per-language Gopher tables, applied
+      // POST-ROUTING (the production multilingual discipline — see
+      // [[Llm02LangRules]]), are columns of one projection;
+      // checkpointed: both consumers would re-run routing + Gopher (llm02 sf0.1: 5.6 -> 7.9 s)
+      val flags = corpus.select(col("doc_id"), col("text"),
+          LangId.classifyColumn(col("text"), profiles).getField("pred_lang").as("pred_lang"))
+        .withColumn("g_ok", QualityRules.gopherPass(
+          col("text"), col("pred_lang"), Llm02LangRules, Llm02DefaultRules))
         .join(quotaKept, Seq("doc_id"), "left")
-        .join(routed, Seq("doc_id"))
-        .join(gok, Seq("doc_id"))
         .withColumn("l_ok", col("pred_lang") =!= "")
         .localCheckpoint(true)
       val surv1 = flags.filter(col("__q_in") === 1 && col("l_ok") && col("g_ok"))
@@ -401,14 +385,9 @@ object QText {
           org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
         .filter(col("doc_id") =!= col("__keep"))
         .select(col("doc_id")).withColumn("__dup", lit(1))
-        // two consumers (ded anti-join + disposition join); ids only
+        // checkpointed for ded + disposition: llm02 5.6 -> 6.1 s, +2.0 s CPU without it
         .localCheckpoint(true)
-      // same trade for `ded`: consumed by the overlap probe, the
-      // decontaminated survivor set, and (llm04) the per-suite card —
-      // each consumer otherwise re-runs the fingerprint window + anti-
-      // join above the checkpointed flags
       val ded = surv1.join(dups, Seq("doc_id"), "left_anti")
-        .localCheckpoint(true)
       // llm04 (suiteCard): the 100 TB decontamination profile — the
       // pooled drop rule probes ONE fixed-size Bloom synopsis instead
       // of the broadcast gram-row join, so the stage's footprint is
@@ -422,7 +401,7 @@ object QText {
         else graft.operators.Decontaminate
           .ngramOverlap(ded, "doc_id", "text", ref, "text", n = 3))
         .select(col("doc_id"), col("overlap_frac"))
-        // two consumers (dec filter + disposition join); ids+fracs only
+        // checkpointed for dec + disposition: llm02 +2.2 s CPU per run without it
         .localCheckpoint(true)
       val dec = ded.join(ov, Seq("doc_id"), "left")
         .filter(coalesce(col("overlap_frac"), lit(0.0)) < 0.5)
@@ -1245,35 +1224,25 @@ object QText {
             col("n_chars"), col("n_chars").cast("double").as("score")),
           "rdomain", "score", "doc_id", "n_chars", budgetPerGroup = 25000L)
         .select(col("doc_id")).withColumn("__q_in", lit(1))
-      // PII disposition column (t13): one map-only column expression
-      // riding the flags projection — the data card records it;
-      // production redacts rather than drops
-      val gok = graft.operators.QualityRules
-        .gopher(corpus, "doc_id", "text", minWords = 20, minStopwords = 1)
-        .select(col("doc_id"), col("pass").as("g_ok"))
-      // line rules ride with the other row-local gates (the corpus is
-      // mostly single-line, so only the structure rules can cut here;
-      // the C4 terminal floor is disabled for this corpus — t69 owns
-      // its full exercise)
-      val lns = graft.operators.QualityRules
-        .lineRules(corpus, "doc_id", "text", minTerminalFrac = 0.0)
-        .select(col("doc_id"), col("pass").as("ln_ok"))
+      // the row-local gates are columns of ONE projection: Gopher, the
+      // line rules (the corpus is mostly single-line, so only the
+      // structure rules can cut here; the C4 terminal floor is
+      // disabled for this corpus — t69 owns its full exercise), the
+      // quality score, language ID and the PII disposition column
+      // (t13: the data card records it; production redacts rather
+      // than drops)
       val flags = corpus.select(col("doc_id"), col("text"),
           round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
           TextFunctions.langId(col("text")).as("lang"),
-          graft.functions.Pii.hasPii(col("text")).as("has_pii"))
-        .join(gok, Seq("doc_id"))
-        .join(lns, Seq("doc_id"))
+          graft.functions.Pii.hasPii(col("text")).as("has_pii"),
+          QualityRules.gopherPass(col("text"), QualityRules.LangRules(
+            QualityRules.GopherStopwords, minStopwords = 1, minWords = 20)).as("g_ok"),
+          QualityRules.lineRulesPass(col("text"),
+            QualityRules.LineLangRules(minTerminalFrac = 0.0)).as("ln_ok"))
         .join(quotaKept, Seq("doc_id"), "left")
         .withColumn("q_ok", col("quality") >= 0.5)
         .withColumn("l_ok", col("lang") === "en")
-        // eager localCheckpoint (the llm02 finding, same structure):
-        // flags roots both the survivor chain and the final
-        // disposition join, and its subtree (quota semi-joins + three
-        // rule operators + the regex projections) made the initial
-        // plan carry 141 documents-scan copies — the query was
-        // driver-planning-bound (guide §3.3: materialize an
-        // intermediate to truncate a very wide plan)
+        // checkpointed: without it the corpus workload took 42.8 s, 134 s CPU (vs 26.6, 79)
         .localCheckpoint(true)
       val surv = flags.filter(col("__q_in") === 1 &&
           col("g_ok") && col("ln_ok") && col("q_ok") && col("l_ok"))
@@ -1286,11 +1255,6 @@ object QText {
           org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
         .filter(col("doc_id") =!= col("__keep"))
         .select(col("doc_id")).withColumn("__dup", lit(1))
-      // (ded/ov checkpoints were ALSO tried here — llm01's audit went
-      // 3.75 → 4.37 s: above the flags checkpoint these subtrees are
-      // small and the extra eager barriers cost more than they save;
-      // llm02/llm04 keep theirs because their routed/multilingual
-      // chains are heavier)
       val ded = surv.join(dups, Seq("doc_id"), "left_anti")
       val ov = graft.operators.Decontaminate
         .ngramOverlap(ded, "doc_id", "text", bench, "text", n = 3)

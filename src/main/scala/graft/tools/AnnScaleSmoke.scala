@@ -181,7 +181,7 @@ object AnnScaleSmoke {
       check(r.ivfpq == r1.ivfpq,
         s"ivfpq top-k constant at ${r.scale}x (${r1.ivfpq}->${r.ivfpq})")
       check(r.crossPairs <= 4,
-        s"cross-copy near-dup pairs ≤ 4 at ${r.scale}x (got ${r.crossPairs})")
+        s"cross-copy near-dup pairs <= 4 at ${r.scale}x (got ${r.crossPairs})")
       // v19: quality floor + stability band (quantizer drift allowed)
       check(r.recallMicro >= 400000L &&
           math.abs(r.recallMicro - r1.recallMicro) <= 200000L,
@@ -191,10 +191,10 @@ object AnnScaleSmoke {
         s"copy-0 pair count exactly reproduced at ${r.scale}x " +
           s"(${r1.pairs} vs ${r.copy0Pairs})")
       check(inBand(r1.pairs, r.pairs),
-        s"total pairs linear ±5% at ${r.scale}x " +
+        s"total pairs linear +/-5% at ${r.scale}x " +
           s"(${r1.pairs}->${r.pairs})")
       check(inBand(r1.n - r1.kept, r.n - r.kept),
-        s"semdedup drop count linear ±5% at ${r.scale}x " +
+        s"semdedup drop count linear +/-5% at ${r.scale}x " +
           s"(${r1.n - r1.kept}->${r.n - r.kept})")
     }
     if (runs.length >= 2) {
@@ -202,7 +202,7 @@ object AnnScaleSmoke {
       val ratio = hi.scale.toDouble / lo.scale
       val bound = (lo.writeBytes * ratio * 1.5).toLong + (8L << 20)
       check(hi.writeBytes <= bound,
-        f"shuffle write ${lo.scale}x->${hi.scale}x: ${hi.writeBytes / 1048576.0}%.1f MiB ≤ " +
+        f"shuffle write ${lo.scale}x->${hi.scale}x: ${hi.writeBytes / 1048576.0}%.1f MiB <= " +
           f"linear bound ${bound / 1048576.0}%.1f MiB")
       runs.tail.zip(runs).foreach { case (r, prev) =>
         println(f"ANN_SMOKE_INFO bytes ${prev.scale}x->${r.scale}x grew " +
@@ -215,7 +215,7 @@ object AnnScaleSmoke {
         if (total > (4L << 20) && nTasks >= 8)
           check(mx <= 8 * (total / nTasks),
             f"scale=${r.scale} stage=$sid skew: max task ${mx / 1048576.0}%.1f MiB " +
-              f"≤ 8× mean ${(total / nTasks) / 1048576.0}%.1f MiB over $nTasks tasks")
+              f"<= 8x mean ${(total / nTasks) / 1048576.0}%.1f MiB over $nTasks tasks")
       }
     }
     // ---- t80 semantic decontamination at scale (planted one-hot

@@ -131,7 +131,7 @@ object IngestScaleSmoke {
       check(newRows == antiRows &&
           bloomRes.select("doc_id").exceptAll(antiRes.select("doc_id")).count() == 0 &&
           antiRes.select("doc_id").exceptAll(bloomRes.select("doc_id")).count() == 0,
-        s"scale=$c t27 Bloom path ≡ plain anti-join ($newRows rows both ways)")
+        s"scale=$c t27 Bloom path == plain anti-join ($newRows rows both ways)")
       // routed-around fraction: rebuild the operator's filter (same
       // params) and probe the batch — misses bypass the anti-join
       val bf = history.distinct().select(xxhash64(col("fp")).as("__fp"))
@@ -142,7 +142,7 @@ object IngestScaleSmoke {
           xxhash64(col("fp")), bcast)).count()
       check(misses <= antiRows && misses >= (antiRows * 9) / 10,
         s"scale=$c t27 prefilter routes $misses of $antiRows definitely-new " +
-          "rows around the anti-join (⊆ new; ≥90%)")
+          "rows around the anti-join (subset of new; >=90%)")
       antiRes.unpersist()
 
       // ---- t32: incremental NEAR-dup (LSH bands vs history) ---------
@@ -165,7 +165,7 @@ object IngestScaleSmoke {
         .filter(col("__cum") <= budget).drop("__cum")
       check(sel.select("doc_id").exceptAll(naive.select("doc_id")).count() == 0 &&
           naive.select("doc_id").exceptAll(sel.select("doc_id")).count() == 0,
-        s"scale=$c t28 two-phase selection ≡ naive ordered cumulative sum ($selRows rows)")
+        s"scale=$c t28 two-phase selection == naive ordered cumulative sum ($selRows rows)")
       val wb = Window.orderBy(col("__score").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
       val cls = scored.groupBy(col("quality").as("__score"))
@@ -190,7 +190,7 @@ object IngestScaleSmoke {
       val selRow = sel.agg(sum("n_tokens").cast("long"), max("n_tokens").cast("long")).first()
       val (selToks, maxTok) = (selRow.getLong(0), selRow.getLong(1))
       check(selToks <= budget && (nBoundary == 0 || selToks > budget - maxTok),
-        s"scale=$c t28 selected tokens $selToks in (budget−maxTok, budget] " +
+        s"scale=$c t28 selected tokens $selToks in (budget-maxTok, budget] " +
           s"(budget $budget, maxTok $maxTok)")
       sel.unpersist()
 
@@ -209,7 +209,7 @@ object IngestScaleSmoke {
           abs(col("cume_frac") - col("cume_o")) > 1e-6)
         .count()
       check(rankRows == nDocs0 * c && mismatches == 0,
-        s"scale=$c t29 rank/cume_frac ≡ naive corpus-wide windows " +
+        s"scale=$c t29 rank/cume_frac == naive corpus-wide windows " +
           s"($rankRows rows, $mismatches mismatches)")
       val distinctC = scored.select("quality").distinct().count()
       check(distinctC == distinct0,
@@ -303,7 +303,7 @@ object IngestScaleSmoke {
       val storeKept = graft.operators.DedupIndex
         .gate(spark, idxPath, nearBatch, "doc_id", "text", 3, 12, 4, 0.5).count()
       check(storeKept == nearKept,
-        s"scale=$c t65 persisted-index gate ≡ in-memory ($storeKept vs $nearKept)")
+        s"scale=$c t65 persisted-index gate == in-memory ($storeKept vs $nearKept)")
       tally.snapshotAndReset() // keep the index I/O out of the envelope
 
       // ---- t65 STEADY-STATE: a FIXED batch (copy 0) probes the
@@ -562,8 +562,8 @@ object IngestScaleSmoke {
       val expected = r1.nearKept * r.scale / r1.scale
       val tol = math.max(1L, nDocs0 * 6L / 10L * r.scale / 100L)
       check(math.abs(r.nearKept - expected) <= tol,
-        s"t32 near-dup kept rows linear ±1% at ${r.scale}x " +
-          s"(${r1.nearKept}->${r.nearKept}, expected ~$expected ±$tol)")
+        s"t32 near-dup kept rows linear +/-1% at ${r.scale}x " +
+          s"(${r1.nearKept}->${r.nearKept}, expected ~$expected +/-$tol)")
       check(r.ssKept == r1.ssKept,
         s"t65 steady-state verdicts identical under ${r.scale}x history " +
           s"(${r1.ssKept} -> ${r.ssKept})")
@@ -578,7 +578,7 @@ object IngestScaleSmoke {
       check(r.leak.keySet == r1.leak.keySet &&
           r.leak.forall { case (k, (pairs, docs)) =>
             pairs == r1.leak(k)._1 * r.scale / r1.scale && docs == r1.leak(k)._2 },
-        s"t33 leak audit EXACT at ${r.scale}x: n_pairs ${r.scale}/${r1.scale}× " +
+        s"t33 leak audit EXACT at ${r.scale}x: n_pairs ${r.scale}/${r1.scale}x " +
           s"copy 0 per split pair, n_docs constant (${r1.leak} -> ${r.leak})")
     }
     // shared shuffle/skew gates ([[SmokeGates]]). The 32 MiB

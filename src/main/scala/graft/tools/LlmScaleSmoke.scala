@@ -323,13 +323,13 @@ object LlmScaleSmoke {
       def nearLinear(x0: Long, x: Long) = math.abs(x - x0 * ratio) <= x0 * ratio * 0.02
       check(nearLinear(r1.pairs, r.pairs) && nearLinear(r1.comps, r.comps) &&
         nearLinear(r1.kept, r.kept),
-        s"dedup outputs scale linearly ±2% at ${r.scale}x " +
+        s"dedup outputs scale linearly +/-2% at ${r.scale}x " +
           s"(pairs ${r1.pairs}->${r.pairs}, comps ${r1.comps}->${r.comps}, " +
           s"kept ${r1.kept}->${r.kept})")
       check(r.bm25 == r1.bm25,
         s"bm25 top-k output constant at ${r.scale}x (${r1.bm25}->${r.bm25})")
       check(nearLinear(r1.spans, r.spans),
-        s"substring-span rows scale linearly ±2% at ${r.scale}x " +
+        s"substring-span rows scale linearly +/-2% at ${r.scale}x " +
           s"(${r1.spans}->${r.spans})")
       // t59 dedup-quality metrics: the corpus value is the per-copy
       // average (banding hashes differ per prefixed copy), so the
@@ -346,9 +346,9 @@ object LlmScaleSmoke {
         s"span-cut keeps every doc exactly once at ${r.scale}x " +
           s"(${r1.cutRows}->${r.cutRows})")
       check(nearLinear(r1.cutToks, r.cutToks),
-        s"cut tokens scale linearly ±2% at ${r.scale}x (${r1.cutToks}->${r.cutToks})")
+        s"cut tokens scale linearly +/-2% at ${r.scale}x (${r1.cutToks}->${r.cutToks})")
       check(nearLinear(r1.contPairs, r.contPairs),
-        s"containment pairs scale linearly ±2% at ${r.scale}x " +
+        s"containment pairs scale linearly +/-2% at ${r.scale}x " +
           s"(${r1.contPairs}->${r.contPairs})")
       val perCopy = r.dedup2Bytes.toDouble / r.scale
       val perCopy1 = r1.dedup2Bytes.toDouble / r1.scale
@@ -382,7 +382,7 @@ object LlmScaleSmoke {
           s"(${r1.qcWeights.take(4)}... -> ${r.qcWeights.take(4)}...)")
       // t53: roundtrip is an ABSOLUTE invariant at every scale
       check(r.roundtripBad == 0L,
-        s"t53 BPE decode∘encode == normalized text for every doc at ${r.scale}x " +
+        s"t53 BPE decode(encode(text)) == normalized text for every doc at ${r.scale}x " +
           s"(${r.roundtripBad} mismatches)")
       // t52: hosts grow c× while the registrable-domain key collapses
       // the megasite to ONE group at any scale
@@ -665,7 +665,7 @@ object LlmScaleSmoke {
         check(rows * l1._1 == baseRows * c,
           s"scale=$c t71 lang=$lang scored rows EXACTLY linear ($baseRows->$rows)")
         check(buckets.values.forall(b => math.abs(b - rows / 3.0) <= 1.0),
-          s"scale=$c t71 lang=$lang terciles within ±1 of n/3 ($buckets)")
+          s"scale=$c t71 lang=$lang terciles within +/-1 of n/3 ($buckets)")
         // approx boundaries: same rows per language; per-bucket counts
         // within the tie allowance of the exact cut (every base doc
         // has c verbatim-copy ties — value labeling keeps a tied run
@@ -685,7 +685,7 @@ object LlmScaleSmoke {
       val t70tot = t70c.sum
       check(t70tot == l1._14.sum * c &&
           t70c.forall(b => math.abs(b - t70tot / 3.0) <= 1.0),
-        s"scale=$c t70 scored total EXACTLY linear, buckets within ±1 of n/3 " +
+        s"scale=$c t70 scored total EXACTLY linear, buckets within +/-1 of n/3 " +
           s"(${l1._14}->$t70c)")
       check(gp * l1._1 == l1._10 * c,
         s"scale=$c t67 gopher 4-rule pass count EXACTLY linear on verbatim copies " +

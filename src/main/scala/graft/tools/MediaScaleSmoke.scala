@@ -74,7 +74,7 @@ object MediaScaleSmoke {
       // map-only decode: only aggregate partials may shuffle
       check(r.writeBytes <= (1L << 20),
         f"scale=${r.scale} decode paths map-only: shuffle write " +
-          f"${r.writeBytes / 1024.0}%.1f KiB ≤ 1024 KiB")
+          f"${r.writeBytes / 1024.0}%.1f KiB <= 1024 KiB")
     }
 
     // m11 cue↔frame alignment: the interval join MUST plan as an
@@ -258,7 +258,7 @@ object MediaScaleSmoke {
       val surv = graft.multimodal.MediaIndex.gate(spark, idxPath, batch, maxHamming = 3)
       val viaStore = surv.count()
       check(viaStore == inMem,
-        s"scale=$c m16 persisted-index gate ≡ in-memory ($viaStore vs $inMem)")
+        s"scale=$c m16 persisted-index gate == in-memory ($viaStore vs $inMem)")
       // day-2 idempotence THROUGH a compaction: upsert the accepted
       // codes, compact (atomic re-publish), re-gate the same batch —
       // every accepted code now self-matches at Hamming 0, so nothing
@@ -331,7 +331,7 @@ object MediaScaleSmoke {
       .collect().filter(_ > 0)
     val maxRow = (8L * 65536)
     check(parts.nonEmpty && parts.max <= target + maxRow,
-      f"balanceByBytes: max partition ${parts.max / 1024.0}%.0f KiB ≤ " +
+      f"balanceByBytes: max partition ${parts.max / 1024.0}%.0f KiB <= " +
         f"target ${target / 1024.0}%.0f KiB + largest payload ${maxRow / 1024.0}%.0f KiB " +
         f"over ${parts.length} non-empty partitions")
 

@@ -19,7 +19,7 @@ object SmokeGates {
       val ratio = s.toDouble / ps
       val bound = (pb * ratio * 1.5).toLong + (8L << 20)
       check(b <= bound || b <= exemptBytes,
-        f"shuffle write ${ps}x->${s}x: ${b / 1048576.0}%.1f MiB ≤ " +
+        f"shuffle write ${ps}x->${s}x: ${b / 1048576.0}%.1f MiB <= " +
           f"linear bound ${bound / 1048576.0}%.1f MiB" +
           (if (exemptBytes > 0) " or small-total exemption" else "") +
           f" (grew ${b.toDouble / math.max(1, pb)}%.2fx for a $ratio%.2fx scale-up)")
@@ -34,6 +34,6 @@ object SmokeGates {
       if (total > (4L << 20) && n >= 8)
         check(mx <= 8 * (total / n),
           f"scale=$scale stage=$sid skew: max task ${mx / 1048576.0}%.1f MiB " +
-            f"≤ 8× mean ${(total / n) / 1048576.0}%.1f MiB over $n tasks")
+            f"<= 8x mean ${(total / n) / 1048576.0}%.1f MiB over $n tasks")
     }
 }

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The pbp queries cache a pruned projection of the parse chain (it
   * feeds 2-4 consumers; uncached it re-runs per consumer). The harness
   * contract is that `spark.catalog.clearCache()` after the action
-  * drops every such intermediate — Verify/Bench clear per query,
-  * VerifyOne before exit. This pins that contract: a query that
+  * drops every such intermediate — Verify, Bench and BenchOne clear
+  * per query. This pins that contract: a query that
   * switched to `SparkContext`-level persistence (RDD.persist bypasses
   * the catalog cache manager) would linger past clearCache and fail
   * here. */

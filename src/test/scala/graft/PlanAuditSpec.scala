@@ -1,6 +1,10 @@
 package graft
 
 import graft.SparkTestSession
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -622,6 +626,35 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"), p)
   }
 
+  /** FileSourceScanExec nodes reading `documents`, summed over every
+    * plan the session reports while `run` executes: the query's own
+    * action plus each eager checkpoint and driver-side collect it
+    * triggers (`Dataset.localCheckpoint` reports through `withAction`). */
+  private def documentScans(run: => Unit): Int = {
+    val sc = spark.sparkContext
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        scans.addAndGet(DocumentScans.in(qe))
+      override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    ListenerBusDrain(sc)
+    spark.listenerManager.register(listener)
+    try { run; ListenerBusDrain(sc) }
+    finally spark.listenerManager.unregister(listener)
+    scans.get
+  }
+
+  test("llm01/llm02: the per-document gates are columns, so the pipelines scan " +
+      "documents fewer times") {
+    // with the gates as frames joined back on doc_id, llm01 reported
+    // 13 documents scans and llm02 14
+    val scans = (
+      documentScans(SparkEntry.queries("llm01_corpus_pipeline")(spark, dir).collect()),
+      documentScans(SparkEntry.queries("llm02_corpus_multilang")(spark, dir).collect()))
+    assert(scans === ((11, 12)))
+  }
+
   test("t65: the gate consumes the bucketed history-shingle scan with ZERO exchange") {
     // the steady-state contract of the persisted dedup index: the
     // history shingle table is bucketed by `sh`, so the verification
@@ -876,4 +909,13 @@ class PlanAuditSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
   }
+}
+
+/** File scans of the `documents` table in a query's executed plan,
+  * through adaptive stages and subqueries. */
+private object DocumentScans extends AdaptiveSparkPlanHelper {
+  def in(qe: QueryExecution): Int = collectWithSubqueries(qe.executedPlan) {
+    case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains("documents")) => s
+  }.size
 }

@@ -45,7 +45,19 @@ class LangIdSpec extends AnyFunSuite {
       .as[(Long, String, String)].collect().sortBy(_._1)
     val wrong = got.filter { case (_, pred, truth) => pred != truth }
     assert(wrong.isEmpty, s"misclassified: ${wrong.mkString(", ")}")
+    assert(viaColumn(held, profiles) === framed(held, profiles))
   }
+
+  /** (id, pred_lang, dist) rows of the column form and of the frame form */
+  private def viaColumn(docs: org.apache.spark.sql.DataFrame,
+      profiles: Map[String, Map[String, Int]]): Seq[(Long, String, Long)] =
+    docs.select(col("doc_id"), LangId.classifyColumn(col("text"), profiles).as("lid"))
+      .select("doc_id", "lid.pred_lang", "lid.dist")
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
+  private def framed(docs: org.apache.spark.sql.DataFrame,
+      profiles: Map[String, Map[String, Int]]): Seq[(Long, String, Long)] =
+    LangId.classify(docs, "doc_id", "text", profiles)
+      .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
 
   test("edge cases: gramless docs predict empty; classification is layout-stable") {
     val profiles = LangId.trainProfiles(train, "lang", "text")
@@ -54,6 +66,7 @@ class LangIdSpec extends AnyFunSuite {
       .as[(Long, String, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
     assert(got(1L) === ("", 0L) && got(2L) === ("", 0L) && got(3L) === ("", 0L))
     assert(got(4L)._1 === "en")
+    assert(viaColumn(edge, profiles) === framed(edge, profiles))
     val a = LangId.trainAndClassify(held, "doc_id", "lang", "text")
       .as[(Long, String, Long)].collect().sortBy(_._1).toSeq
     val b = LangId.trainAndClassify(held.repartition(5), "doc_id", "lang", "text")

@@ -1312,6 +1312,10 @@ class OperatorSpecs extends AnyFunSuite {
       s"in-domain ${r(1L)} must beat reversed-order gibberish ${r(2L)}")
   }
 
+  /** id -> the Boolean in column 1 of a (doc_id, verdict) frame */
+  private def verdicts(df: org.apache.spark.sql.DataFrame): Map[Long, Boolean] =
+    df.collect().map(x => x.getLong(0) -> x.getBoolean(1)).toMap
+
   test("QualityRules.gopher: every rule hand-verified at its boundary") {
     val good = "the data of the run and that have with home" // 10 words, mean 3.4
     val docs = Seq(
@@ -1339,6 +1343,10 @@ class OperatorSpecs extends AnyFunSuite {
     // symbol accounting on doc 3: 6 hashes + 3 ellipses over 64 words
     assert(r(3L).getAs[Double]("symbol_ratio") ===
       math.round(9.0 / 64 * 1e6) / 1e6)
+    // the column form is the frame form's `pass`, row for row
+    assert(verdicts(docs.select(col("doc_id"), QualityRules.gopherPass(col("text"),
+        QualityRules.LangRules(QualityRules.GopherStopwords, minStopwords = 2)))) ===
+      r.map { case (id, x) => id -> x.getAs[Boolean]("pass") })
   }
 
   test("QualityRules.gopherByLang: each doc judged by ITS language's table") {
@@ -1384,6 +1392,8 @@ class OperatorSpecs extends AnyFunSuite {
     assert(r === Map(1L -> true, 2L -> true, 3L -> false, 4L -> false,
       5L -> false, 6L -> true, 7L -> false, 8L -> true, 9L -> false,
       10L -> true, 11L -> false, 12L -> false))
+    assert(verdicts(docs.select(col("doc_id"),
+      QualityRules.gopherPass(col("text"), col("lang"), rules, default))) === r)
     // the per-language frame must agree with single-language gopher
     // run separately per language (the parameterization is pure CASE
     // dispatch, no semantic drift)
@@ -1391,6 +1401,8 @@ class OperatorSpecs extends AnyFunSuite {
         "doc_id", "text", minWords = 20, minStopwords = 1)
       .collect().map(x => x.getLong(0) -> x.getAs[Boolean]("pass")).toMap
     assert(enOnly === Map(1L -> true, 4L -> false, 9L -> false, 11L -> false))
+    assert(verdicts(docs.filter(col("lang") === "en").select(col("doc_id"),
+      QualityRules.gopherPass(col("text"), rules("en")))) === enOnly)
   }
 
   test("QualityRules.lineRulesByLang: terminal set and thresholds keyed on the language") {
@@ -1404,10 +1416,14 @@ class OperatorSpecs extends AnyFunSuite {
       (4L, "zh", enText))  // Latin terminals under the zh set: fail
       .toDF("doc_id", "lang", "text")
     val rules = Map("zh" -> LineLangRules(terminalChars = Seq("。", "！", "？")))
-    val r = QualityRules.lineRulesByLang(docs, "doc_id", "text", "lang",
+    val frame = QualityRules.lineRulesByLang(docs, "doc_id", "text", "lang",
         rules, LineLangRules())
+    val r = frame
       .collect().map(x => x.getLong(0) ->
         (x.getAs[Double]("terminal_frac"), x.getAs[Boolean]("pass_terminal"))).toMap
+    assert(verdicts(docs.select(col("doc_id"), QualityRules.lineRulesPass(
+        col("text"), col("lang"), rules, LineLangRules()))) ===
+      verdicts(frame.select("doc_id", "pass")))
     assert(r(1L) === ((1.0, true)) && r(2L) === ((0.0, false)))
     assert(r(3L) === ((1.0, true)) && r(4L) === ((0.0, false)))
     // per-language threshold override: opening zh's floor flips doc 4
@@ -1455,6 +1471,9 @@ class OperatorSpecs extends AnyFunSuite {
     assert(flags(7L) === ((true, true, true, true, true)))
     assert(r(8L).getAs[Double]("terminal_frac") === 0.5) // ≥ 0.5 passes
     assert(flags(8L) === ((true, true, true, true, true)))
+    assert(verdicts(docs.select(col("doc_id"),
+        QualityRules.lineRulesPass(col("text"), QualityRules.LineLangRules()))) ===
+      r.map { case (id, x) => id -> x.getAs[Boolean]("pass") })
   }
 
   test("knFivegramCrossPerplexity: every tier hand-computed through the interpolation") {
