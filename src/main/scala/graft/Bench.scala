@@ -20,7 +20,8 @@ object Bench {
     val cpus = spark.sparkContext.defaultParallelism
     // untimed warmup: JIT + codegen + parquet footer caches, so the
     // first timed query measures the engine, not JVM startup
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try graft.util.Caches.scoped(SparkEntry.entry(spark).count())
+    catch { case _: Throwable => () }
     // Headline subset (SparkEntry.benchQueries — 67 of the 158
     // registered queries as of late r10): every remaining query still
     // runs in Verify; benching all of them would measure JVM warmup
@@ -44,9 +45,8 @@ object Bench {
       case Some(wd) => names.foreach { name =>
         // NonFatal only: an OOM during warmup must kill the JVM, not
         // leave it poisoned to produce garbage timings
-        try SparkEntry.queries(name)(spark, wd).count()
+        try graft.util.Caches.scoped(SparkEntry.queries(name)(spark, wd).count())
         catch { case scala.util.control.NonFatal(_) => () }
-        spark.catalog.clearCache()
       }
     }
     // Median of N passes per query (default 3). A single pass in a
@@ -92,19 +92,18 @@ object Bench {
     var jvmsMax = jvmsStart
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
-      val times = (1 to passes).map { _ =>
+      // each pass runs in its own scope, released after the clock
+      // stops: later passes/queries aren't measured under the GC
+      // pressure of earlier intermediates, and each pays its own
+      // materialization
+      val times = (1 to passes).map { _ => graft.util.Caches.scoped {
         val t0 = System.nanoTime()
         // a failed query must NOT masquerade as a fast one: report -1
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
         }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-        // operators may persist intermediates (dedup shingle frames);
-        // drop them so later passes/queries aren't measured under GC
-        // pressure — each pass pays its own materialization
-        spark.catalog.clearCache()
-        dt
-      }
+        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      } }
       val median =
         if (times.contains(-1.0)) -1.0
         else times.sorted.apply(times.length / 2)

@@ -25,7 +25,7 @@ object Verify {
       // coalesce(1) is HARNESS-ONLY (one parquet file per query for
       // the DuckDB compare) — never copy this into an operator; a
       // single-partition write serializes the whole result
-      val entry = try {
+      val entry = try graft.util.Caches.scoped {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         // metadata-only count (parquet footer), no recompute
@@ -36,9 +36,12 @@ object Verify {
         (false, -1L)
       }
       results(name) = entry
-      manifest.println(s"""{"query":"$name","ok":${entry._1},"rows":${entry._2}}""")
+      // RDDs still persisted once the query's scope has closed: any
+      // above 0 is an intermediate that outlives its query
+      val held = spark.sparkContext.getPersistentRDDs.size
+      manifest.println(
+        s"""{"query":"$name","ok":${entry._1},"rows":${entry._2},"held":$held}""")
       manifest.flush()
-      spark.catalog.clearCache() // drop operator-persisted intermediates
     }
     manifest.close()
     val nOk = results.count(_._2._1)

@@ -245,7 +245,7 @@ object RunAll {
     // ONE cached scan, upserted by (year, division)
     val weights = lwNormalized.collect()
       .map(r => r.getString(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))).toMap
-    val forBoards = graft.util.Caches.track(metrics.cache())
+    val forBoards = graft.util.Caches.persist(metrics)
     val boards = Leaderboards.runAnalysis(forBoards, weights, guts)
     val wpaGated = Set("value_batter", "value_batting_team", "value_pitcher",
       "value_pitching_team")

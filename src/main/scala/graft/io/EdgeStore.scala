@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Caches
+
 /**
  * Persisted link-graph edge table, kept in TWO bucketed copies — one
  * by `src`, one by `dst` — so iterative graph algorithms
@@ -96,14 +98,12 @@ object EdgeStore {
       buckets: Int = 8): Unit = {
     val spark = edges.sparkSession
     val ids = nodes.select(col(idCol).as("id"))
-    val closed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val closed = Caches.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi"))
     val v = StoreKit.nextVersion(spark, path, "edges")
     BucketedTables.write(closed, s"$path/by_src/v$v", "src", "src", buckets)
     BucketedTables.write(closed, s"$path/by_dst/v$v", "dst", "dst", buckets)
-    closed.unpersist()
     // the vertex SET persists next to the edges (node-sized — tiny
     // relative to the edge copies): it is what lets upsert PROVE the
     // superset invariant instead of trusting count+checksum (which
@@ -169,23 +169,21 @@ object EdgeStore {
             "vertices — vertices may only be added, never dropped or swapped")
         // append only the DELTA (new \ stored): the persisted set grows
         // to equal the new universe without rewriting it. The delta is
-        // eagerly localCheckpoint'ed FIRST — reading and appending the
-        // same parquet dir in one job is formally undefined in Spark
-        // (task retries or object-store listing could double-count or
-        // duplicate rows); the checkpoint severs the plan from the dir
-        // before the append touches it (node-sized: the day's new ids)
-        ids.join(stored, Seq("id"), "left_anti").localCheckpoint(true)
+        // cut FIRST — reading and appending the same parquet dir in one
+        // job is formally undefined in Spark (task retries or
+        // object-store listing could double-count or duplicate rows);
+        // the cut severs the plan from the dir before the append
+        // touches it (node-sized: the day's new ids)
+        Caches.cut(ids.join(stored, Seq("id"), "left_anti"))
           .write.mode("append").parquet(s"$path/vertices/v$vv")
       case None => // legacy store: materialize the set going forward
         ids.write.mode("overwrite").parquet(s"$path/vertices/v$v")
     }
-    val closed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val closed = Caches.persist(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
-      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi"))
     BucketedTables.append(closed, s"$path/by_src/v$v", "src", "src", buckets)
     BucketedTables.append(closed, s"$path/by_dst/v$v", "dst", "dst", buckets)
-    closed.unpersist()
     StoreManifest.commit(spark, path,
       Map("edges" -> v, "buckets" -> buckets,
         "vertices" -> m.getOrElse("vertices", v)) ++ nvKeys(n) ++ vxKeys(sig))

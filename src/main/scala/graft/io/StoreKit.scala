@@ -81,15 +81,15 @@ object StoreKit {
   }
 
   /** SNAPSHOT-STABLE gate verdicts (the discipline every ingest gate
-    * shares): the drop-id frame — small, drop ids only — is eagerly
-    * localCheckpoint'ed so the returned survivors frame keeps meaning
-    * "gated against the store AS OF THIS CALL" even after the caller
-    * upserts the survivors back into the index (a lazy plan would
-    * re-probe the grown store and self-match every batch row) or the
-    * harness clears the cache catalog. */
+    * shares): the drop-id frame — small, drop ids only — is cut
+    * ([[graft.util.Caches.cut]]) so the returned survivors frame keeps
+    * meaning "gated against the store AS OF THIS CALL" even after the
+    * caller upserts the survivors back into the index (a lazy plan
+    * would re-probe the grown store and self-match every batch row).
+    * The cut lives until the caller's scope ends. */
   def snapshotStableSurvivors(
       batch: DataFrame, idCol: String, drops: DataFrame): DataFrame =
-    batch.join(drops.localCheckpoint(true), Seq(idCol), "left_anti")
+    batch.join(graft.util.Caches.cut(drops), Seq(idCol), "left_anti")
 
   /** The compact rewrite's INPUT: the current version dir as PLAIN
     * parquet, never the bucketed table — fed the bucketed scan,

@@ -64,12 +64,10 @@ object LinearWeights {
     val classed = re24(pbp, erWide).withColumn("events", classCol(col("event_type")))
     // ~6 rows, but referenced TWICE (the output and the out-baseline
     // broadcast) — cache it or the whole re24 join+agg runs twice
-    val perClass = classed.groupBy("events")
+    val perClass = graft.util.Caches.persist(classed.groupBy("events")
       .agg(count(lit(1)).as("count"),
         round(sum("re24") / count(lit(1)), 3).as("linear_weights_above_average"))
-      .filter(col("events") =!= "other")
-      .cache()
-    graft.util.Caches.track(perClass)
+      .filter(col("events") =!= "other"))
     val outVal = perClass.filter(col("events") === "out")
       .select(col("linear_weights_above_average").as("__out_val"))
     perClass.crossJoin(broadcast(outVal))

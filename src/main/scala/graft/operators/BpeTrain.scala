@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.BpeVocab
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -162,7 +163,7 @@ object BpeTrain {
     * one (one blocking job per round, not two: the rewrite is never
     * counted eagerly). */
   /** @param checkpointEvery every N rounds the symbol table's LINEAGE
-    *   is truncated with an eager `localCheckpoint` — without it each
+    *   is truncated with [[graft.util.Caches.cut]] — without it each
     *   round wraps one more Project over the plan and Catalyst
     *   re-analyzes the whole O(rounds)-deep tree every round, an
     *   O(rounds²) driver cost that is invisible at 12 merges and
@@ -177,13 +178,12 @@ object BpeTrain {
     // per CODEPOINT, surrogate pairs intact) — the same segmentation
     // charSymbols gives the driver path, so the two trainers agree
     // beyond the BMP (split(word, '') would shear surrogate pairs)
-    var cur = wordFreq.select(
+    var cur = Caches.persist(wordFreq.select(
       org.apache.spark.sql.graft.ColumnBridge.column(
         graft.plans.CharNgramsExpr(
           org.apache.spark.sql.graft.ColumnBridge.expression(col("word")), 1))
         .as("toks"),
-      col("freq"))
-      .persist()
+      col("freq")))
     var prev: DataFrame = null
     var rounds = 0
     var stop = false
@@ -199,7 +199,7 @@ object BpeTrain {
         .limit(1).collect()
       // the argmax job above just materialized `cur`'s cache — the
       // previous round's cache is no longer an input to anything live
-      if (prev != null) { prev.unpersist(); prev = null }
+      if (prev != null) { Caches.release(prev); prev = null }
       if (top.isEmpty || top.head.getLong(2) < minFreq) stop = true
       else {
         val (a, b, f) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
@@ -233,12 +233,10 @@ object BpeTrain {
         // checkpoint rounds trade one eager job for a flat plan; all
         // other rounds stay lazy (materialized by the next argmax)
         cur =
-          if (rounds % checkpointEvery == 0) rewritten.localCheckpoint(true)
-          else rewritten.persist()
+          if (rounds % checkpointEvery == 0) Caches.cut(rewritten)
+          else Caches.persist(rewritten)
       }
     }
-    cur.unpersist()
-    if (prev != null) prev.unpersist()
     merges.toSeq
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.{PortableHash, ScalarFunctions, TextFunctions}
+import graft.util.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -189,7 +190,7 @@ object Dedup {
     // the pair join — without it the tokenize+explode+distinct
     // pipeline re-runs up to 3× (exchange reuse is not guaranteed
     // under AQE). ~16 bytes/shingle; spills to disk if large.
-    val sh = sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.persist(sh0)
     // materialize once before fan-out: the consumers are independent
     // stages the scheduler runs concurrently, and on first touch each
     // would race to compute the same uncached partitions (duplicate
@@ -224,8 +225,7 @@ object Dedup {
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double,
       maxShingleDf: Option[Int] = Some(1000)): DataFrame = {
-    val sh = shingled(df, idCol, textCol, n, maxShingleDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.persist(shingled(df, idCol, textCol, n, maxShingleDf))
     sh.count() // materialize before the three-consumer fan-out
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
     val inter = sh.as("a")
@@ -351,8 +351,7 @@ object Dedup {
     // join — persist it (see ngramJaccardPairs note). Column order is
     // normalized first: the DF-cap's semi-join puts the key column
     // first, and the intersection join below renames POSITIONALLY.
-    val sh = sh0.select("id", "sh")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.persist(sh0.select("id", "sh"))
     sh.count() // see ngramJaccardPairs: defuse the concurrent-first-touch race
     val cands = minhashLshCandidatesFromShingles(sh, numHashes, bands)
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
@@ -398,10 +397,8 @@ object Dedup {
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val shB = shingled(batch, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shH = shingled(history, idCol, textCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shB = Caches.persist(shingled(batch, idCol, textCol, shingleN))
+    val shH = Caches.persist(shingled(history, idCol, textCol, shingleN))
     shB.count(); shH.count() // defuse the concurrent-first-touch race
     def bandedOf(sh: DataFrame): DataFrame =
       minhashSignaturesFromShingles(sh, numHashes).select(
@@ -422,22 +419,16 @@ object Dedup {
       .join(shH.toDF("hid", "sh"), Seq("hid", "sh"))
       .groupBy("bid", "hid")
       .agg(count(lit(1)).as("n_inter"))
-    val drops = inter.join(szB, "bid").join(szH, "hid")
+    val drops = Caches.persist(inter.join(szB, "bid").join(szH, "hid")
       .withColumn("jaccard",
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")), 6))
       .filter(col("jaccard") >= threshold)
-      .select(col("bid").as(idCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materialize the (small: drop-ids only) verdict, then free the
-    // two large shingle caches RIGHT HERE — a long-lived caller (e.g.
-    // a foreachBatch ingestion loop) must not accumulate them per
-    // invocation. The remaining `drops` cache is catalog-managed, so
-    // the harness clearCache() contract (CacheHygieneSpec) frees it
-    // per query; loop callers should unpersist the returned plan's
-    // cache or clearCache between batches.
+      .select(col("bid").as(idCol)).distinct())
+    // materialize the (small: drop-ids only) verdict; it and the two
+    // shingle caches live until the caller's scope ends, so a
+    // foreachBatch ingestion loop opens one scope per batch
     drops.count()
-    shB.unpersist(); shH.unpersist()
     batch.join(drops, Seq(idCol), "left_anti")
   }
 
@@ -514,8 +505,8 @@ object Dedup {
    * neighbor-list materialization anywhere, so a hot node with 10⁸
    * dup edges never assembles its adjacency in one task — the
    * algorithm's whole point at 100 TB. Converges in O(log²) rounds;
-   * every round persists its (shrinking) edge set and truncates
-   * lineage.
+   * every round cuts its (shrinking) edge set, truncating lineage,
+   * and releases the round before it.
    *
    * Input: undirected edges (`id_a`, `id_b`). Output: (`id`,
    * `component`) for every node that appears in an edge, where
@@ -528,19 +519,17 @@ object Dedup {
     // plan (t09's pair join), and both the node set and the edge set
     // derive from it — without this the upstream pipeline re-runs
     // once per union branch when the output is finally consumed
-    val raw = graft.util.Caches.track(edges
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val raw = Caches.persist(edges
+      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")))
     val rawCount = raw.count()
     val nodes = raw.select(col("a").as("id"))
       .union(raw.select(col("b").as("id")))
       .distinct()
 
-    var e = raw
+    var e = Caches.persist(raw
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
 
     // limit-probed hybrid (the PlayerMap broadcast/cogroup pattern):
     // a dup-pair graph is usually FAR smaller than the corpus — when
@@ -555,7 +544,6 @@ object Dedup {
     if (small) {
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
-      e.unpersist(blocking = false)
       val parent = scala.collection.mutable.Map[Long, Long]()
       // ITERATIVE find with path compression: union-by-min builds
       // chains on adversarial edge orders, and a path-shaped 500k-edge
@@ -606,18 +594,18 @@ object Dedup {
       // to the minimum of the smaller neighborhood
       val dir = ls.select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       val mins2 = dir.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = dir.join(mins2, "u")
+      val prev = e
+      val prevSig = sig
+      // one cut per round truncates the per-round lineage; the round
+      // before it releases once the new signature is read
+      e = Caches.cut(dir.join(mins2, "u")
         .select(col("v").as("a"), col("m").as("b"))
         .union(mins2.select(col("u").as("a"), col("m").as("b")))
         .filter(col("a") =!= col("b"))
         .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-        .distinct()
-        .localCheckpoint(true) // truncate the per-round lineage
-      val prev = e
-      val prevSig = sig
-      e = ss.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .distinct())
       sig = signature(e)
-      prev.unpersist(blocking = false)
+      Caches.release(prev)
       converged = sig == prevSig
       iter += 1
     }
@@ -634,7 +622,6 @@ object Dedup {
       .groupBy("id").agg(min(col("component")).as("component"))
     val out = nodes.join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    e.unpersist(blocking = false)
     out
   }
 

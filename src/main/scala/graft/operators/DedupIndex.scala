@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.StoreManifest
+import graft.util.Caches
 
 /**
  * Persisted MinHash-LSH ingest index — the TEXT twin of [[AnnIndex]]:
@@ -153,8 +154,7 @@ object DedupIndex {
     val spark = docs.sparkSession
     def next(k: String) = graft.io.StoreKit.nextVersion(spark, path, k)
     val (bv, sv, zv) = (next("bands"), next("shingles"), next("sizes"))
-    val sh = shinglesOf(docs, idCol, textCol, shingleN, charShingles)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.persist(shinglesOf(docs, idCol, textCol, shingleN, charShingles))
     // the shingle write materializes the sh cache; the sizes and bands
     // writes both derive from the NOW-CACHED sh and target different
     // directories — independent jobs, overlapped (guide §2.6) instead
@@ -165,7 +165,6 @@ object DedupIndex {
         .parquet(s"$path/sizes/v$zv"),
       () => graft.io.BucketedTables.write(
         bandedOf(sh, numHashes, bands), s"$path/bands/v$bv", "bucket", "id", buckets)))
-    sh.unpersist()
     StoreManifest.commit(spark, path,
       Map("bands" -> bv, "shingles" -> sv, "sizes" -> zv,
         "buckets" -> buckets, "band_buckets" -> buckets, "band_enc" -> 2,
@@ -191,8 +190,7 @@ object DedupIndex {
     requireGrid(m, shingleN, numHashes, bands)
     // the shingle UNIT comes from the store's own manifest — an
     // upsert can never silently mix word- and char-shingled grids
-    val sh = shinglesOf(docs, idCol, textCol, shingleN, charOf(m))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.persist(shinglesOf(docs, idCol, textCol, shingleN, charOf(m)))
     // first append materializes the sh cache; sizes + bands appends
     // then overlap (different directories — see [[write]]'s note)
     graft.io.BucketedTables.append(
@@ -209,7 +207,6 @@ object DedupIndex {
           banded.write.mode("append").partitionBy("band")
             .parquet(s"$path/bands/v${m("bands")}")
       }))
-    sh.unpersist()
   }
 
   /**
@@ -238,14 +235,10 @@ object DedupIndex {
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val (dropsF, release) = gateParts(
+    val dropsF = gateParts(
       spark, path, batch, idCol, textCol, shingleN, numHashes, bands, threshold)
-    // verdicts are SNAPSHOT-STABLE (StoreKit.snapshotStableSurvivors —
-    // the checkpoint happens inside, BEFORE release() frees the gate's
-    // cached intermediates)
-    val surv = graft.io.StoreKit.snapshotStableSurvivors(batch, idCol, dropsF)
-    release()
-    surv
+    // verdicts are SNAPSHOT-STABLE (StoreKit.snapshotStableSurvivors)
+    graft.io.StoreKit.snapshotStableSurvivors(batch, idCol, dropsF)
   }
 
   /**
@@ -264,15 +257,14 @@ object DedupIndex {
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     val m = StoreManifest.current(spark, path)
-    val (dropsF, shB, release) = gatePartsWithShingles(
+    val (dropsF, shB) = gatePartsWithShingles(
       spark, path, m, batch, idCol, textCol, shingleN, numHashes, bands, threshold)
     val surv = graft.io.StoreKit.snapshotStableSurvivors(batch, idCol, dropsF)
     // survivor shingles = the gate's cached frame, id-filtered (the
     // checkpoint above froze the survivor set, so the semi-join is
     // snapshot-stable too)
-    val shSurv = shB.join(
-        surv.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shSurv = Caches.persist(shB.join(
+        surv.select(col(idCol).as("id")), Seq("id"), "left_semi"))
     // first append materializes the shSurv cache; sizes + bands
     // appends then overlap (different directories — [[write]]'s note)
     graft.io.BucketedTables.append(
@@ -288,8 +280,6 @@ object DedupIndex {
         case None => banded.write.mode("append").partitionBy("band")
           .parquet(s"$path/bands/v${m("bands")}")
       }))
-    shSurv.unpersist()
-    release()
     surv
   }
 
@@ -329,31 +319,29 @@ object DedupIndex {
     bandedOf(Dedup.shingled(batch, idCol, textCol, shingleN), numHashes, bands,
       encodeBand)
 
-  /** The drop-id frame of one [[gate]] call BEFORE the checkpoint,
-    * plus a release() for its cached intermediates — split out so the
-    * plan audit can inspect the physical plan of the verification join
-    * (bucketed history scan, no exchange) without re-implementing the
-    * gate. */
+  /** The drop-id frame of one [[gate]] call BEFORE the checkpoint —
+    * split out so the plan audit can inspect the physical plan of the
+    * verification join (bucketed history scan, no exchange) without
+    * re-implementing the gate. */
   private[graft] def gateParts(
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int,
-      threshold: Double): (DataFrame, () => Unit) = {
+      threshold: Double): DataFrame = {
     val m = StoreManifest.current(spark, path) // ONE snapshot per gate
-    val (drops, _, release) = gatePartsWithShingles(
-      spark, path, m, batch, idCol, textCol, shingleN, numHashes, bands, threshold)
-    (drops, release)
+    gatePartsWithShingles(
+      spark, path, m, batch, idCol, textCol, shingleN, numHashes, bands, threshold)._1
   }
 
   /** [[gateParts]] against an already-resolved manifest snapshot,
     * additionally exposing the batch's persisted shingle frame so
     * [[ingest]] can append the survivors' shingles without
-    * re-shingling (release() unpersists it). */
+    * re-shingling. */
   private def gatePartsWithShingles(
       spark: SparkSession, path: String, m: Map[String, Int], batch: DataFrame,
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int,
-      threshold: Double): (DataFrame, DataFrame, () => Unit) = {
+      threshold: Double): (DataFrame, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     requireGrid(m, shingleN, numHashes, bands)
     val histBands = histBandsFrame(spark, path, m)
@@ -363,12 +351,10 @@ object DedupIndex {
         spark.read.parquet(s"$path/shingles/v${m("shingles")}").toDF("hid", "sh")
     }
     // batch shingles take the STORE's recorded unit (word vs char)
-    val shB = shinglesOf(batch, idCol, textCol, shingleN, charOf(m))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shB = Caches.persist(shinglesOf(batch, idCol, textCol, shingleN, charOf(m)))
     shB.count()
     val enc2 = m.get("band_enc").contains(2)
-    val cand = candProbe(histBands, bandedOf(shB, numHashes, bands, enc2), enc2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = Caches.persist(candProbe(histBands, bandedOf(shB, numHashes, bands, enc2), enc2))
     // limit-probed hybrid: candidate id sets are batch-neighborhood-
     // sized in steady state — collect them and let the parquet reader
     // prune history row groups; fall back to a distributed semi-join
@@ -414,7 +400,7 @@ object DedupIndex {
           (col("n_a") + col("n_b") - col("n_inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select(col("bid").as(idCol)).distinct()
-    (drops, shB, () => { cand.unpersist(); shB.unpersist(); () })
+    (drops, shB)
   }
 
   /** One compaction summary from [[compact]]. */

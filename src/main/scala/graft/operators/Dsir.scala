@@ -109,17 +109,15 @@ object Dsir {
     * hash ONCE: the bucketized corpus persists, BOTH distributions
     * come from a single combined aggregation (conditional sum), and
     * scoring folds over the persisted bucket arrays — one md5 pass
-    * total instead of three. Persists an intermediate; the harness's
-    * per-query `clearCache()` releases it (the
-    * [[Dedup.incrementalNearDupLsh]] contract).
+    * total instead of three. Persists an intermediate, which the
+    * caller's [[graft.util.Caches.scoped]] block releases.
     */
   def resampleTopKWithin(
       raw: DataFrame, isTarget: Column,
       idCol: String, textCol: String, b: Int, k: Int): DataFrame = {
-    val bucketed = raw.select(
+    val bucketed = graft.util.Caches.persist(raw.select(
         col(idCol), isTarget.as("__tgt"),
-        bigramBuckets(col(textCol), b).as("__bks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        bigramBuckets(col(textCol), b).as("__bks")))
     val counts = bucketed
       .select(col("__tgt"), explode(col("__bks")).as("bucket"))
       .groupBy("bucket")

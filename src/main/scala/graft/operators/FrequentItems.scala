@@ -39,13 +39,11 @@ object FrequentItems {
     // consume the histogram, and their column pruning differs (the
     // ranker drops valueCol), so without the cache Catalyst plans TWO
     // corpus scans — the cache makes the big side stream through
-    // once. Freed by the session's per-query clearCache (the same
-    // contract selectToBudget and the LSH ingest rely on).
-    val hist = df
+    // once.
+    val hist = graft.util.Caches.persist(df
       .groupBy(gcols :+ col(valueCol): _*)
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("__h", ScalarFunctions.md5Long(col(valueCol).cast("string")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__h", ScalarFunctions.md5Long(col(valueCol).cast("string"))))
     // TopKAgg orders (score DESC, id ASC); hashes are uniform in
     // [0, 2^60), so id = hash gives the portable ASC tie-break
     val topk = TopKAgg.topK(k)

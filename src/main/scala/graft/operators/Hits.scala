@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -74,12 +75,10 @@ object Hits {
       edgesBySrc: DataFrame, edgesByDst: DataFrame,
       iterations: Int): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
     val ids = nodes.select(col(idCol).as("id"))
     val n = ids.count()
-    val eSrc = edgesBySrc.persist(MEMORY_AND_DISK)
-    val eDst = edgesByDst.persist(MEMORY_AND_DISK)
+    val eSrc = Caches.persist(edgesBySrc)
+    val eDst = Caches.persist(edgesByDst)
 
     // zero-sum guard: on an edgeless graph (or once all mass lands on
     // vertices the next half-step cannot reach) the total is 0 — the
@@ -107,18 +106,19 @@ object Hits {
     // each half-step references its input score TWICE (the aggregate
     // and the normalization sum), so a lazy chain DOUBLES the logical
     // plan per half-step — 2^(2·iterations) analysis blowup. The
-    // eager localCheckpoint flattens every iteration to an RDD scan
-    // (the BpeTrain lineage discipline); blocks are freed by the
-    // context cleaner when the result drops its reference.
-    var hubs = ids.withColumn("hub", lit(1.0 / n)).localCheckpoint(true)
+    // cut flattens every iteration to an RDD scan (the BpeTrain
+    // lineage discipline); each round releases the one before it.
+    var hubs = Caches.cut(ids.withColumn("hub", lit(1.0 / n)))
     var auths: DataFrame = null
     for (_ <- 1 to iterations) {
-      auths = push(hubs.select(col("id"), col("hub")), eSrc, "src", "dst", "hub")
-        .withColumnRenamed("hub", "authority").localCheckpoint(true)
-      hubs = push(auths.select(col("id"), col("authority")), eDst, "dst", "src", "authority")
-        .withColumnRenamed("authority", "hub").localCheckpoint(true)
+      val a = Caches.cut(push(hubs.select(col("id"), col("hub")), eSrc, "src", "dst", "hub")
+        .withColumnRenamed("hub", "authority"))
+      Caches.release(hubs)
+      if (auths != null) Caches.release(auths)
+      auths = a
+      hubs = Caches.cut(push(auths.select(col("id"), col("authority")), eDst, "dst", "src",
+        "authority").withColumnRenamed("authority", "hub"))
     }
-    eSrc.unpersist(); eDst.unpersist()
     auths.join(hubs, Seq("id"))
       .select(col("id").as(idCol), col("authority"), col("hub"))
   }

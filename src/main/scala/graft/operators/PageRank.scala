@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -65,7 +66,6 @@ object PageRank {
       preIndexed: Boolean = false): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     val ids = nodes.select(col(idCol).as("id"))
     // one driver scalar: the vertex count (a Long, not data)
@@ -74,7 +74,7 @@ object PageRank {
     // restrict edges to the vertex set BEFORE degrees: an edge to an
     // unknown dst must not inflate its src's outdegree (its rank mass
     // would vanish at the join-back and Σ pr = 1 would silently break)
-    val e = (if (preIndexed) e0
+    val e = Caches.persist(if (preIndexed) e0
       else e0
         .join(ids.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(ids.select(col("id").as("dst")), Seq("dst"), "left_semi")
@@ -84,16 +84,14 @@ object PageRank {
         // sized) rank frame moves — iterations never re-shuffle the
         // edge table (the 100 TB knob from PROFILE_GRAPH_r12; the
         // preIndexed EdgeStore path drops even this one-time exchange)
-        .repartition(col("src")))
-      .persist(MEMORY_AND_DISK) // reused every iteration
-    val deg = e.groupBy("src").agg(count(lit(1)).cast("double").as("deg"))
-      .persist(MEMORY_AND_DISK)
+        .repartition(col("src"))) // reused every iteration
+    val deg = Caches.persist(e.groupBy("src").agg(count(lit(1)).cast("double").as("deg")))
 
     // ranks are referenced TWICE per iteration (contributions and the
     // dangling-mass aggregate), so a lazy chain doubles the logical
-    // plan per iteration; the eager localCheckpoint flattens each
-    // round to an RDD scan (the BpeTrain lineage discipline)
-    var ranks = ids.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
+    // plan per iteration; cut flattens each round to an RDD scan (the
+    // BpeTrain lineage discipline) and releases the round before it
+    var ranks = Caches.cut(ids.withColumn("pr", lit(1.0 / n)))
     for (_ <- 1 to iterations) {
       val contribs = e
         .join(ranks, e("src") === ranks("id"))
@@ -105,15 +103,15 @@ object PageRank {
       // graph has no danglers, as the synthesized test graph hasn't)
       val dangling = ranks.join(deg, ranks("id") === deg("src"), "left_anti")
         .agg(coalesce(sum(col("pr")), lit(0.0)).as("dm"))
-      ranks = ids
+      val next = Caches.cut(ids
         .join(contribs, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"),
           (lit((1.0 - damping) / n) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dm") / n)).as("pr"))
-        .localCheckpoint(true)
+            lit(damping) * (coalesce(col("contrib"), lit(0.0)) + col("dm") / n)).as("pr")))
+      Caches.release(ranks)
+      ranks = next
     }
-    e.unpersist(); deg.unpersist()
     ranks.select(col("id").as(idCol), col("pr"))
   }
 

@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.{ScalarFunctions, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Trainable document-QUALITY CLASSIFIER — the fastText/DCLM-style
@@ -90,7 +89,7 @@ object QualityModel {
       feats: DataFrame, buckets: Int, iters: Int,
       lrDivPerDoc: Double = 200.0): Array[Long] = {
     require(iters >= 0 && lrDivPerDoc > 0)
-    val f = feats.persist(StorageLevel.MEMORY_AND_DISK)
+    val f = graft.util.Caches.persist(feats)
     val lrDiv = f.count().toDouble * lrDivPerDoc
     var w = Array.fill(buckets + 1)(0L)
     var t = 0
@@ -111,7 +110,6 @@ object QualityModel {
       }
       t += 1
     }
-    f.unpersist()
     w
   }
 

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Exact percentiles via the value HISTOGRAM — corpus statistics
@@ -20,8 +19,7 @@ import org.apache.spark.storage.StorageLevel
  *  - the histogram is PERSISTED before fan-out — the probe, the
  *    prefix-sum window, the total, and the percentile join all
  *    consume it, and uncached each would re-run the corpus scan
- *    (catalog-managed cache, freed by the harness per-query
- *    `clearCache`);
+ *    ([[graft.util.Caches.persist]], released with the query's scope);
  *  - a `maxBuckets` limit-probe runs BEFORE the window is built — a
  *    genuinely continuous column would make the prefix-sum window a
  *    single unbounded partition, so fail fast with a quantize-first
@@ -95,7 +93,7 @@ object Quantiles {
     import spark.implicits._
     // persisted: bucket-sized but derived from a corpus-sized scan;
     // probe + window + total + join all branch from it
-    val h = hist.persist(StorageLevel.MEMORY_AND_DISK)
+    val h = graft.util.Caches.persist(hist)
     // probe BEFORE the windowed plan exists (probing the window would
     // materialize the unbounded partition the guard exists to prevent)
     val probed = h.limit(maxBuckets + 1).count()
@@ -132,9 +130,8 @@ object Quantiles {
     checkPs(ps)
     val spark = df.sparkSession
     import spark.implicits._
-    val h = df.groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
-      .agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val h = graft.util.Caches.persist(df.groupBy(col(groupCol).as("g"), col(valueCol).as("v"))
+      .agg(count(lit(1)).as("c")))
     val probed = h.limit(maxBuckets + 1).count()
     require(probed <= maxBuckets,
       s"exactPercentilesByGroup: over $maxBuckets distinct (group, value) " +
@@ -248,7 +245,7 @@ object Quantiles {
     checkPs(ps)
     val spark = hist.sparkSession
     import spark.implicits._
-    val h = hist.persist(StorageLevel.MEMORY_AND_DISK)
+    val h = graft.util.Caches.persist(hist)
     val probed = h.limit(maxBuckets + 1).count()
     require(probed <= maxBuckets,
       s"percentilesFromHistogram: over $maxBuckets histogram rows — the " +

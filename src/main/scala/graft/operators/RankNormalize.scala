@@ -40,11 +40,9 @@ object RankNormalize {
   def globalRank(
       df: DataFrame, scoreCol: String, maxBuckets: Int = 1 << 20): DataFrame = {
     // persisted: bucket-sized, derived from the full corpus scan; the
-    // probe and the prefix sum both consume it. Catalog-managed, so
-    // the harness clearCache() contract frees it per query.
-    val buckets = df.groupBy(col(scoreCol).as("__score"))
-      .agg(count(lit(1)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // probe and the prefix sum both consume it.
+    val buckets = graft.util.Caches.persist(df.groupBy(col(scoreCol).as("__score"))
+      .agg(count(lit(1)).as("__n")))
     val probed = buckets.limit(maxBuckets + 1).count()
     require(probed <= maxBuckets,
       s"globalRank: score column '$scoreCol' has over $maxBuckets distinct " +

@@ -172,12 +172,9 @@ object Sampling {
     // persisted: bucket-sized, but DERIVED from a full corpus
     // aggregation — the probe, the prefix-sum window, and both
     // downstream filters (fully-kept set, boundary row) consume it,
-    // and uncached each would re-run the corpus scan. Catalog-managed
-    // cache, so the harness clearCache() contract (CacheHygieneSpec)
-    // frees it per query.
-    val buckets = df.groupBy(col(scoreCol).as("__score"))
-      .agg(sum(col(tokCol).cast("long")).as("__btoks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // and uncached each would re-run the corpus scan.
+    val buckets = graft.util.Caches.persist(df.groupBy(col(scoreCol).as("__score"))
+      .agg(sum(col(tokCol).cast("long")).as("__btoks")))
     // the probe runs BEFORE the prefix-sum window is ever built — a
     // probe on the windowed plan would materialize the very
     // unbounded single partition it exists to prevent
@@ -265,11 +262,10 @@ object Sampling {
       df: DataFrame, groupCol: String, scoreCol: String, idCol: String,
       tokCol: String, maxBuckets: Int,
       attachBudget: DataFrame => DataFrame): DataFrame = {
-    // persisted for the probe + window + both downstream filters;
-    // catalog-managed cache (see selectToBudget)
-    val buckets = df.groupBy(col(groupCol).as("__grp"), col(scoreCol).as("__score"))
-      .agg(sum(col(tokCol).cast("long")).as("__btoks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // persisted for the probe + window + both downstream filters
+    val buckets = graft.util.Caches.persist(
+      df.groupBy(col(groupCol).as("__grp"), col(scoreCol).as("__score"))
+        .agg(sum(col(tokCol).cast("long")).as("__btoks")))
     // probe BEFORE the per-group prefix-sum window exists — probing
     // the windowed plan would execute the unbounded partitions the
     // guard exists to prevent

@@ -164,10 +164,9 @@ object Sketches {
       df: DataFrame, groupCol: String, valueCol: String,
       k: Int, maxGroups: Int = 4096): DataFrame = {
     val agg = kMinDistinct(k)
-    val sk = df.select(col(groupCol).as("g"),
+    val sk = graft.util.Caches.persist(df.select(col(groupCol).as("g"),
         ScalarFunctions.md5Long(col(valueCol).cast("string")).as("__h"))
-      .groupBy("g").agg(agg(col("__h")).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("g").agg(agg(col("__h")).as("s")))
     // limit-probe (the selectToBudget idiom): the pair join is G²/2 —
     // the right tool for corpora/sources/splits (tens to thousands),
     // catastrophically wrong for per-user groups at 100 TB. Fail fast

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -580,21 +581,17 @@ object TextModel {
       .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
 
     // ---- numerator tables (t66 shapes) -----------------------------
-    val t5 = refGrams(5).groupBy("g").agg(count(lit(1)).as("c5"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val t5 = Caches.persist(refGrams(5).groupBy("g").agg(count(lit(1)).as("c5")))
     val c4 = refGrams(4).groupBy("g").agg(count(lit(1)).as("c4"))
       .withColumnRenamed("g", "ctx4")
-    val cont4 = t5.groupBy(suffix(col("g"), 4).as("g4s"))
-      .agg(count(lit(1)).as("cont4"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cont4 = Caches.persist(t5.groupBy(suffix(col("g"), 4).as("g4s"))
+      .agg(count(lit(1)).as("cont4")))
     val t4types = refGrams(4).select(col("g")).distinct()
-    val cont3 = t4types.groupBy(suffix(col("g"), 3).as("g3s"))
-      .agg(count(lit(1)).as("cont3"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cont3 = Caches.persist(t4types.groupBy(suffix(col("g"), 3).as("g3s"))
+      .agg(count(lit(1)).as("cont3")))
     val t3types = refGrams(3).select(col("g")).distinct()
-    val cont2 = t3types.groupBy(suffix(col("g"), 2).as("g2s"))
-      .agg(count(lit(1)).as("cont2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cont2 = Caches.persist(t3types.groupBy(suffix(col("g"), 2).as("g2s"))
+      .agg(count(lit(1)).as("cont2")))
     val t2types = refGrams(2).select(col("g")).distinct()
     val cont1 = t2types.groupBy(suffix(col("g"), 1).as("w5k"))
       .agg(count(lit(1)).as("cont1"))
@@ -700,17 +697,16 @@ object TextModel {
         col("c4"))
       .otherwise(p4)
 
-    val out = joined
+    val out = Caches.cut(joined
       .withColumn("__nlp_micro", round(-log(p5) * 1e6).cast("long"))
       .groupBy(col("id").as(idCol))
       .agg(
         count(lit(1)).as("n_fivegrams"),
         round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp"))
-      // eager: the doc-sized result materializes while the count
-      // tables are still cached; the caches then release
-      .localCheckpoint(true)
-    Seq(t5, cont4, cont3, cont2).foreach(_.unpersist(blocking = false))
+          .as("avg_neg_logp")))
+    // the doc-sized result materialized while the count tables were
+    // still cached; they release now, not at the end of the query
+    Seq(t5, cont4, cont3, cont2).foreach(Caches.release)
     out
   }
 }

@@ -67,9 +67,8 @@ object UnigramLm {
     require(maxPieceLen >= 2 && seedSize > 0 && vocabSize > 0 && emIters >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
-    val wf = BpeTrain.wordFreq(docs, textCol)
-      .filter(length(col("word")) <= maxWordLen)
-      .persist()
+    val wf = graft.util.Caches.persist(BpeTrain.wordFreq(docs, textCol)
+      .filter(length(col("word")) <= maxWordLen))
 
     // ---- seed: ONE substring-count aggregation (codepoint-safe:
     // substring()/char_length() index codepoints, not chars) ----
@@ -125,7 +124,6 @@ object UnigramLm {
       counts = (keptSingles ++ keptMultis).toMap
       scores = score(counts)
     }
-    wf.unpersist()
     counts.toSeq
       .map { case (p, c) => Piece(p, c, scores(p)) }
       .sortWith((a, b) => cpLt(a.piece, b.piece))

@@ -30,7 +30,7 @@ object PbpDemo {
       .toDF("contest_id", "seq", "inning", "away_text", "home_text")
 
     // stage 1: parse (X1-X6 + windows)
-    val parsed = PbpPipeline.parse(raw).cache()
+    val parsed = graft.util.Caches.persist(PbpPipeline.parse(raw))
     parsed.select("contest_id", "play_id", "half", "play_description", "event_type",
         "batted_ball_type", "outs_on_play", "outs_before", "runs_on_play", "runs_roi",
         "bases_before", "bases_after", "batter_name", "bat_order",

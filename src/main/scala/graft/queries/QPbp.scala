@@ -4,6 +4,7 @@ import graft.metrics.{ExpectedRuns, LinearWeights, PbpMetrics}
 import graft.pbp.PbpPipeline
 import graft.pbp.names.StandardizeNames
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -198,18 +199,16 @@ object QPbp {
     * threads raced to compute the uncached `parsed` (duplicate full
     * parse runs) and the plan carried 3 extra exchanges. */
   def parseEnrichSummary(s: SparkSession, dir: String): DataFrame = {
-    val parsed = PbpPipeline.parse(rawPbpFromEvents(s, dir))
+    val parsed = Caches.persist(PbpPipeline.parse(rawPbpFromEvents(s, dir))
       .select("contest_id", "play_id", "event_type", "batted_ball_type",
         "batter_name", "bases_before", "bases_after", "outs_before",
-        "outs_after", "inn_end_fl", "runs_on_play", "runs_roi")
-      .cache()
-    val er = ExpectedRuns.matrix(parsed).cache()
+        "outs_after", "inn_end_fl", "runs_on_play", "runs_roi"))
+    val er = Caches.persist(ExpectedRuns.matrix(parsed))
     val erMap = PbpMetrics.erMatrixToMap(er)
     val lwMap = LinearWeights.aboveAverage(parsed, er)
       .select(col("events"), col("linear_weights_above_outs"))
       .collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    er.unpersist()
     PbpMetrics.addRunExpectancyLit(PbpMetrics.addWobaLit(parsed, lwMap), erMap)
       .groupBy(
         col("event_type"),

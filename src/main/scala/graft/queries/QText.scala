@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, LangId, QualityRules}
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.sql.functions._
 
 /**
@@ -369,24 +370,22 @@ object QText {
       // POST-ROUTING (the production multilingual discipline — see
       // [[Llm02LangRules]]), are columns of one projection;
       // checkpointed: both consumers would re-run routing + Gopher (llm02 sf0.1: 5.6 -> 7.9 s)
-      val flags = corpus.select(col("doc_id"), col("text"),
+      val flags = Caches.cut(corpus.select(col("doc_id"), col("text"),
           LangId.classifyColumn(col("text"), profiles).getField("pred_lang").as("pred_lang"))
         .withColumn("g_ok", QualityRules.gopherPass(
           col("text"), col("pred_lang"), Llm02LangRules, Llm02DefaultRules))
         .join(quotaKept, Seq("doc_id"), "left")
-        .withColumn("l_ok", col("pred_lang") =!= "")
-        .localCheckpoint(true)
+        .withColumn("l_ok", col("pred_lang") =!= ""))
       val surv1 = flags.filter(col("__q_in") === 1 && col("l_ok") && col("g_ok"))
         .select("doc_id", "text", "pred_lang")
       val keyed = surv1.select(col("doc_id"),
         md5(TextFunctions.canonicalText(col("text"))).as("__fp"))
-      val dups = keyed
+      // checkpointed for ded + disposition: llm02 5.6 -> 6.1 s, +2.0 s CPU without it
+      val dups = Caches.cut(keyed
         .withColumn("__keep", min(col("doc_id")).over(
           org.apache.spark.sql.expressions.Window.partitionBy("__fp")))
         .filter(col("doc_id") =!= col("__keep"))
-        .select(col("doc_id")).withColumn("__dup", lit(1))
-        // checkpointed for ded + disposition: llm02 5.6 -> 6.1 s, +2.0 s CPU without it
-        .localCheckpoint(true)
+        .select(col("doc_id")).withColumn("__dup", lit(1)))
       val ded = surv1.join(dups, Seq("doc_id"), "left_anti")
       // llm04 (suiteCard): the 100 TB decontamination profile — the
       // pooled drop rule probes ONE fixed-size Bloom synopsis instead
@@ -395,14 +394,13 @@ object QText {
       // (CleanCorpus.Bloom's argument, here on the multilingual
       // flagship). llm02 keeps the exact join: at this scale it IS
       // the oracle, and the pair pins the Bloom path row-identical.
-      val ov = (if (suiteCard)
+      // checkpointed for dec + disposition: llm02 +2.2 s CPU per run without it
+      val ov = Caches.cut((if (suiteCard)
           graft.operators.Decontaminate.ngramOverlapBloomAgainst(
             ded, "doc_id", "text", built(1).asInstanceOf[Array[Byte]], n = 3)
         else graft.operators.Decontaminate
           .ngramOverlap(ded, "doc_id", "text", ref, "text", n = 3))
-        .select(col("doc_id"), col("overlap_frac"))
-        // checkpointed for dec + disposition: llm02 +2.2 s CPU per run without it
-        .localCheckpoint(true)
+        .select(col("doc_id"), col("overlap_frac")))
       val dec = ded.join(ov, Seq("doc_id"), "left")
         .filter(coalesce(col("overlap_frac"), lit(0.0)) < 0.5)
         .select("doc_id", "text", "pred_lang")
@@ -1231,7 +1229,8 @@ object QText {
       // quality score, language ID and the PII disposition column
       // (t13: the data card records it; production redacts rather
       // than drops)
-      val flags = corpus.select(col("doc_id"), col("text"),
+      // checkpointed: without it the corpus workload took 42.8 s, 134 s CPU (vs 26.6, 79)
+      val flags = Caches.cut(corpus.select(col("doc_id"), col("text"),
           round(TextFunctions.qualityScore(col("text")), 6).as("quality"),
           TextFunctions.langId(col("text")).as("lang"),
           graft.functions.Pii.hasPii(col("text")).as("has_pii"),
@@ -1241,9 +1240,7 @@ object QText {
             QualityRules.LineLangRules(minTerminalFrac = 0.0)).as("ln_ok"))
         .join(quotaKept, Seq("doc_id"), "left")
         .withColumn("q_ok", col("quality") >= 0.5)
-        .withColumn("l_ok", col("lang") === "en")
-        // checkpointed: without it the corpus workload took 42.8 s, 134 s CPU (vs 26.6, 79)
-        .localCheckpoint(true)
+        .withColumn("l_ok", col("lang") === "en"))
       val surv = flags.filter(col("__q_in") === 1 &&
           col("g_ok") && col("ln_ok") && col("q_ok") && col("l_ok"))
         .select("doc_id", "text")
@@ -1736,13 +1733,11 @@ object QText {
       val t = col("text")
       // cached: 3 narrow columns, but each pass over it re-runs the
       // regex-heavy scoring — the operator consumes it three times
-      // (bucket agg + kept scan + boundary scan). Catalog-managed, so
-      // the harness clearCache() frees it per query.
-      val scored = Tables.documents(s, dir).select(
+      // (bucket agg + kept scan + boundary scan).
+      val scored = Caches.persist(Tables.documents(s, dir).select(
           col("doc_id"),
           TextFunctions.tokenCount(t).cast("long").as("n_tokens"),
-          round(TextFunctions.qualityScore(t), 6).as("quality"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          round(TextFunctions.qualityScore(t), 6).as("quality")))
       graft.operators.Sampling.selectToBudget(
           scored, "quality", "doc_id", "n_tokens", budget = 20000L)
         .select("doc_id", "n_tokens", "quality")
@@ -1814,12 +1809,11 @@ object QText {
         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val t = col("text")
       // cached as in t28: three narrow columns consumed by three
-      // passes of the grouped operator; catalog-managed
-      val scored = Tables.documents(s, dir).select(
+      // passes of the grouped operator
+      val scored = Caches.persist(Tables.documents(s, dir).select(
           col("doc_id"), col("lang"),
           TextFunctions.tokenCount(t).cast("long").as("n_tokens"),
-          round(TextFunctions.qualityScore(t), 6).as("quality"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          round(TextFunctions.qualityScore(t), 6).as("quality")))
       graft.operators.Sampling.selectToBudgetPerGroup(
           scored, "lang", "quality", "doc_id", "n_tokens",
           budgets = Map("en" -> 3000L, "de" -> 800L, "es" -> 800L, "zh" -> 500L))
@@ -3893,12 +3887,11 @@ object QText {
       val vocab = s.sparkContext.broadcast(graft.functions.Bpe.defaultVocab)
       val t = col("text")
       // cached as in t28: three narrow columns consumed by three
-      // passes of the operator; catalog-managed
-      val scored = Tables.documents(s, dir).select(
+      // passes of the operator
+      val scored = Caches.persist(Tables.documents(s, dir).select(
           col("doc_id"),
           graft.functions.Bpe.bpeTokenCount(t, vocab).cast("long").as("n_tokens"),
-          round(TextFunctions.qualityScore(t), 6).as("quality"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          round(TextFunctions.qualityScore(t), 6).as("quality")))
       graft.operators.Sampling.selectToBudget(
           scored, "quality", "doc_id", "n_tokens", budget = 25000L)
         .select("doc_id", "n_tokens", "quality")

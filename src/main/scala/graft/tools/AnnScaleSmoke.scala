@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.operators.{Dedup, SimilaritySearch}
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -100,10 +101,10 @@ object AnnScaleSmoke {
         recallMicro: Long,
         wallSec: Double, writeBytes: Long, stages: Map[Int, (Long, Long, Long)])
 
-    val runs = scales.map { c =>
-      val emb = scaledVectors(base, c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one scope per scale: its intermediates release before the next
+    val runs = scales.map { c => Caches.scoped {
+      val emb = Caches.persist(scaledVectors(base, c)
+        .repartition(spark.sparkContext.defaultParallelism))
       val n = emb.count()
       tally.snapshotAndReset() // drop corpus-prep stages from the tally
       val t0 = System.nanoTime()
@@ -146,7 +147,6 @@ object AnnScaleSmoke {
           k = 5)
         .agg(avg("recall")).first().getDouble(0) * 1e6)
       val wall = (System.nanoTime() - t0) / 1e9
-      emb.unpersist()
       Thread.sleep(1000) // bound listener-bus delivery lag
       val stages = tally.snapshotAndReset()
       val bytes = stages.values.map(_._2).sum
@@ -156,7 +156,7 @@ object AnnScaleSmoke {
         f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB")
       Run(c, n, brute, lsh, ivf, pq, ivfpq, pairs, crossPairs, copy0Pairs, kept,
         recallMicro, wall, bytes, stages)
-    }
+    } }
 
     val r1 = runs.head
     var failed = false

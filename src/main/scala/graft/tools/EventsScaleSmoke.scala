@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.operators.{AsOfJoin, Sessionize}
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -73,10 +74,10 @@ object EventsScaleSmoke {
         scdRows: Long, scdOpen: Long, scdAsOfMid: Long, scdAsOfEnd: Long,
         wallSec: Double, writeBytes: Long, stages: Map[Int, (Long, Long, Long)])
 
-    val runs = scales.map { c =>
-      val evts = scaledEvents(base, c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one scope per scale: its intermediates release before the next
+    val runs = scales.map { c => Caches.scoped {
+      val evts = Caches.persist(scaledEvents(base, c)
+        .repartition(spark.sparkContext.defaultParallelism))
       val n = evts.count()
       tally.snapshotAndReset() // drop corpus-prep stages from the tally
       val t0 = System.nanoTime()
@@ -133,8 +134,8 @@ object EventsScaleSmoke {
         .select("g1", "g2", "est_union", "est_inter")
         .collect().map(r => (r.getString(0), r.getString(1),
           r.getLong(2), r.getLong(3))).toSeq
-      val tu = evts.select(col("event_type").as("t"), col("user_id").as("u")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val tu = Caches.persist(
+        evts.select(col("event_type").as("t"), col("user_id").as("u")).distinct())
       val exactInter = tu.as("a").join(tu.as("b"),
           col("a.u") === col("b.u") && col("a.t") < col("b.t"))
         .groupBy(col("a.t").as("g1"), col("b.t").as("g2"))
@@ -142,7 +143,6 @@ object EventsScaleSmoke {
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       val perType = tu.groupBy("t").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      tu.unpersist()
       val exactOverlap = overlap.map { case (g1, g2, _, _) =>
         val i = exactInter.getOrElse((g1, g2), 0L)
         (g1, g2) -> (perType(g1) + perType(g2) - i, i)
@@ -155,8 +155,7 @@ object EventsScaleSmoke {
       // guarantee) at every scale
       val sk = graft.operators.Sketches
       val (cd, cw) = (4, 1024)
-      val oneShotDf = sk.cmsBuild(evts, "user_id", cd, cw)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val oneShotDf = Caches.persist(sk.cmsBuild(evts, "user_id", cd, cw))
       val oneShot = oneShotDf
         .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
       val cmsCells = oneShot.size.toLong
@@ -173,7 +172,6 @@ object EventsScaleSmoke {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val cmsTrue = probeUsers.groupBy("user_id").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      oneShotDf.unpersist()
 
       // funnel (ses07) + cohort retention (ses08): both partition by
       // user, so user-disjoint copies replicate step completions and
@@ -298,18 +296,16 @@ object EventsScaleSmoke {
       val snap2 = dimUsers
         .withColumn("seg", pmod(col("user_id"), lit(10)) +
           when(pmod(col("user_id"), lit(10)) < 3, 100).otherwise(0))
-      val h1 = graft.io.Scd.scd2Apply(h0, snap2, "user_id", Seq("seg"), asOf = 200L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val h1 = Caches.persist(
+        graft.io.Scd.scd2Apply(h0, snap2, "user_id", Seq("seg"), asOf = 200L))
       val scdRows = h1.count()
       val scdOpen = h1.filter(col("valid_to").isNull).count()
       val scdAsOfMid = graft.io.Scd.scd2AsOf(h1, 150L)
         .agg(sum("seg")).first().getLong(0)
       val scdAsOfEnd = graft.io.Scd.scd2AsOf(h1, 250L)
         .agg(sum("seg")).first().getLong(0)
-      h1.unpersist()
 
       val wall = (System.nanoTime() - t0) / 1e9
-      evts.unpersist()
       Thread.sleep(1000) // bound listener-bus delivery lag
       val stages = tally.snapshotAndReset()
       val bytes = stages.values.map(_._2).sum
@@ -326,7 +322,7 @@ object EventsScaleSmoke {
         asofFwd, asofNear, topkRows, madMap, modeMap,
         scdRows, scdOpen, scdAsOfMid, scdAsOfEnd,
         wall, bytes, stages)
-    }
+    } }
 
     val r1 = runs.head
     var failed = false

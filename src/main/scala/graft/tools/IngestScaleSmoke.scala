@@ -3,6 +3,7 @@ package graft.tools
 import graft.functions.TextFunctions
 import graft.operators.{Dedup, RankNormalize, Sampling}
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,11 +61,10 @@ object IngestScaleSmoke {
     // score ONCE on the base text, then replicate the scored rows —
     // copies share the exact score multiset, so distinct-score counts
     // and the selection cutoff are scale-invariant by construction
-    val scoredBase = base.select(
+    val scoredBase = Caches.persist(base.select(
         col("doc_id"),
         TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-        round(TextFunctions.qualityScore(col("text")), 6).as("quality"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(TextFunctions.qualityScore(col("text")), 6).as("quality")))
     val row0 = scoredBase.agg(sum("n_tokens").cast("long"), count(lit(1))).first()
     val (tokSum0, nDocs0) = (row0.getLong(0), row0.getLong(1))
     val budget0 = (tokSum0 * 2) / 5 // 40% of copy-0 tokens: a boundary exists
@@ -103,14 +103,13 @@ object IngestScaleSmoke {
       if (!cond) failed = true
     }
 
-    val runs = scales.map { c =>
-      val docs = LlmScaleSmoke.scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one scope per scale: its intermediates release before the next
+    val runs = scales.map { c => Caches.scoped {
+      val docs = Caches.persist(LlmScaleSmoke.scaledCorpus(base, c)
+        .repartition(spark.sparkContext.defaultParallelism))
       docs.count()
-      val scored = scaledScored(c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val scored = Caches.persist(scaledScored(c)
+        .repartition(spark.sparkContext.defaultParallelism))
       scored.count()
       tally.snapshotAndReset() // drop corpus-prep stages from the tally
       val t0 = System.nanoTime()
@@ -121,12 +120,10 @@ object IngestScaleSmoke {
       val batch = docs.filter(col("doc_id") % 10 >= 4)
         .withColumn("fp", md5(coalesce(col("text"), lit(""))))
       val expected = math.max(1L, nDocs0 * 6L / 10L) * c
-      val bloomRes = Dedup.incrementalDedupBloom(
-          batch, history, Seq("fp"), expectedItems = expected, fpp = 0.01)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bloomRes = Caches.persist(Dedup.incrementalDedupBloom(
+          batch, history, Seq("fp"), expectedItems = expected, fpp = 0.01))
       val newRows = bloomRes.count()
-      val antiRes = batch.join(history.distinct(), Seq("fp"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val antiRes = Caches.persist(batch.join(history.distinct(), Seq("fp"), "left_anti"))
       val antiRows = antiRes.count()
       check(newRows == antiRows &&
           bloomRes.select("doc_id").exceptAll(antiRes.select("doc_id")).count() == 0 &&
@@ -143,7 +140,6 @@ object IngestScaleSmoke {
       check(misses <= antiRows && misses >= (antiRows * 9) / 10,
         s"scale=$c t27 prefilter routes $misses of $antiRows definitely-new " +
           "rows around the anti-join (subset of new; >=90%)")
-      antiRes.unpersist()
 
       // ---- t32: incremental NEAR-dup (LSH bands vs history) ---------
       val nearBatch = docs.filter(col("doc_id") % 10 >= 4)
@@ -154,9 +150,8 @@ object IngestScaleSmoke {
 
       // ---- t28: budget-constrained selection ------------------------
       val budget = budget0 * c
-      val sel = Sampling.selectToBudget(scored, "quality", "doc_id", "n_tokens",
-          budget = budget)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sel = Caches.persist(Sampling.selectToBudget(scored, "quality", "doc_id", "n_tokens",
+          budget = budget))
       val selRows = sel.count()
       val wNaive = Window.orderBy(col("quality").desc, col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -171,9 +166,8 @@ object IngestScaleSmoke {
       val cls = scored.groupBy(col("quality").as("__score"))
         .agg(sum(col("n_tokens")).as("__btoks"))
         .withColumn("__cb", coalesce(sum("__btoks").over(wb), lit(0L)))
-      val boundary = cls
-        .filter(col("__cb") < budget && col("__cb") + col("__btoks") > budget)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val boundary = Caches.persist(cls
+        .filter(col("__cb") < budget && col("__cb") + col("__btoks") > budget))
       val nBoundary = boundary.count()
       // O(1)-row collect (nBoundary ≤ 1 is itself asserted below) —
       // a join back onto `scored` would be a self-join on shared
@@ -182,7 +176,6 @@ object IngestScaleSmoke {
       val boundaryRows =
         if (bScores.isEmpty) 0L
         else bScores.map(s => scored.filter(col("quality") <=> lit(s)).count()).sum
-      boundary.unpersist()
       check(nBoundary <= 1,
         s"scale=$c t28 at most one bucket straddles the budget ($nBoundary); " +
           f"only its $boundaryRows rows (${100.0 * boundaryRows / (nDocs0 * c)}%.1f%% " +
@@ -192,11 +185,9 @@ object IngestScaleSmoke {
       check(selToks <= budget && (nBoundary == 0 || selToks > budget - maxTok),
         s"scale=$c t28 selected tokens $selToks in (budget-maxTok, budget] " +
           s"(budget $budget, maxTok $maxTok)")
-      sel.unpersist()
 
       // ---- t29: global rank/percentile calibration ------------------
-      val ranked = RankNormalize.globalRank(scored, "quality")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ranked = Caches.persist(RankNormalize.globalRank(scored, "quality"))
       val rankRows = ranked.count()
       val wr = Window.orderBy(col("quality").desc)
       val naiveRank = scored
@@ -215,7 +206,6 @@ object IngestScaleSmoke {
       check(distinctC == distinct0,
         s"scale=$c t29 bucket table stays $distinct0 rows (distinct scores) " +
           s"while the corpus grows to ${nDocs0 * c} rows")
-      ranked.unpersist()
 
       // ---- t33: cross-split leakage audit ---------------------------
       // Copies carry copy-DISJOINT texts (the scaledCorpus word
@@ -285,7 +275,6 @@ object IngestScaleSmoke {
       delTree(zTmp.toFile)
 
       val wall = (System.nanoTime() - t0) / 1e9
-      bloomRes.unpersist()
       Thread.sleep(1000) // bound listener-bus delivery lag
       val stages = tally.snapshotAndReset()
       val bytes = stages.values.map(_._2).sum
@@ -539,15 +528,13 @@ object IngestScaleSmoke {
       Thread.sleep(500)
       tally.snapshotAndReset() // keep the graph-store I/O out of the envelope
       inputTally.snapshotAndReset(): Unit
-      docs.unpersist()
-      scored.unpersist()
       println(f"INGEST_SMOKE scale=$c%-3d new=$newRows near_kept=$nearKept " +
         f"sel=$selRows ranked=$rankRows leak_pairs=${leak.values.map(_._1).sum} " +
         f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB " +
         f"ss_gate_read=${gateBytes / 1048576.0}%.1f MiB")
       Run(c, newRows, nearKept, selRows, rankRows, leak, wall, bytes, stages,
         ssKept, gateBytes)
-    }
+    } }
 
     val r1 = runs.head
     runs.tail.foreach { r =>

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.operators.{BpeTrain, Decontaminate, Dedup, Packing, PageRank, SubstringDedup, TextSearch, Winnowing}
 import graft.sources.Tables
+import graft.util.Caches
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -100,16 +101,15 @@ object LlmScaleSmoke {
         wallSec: Double, writeBytes: Long,
         stages: Map[Int, (Long, Long, Long)])
 
-    val runs = scales.map { c =>
-      val docs = scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one scope per scale: its intermediates release before the next
+    val runs = scales.map { c => Caches.scoped {
+      val docs = Caches.persist(scaledCorpus(base, c)
+        .repartition(spark.sparkContext.defaultParallelism))
       docs.count()
       tally.snapshotAndReset() // drop corpus-prep stages from the tally
       val t0 = System.nanoTime()
-      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 12, bands = 4, threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs = Caches.persist(Dedup.minhashLshPairs(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 12, bands = 4, threshold = 0.5))
       val nPairs = pairs.count()
       val comps = Dedup.connectedComponents(pairs.select("id_a", "id_b")).count()
       val kept = Dedup.keepBestPerCluster(docs.select("doc_id", "n_chars"),
@@ -227,13 +227,12 @@ object LlmScaleSmoke {
             (prI * 31 + 7) % nBase + prOff,
             (prI * 13 + 11) % nBase + prOff)).as("dst"))
         .filter(col("src") =!= col("dst")).distinct()
-      val prAll = PageRank.run(prIds, "doc_id", prEdges, "src", "dst", iterations = 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val prAll = Caches.persist(
+        PageRank.run(prIds, "doc_id", prEdges, "src", "dst", iterations = 5))
       val prSum = prAll.agg(sum("pr")).first().getDouble(0)
       val prCopy0 = prAll.filter(col("doc_id") < nBase)
         .select(col("doc_id"), round(col("pr") * (c * nBase), 6).as("prs"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
-      prAll.unpersist()
 
       // t54 at scale: temperature mixture on the qc corpus's lang
       // column (verbatim replication, disjoint ids) — per-lang
@@ -247,7 +246,7 @@ object LlmScaleSmoke {
 
       val wall = (System.nanoTime() - t0) / 1e9
       // pairs stays cached through the dedup2 block below (the t59
-      // eval joins against it); unpersisted there
+      // eval joins against it)
       Thread.sleep(1000) // bound listener-bus delivery lag
       val stages = tally.snapshotAndReset()
       val bytes = stages.values.map(_._2).sum
@@ -286,8 +285,6 @@ object LlmScaleSmoke {
       val (dedupRecallMicro, dedupPrecMicro) = (
         math.round(evalRow.getLong(2).toDouble / evalRow.getLong(0) * 1e6),
         math.round(evalRow.getLong(2).toDouble / evalRow.getLong(1) * 1e6))
-      pairs.unpersist()
-      docs.unpersist()
       Thread.sleep(1000)
       val dedup2Bytes = tally.snapshotAndReset().values.map(_._2).sum
       println(f"LLM_SMOKE scale=$c%-3d pairs=$nPairs comps=$comps kept=$kept " +
@@ -301,7 +298,7 @@ object LlmScaleSmoke {
         winDocs, winFps, novDocs, novNovel, prCopy0, prSum,
         dedupRecallMicro, dedupPrecMicro,
         wall, bytes, stages)
-    }
+    } }
 
     val r1 = runs.head
     var failed = false
@@ -442,10 +439,9 @@ object LlmScaleSmoke {
     println("LLM_SMOKE note: t62 eval not separately scaled (synthetic plant; t59 gate covers the dedup-quality surface)")
     val bpeVocab = spark.sparkContext.broadcast(graft.functions.Bpe.defaultVocab)
     val wpVocab = spark.sparkContext.broadcast(graft.functions.WordPiece.defaultVocab)
-    val lmRuns = scales.map { c =>
-      val docs = scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lmRuns = scales.map { c => Caches.scoped {
+      val docs = Caches.persist(scaledCorpus(base, c)
+        .repartition(spark.sparkContext.defaultParallelism))
       docs.count()
       // t60/t66: copy offsets are multiples of 10, so the %10 ref
       // split replicates per copy; token COUNTS are copy-invariant
@@ -641,7 +637,6 @@ object LlmScaleSmoke {
       val linePass = graft.operators.QualityRules
         .lineRules(lined, "doc_id", "t0", minTerminalFrac = 0.0)
         .filter(col("pass")).count()
-      docs.unpersist()
       println(f"LLM_SMOKE_LM scale=$c%-3d t60=(${t60r.getLong(0)},${t60r.getLong(1)}) " +
         f"t66=(${t66r.getLong(0)},${t66r.getLong(1)}) " +
         f"t68=(${t68r.getLong(0)},${t68r.getLong(1)}) bpe_toks=$bpeToks wp_toks=$wpToks " +
@@ -651,7 +646,7 @@ object LlmScaleSmoke {
         bpeToks, wpToks, uni, survivors, gopherPass,
         t68r.getLong(0), t68r.getLong(1), linePass, t70counts, t71m, t71a,
         gblPass, bloomBytes, t74agg, suiteBloomBytes)
-    }
+    } }
     val l1 = lmRuns.head
     lmRuns.tail.foreach { case (c, r60, g60, r66, g66, bt, wt, uni, _, gp, r68, g68, lp, t70c, t71c, t71ac, gbl, bfLen, t74c, sbb) =>
       // t71: same language set at every scale; per-language scored

@@ -2,12 +2,15 @@ package graft.tools
 
 import graft.multimodal.{MediaRow, Multimodal, Subtitles}
 import graft.queries.QMedia
+import graft.util.Caches
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 /**
  * Media-family scale smoke — `runMain graft.tools.MediaScaleSmoke
- * [scales]` (default `1,3,10`): replicates the y4m / AIFF / SRT
+ * [sfDir] [scales]` (default scales `1,3,10`; the media fixtures are
+ * built in, so `sfDir` is accepted only to share the other scale
+ * smokes' command line): replicates the y4m / AIFF / SRT
  * fixture families into disjoint media_id spaces and asserts the
  * properties that make the multimodal path scale:
  *
@@ -26,7 +29,7 @@ import org.apache.spark.sql.functions._
 object MediaScaleSmoke {
 
   def main(args: Array[String]): Unit = {
-    val scales = args.headOption.getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
+    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
     val spark = graft.GraftSession.local("graft-media-scale-smoke")
     import spark.implicits._
     val tally = new LlmScaleSmoke.ShuffleTally
@@ -111,34 +114,34 @@ object MediaScaleSmoke {
     // cross-copy pair is IMPOSSIBLE by construction: pair count must
     // be exactly linear, cross-copy pairs exactly zero, and the
     // candidate join must stay a banded equi-join (no cartesian).
-    val baseCodes = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.imageDupMedia(spark), everyN = 1))
-      .select(col("media_id"), col("dhash"))
-      .persist()
-    val m12Runs = scales.map { c =>
-      val codes = (0 until c).map { k =>
-        baseCodes.select(
-          (col("media_id") + k * 1000L).as("media_id"),
-          col("dhash").bitwiseAND(lit(0xffffffffffffL))
-            .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
-      }.reduce(_.unionByName(_))
-      val pairs = graft.multimodal.ImageHash
-        .nearDupPairs(codes, "media_id", "dhash", maxHamming = 3)
-      val plan = pairs.queryExecution.executedPlan.toString
-      check(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-        s"scale=$c m12 pair join stays a banded equi-join")
-      val cross = pairs
-        .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-      check(cross == 0L, s"scale=$c m12 cross-copy pairs exactly zero (got $cross)")
-      (c, pairs.count())
+    Caches.scoped {
+      val baseCodes = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.imageDupMedia(spark), everyN = 1))
+        .select(col("media_id"), col("dhash")))
+      val m12Runs = scales.map { c =>
+        val codes = (0 until c).map { k =>
+          baseCodes.select(
+            (col("media_id") + k * 1000L).as("media_id"),
+            col("dhash").bitwiseAND(lit(0xffffffffffffL))
+              .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
+        }.reduce(_.unionByName(_))
+        val pairs = graft.multimodal.ImageHash
+          .nearDupPairs(codes, "media_id", "dhash", maxHamming = 3)
+        val plan = pairs.queryExecution.executedPlan.toString
+        check(!plan.contains("CartesianProduct") &&
+            !plan.contains("BroadcastNestedLoopJoin"),
+          s"scale=$c m12 pair join stays a banded equi-join")
+        val cross = pairs
+          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
+        check(cross == 0L, s"scale=$c m12 cross-copy pairs exactly zero (got $cross)")
+        (c, pairs.count())
+      }
+      val p1 = m12Runs.head
+      m12Runs.tail.foreach { case (c, rows) =>
+        check(rows * p1._1 == p1._2 * c,
+          s"scale=$c m12 pair count EXACTLY linear (${p1._2}->$rows)")
+      }
     }
-    val p1 = m12Runs.head
-    m12Runs.tail.foreach { case (c, rows) =>
-      check(rows * p1._1 == p1._2 * c,
-        s"scale=$c m12 pair count EXACTLY linear (${p1._2}->$rows)")
-    }
-    baseCodes.unpersist()
 
     // m14 audio near-dup: the same copy-tag scheme over the 24-bit
     // sub-fingerprint codes — tags ride bits 24..39 (outside the
@@ -147,60 +150,61 @@ object MediaScaleSmoke {
     // SEGMENT matches impossible at maxHamming=3: (pair, delta) row
     // counts exactly linear, zero cross, and the candidate join must
     // stay a banded equi-join.
-    val audioBase = graft.multimodal.AudioHash
-      .fingerprints(QMedia.wavDupMedia(spark))
-      .persist()
-    val m14Runs = scales.map { c =>
-      val codes = (0 until c).map { k =>
-        audioBase.select(
-          (col("media_id") + k * 1000L).as("media_id"), col("off"),
-          col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
-      }.reduce(_.unionByName(_))
-      val pairs = graft.multimodal.AudioHash
-        .nearDupPairs(codes, maxHamming = 3, minRun = 5)
-      val plan = pairs.queryExecution.executedPlan.toString
-      check(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-        s"scale=$c m14 segment pair join stays a banded equi-join")
-      val cross = pairs
-        .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-      check(cross == 0L, s"scale=$c m14 cross-copy audio pairs exactly zero (got $cross)")
-      (c, pairs.count())
+    Caches.scoped {
+      val audioBase = Caches.persist(graft.multimodal.AudioHash
+        .fingerprints(QMedia.wavDupMedia(spark)))
+      val m14Runs = scales.map { c =>
+        val codes = (0 until c).map { k =>
+          audioBase.select(
+            (col("media_id") + k * 1000L).as("media_id"), col("off"),
+            col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
+        }.reduce(_.unionByName(_))
+        val pairs = graft.multimodal.AudioHash
+          .nearDupPairs(codes, maxHamming = 3, minRun = 5)
+        val plan = pairs.queryExecution.executedPlan.toString
+        check(!plan.contains("CartesianProduct") &&
+            !plan.contains("BroadcastNestedLoopJoin"),
+          s"scale=$c m14 segment pair join stays a banded equi-join")
+        val cross = pairs
+          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
+        check(cross == 0L, s"scale=$c m14 cross-copy audio pairs exactly zero (got $cross)")
+        (c, pairs.count())
+      }
+      val a14 = m14Runs.head
+      m14Runs.tail.foreach { case (c, rows) =>
+        check(rows * a14._1 == a14._2 * c,
+          s"scale=$c m14 audio (pair, delta) count EXACTLY linear (${a14._2}->$rows)")
+      }
     }
-    val a14 = m14Runs.head
-    m14Runs.tail.foreach { case (c, rows) =>
-      check(rows * a14._1 == a14._2 * c,
-        s"scale=$c m14 audio (pair, delta) count EXACTLY linear (${a14._2}->$rows)")
-    }
-    audioBase.unpersist()
 
     // m15 ingest gate: history AND batch replicated into the same
     // tagged copy spaces — per-copy gating replicates exactly
     // (survivors exactly linear) and a cross-copy history code can
     // never gate a batch row (tags ≥ 4 bits apart)
-    val histBase = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
-      .select("media_id", "dhash").persist()
-    val batchBase = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
-      .select("media_id", "dhash").persist()
     def tagged(df: org.apache.spark.sql.DataFrame, c: Int) =
       (0 until c).map { k =>
         df.select((col("media_id") + k * 1000L).as("media_id"),
           col("dhash").bitwiseAND(lit(0xffffffffffffL))
             .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
       }.reduce(_.unionByName(_))
-    val m15Runs = scales.map { c =>
-      val surv = graft.multimodal.ImageHash.incrementalNearDup(
-        tagged(batchBase, c), tagged(histBase, c), maxHamming = 3)
-      (c, surv.count())
+    Caches.scoped {
+      val histBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
+        .select("media_id", "dhash"))
+      val batchBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
+        .select("media_id", "dhash"))
+      val m15Runs = scales.map { c =>
+        val surv = graft.multimodal.ImageHash.incrementalNearDup(
+          tagged(batchBase, c), tagged(histBase, c), maxHamming = 3)
+        (c, surv.count())
+      }
+      val g15 = m15Runs.head
+      m15Runs.tail.foreach { case (c, rows) =>
+        check(rows * g15._1 == g15._2 * c,
+          s"scale=$c m15 ingest survivors EXACTLY linear (${g15._2}->$rows)")
+      }
     }
-    val g15 = m15Runs.head
-    m15Runs.tail.foreach { case (c, rows) =>
-      check(rows * g15._1 == g15._2 * c,
-        s"scale=$c m15 ingest survivors EXACTLY linear (${g15._2}->$rows)")
-    }
-    histBase.unpersist(); batchBase.unpersist()
 
     // m13 clip near-dup (the r13 newcomer, gated r14): per-frame codes
     // of the y4m re-encode fixture in the same tagged copy spaces —
@@ -208,71 +212,72 @@ object MediaScaleSmoke {
     // 0 → identical clip pairs), across copies every frame pair is ≥ 4
     // bits apart → matched-fraction 0: clip pairs exactly linear, zero
     // cross-copy, candidate generation stays a banded equi-join.
-    val clipBase = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.y4mDupMedia(spark), everyN = 1))
-      .persist()
-    clipBase.count()
-    val m13Runs = scales.map { c =>
-      val codes = (0 until c).map { k =>
-        clipBase.select((col("media_id") + k * 1000L).as("media_id"),
-          col("frame_idx"),
-          col("dhash").bitwiseAND(lit(0xffffffffffffL))
-            .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
-      }.reduce(_.unionByName(_))
-      val pairs = graft.multimodal.ImageHash
-        .clipNearDupPairs(codes, maxHamming = 3, minFrac = 0.5)
-      val plan = pairs.queryExecution.executedPlan.toString
-      check(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-        s"scale=$c m13 clip pair join stays a banded equi-join")
-      val cross = pairs
-        .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-      check(cross == 0L, s"scale=$c m13 cross-copy clip pairs exactly zero (got $cross)")
-      (c, pairs.count())
+    Caches.scoped {
+      val clipBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.y4mDupMedia(spark), everyN = 1)))
+      clipBase.count()
+      val m13Runs = scales.map { c =>
+        val codes = (0 until c).map { k =>
+          clipBase.select((col("media_id") + k * 1000L).as("media_id"),
+            col("frame_idx"),
+            col("dhash").bitwiseAND(lit(0xffffffffffffL))
+              .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
+        }.reduce(_.unionByName(_))
+        val pairs = graft.multimodal.ImageHash
+          .clipNearDupPairs(codes, maxHamming = 3, minFrac = 0.5)
+        val plan = pairs.queryExecution.executedPlan.toString
+        check(!plan.contains("CartesianProduct") &&
+            !plan.contains("BroadcastNestedLoopJoin"),
+          s"scale=$c m13 clip pair join stays a banded equi-join")
+        val cross = pairs
+          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
+        check(cross == 0L, s"scale=$c m13 cross-copy clip pairs exactly zero (got $cross)")
+        (c, pairs.count())
+      }
+      val g13 = m13Runs.head
+      m13Runs.tail.foreach { case (c, rows) =>
+        check(rows * g13._1 == g13._2 * c,
+          s"scale=$c m13 clip pair count EXACTLY linear (${g13._2}->$rows)")
+      }
     }
-    val g13 = m13Runs.head
-    m13Runs.tail.foreach { case (c, rows) =>
-      check(rows * g13._1 == g13._2 * c,
-        s"scale=$c m13 clip pair count EXACTLY linear (${g13._2}->$rows)")
-    }
-    clipBase.unpersist()
 
     // m16 persisted media index (the r14 newcomer): the STORE gate must
     // equal the in-memory m15 gate at every scale — write the tagged
     // history once per scale, probe with the tagged batch.
-    val histBase16 = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
-      .select("media_id", "dhash").persist()
-    val batchBase16 = graft.multimodal.ImageHash.frameHashes(
-        Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
-      .select("media_id", "dhash").persist()
-    scales.foreach { c =>
-      val hist = tagged(histBase16, c)
-      val batch = tagged(batchBase16, c)
-      val inMem = graft.multimodal.ImageHash
-        .incrementalNearDup(batch, hist, maxHamming = 3).count()
-      val idxPath = s"/tmp/graft_media_smoke_idx_$c"
-      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(idxPath), true)
-      graft.multimodal.MediaIndex.write(idxPath, hist)
-      val surv = graft.multimodal.MediaIndex.gate(spark, idxPath, batch, maxHamming = 3)
-      val viaStore = surv.count()
-      check(viaStore == inMem,
-        s"scale=$c m16 persisted-index gate == in-memory ($viaStore vs $inMem)")
-      // day-2 idempotence THROUGH a compaction: upsert the accepted
-      // codes, compact (atomic re-publish), re-gate the same batch —
-      // every accepted code now self-matches at Hamming 0, so nothing
-      // is accepted twice, and compaction must not change verdicts
-      graft.multimodal.MediaIndex.upsert(idxPath, surv)
-      val report = graft.multimodal.MediaIndex.compact(spark, idxPath)
-      val regate = graft.multimodal.MediaIndex
-        .gate(spark, idxPath, batch, maxHamming = 3).count()
-      check(regate == 0L,
-        s"scale=$c m16 re-gate after upsert+compact accepts nothing (got $regate)")
-      check(report.filesAfter <= report.filesBefore,
-        s"scale=$c m16 compact shrinks files (${report.filesBefore}->${report.filesAfter})")
+    Caches.scoped {
+      val histBase16 = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
+        .select("media_id", "dhash"))
+      val batchBase16 = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
+        .select("media_id", "dhash"))
+      scales.foreach { c =>
+        val hist = tagged(histBase16, c)
+        val batch = tagged(batchBase16, c)
+        val inMem = graft.multimodal.ImageHash
+          .incrementalNearDup(batch, hist, maxHamming = 3).count()
+        val idxPath = s"/tmp/graft_media_smoke_idx_$c"
+        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+          .delete(new org.apache.hadoop.fs.Path(idxPath), true)
+        graft.multimodal.MediaIndex.write(idxPath, hist)
+        val surv = graft.multimodal.MediaIndex.gate(spark, idxPath, batch, maxHamming = 3)
+        val viaStore = surv.count()
+        check(viaStore == inMem,
+          s"scale=$c m16 persisted-index gate == in-memory ($viaStore vs $inMem)")
+        // day-2 idempotence THROUGH a compaction: upsert the accepted
+        // codes, compact (atomic re-publish), re-gate the same batch —
+        // every accepted code now self-matches at Hamming 0, so nothing
+        // is accepted twice, and compaction must not change verdicts
+        graft.multimodal.MediaIndex.upsert(idxPath, surv)
+        val report = graft.multimodal.MediaIndex.compact(spark, idxPath)
+        val regate = graft.multimodal.MediaIndex
+          .gate(spark, idxPath, batch, maxHamming = 3).count()
+        check(regate == 0L,
+          s"scale=$c m16 re-gate after upsert+compact accepts nothing (got $regate)")
+        check(report.filesAfter <= report.filesBefore,
+          s"scale=$c m16 compact shrinks files (${report.filesBefore}->${report.filesAfter})")
+      }
     }
-    histBase16.unpersist(); batchBase16.unpersist()
 
     // m17 audio sub-fingerprint store: the persisted RUN-CONSISTENT
     // gate under the same tagged replication — tags ride bits 24..39
@@ -280,43 +285,44 @@ object MediaScaleSmoke {
     // accepted clips are exactly linear; after upserting the
     // survivors, re-gating the SAME batch accepts nothing (every
     // accepted clip self-matches at delta 0 with a full-length run).
-    val audioHist17 = graft.multimodal.AudioHash
-      .fingerprints(QMedia.wavHistMedia(spark)).persist()
-    val audioBatch17 = graft.multimodal.AudioHash
-      .fingerprints(QMedia.wavIngestMedia(spark)).persist()
-    def taggedAudio(df: org.apache.spark.sql.DataFrame, c: Int) =
-      (0 until c).map { k =>
-        df.select((col("media_id") + k * 1000L).as("media_id"), col("off"),
-          col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
-      }.reduce(_.unionByName(_))
-    val m17Runs = scales.map { c =>
-      val p = s"/tmp/graft_media_smoke_audioidx_$c"
-      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(p), true)
-      graft.multimodal.AudioHash.writeIndex(p, taggedAudio(audioHist17, c))
-      val surv = graft.multimodal.AudioHash.gate(
-        spark, p, taggedAudio(audioBatch17, c), maxHamming = 3, minRun = 5)
-      val accepted = surv.select("media_id").distinct().count()
-      graft.multimodal.AudioHash.upsertIndex(p, surv)
-      // day-2 idempotence THROUGH a compaction (the m16 discipline):
-      // the atomic re-publish must not change verdicts, and the
-      // rewrite must undo the upsert's small files
-      val report = graft.multimodal.MediaIndex.compact(spark, p)
-      check(report.filesAfter < report.filesBefore,
-        s"scale=$c m17 compact shrinks files (${report.filesBefore}->${report.filesAfter})")
-      val regate = graft.multimodal.AudioHash.gate(
+    Caches.scoped {
+      val audioHist17 = Caches.persist(graft.multimodal.AudioHash
+        .fingerprints(QMedia.wavHistMedia(spark)))
+      val audioBatch17 = Caches.persist(graft.multimodal.AudioHash
+        .fingerprints(QMedia.wavIngestMedia(spark)))
+      def taggedAudio(df: org.apache.spark.sql.DataFrame, c: Int) =
+        (0 until c).map { k =>
+          df.select((col("media_id") + k * 1000L).as("media_id"), col("off"),
+            col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
+        }.reduce(_.unionByName(_))
+      val m17Runs = scales.map { c =>
+        val p = s"/tmp/graft_media_smoke_audioidx_$c"
+        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+          .delete(new org.apache.hadoop.fs.Path(p), true)
+        graft.multimodal.AudioHash.writeIndex(p, taggedAudio(audioHist17, c))
+        val surv = graft.multimodal.AudioHash.gate(
           spark, p, taggedAudio(audioBatch17, c), maxHamming = 3, minRun = 5)
-        .select("media_id").distinct().count()
-      check(regate == 0L,
-        s"scale=$c m17 re-gate after upsert+compact accepts nothing (got $regate)")
-      (c, accepted)
+        val accepted = surv.select("media_id").distinct().count()
+        graft.multimodal.AudioHash.upsertIndex(p, surv)
+        // day-2 idempotence THROUGH a compaction (the m16 discipline):
+        // the atomic re-publish must not change verdicts, and the
+        // rewrite must undo the upsert's small files
+        val report = graft.multimodal.MediaIndex.compact(spark, p)
+        check(report.filesAfter < report.filesBefore,
+          s"scale=$c m17 compact shrinks files (${report.filesBefore}->${report.filesAfter})")
+        val regate = graft.multimodal.AudioHash.gate(
+            spark, p, taggedAudio(audioBatch17, c), maxHamming = 3, minRun = 5)
+          .select("media_id").distinct().count()
+        check(regate == 0L,
+          s"scale=$c m17 re-gate after upsert+compact accepts nothing (got $regate)")
+        (c, accepted)
+      }
+      val g17 = m17Runs.head
+      m17Runs.tail.foreach { case (c, rows) =>
+        check(rows * g17._1 == g17._2 * c,
+          s"scale=$c m17 audio-gate survivors EXACTLY linear (${g17._2}->$rows)")
+      }
     }
-    val g17 = m17Runs.head
-    m17Runs.tail.foreach { case (c, rows) =>
-      check(rows * g17._1 == g17._2 * c,
-        s"scale=$c m17 audio-gate survivors EXACTLY linear (${g17._2}->$rows)")
-    }
-    audioHist17.unpersist(); audioBatch17.unpersist()
 
     // byte-balanced partitioning: skewed payloads (64 KiB .. 512 KiB)
     val skewed = spark.range(64).select(

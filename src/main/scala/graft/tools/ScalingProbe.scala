@@ -66,19 +66,17 @@ object ScalingProbe {
       }
       Files.writeString(marker, "ok")
     }
-    spark.catalog.clearCache()
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      val times = (1 to 2).map { _ =>
+      val times = (1 to 2).map { _ => graft.util.Caches.scoped {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, stage).count(); true } catch {
           case e: Throwable =>
             System.err.println(s"[scaling] $name failed: ${e.getMessage}"); false
         }
-        spark.catalog.clearCache()
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
+      } }
       println(f"SCALING query=$name copies=$copies cpus=$cpus " +
         f"warm=${times(1)}%.2f cold=${times(0)}%.2f")
     }

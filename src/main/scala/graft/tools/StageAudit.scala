@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
+import graft.util.Caches
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.collection.mutable.ArrayBuffer
 
@@ -13,8 +14,7 @@ object StageAudit {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local("graft-stage-audit")
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    spark.catalog.clearCache()
+    try Caches.scoped(SparkEntry.entry(spark).count()) catch { case _: Throwable => () }
 
     // appended from the listener-bus thread, cleared/read from main —
     // every access synchronizes on the buffer (the sleeps below only
@@ -31,15 +31,15 @@ object StageAudit {
       }
     })
     // run 1 cold (codegen+JIT), run 2 warm — report run 2's stages
-    val tc = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir).count()
-    println(f"AUDIT cold ${(System.nanoTime() - tc) / 1e9}%.2f s")
-    spark.catalog.clearCache()
+    def timed(): Double = Caches.scoped {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, sfDir).count()
+      (System.nanoTime() - t0) / 1e9
+    }
+    println(f"AUDIT cold ${timed()}%.2f s")
     Thread.sleep(500)
     stages.synchronized { stages.clear() }
-    val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir).count()
-    println(f"AUDIT total ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    println(f"AUDIT total ${timed()}%.2f s")
     Thread.sleep(500)
     stages.synchronized { stages.sortBy(-_._4).take(25) }.foreach { case (id, n, tasks, wall, run) =>
       println(f"AUDIT stage=$id%-4d tasks=$tasks%-3d wall=${wall / 1000.0}%7.2fs cpu=${run / 1000.0}%7.2fs  $n")

@@ -352,8 +352,7 @@ object Baserunning {
     // four consumers (steal, names, wGDP, wEBT) share one scan —
     // persist the projected input or the upstream pipeline runs 4×
     // (same pattern as the dedup operators' shingle persist)
-    val df = graft.util.Caches.track(
-      df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val df = graft.util.Caches.persist(df0)
     // materialize once, serially: the four consumers below are
     // INDEPENDENT stages, and on first touch the scheduler runs them
     // concurrently — each racing to compute the same uncached
@@ -402,8 +401,7 @@ object Baserunning {
    */
   def teamBaserunning(
       df0: DataFrame, runsSb: Double, runsCs: Double, runsOut: Double): DataFrame = {
-    val df = graft.util.Caches.track(
-      df0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val df = graft.util.Caches.persist(df0)
     df.count() // see playerBaserunning: defuse the concurrent-first-touch race
     val steal = teamStealStats(df)
     val names = df.groupBy(col("bat_team_id").as("team_id"))

@@ -221,8 +221,8 @@ object GetWar {
     val totalGamesRow = pitching.agg(sum("gs").cast("double")).first()
     val totalGames = (if (totalGamesRow.isNullAt(0)) 0.0 else totalGamesRow.getDouble(0)) / 2
 
-    val bw = graft.util.Caches.track(battingWar(batting, pbp, parkFactors, lineups, guts,
-      division, year, totalGames).cache())
+    val bw = graft.util.Caches.persist(battingWar(batting, pbp, parkFactors, lineups, guts,
+      division, year, totalGames))
     val batTotalRow = bw.agg(sum("war").cast("double")).first()
     val batWarTotal = if (batTotalRow.isNullAt(0)) 0.0 else batTotalRow.getDouble(0)
 

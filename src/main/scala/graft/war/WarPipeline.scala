@@ -138,7 +138,7 @@ object WarPipeline {
     val targetTotal = s.getDouble(0) - 0.294 * s.getDouble(1)
 
     def scale(df0: DataFrame, target: Double): DataFrame = {
-      val df = graft.util.Caches.track(df0.cache()) // scalar action + returned plan share one scan
+      val df = graft.util.Caches.persist(df0) // scalar action + returned plan share one scan
       val totRow = df.agg(sum("war").cast("double")).first()
       val tot = if (totRow.isNullAt(0)) 0.0 else totRow.getDouble(0)
       val k = if (tot == 0) 1.0 else target / math.max(tot, 1e-12)
@@ -166,7 +166,7 @@ object WarPipeline {
       division: String, year: Int, totalGames: Double): DataFrame = {
     import BattingFormulas._
 
-    val base = batting
+    val base = graft.util.Caches.persist(batting
       .filter(col("ab") > 0)
       .join(broadcast(parkFactors.select(col("team_id"), col("pf"))), Seq("team_id"), "left")
       .na.fill(Map("pf" -> 100.0))
@@ -174,9 +174,7 @@ object WarPipeline {
       .withColumn("pa", plateAppearances(col("ab"), col("bb"), col("ibb"), col("hbp"), col("sf")))
       .withColumn("woba", woba(col("bb"), col("hbp"), col("1b"), col("2b"), col("3b"),
         col("hr"), col("ab"), col("ibb"), col("sf"), guts))
-      .withColumn("wraa", wraa(col("woba"), guts.woba, guts.wobaScale, col("pa")))
-      .cache()
-    graft.util.Caches.track(base)
+      .withColumn("wraa", wraa(col("woba"), guts.woba, guts.wobaScale, col("pa"))))
 
     // ONE fused driver aggregate for all league scalars (round-2 ran
     // three separate actions over the uncached frame). countDistinct
@@ -235,7 +233,7 @@ object WarPipeline {
     val confRa9 = sum(when(valid, col("r"))).over(wConf) * 9 /
       sum(when(valid, col("ip_float"))).over(wConf)
 
-    val scored = base
+    val scored = graft.util.Caches.persist(base
       .withColumn("conf_ra9", confRa9)
       .withColumn("park_adj_ra9", when(valid, col("ra9") / (col("pf") / 100)))
       .withColumn("raap9", when(valid, col("conf_ra9") - col("park_adj_ra9")).otherwise(0.0))
@@ -249,9 +247,7 @@ object WarPipeline {
           col("ip_float"))).otherwise(0.0))
       .withColumn("war",
         when(valid, leverageAdjustment(col("war"), coalesce(col("gmli"), lit(0.0)),
-          col("app"), col("gs"))).otherwise(col("war")))
-      .cache()
-    graft.util.Caches.track(scored)
+          col("app"), col("gs"))).otherwise(col("war"))))
 
     // 57/43 split: rescale so pitching total hits batting_total·0.43/0.57
     // (one action over the cached frame; the returned plan reuses it)

@@ -679,43 +679,44 @@ class PlanAuditSpec extends AnyFunSuite {
       // broadcasts — also shuffle-free, but vacuously)
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val (drops, release) = graft.operators.DedupIndex.gateParts(
-        spark, path, docs.filter(col("doc_id") % 10 >= 6),
-        "doc_id", "text", 3, 12, 4, 0.5)
-      val root = drops.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case other => other
+      graft.util.Caches.scoped {
+        val drops = graft.operators.DedupIndex.gateParts(
+          spark, path, docs.filter(col("doc_id") % 10 >= 6),
+          "doc_id", "text", 3, 12, 4, 0.5)
+        val root = drops.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case other => other
+        }
+        def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
+        def isHistShingleScan(p: SparkPlan): Boolean = p match {
+          case f: FileSourceScanExec =>
+            f.relation.location.rootPaths.exists(_.toString.contains("/shingles/v"))
+          case _ => false
+        }
+        val scans = nodes(root).filter(isHistShingleScan)
+        assert(scans.nonEmpty, s"no history shingle scan in the gate plan\n$root")
+        assert(scans.forall { case f: FileSourceScanExec => f.bucketedScan },
+          s"history shingle scan is not bucketed\n$root")
+        // no shuffle between the history scan and the join that consumes
+        // it: the scan's HashPartitioning(sh) must satisfy the join's
+        // clustering directly. (Exchanges ABOVE the join — the
+        // candidate-bounded n_inter aggregation etc. — are legitimate.)
+        def pathToScan(p: SparkPlan): Option[List[SparkPlan]] =
+          if (isHistShingleScan(p)) Some(List(p))
+          else p.children.flatMap(pathToScan).headOption.map(p :: _)
+        val path0 = pathToScan(root).getOrElse(fail("scan path vanished"))
+        val belowJoin = path0.reverse.takeWhile(n =>
+          !n.nodeName.contains("Join")) // scan-side segment up to the join
+        val shuffled = belowJoin.collect { case e: ShuffleExchangeExec => e }
+        assert(shuffled.isEmpty,
+          s"history shingle side shuffles before its join:\n${belowJoin.mkString("\n")}")
+        assert(path0.exists(_.nodeName.contains("Join")),
+          s"no join consumes the history shingle scan\n$root")
+        // the candidate-id predicate reaches the scan (row-group pruning
+        // against the per-file id sort — bytes bounded by candidates)
+        assert(scans.exists(_.toString.contains("PushedFilters: [In(id")),
+          s"candidate-id pushdown missing from the shingle scan\n${scans.head}")
       }
-      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap(nodes)
-      def isHistShingleScan(p: SparkPlan): Boolean = p match {
-        case f: FileSourceScanExec =>
-          f.relation.location.rootPaths.exists(_.toString.contains("/shingles/v"))
-        case _ => false
-      }
-      val scans = nodes(root).filter(isHistShingleScan)
-      assert(scans.nonEmpty, s"no history shingle scan in the gate plan\n$root")
-      assert(scans.forall { case f: FileSourceScanExec => f.bucketedScan },
-        s"history shingle scan is not bucketed\n$root")
-      // no shuffle between the history scan and the join that consumes
-      // it: the scan's HashPartitioning(sh) must satisfy the join's
-      // clustering directly. (Exchanges ABOVE the join — the
-      // candidate-bounded n_inter aggregation etc. — are legitimate.)
-      def pathToScan(p: SparkPlan): Option[List[SparkPlan]] =
-        if (isHistShingleScan(p)) Some(List(p))
-        else p.children.flatMap(pathToScan).headOption.map(p :: _)
-      val path0 = pathToScan(root).getOrElse(fail("scan path vanished"))
-      val belowJoin = path0.reverse.takeWhile(n =>
-        !n.nodeName.contains("Join")) // scan-side segment up to the join
-      val shuffled = belowJoin.collect { case e: ShuffleExchangeExec => e }
-      assert(shuffled.isEmpty,
-        s"history shingle side shuffles before its join:\n${belowJoin.mkString("\n")}")
-      assert(path0.exists(_.nodeName.contains("Join")),
-        s"no join consumes the history shingle scan\n$root")
-      // the candidate-id predicate reaches the scan (row-group pruning
-      // against the per-file id sort — bytes bounded by candidates)
-      assert(scans.exists(_.toString.contains("PushedFilters: [In(id")),
-        s"candidate-id pushdown missing from the shingle scan\n${scans.head}")
-      release()
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)

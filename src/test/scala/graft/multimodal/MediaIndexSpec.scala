@@ -43,7 +43,7 @@ class MediaIndexSpec extends AnyFunSuite {
     val survA = MediaIndex.gate(spark, path, bA, maxHamming = 3)
     val before = ids(survA)
     MediaIndex.upsert(path, survA)
-    spark.catalog.clearCache() // the harness contract — must not re-probe
+    spark.catalog.clearCache() // dropping catalog caches must not re-probe
     assert(ids(survA) === before,
       "a gate verdict must mean 'as of the call', even after the upsert")
     // day-2 idempotence: re-gating the SAME batch self-matches every

@@ -84,7 +84,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val survA = DedupIndex.gate(spark, path, bA, "doc_id", "text", 3, 12, 4, 0.5)
     val before = ids(survA)
     DedupIndex.upsert(path, survA, "doc_id", "text", 3, 12, 4)
-    spark.catalog.clearCache() // the harness contract — must not re-probe
+    spark.catalog.clearCache() // dropping catalog caches must not re-probe
     assert(ids(survA) === before,
       "a gate verdict must mean 'as of the call', even after the upsert")
     // the grown index now self-matches the accepted docs: re-gating

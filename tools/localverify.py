@@ -5,6 +5,9 @@ DuckDB over the same testdata tables, and compares rows/schema/values.
 
 Usage: python3 tools/localverify.py [sfdir] [outdir] [query...]
 
+A query whose MANIFEST.jsonl line reads "held" > 0 (persistent RDDs
+left after its scope closed) is listed and fails.
+
 Full runs (no query filter) ALSO mirror the result in the driver's
 exact per-query artifact schema ({"rows_match","schema_match",
 "hash_match","err"}) to $CORRECTNESS_LOCAL_OUT (default
@@ -59,6 +62,22 @@ if not ONLY:
               f"{missing_dirs[:8]}")
         sys.exit(2)
 
+# Release gate: Verify records, per query, the persistent RDDs still
+# held once the query's scope has closed. Any above 0 is an
+# intermediate that outlived its query; the query fails here.
+held = {}
+try:
+    for line in open(f"{OUT}/MANIFEST.jsonl"):
+        row = json.loads(line)
+        if row.get("held", 0) > 0 and (not ONLY or row["query"] in ONLY):
+            held[row["query"]] = row["held"]
+except FileNotFoundError:
+    pass
+if held:
+    print(f"HELD: {len(held)} queries left persistent RDDs after their scope:")
+    for q, n in held.items():
+        print(f"  held {q}: {n}")
+
 def norm(df):
     df = df[sorted(df.columns)]
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
@@ -108,6 +127,8 @@ for name, sql in sorted(oracle.items()):
                 problems.append(f"values[{c}]: {int(neq.sum())} diffs, first at row {i}: spark={a[i]!r} duck={b[i]!r}")
         rec["schema_match"] = dtype_ok
         rec["hash_match"] = dtype_ok and values_ok
+    if name in held:
+        problems.append(f"held: {held[name]} persistent RDDs after the query's scope")
     if problems:
         fail += 1
         rec["err"] = "; ".join(p[:160] for p in problems[:4])
