@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.{Dedup, SimilaritySearch}
 import graft.sources.Tables
-import graft.util.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -54,31 +53,25 @@ import org.apache.spark.sql.functions._
 object AnnScaleSmoke {
 
   /** Copy `k` of the corpus: ids offset, every vector multiplied by
-    * the copy's ±1 sign pattern (copy 0 untouched). Signs come from
+    * the copy's ±1 sign pattern. Signs come from
     * Murmur3 `hash(k, dim)` — a linear-congruential mix is NOT enough
     * here: two copies whose patterns differ by a small shift agree on
     * ~95% of dimensions, which maps the SAME base vector in two
     * copies to cos ≈ 1 and floods the near-dup join with cross-copy
     * pairs. Murmur-mixed patterns agree on ~50% of dimensions, so
     * cross-copy cosines of identical base vectors concentrate near 0. */
-  def scaledVectors(emb: DataFrame, c: Int): DataFrame =
-    (0 until c).map { k =>
-      if (k == 0) emb
-      else emb
-        .withColumn("vec_id", col("vec_id") + lit(k * 10000000L))
-        .withColumn("embedding",
-          transform(col("embedding"), (x, i) =>
-            when(pmod(hash(lit(k), i), lit(2)) === 0, x).otherwise(-x)))
-    }.reduce(_.unionByName(_))
+  def signCopy(emb: DataFrame, k: Int): DataFrame =
+    emb
+      .withColumn("vec_id", col("vec_id") + lit(k * 10000000L))
+      .withColumn("embedding",
+        transform(col("embedding"), (x, i) =>
+          when(pmod(hash(lit(k), i), lit(2)) === 0, x).otherwise(-x)))
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = graft.GraftSession.local("graft-ann-scale-smoke")
-    val tally = new LlmScaleSmoke.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val run = new SmokeRun("ANN", args)
+    import run.{check, spark}
 
-    val raw = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val raw = Tables.embeddings(spark, run.sfDir).select("vec_id", "embedding")
     // Plant one near-twin per low-id vector BEFORE copying: dimension
     // (vec_id mod 64) scaled by 1.2 → cos(v, twin) ≈ 0.999, far above
     // every natural pair (corpus max ≈ 0.60). Twin ids sit at +5e6,
@@ -98,16 +91,10 @@ object AnnScaleSmoke {
     final case class Run(scale: Int, n: Long, brute: Long, lsh: Long, ivf: Long,
         pq: Long, ivfpq: Long,
         pairs: Long, crossPairs: Long, copy0Pairs: Long, kept: Long,
-        recallMicro: Long,
-        wallSec: Double, writeBytes: Long, stages: Map[Int, (Long, Long, Long)])
+        recallMicro: Long, env: Envelope)
 
-    // one scope per scale: its intermediates release before the next
-    val runs = scales.map { c => Caches.scoped {
-      val emb = Caches.persist(scaledVectors(base, c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      val n = emb.count()
-      tally.snapshotAndReset() // drop corpus-prep stages from the tally
-      val t0 = System.nanoTime()
+    val runs = run.ladder() { rung =>
+      val (emb, n) = rung.input(SmokeRun.copies(base, rung.scale)(signCopy))
       val cands = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
       val brute = SimilaritySearch.bruteForceTopK(queries, cands, k = 5).count()
       val lsh = SimilaritySearch.lshTopK(queries, cands,
@@ -146,40 +133,26 @@ object AnnScaleSmoke {
             numClusters = 8, iters = 2, k = 5, nprobe = 3),
           k = 5)
         .agg(avg("recall")).first().getDouble(0) * 1e6)
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // bound listener-bus delivery lag
-      val stages = tally.snapshotAndReset()
-      val bytes = stages.values.map(_._2).sum
-      println(f"ANN_SMOKE scale=$c%-3d n=$n brute=$brute lsh=$lsh ivf=$ivf " +
-        f"pq=$pq ivfpq=$ivfpq " +
-        f"pairs=$pairs cross=$crossPairs copy0=$copy0Pairs kept=$kept " +
-        f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB")
-      Run(c, n, brute, lsh, ivf, pq, ivfpq, pairs, crossPairs, copy0Pairs, kept,
-        recallMicro, wall, bytes, stages)
-    } }
+      val env = rung.envelope()
+      (Run(rung.scale, n, brute, lsh, ivf, pq, ivfpq, pairs, crossPairs, copy0Pairs, kept,
+        recallMicro, env),
+        s"n=$n brute=$brute lsh=$lsh ivf=$ivf pq=$pq ivfpq=$ivfpq " +
+          s"pairs=$pairs cross=$crossPairs copy0=$copy0Pairs kept=$kept ${env.summary}")
+    }
 
     val r1 = runs.head
-    var failed = false
-    def check(cond: Boolean, msg: String): Unit = {
-      println(s"ANN_SMOKE_CHECK ${if (cond) "ok  " else "FAIL"} $msg")
-      if (!cond) failed = true
-    }
+    def series[T](f: Run => T) = runs.map(r => r.scale -> f(r))
     check(r1.recallMicro >= 400000L,
       f"v19 mean IVF recall@5 ${r1.recallMicro / 1e6}%.3f at base scale (floor 0.4)")
+    run.constant("brute top-k", series(_.brute))
+    run.constant("lsh top-k", series(_.lsh))
+    run.constant("ivf top-k", series(_.ivf))
+    run.constant("pq adc top-k", series(_.pq))
+    run.constant("ivfpq top-k", series(_.ivfpq))
+    // ±5% of linear, + absolute slack
+    run.nearLinear("total pairs", series(_.pairs), tol = 0.05, slack = 8)
+    run.nearLinear("semdedup drop count", series(r => r.n - r.kept), tol = 0.05, slack = 8)
     runs.tail.foreach { r =>
-      val ratio = r.scale.toDouble / r1.scale
-      def inBand(x0: Long, x: Long) = // ±5% of linear, + absolute slack
-        math.abs(x - x0 * ratio) <= x0 * ratio * 0.05 + 8
-      check(r.brute == r1.brute,
-        s"brute top-k constant at ${r.scale}x (${r1.brute}->${r.brute})")
-      check(r.lsh == r1.lsh,
-        s"lsh top-k constant at ${r.scale}x (${r1.lsh}->${r.lsh})")
-      check(r.ivf == r1.ivf,
-        s"ivf top-k constant at ${r.scale}x (${r1.ivf}->${r.ivf})")
-      check(r.pq == r1.pq,
-        s"pq adc top-k constant at ${r.scale}x (${r1.pq}->${r.pq})")
-      check(r.ivfpq == r1.ivfpq,
-        s"ivfpq top-k constant at ${r.scale}x (${r1.ivfpq}->${r.ivfpq})")
       check(r.crossPairs <= 4,
         s"cross-copy near-dup pairs <= 4 at ${r.scale}x (got ${r.crossPairs})")
       // v19: quality floor + stability band (quantizer drift allowed)
@@ -190,34 +163,11 @@ object AnnScaleSmoke {
       check(r.copy0Pairs == r1.pairs,
         s"copy-0 pair count exactly reproduced at ${r.scale}x " +
           s"(${r1.pairs} vs ${r.copy0Pairs})")
-      check(inBand(r1.pairs, r.pairs),
-        s"total pairs linear +/-5% at ${r.scale}x " +
-          s"(${r1.pairs}->${r.pairs})")
-      check(inBand(r1.n - r1.kept, r.n - r.kept),
-        s"semdedup drop count linear +/-5% at ${r.scale}x " +
-          s"(${r1.n - r1.kept}->${r.n - r.kept})")
     }
-    if (runs.length >= 2) {
-      val (lo, hi) = (runs(runs.length - 2), runs.last)
-      val ratio = hi.scale.toDouble / lo.scale
-      val bound = (lo.writeBytes * ratio * 1.5).toLong + (8L << 20)
-      check(hi.writeBytes <= bound,
-        f"shuffle write ${lo.scale}x->${hi.scale}x: ${hi.writeBytes / 1048576.0}%.1f MiB <= " +
-          f"linear bound ${bound / 1048576.0}%.1f MiB")
-      runs.tail.zip(runs).foreach { case (r, prev) =>
-        println(f"ANN_SMOKE_INFO bytes ${prev.scale}x->${r.scale}x grew " +
-          f"${r.writeBytes.toDouble / math.max(1, prev.writeBytes)}%.2fx for a " +
-          f"${r.scale.toDouble / prev.scale}%.2fx scale-up")
-      }
-    }
-    runs.foreach { r =>
-      r.stages.foreach { case (sid, (nTasks, total, mx)) =>
-        if (total > (4L << 20) && nTasks >= 8)
-          check(mx <= 8 * (total / nTasks),
-            f"scale=${r.scale} stage=$sid skew: max task ${mx / 1048576.0}%.1f MiB " +
-              f"<= 8x mean ${(total / nTasks) / 1048576.0}%.1f MiB over $nTasks tasks")
-      }
-    }
+    // only the two LARGEST scales are gated: AQE legitimately re-plans
+    // the smallest inputs
+    run.shuffleLinear(runs.takeRight(2).map(r => (r.scale, r.env.writeBytes)))
+    runs.foreach(r => run.skew(r.scale, r.env.stages))
     // ---- t80 semantic decontamination at scale (planted one-hot
     // fixture per scale, suite FIXED like the query set): suite = 4
     // axis vectors; per copy one doc ON a suite axis (cos exactly 1.0
@@ -226,7 +176,7 @@ object AnnScaleSmoke {
     // in c, never a cross-suite attribution, the strict gate keeps
     // exactly the clean doc per copy — a broadcast-side mixup, an
     // arg-max tie bug, or a lost partial-aggregate would break one.
-    scales.foreach { c =>
+    run.scales.foreach { c =>
       import spark.implicits._
       def oneHot(j: Int, v: Float) =
         Array.tabulate(64)(i => if (i == j) v else 0.0f)
@@ -289,8 +239,6 @@ object AnnScaleSmoke {
         s"v18 maintenance: removed/kept accounting exact ($rep, " +
           s"expected removed=$expectRemoved of $expectTotal)")
     }
-    println(s"ANN_SMOKE_RESULT ${if (failed) "FAIL" else "PASS"}")
-    spark.stop()
-    if (failed) sys.exit(1)
+    run.finish()
   }
 }

@@ -39,22 +39,14 @@ import org.apache.spark.sql.functions._
 object EventsScaleSmoke {
 
   /** Copy `k`: user and event ids offset into a disjoint block. */
-  def scaledEvents(events: DataFrame, c: Int): DataFrame =
-    (0 until c).map { k =>
-      if (k == 0) events
-      else events
-        .withColumn("user_id", col("user_id") + lit(k * 10000000L))
-        .withColumn("event_id", col("event_id") + lit(k * 1000000000L))
-    }.reduce(_.unionByName(_))
+  val userBlocks: (DataFrame, Int) => DataFrame =
+    SmokeRun.idOffsets("user_id" -> 10000000L, "event_id" -> 1000000000L)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = graft.GraftSession.local("graft-events-scale-smoke")
-    val tally = new LlmScaleSmoke.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val run = new SmokeRun("EVT", args)
+    import run.{check, exactLinear, spark}
 
-    val base = Tables.events(spark, sfDir)
+    val base = Tables.events(spark, run.sfDir)
       .select("event_id", "user_id", "ts", "ts_ns", "event_type", "value")
 
     final case class Run(scale: Int, n: Long, sessions: Long, statRows: Long,
@@ -72,15 +64,11 @@ object EventsScaleSmoke {
         asofFwd: Long, asofNear: Long, topkRows: Long,
         madMap: Map[String, (Long, Long)], modeMap: Map[String, Long],
         scdRows: Long, scdOpen: Long, scdAsOfMid: Long, scdAsOfEnd: Long,
-        wallSec: Double, writeBytes: Long, stages: Map[Int, (Long, Long, Long)])
+        env: Envelope)
 
-    // one scope per scale: its intermediates release before the next
-    val runs = scales.map { c => Caches.scoped {
-      val evts = Caches.persist(scaledEvents(base, c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      val n = evts.count()
-      tally.snapshotAndReset() // drop corpus-prep stages from the tally
-      val t0 = System.nanoTime()
+    val runs = run.ladder() { rung =>
+      val c = rung.scale
+      val (evts, n) = rung.input(SmokeRun.copies(base, c)(userBlocks))
 
       val sess = Sessionize.byGap(evts, col("user_id"), col("ts"), 1800,
         tieBreak = Seq(col("event_id")))
@@ -305,92 +293,76 @@ object EventsScaleSmoke {
       val scdAsOfEnd = graft.io.Scd.scd2AsOf(h1, 250L)
         .agg(sum("seg")).first().getLong(0)
 
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // bound listener-bus delivery lag
-      val stages = tally.snapshotAndReset()
-      val bytes = stages.values.map(_._2).sum
-      println(f"EVT_SMOKE scale=$c%-3d n=$n sessions=$sessions stats=$statRows " +
-        f"asof=$asofMatches iv=$ivMatches win_rows=$winRows win_n=$winN fold_sum=$foldSum " +
-        f"users_true=$usersTrue users_est=$usersEst " +
-        f"funnel=${funnelSteps.map(_._2).mkString("/")} cohort_cells=${cohort.size} " +
-        f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB")
-      Run(c, n, sessions, statRows, asofMatches, ivMatches, winRows, winN, foldSum,
+      val env = rung.envelope()
+      (Run(c, n, sessions, statRows, asofMatches, ivMatches, winRows, winN, foldSum,
         usersTrue, usersEst, valSketch, overlap, exactOverlap,
         cmsCells, cmsMergedEqual, cmsEst, cmsTrue,
         funnelSteps, cohort, dqReport, dqSig, gsCells, upAgg,
         ewmaMicroSum, dq3,
         asofFwd, asofNear, topkRows, madMap, modeMap,
-        scdRows, scdOpen, scdAsOfMid, scdAsOfEnd,
-        wall, bytes, stages)
-    } }
-
-    val r1 = runs.head
-    var failed = false
-    def check(cond: Boolean, msg: String): Unit = {
-      println(s"EVT_SMOKE_CHECK ${if (cond) "ok  " else "FAIL"} $msg")
-      if (!cond) failed = true
+        scdRows, scdOpen, scdAsOfMid, scdAsOfEnd, env),
+        s"n=$n sessions=$sessions stats=$statRows " +
+          s"asof=$asofMatches iv=$ivMatches win_rows=$winRows win_n=$winN fold_sum=$foldSum " +
+          s"users_true=$usersTrue users_est=$usersEst " +
+          s"funnel=${funnelSteps.map(_._2).mkString("/")} cohort_cells=${cohort.size} " +
+          env.summary)
     }
+
+    def series[T](f: Run => T) = runs.map(r => r.scale -> f(r))
+    exactLinear("event volume", series(_.n))
+    exactLinear("sessions", series(_.sessions))
+    exactLinear("session-stat rows", series(_.statRows))
+    exactLinear("as-of matches", series(_.asofMatches))
+    exactLinear("interval-join matches", series(_.ivMatches))
+    run.constant("window rows", series(_.winRows))
+    exactLinear("window total n", series(_.winN))
+    exactLinear("fold balance checksum", series(_.foldSum))
+    exactLinear("true distinct users", series(_.usersTrue))
+    run.identical("KMV value-sketch", series(_.valSketch),
+      (v: Seq[Long]) => s"duplication invariance, ${v.length} mins")
+    // w14: per-user trailing EWMA replicates per copy
+    exactLinear("w14 EWMA micro checksum", series(_.ewmaMicroSum))
+    // asof02/asof03 newcomers: exactly linear like the backward form
+    exactLinear("as-of FORWARD matches", series(_.asofFwd))
+    exactLinear("as-of NEAREST matches", series(_.asofNear))
+    exactLinear("o05 grouped top-k rows", series(_.topkRows))
+    // a28/a29: per-type robust statistics are DISTRIBUTION facts —
+    // identical under replication
+    run.identical("a28 per-type median/MAD", series(_.madMap),
+      (m: Map[String, (Long, Long)]) => s"${m.size} types")
+    run.identical("a29 per-type mode", series(_.modeMap))
+    val r1 = runs.head
     runs.tail.foreach { r =>
-      // cross-product form (x·s1 == x1·s): exact for ANY scale list —
-      // an integer multiplier (scale/s1) floors on non-divisible lists
-      // like '2,3' and would assert against the wrong expected values
-      def exactLinear(x1: Long, x: Long) =
-        x * r1.scale == x1 * r.scale
-      check(exactLinear(r1.n, r.n),
-        s"event volume exactly linear at ${r.scale}x (${r1.n}->${r.n})")
-      check(exactLinear(r1.sessions, r.sessions),
-        s"sessions exactly linear at ${r.scale}x (${r1.sessions}->${r.sessions})")
-      check(exactLinear(r1.statRows, r.statRows),
-        s"session-stat rows exactly linear at ${r.scale}x (${r1.statRows}->${r.statRows})")
-      check(exactLinear(r1.asofMatches, r.asofMatches),
-        s"as-of matches exactly linear at ${r.scale}x (${r1.asofMatches}->${r.asofMatches})")
-      check(exactLinear(r1.ivMatches, r.ivMatches),
-        s"interval-join matches exactly linear at ${r.scale}x (${r1.ivMatches}->${r.ivMatches})")
-      check(r.winRows == r1.winRows,
-        s"window rows constant at ${r.scale}x (${r1.winRows}->${r.winRows})")
-      check(exactLinear(r1.winN, r.winN),
-        s"window total n exactly linear at ${r.scale}x (${r1.winN}->${r.winN})")
-      check(exactLinear(r1.foldSum, r.foldSum),
-        s"fold balance checksum exactly linear at ${r.scale}x (${r1.foldSum}->${r.foldSum})")
-      check(exactLinear(r1.usersTrue, r.usersTrue),
-        s"true distinct users exactly linear at ${r.scale}x (${r1.usersTrue}->${r.usersTrue})")
-      check(r.valSketch == r1.valSketch,
-        s"KMV value-sketch identical at ${r.scale}x (duplication invariance, " +
-          s"${r.valSketch.length} mins)")
+      def exact(x1: Long, x: Long) = SmokeGates.linear(r1.scale, x1, r.scale, x)
       // ses07/ses08: per-step completions and per-cohort-cell users
       // replicate exactly (user-partitioned folds)
       check(r.funnelSteps.map(_._1) == r1.funnelSteps.map(_._1) &&
-          r.funnelSteps.zip(r1.funnelSteps).forall { case ((_, x), (_, x1)) =>
-            exactLinear(x1, x) },
+          r.funnelSteps.zip(r1.funnelSteps).forall { case ((_, x), (_, x1)) => exact(x1, x) },
         s"funnel step completions exactly linear at ${r.scale}x " +
           s"(${r1.funnelSteps.map(_._2).mkString("/")}->" +
           s"${r.funnelSteps.map(_._2).mkString("/")})")
       check(r.cohort.keySet == r1.cohort.keySet &&
-          r.cohort.forall { case (k, v) => exactLinear(r1.cohort(k), v) },
+          r.cohort.forall { case (k, v) => exact(r1.cohort(k), v) },
         s"cohort retention cells constant, per-cell users exactly linear at ${r.scale}x " +
           s"(${r1.cohort.size} cells)")
       // dq01/dq02: violation counts and routing histogram linear
       check(r.dqReport.keySet == r1.dqReport.keySet &&
           r.dqReport.forall { case (k, (v, t)) =>
-            exactLinear(r1.dqReport(k)._1, v) && exactLinear(r1.dqReport(k)._2, t) },
+            exact(r1.dqReport(k)._1, v) && exact(r1.dqReport(k)._2, t) },
         s"dq report violations/totals exactly linear at ${r.scale}x")
       check(r.dqSig.keySet == r1.dqSig.keySet &&
-          r.dqSig.forall { case (k, v) => exactLinear(r1.dqSig(k), v) },
+          r.dqSig.forall { case (k, v) => exact(r1.dqSig(k), v) },
         s"dq enforce routing histogram exactly linear at ${r.scale}x " +
           s"(${r1.dqSig.size} signatures)")
       // a26/a27/e05 Expand shapes: constant cell grid, linear counts
       check(r.gsCells.keySet == r1.gsCells.keySet &&
-          r.gsCells.forall { case (k, v) => exactLinear(r1.gsCells(k), v) },
+          r.gsCells.forall { case (k, v) => exact(r1.gsCells(k), v) },
         s"grouping-sets cell grid constant (${r1.gsCells.size} cells), " +
           s"per-cell counts exactly linear at ${r.scale}x")
       check(r.upAgg.keySet == r1.upAgg.keySet &&
           r.upAgg.forall { case (k, (n2, tot)) =>
-            exactLinear(r1.upAgg(k)._1, n2) && exactLinear(r1.upAgg(k)._2, tot) },
+            exact(r1.upAgg(k)._1, n2) && exact(r1.upAgg(k)._2, tot) },
         s"unpivot measure aggregates exactly linear at ${r.scale}x")
-      // w14: per-user trailing EWMA replicates per copy → exact linear
-      check(exactLinear(r1.ewmaMicroSum, r.ewmaMicroSum),
-        s"w14 EWMA micro checksum exactly linear at ${r.scale}x " +
-          s"(${r1.ewmaMicroSum}->${r.ewmaMicroSum})")
       // dq03: bin counts exactly linear; PSI terms move only by the
       // Laplace pseudo-count's shrinking share — single-digit micros
       check(r.dq3.map(b => (b._1, b._2 * r1.scale, b._3 * r1.scale)) ==
@@ -404,27 +376,12 @@ object EventsScaleSmoke {
           math.abs(t - t1) <= math.max(5L, math.round(0.15 * math.abs(t1))) },
         s"dq03 PSI micro terms stable within max(5, 15%) at ${r.scale}x " +
           s"(${r1.dq3.map(_._4).mkString(",")} -> ${r.dq3.map(_._4).mkString(",")})")
-      // asof02/asof03 newcomers: exactly linear like the backward form
-      check(exactLinear(r1.asofFwd, r.asofFwd),
-        s"as-of FORWARD matches exactly linear at ${r.scale}x (${r1.asofFwd}->${r.asofFwd})")
-      check(exactLinear(r1.asofNear, r.asofNear),
-        s"as-of NEAREST matches exactly linear at ${r.scale}x (${r1.asofNear}->${r.asofNear})")
-      // o05: bounded grouped top-k rows exactly linear
-      check(exactLinear(r1.topkRows, r.topkRows),
-        s"o05 grouped top-k rows exactly linear at ${r.scale}x (${r1.topkRows}->${r.topkRows})")
-      // a28/a29: per-type robust statistics are DISTRIBUTION facts —
-      // identical under replication
-      check(r.madMap == r1.madMap,
-        s"a28 per-type median/MAD identical at ${r.scale}x (${r1.madMap.size} types)")
-      check(r.modeMap == r1.modeMap,
-        s"a29 per-type mode identical at ${r.scale}x (${r1.modeMap})")
       // s19 SCD2: history rows, open rows, and both as-of segment sums
       // exactly linear (the update pattern is copy-invariant mod 10)
-      check(exactLinear(r1.scdRows, r.scdRows) && exactLinear(r1.scdOpen, r.scdOpen),
+      check(exact(r1.scdRows, r.scdRows) && exact(r1.scdOpen, r.scdOpen),
         s"s19 SCD2 history/open rows exactly linear at ${r.scale}x " +
           s"(${r1.scdRows}/${r1.scdOpen}->${r.scdRows}/${r.scdOpen})")
-      check(exactLinear(r1.scdAsOfMid, r.scdAsOfMid) &&
-          exactLinear(r1.scdAsOfEnd, r.scdAsOfEnd),
+      check(exact(r1.scdAsOfMid, r.scdAsOfMid) && exact(r1.scdAsOfEnd, r.scdAsOfEnd),
         s"s19 SCD2 as-of segment sums exactly linear at ${r.scale}x " +
           s"(${r1.scdAsOfMid}/${r1.scdAsOfEnd}->${r.scdAsOfMid}/${r.scdAsOfEnd})")
     }
@@ -462,14 +419,10 @@ object EventsScaleSmoke {
             s"(est=$e true=$t band=$band)")
       }
     }
-    // shared shuffle/skew gates ([[SmokeGates]]) — every consecutive
-    // pair gated; the 16 MiB small-total exemption covers the
-    // broadcast→shuffled plan transition at the smallest pair
-    SmokeGates.gateShuffleLinear(runs.map(r => (r.scale, r.writeBytes)), check,
-      exemptBytes = 16L << 20)
-    runs.foreach(r => SmokeGates.gateSkew(r.scale, r.stages, check))
-    println(s"EVT_SMOKE_RESULT ${if (failed) "FAIL" else "PASS"}")
-    spark.stop()
-    if (failed) sys.exit(1)
+    // every consecutive pair gated; the 16 MiB small-total exemption
+    // covers the broadcast→shuffled plan transition at the smallest pair
+    run.shuffleLinear(runs.map(r => (r.scale, r.env.writeBytes)), exemptBytes = 16L << 20)
+    runs.foreach(r => run.skew(r.scale, r.env.stages))
+    run.finish()
   }
 }

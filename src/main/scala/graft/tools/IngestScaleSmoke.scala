@@ -46,18 +46,16 @@ import org.apache.spark.sql.functions._
  *    split pair is exactly c× copy 0 and n_docs constant;
  *  - shuffle-write bytes grow within 1.5× of linear between
  *    consecutive scales, and no heavy stage has a task >8× the
- *    stage mean (the [[LlmScaleSmoke]] gates).
+ *    stage mean (the shared [[SmokeGates]]).
  */
 object IngestScaleSmoke {
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = graft.GraftSession.local("graft-ingest-scale-smoke")
-    val tally = new LlmScaleSmoke.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val run = new SmokeRun("INGEST", args)
+    import run.{check, spark}
+    import SmokeRun.copies
 
-    val base = Tables.documents(spark, sfDir).select("doc_id", "text", "n_chars")
+    val base = Tables.documents(spark, run.sfDir).select("doc_id", "text", "n_chars")
     // score ONCE on the base text, then replicate the scored rows —
     // copies share the exact score multiset, so distinct-score counts
     // and the selection cutoff are scale-invariant by construction
@@ -70,49 +68,14 @@ object IngestScaleSmoke {
     val budget0 = (tokSum0 * 2) / 5 // 40% of copy-0 tokens: a boundary exists
     val distinct0 = scoredBase.select("quality").distinct().count()
 
-    def scaledScored(c: Int): DataFrame =
-      (0 until c).map { k =>
-        if (k == 0) scoredBase
-        else scoredBase.withColumn("doc_id", col("doc_id") + lit(k * 10000000L))
-      }.reduce(_.unionByName(_))
-
-    final case class Run(scale: Int, newRows: Long, nearKept: Long, selRows: Long,
-        rankRows: Long, leak: Map[(String, String), (Long, Long)],
-        wallSec: Double, writeBytes: Long,
-        stages: Map[Int, (Long, Long, Long)],
+    final case class Run(scale: Int, newRows: Long, nearKept: Long,
+        leak: Map[(String, String), (Long, Long)], env: Envelope,
         ssKept: Long, gateBytes: Long)
 
-    // input-bytes tally for the steady-state gate probe: the r14 fix's
-    // contract is that a FIXED batch's gate reads candidate-bounded
-    // bytes, not history-sized bytes — observable only in task input
-    // metrics
-    final class InputTally extends org.apache.spark.scheduler.SparkListener {
-      private val bytes = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null && te.taskInfo != null && te.taskInfo.successful)
-          bytes.addAndGet(te.taskMetrics.inputMetrics.bytesRead): Unit
-      def snapshotAndReset(): Long = bytes.getAndSet(0L)
-    }
-    val inputTally = new InputTally
-    spark.sparkContext.addSparkListener(inputTally)
-
-    var failed = false
-    def check(cond: Boolean, msg: String): Unit = {
-      println(s"INGEST_SMOKE_CHECK ${if (cond) "ok  " else "FAIL"} $msg")
-      if (!cond) failed = true
-    }
-
-    // one scope per scale: its intermediates release before the next
-    val runs = scales.map { c => Caches.scoped {
-      val docs = Caches.persist(LlmScaleSmoke.scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      docs.count()
-      val scored = Caches.persist(scaledScored(c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      scored.count()
-      tally.snapshotAndReset() // drop corpus-prep stages from the tally
-      val t0 = System.nanoTime()
+    val runs = run.ladder() { rung =>
+      val c = rung.scale
+      val (docs, _) = rung.input(copies(base, c)(LlmScaleSmoke.corpusCopy))
+      val (scored, _) = rung.input(copies(scoredBase, c)(LlmScaleSmoke.idBlock))
 
       // ---- t27: Bloom-prefiltered incremental dedup -----------------
       val history = docs.filter(col("doc_id") % 10 < 6)
@@ -208,7 +171,7 @@ object IngestScaleSmoke {
           s"while the corpus grows to ${nDocs0 * c} rows")
 
       // ---- t33: cross-split leakage audit ---------------------------
-      // Copies carry copy-DISJOINT texts (the scaledCorpus word
+      // Copies carry copy-DISJOINT texts (the corpus-copy word
       // prefix) but the SAME id set — split assignment is a pure
       // function of the id, so the split structure is held FIXED
       // while content volume grows c×. Every copy then replicates
@@ -218,11 +181,7 @@ object IngestScaleSmoke {
       // pair is c× copy 0 and n_docs (distinct lower-side ids, the
       // same id set in every copy) is CONSTANT. The one fingerprint
       // shuffle scales with rows; output stays split-pair-bounded.
-      val leakBase = (0 until c).map { k =>
-        if (k == 0) base
-        else base.withColumn("text",
-          array_join(transform(split(col("text"), " "), t => concat(lit(s"c$k"), t)), " "))
-      }.reduce(_.unionByName(_))
+      val leakBase = copies(base, c)(LlmScaleSmoke.prefixTokens)
       val planted = leakBase.filter(col("doc_id") % 10 === 0)
         .withColumn("doc_id", col("doc_id") + lit(5000000L))
       val leak = Sampling.crossSplitLeakage(
@@ -274,10 +233,7 @@ object IngestScaleSmoke {
       }
       delTree(zTmp.toFile)
 
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1000) // bound listener-bus delivery lag
-      val stages = tally.snapshotAndReset()
-      val bytes = stages.values.map(_._2).sum
+      val env = rung.envelope()
 
       // ---- t65: the PERSISTED dedup index must equal the in-memory
       // gate at every scale. OUTSIDE the linear-band tally: the store
@@ -285,15 +241,13 @@ object IngestScaleSmoke {
       // it — a deliberate one-time materialization cost (the whole
       // point is that STEADY-STATE ingestion then never re-shingles),
       // not part of the per-batch shuffle envelope.
-      val idxPath = s"/tmp/graft_ingest_smoke_dedupidx_$c"
-      org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(idxPath), true)
+      val idxPath = run.freshDir(s"/tmp/graft_ingest_smoke_dedupidx_$c")
       graft.operators.DedupIndex.write(idxPath, nearHist, "doc_id", "text", 3, 12, 4)
       val storeKept = graft.operators.DedupIndex
         .gate(spark, idxPath, nearBatch, "doc_id", "text", 3, 12, 4, 0.5).count()
       check(storeKept == nearKept,
         s"scale=$c t65 persisted-index gate == in-memory ($storeKept vs $nearKept)")
-      tally.snapshotAndReset() // keep the index I/O out of the envelope
+      rung.exclude() // keep the index I/O out of the envelope
 
       // ---- t65 STEADY-STATE: a FIXED batch (copy 0) probes the
       // c×-grown index. The r13 finding was a per-batch full-history
@@ -304,12 +258,9 @@ object IngestScaleSmoke {
       // the bands-probe rows (4/doc, the size class an LSH index keeps
       // resident) still grow with history.
       val fixedBatch = base.filter(col("doc_id") % 10 >= 4)
-      Thread.sleep(500)
-      inputTally.snapshotAndReset()
       val ssKept = graft.operators.DedupIndex
         .gate(spark, idxPath, fixedBatch, "doc_id", "text", 3, 12, 4, 0.5).count()
-      Thread.sleep(1000) // bound listener-bus delivery lag
-      val gateBytes = inputTally.snapshotAndReset()
+      val gateBytes = run.tally.snapshotAndReset().values.map(_.inputBytes).sum
 
       // ---- t77: the CHAR-SHINGLED store lifecycle (write → gate →
       // upsert → compact → re-gate) at every scale — the CJK ingest
@@ -332,9 +283,7 @@ object IngestScaleSmoke {
           Seq((k * 100L + 2, pre(k) + cjk), (k * 100L + 3, pre(k) + cjk + "了"),
             (k * 100L + 4, pre(k) + other))
         }.toDF("doc_id", "text")
-        val cp = s"/tmp/graft_ingest_smoke_chardedupidx_$c"
-        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(cp), true)
+        val cp = run.freshDir(s"/tmp/graft_ingest_smoke_chardedupidx_$c")
         graft.operators.DedupIndex.write(cp, cHist, "doc_id", "text", 3, 12, 4,
           charShingles = true)
         val surv = graft.operators.DedupIndex
@@ -354,7 +303,7 @@ object IngestScaleSmoke {
           s"scale=$c t77 re-gate after upsert+compact drops every batch row " +
             s"(survivors self-match; got $regate)")
       }
-      tally.snapshotAndReset() // keep the char-store I/O out of the envelope
+      rung.exclude() // keep the char-store I/O out of the envelope
 
       // ---- t79: the PERSISTED per-suite synopsis store lifecycle
       // (addSuite × c → re-add → compact → attribute) PLUS the
@@ -376,9 +325,7 @@ object IngestScaleSmoke {
           Seq((k * 10L + 1, s"alpha$k beta$k gamma$k with extra trailing words"),
             (k * 10L + 2, s"clean$k totally unrelated words right here now"))
         }.toDF("doc_id", "text")
-        val sp = s"/tmp/graft_ingest_smoke_suitestore_$c"
-        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(sp), true)
+        val sp = run.freshDir(s"/tmp/graft_ingest_smoke_suitestore_$c")
         def add(path: String, k: Int, df: DataFrame): Unit =
           graft.operators.SuiteSynopsisStore.addSuite(path, f"s$k%03d",
             df, "text", n = 3, estimatedGrams = 1L << 10, numBits = 1L << 17)
@@ -407,9 +354,7 @@ object IngestScaleSmoke {
         locally {
           import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
           implicit val sqlCtx = spark.sqlContext
-          val sp2 = s"/tmp/graft_ingest_smoke_suitestore_stream_$c"
-          org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(sp2), true)
+          val sp2 = run.freshDir(s"/tmp/graft_ingest_smoke_suitestore_stream_$c")
           val input = MemoryStream[(Int, String)]
           val q = input.toDF().toDF("k", "text").writeStream
             .foreachBatch {
@@ -433,7 +378,7 @@ object IngestScaleSmoke {
               s"to the batch-built store (${att2.length} rows)")
         }
       }
-      tally.snapshotAndReset() // keep the suite-store I/O out of the envelope
+      rung.exclude() // keep the suite-store I/O out of the envelope
 
       // ---- g01/EdgeStore lifecycle (r16): write + daily upsert +
       // compact at every scale over c DISJOINT graph copies. Gates:
@@ -445,23 +390,16 @@ object IngestScaleSmoke {
       // shuffle envelope like the t65 store I/O.
       locally {
         val gN = 3000L
-        def copyNodes(k: Int) = spark.range(gN)
-          .select((col("id") + k * 10000000L).as("id"))
-        def copyEdges(k: Int) = {
-          val off = k * 10000000L
-          Seq((7L, 1L), (3L, 2L), (11L, 5L)).map { case (m, b) =>
-            spark.range(gN).select(
-              (col("id") + off).as("src"),
-              (pmod(col("id") * m + b, lit(gN)) + off).as("dst"))
-          }.reduce(_.unionByName(_)).filter(col("src") =!= col("dst"))
-        }
-        val gNodes = (0 until c).map(copyNodes).reduce(_.unionByName(_))
-        val gEdges = (0 until c).map(copyEdges).reduce(_.unionByName(_))
+        val copyNodes = spark.range(gN).select(col("id"))
+        val copyEdges = Seq((7L, 1L), (3L, 2L), (11L, 5L)).map { case (m, b) =>
+          spark.range(gN).select(col("id").as("src"), pmod(col("id") * m + b, lit(gN)).as("dst"))
+        }.reduce(_.unionByName(_)).filter(col("src") =!= col("dst"))
+        val gNodes = copies(copyNodes, c)(SmokeRun.idOffsets("id" -> 10000000L))
+        val gEdges = copies(copyEdges, c)(
+          SmokeRun.idOffsets("src" -> 10000000L, "dst" -> 10000000L))
         val day1 = gEdges.filter(pmod(col("src") + col("dst"), lit(2)) === 0)
         val day2 = gEdges.filter(pmod(col("src") + col("dst"), lit(2)) === 1)
-        val gp = s"/tmp/graft_ingest_smoke_edges_$c"
-        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(gp), true)
+        val gp = run.freshDir(s"/tmp/graft_ingest_smoke_edges_$c")
         graft.io.EdgeStore.write(gp, gNodes, "id", day1, "src", "dst")
         graft.io.EdgeStore.upsert(gp, gNodes, "id", day2, "src", "dst")
         val pre = graft.operators.PageRank
@@ -496,9 +434,7 @@ object IngestScaleSmoke {
           import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
           import spark.implicits._
           implicit val sqlCtx = spark.sqlContext
-          val sp = s"/tmp/graft_ingest_smoke_edges_stream_$c"
-          org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(sp), true)
+          val sp = run.freshDir(s"/tmp/graft_ingest_smoke_edges_stream_$c")
           graft.io.EdgeStore.write(sp, gNodes, "id", day1, "src", "dst")
           val input = MemoryStream[(Long, Long)]
           val q = input.toDF().toDF("src", "dst").writeStream
@@ -525,21 +461,17 @@ object IngestScaleSmoke {
               s"batch-built store (${streamed.length} rows)")
         }
       }
-      Thread.sleep(500)
-      tally.snapshotAndReset() // keep the graph-store I/O out of the envelope
-      inputTally.snapshotAndReset(): Unit
-      println(f"INGEST_SMOKE scale=$c%-3d new=$newRows near_kept=$nearKept " +
-        f"sel=$selRows ranked=$rankRows leak_pairs=${leak.values.map(_._1).sum} " +
-        f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB " +
-        f"ss_gate_read=${gateBytes / 1048576.0}%.1f MiB")
-      Run(c, newRows, nearKept, selRows, rankRows, leak, wall, bytes, stages,
-        ssKept, gateBytes)
-    } }
+      rung.exclude() // keep the graph-store I/O out of the envelope
+      (Run(c, newRows, nearKept, leak, env, ssKept, gateBytes),
+        s"new=$newRows near_kept=$nearKept " +
+          s"sel=$selRows ranked=$rankRows leak_pairs=${leak.values.map(_._1).sum} " +
+          f"${env.summary} ss_gate_read=${gateBytes / 1048576.0}%.1f MiB")
+    }
 
     val r1 = runs.head
+    run.exactLinear("t27 new rows", runs.map(r => r.scale -> r.newRows))
+    run.constant("t65 steady-state verdicts", runs.map(r => r.scale -> r.ssKept))
     runs.tail.foreach { r =>
-      check(r.newRows * r1.scale == r1.newRows * r.scale,
-        s"t27 new rows EXACTLY linear at ${r.scale}x (${r1.newRows}->${r.newRows})")
       // disjoint copies replicate copy 0's JACCARD structure exactly,
       // but LSH candidacy for BORDERLINE pairs (0.5 ≤ j < 1) depends
       // on the hash draw, which the copy prefix re-rolls per copy —
@@ -551,9 +483,6 @@ object IngestScaleSmoke {
       check(math.abs(r.nearKept - expected) <= tol,
         s"t32 near-dup kept rows linear +/-1% at ${r.scale}x " +
           s"(${r1.nearKept}->${r.nearKept}, expected ~$expected +/-$tol)")
-      check(r.ssKept == r1.ssKept,
-        s"t65 steady-state verdicts identical under ${r.scale}x history " +
-          s"(${r1.ssKept} -> ${r.ssKept})")
       // the bytes bound: history grew scale/1×, but the gate's reads
       // must stay candidate-bounded — only the 4-rows/doc band probe
       // may grow, so total stays well under history growth (3.5× is a
@@ -564,7 +493,7 @@ object IngestScaleSmoke {
           f"roof 3.5x while history is ${r.scale}x)")
       check(r.leak.keySet == r1.leak.keySet &&
           r.leak.forall { case (k, (pairs, docs)) =>
-            pairs == r1.leak(k)._1 * r.scale / r1.scale && docs == r1.leak(k)._2 },
+            SmokeGates.linear(r1.scale, r1.leak(k)._1, r.scale, pairs) && docs == r1.leak(k)._2 },
         s"t33 leak audit EXACT at ${r.scale}x: n_pairs ${r.scale}/${r1.scale}x " +
           s"copy 0 per split pair, n_docs constant (${r1.leak} -> ${r.leak})")
     }
@@ -573,11 +502,8 @@ object IngestScaleSmoke {
     // flips broadcast joins to shuffled ones as inputs outgrow the
     // threshold (measured: 2.4 → 25.7 MiB while 3x→10x is 1.10× of
     // linear).
-    SmokeGates.gateShuffleLinear(runs.map(r => (r.scale, r.writeBytes)), check,
-      exemptBytes = 32L << 20)
-    runs.foreach(r => SmokeGates.gateSkew(r.scale, r.stages, check))
-    println(s"INGEST_SMOKE_RESULT ${if (failed) "FAIL" else "PASS"}")
-    spark.stop()
-    if (failed) sys.exit(1)
+    run.shuffleLinear(runs.map(r => (r.scale, r.env.writeBytes)), exemptBytes = 32L << 20)
+    runs.foreach(r => run.skew(r.scale, r.env.stages))
+    run.finish()
   }
 }

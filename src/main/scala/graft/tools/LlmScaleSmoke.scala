@@ -3,7 +3,6 @@ package graft.tools
 import graft.operators.{BpeTrain, Decontaminate, Dedup, Packing, PageRank, SubstringDedup, TextSearch, Winnowing}
 import graft.sources.Tables
 import graft.util.Caches
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -44,46 +43,26 @@ import org.apache.spark.sql.functions._
  */
 object LlmScaleSmoke {
 
-  /** (stage → tasks, write bytes, max task write) tally. */
-  final class ShuffleTally extends SparkListener {
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long)]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      // successful attempts only: a retried/speculative attempt would
-      // double-count its shuffle bytes into the linearity assertion
-      if (m != null && te.taskInfo != null && te.taskInfo.successful) {
-        val w = m.shuffleWriteMetrics.bytesWritten
-        perStage.merge(te.stageId, (1L, w, w), (a, b) =>
-          (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)))
-      }
-    }
-    def snapshotAndReset(): Map[Int, (Long, Long, Long)] = {
-      val out = scala.jdk.CollectionConverters.MapHasAsScala(perStage).asScala.toMap
-      perStage.clear()
-      out
-    }
-  }
+  /** Copy `k`'s text: every token prefixed by the copy tag, so copies
+    * occupy DISJOINT shingle spaces with the same per-copy shingle and
+    * posting structure. */
+  def prefixTokens(docs: DataFrame, k: Int): DataFrame =
+    docs.withColumn("text",
+      array_join(transform(split(col("text"), " "), t => concat(lit(s"c$k"), t)), " "))
 
-  /** `c` disjoint copies: ids offset, every token prefixed by the copy
-    * tag (copy 0 untouched) — same per-copy shingle/posting structure,
-    * c× the volume. */
-  def scaledCorpus(docs: DataFrame, c: Int): DataFrame =
-    (0 until c).map { k =>
-      if (k == 0) docs
-      else docs
-        .withColumn("doc_id", col("doc_id") + lit(k * 10000000L))
-        .withColumn("text",
-          array_join(transform(split(col("text"), " "), t => concat(lit(s"c$k"), t)), " "))
-    }.reduce(_.unionByName(_))
+  /** Ids offset into block `k` (the verbatim-replication copy). */
+  val idBlock: (DataFrame, Int) => DataFrame = SmokeRun.idOffsets("doc_id" -> 10000000L)
+
+  /** The disjoint corpus copy: ids offset and tokens prefixed. */
+  def corpusCopy(docs: DataFrame, k: Int): DataFrame = prefixTokens(idBlock(docs, k), k)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = graft.GraftSession.local("graft-llm-scale-smoke")
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val run = new SmokeRun("LLM", args)
+    import run.{check, spark}
+    import SmokeRun.copies
+    def verbatim(df: DataFrame, c: Int) = copies(df, c)((d, _) => d)
 
-    val base = Tables.documents(spark, sfDir).select("doc_id", "text", "n_chars")
+    val base = Tables.documents(spark, run.sfDir).select("doc_id", "text", "n_chars")
     val queries = base.filter(col("doc_id") < 10)
       .select(col("doc_id").as("query_id"), col("text").as("qtext"))
 
@@ -97,17 +76,11 @@ object LlmScaleSmoke {
         t54Counts: Map[String, Long],
         winDocs: Long, winFps: Long, novDocs: Long, novNovel: Long,
         prCopy0: Seq[(Long, Double)], prSum: Double,
-        dedupRecallMicro: Long, dedupPrecMicro: Long,
-        wallSec: Double, writeBytes: Long,
-        stages: Map[Int, (Long, Long, Long)])
+        dedupRecallMicro: Long, dedupPrecMicro: Long, env: Envelope)
 
-    // one scope per scale: its intermediates release before the next
-    val runs = scales.map { c => Caches.scoped {
-      val docs = Caches.persist(scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      docs.count()
-      tally.snapshotAndReset() // drop corpus-prep stages from the tally
-      val t0 = System.nanoTime()
+    val runs = run.ladder() { rung =>
+      val c = rung.scale
+      val (docs, _) = rung.input(copies(base, c)(corpusCopy))
       val pairs = Caches.persist(Dedup.minhashLshPairs(docs, "doc_id", "text",
         shingleN = 3, numHashes = 12, bands = 4, threshold = 0.5))
       val nPairs = pairs.count()
@@ -131,8 +104,7 @@ object LlmScaleSmoke {
       // frequency exactly c× — any drift means corpus layout leaked
       // into the argmax. Runs the DISTRIBUTED trainer (vocab-sized
       // rounds; corpus size only enters through wordFreq).
-      val bpeCorpus = (0 until c).map(_ => base.select(col("text")))
-        .reduce(_.unionByName(_))
+      val bpeCorpus = verbatim(base.select(col("text")), c)
       val bpeMerges = BpeTrain.trainMergesDistributed(
         BpeTrain.wordFreq(bpeCorpus, "text"), numMerges = 8)
       // DSIR distribution layer on the same verbatim replication: the
@@ -162,11 +134,8 @@ object LlmScaleSmoke {
       // doc count, so gradients (c×) and divisor (c×) cancel and the
       // learned weights must be BIT-IDENTICAL at every scale — any
       // drift means corpus volume leaked into the trainer
-      val qcCorpus = (0 until c).map(k =>
-        Tables.documents(spark, sfDir).select(
-          (col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-          col("text"), col("lang")))
-        .reduce(_.unionByName(_))
+      val qcCorpus = copies(Tables.documents(spark, run.sfDir)
+        .select("doc_id", "text", "lang"), c)(idBlock)
       val qcWeights = graft.operators.QualityModel.trainLogistic(
         graft.operators.QualityModel.features(
           qcCorpus, "doc_id", "text", col("lang") === "en", buckets = 16),
@@ -244,12 +213,9 @@ object LlmScaleSmoke {
         .groupBy("lang").agg(count(lit(1)).as("cnt"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-      val wall = (System.nanoTime() - t0) / 1e9
       // pairs stays cached through the dedup2 block below (the t59
       // eval joins against it)
-      Thread.sleep(1000) // bound listener-bus delivery lag
-      val stages = tally.snapshotAndReset()
-      val bytes = stages.values.map(_._2).sum
+      val env = rung.envelope()
       // t49 cut + t51 containment, measured OUTSIDE the linear-band
       // tally: their logical exchange (corpus tokens by id; df-capped
       // candidate pairs by shingle) replicates EXACTLY c×, but the
@@ -285,27 +251,20 @@ object LlmScaleSmoke {
       val (dedupRecallMicro, dedupPrecMicro) = (
         math.round(evalRow.getLong(2).toDouble / evalRow.getLong(0) * 1e6),
         math.round(evalRow.getLong(2).toDouble / evalRow.getLong(1) * 1e6))
-      Thread.sleep(1000)
-      val dedup2Bytes = tally.snapshotAndReset().values.map(_._2).sum
-      println(f"LLM_SMOKE scale=$c%-3d pairs=$nPairs comps=$comps kept=$kept " +
-        f"bm25=$bm25 spans=$spans packs=$nPacks pack_docs=$packDocs " +
-        f"pack_tokens=$packTokens bpe_merges=${bpeMerges.length} " +
-        f"wall=$wall%.1fs shuffle_write=${bytes / 1048576.0}%.1f MiB")
-      Run(c, nPairs, comps, kept, bm25, spans, cutRows, cutToks, contPairs,
+      val dedup2Bytes = rung.envelope().writeBytes
+      (Run(c, nPairs, comps, kept, bm25, spans, cutRows, cutToks, contPairs,
         dedup2Bytes, nPacks, packDocs, packTokens,
         bpeMerges, dsirCounts, pctl, apctl, topTok, qcWeights,
         roundtripBad, hostsDistinct, rdomainsDistinct, t54Counts,
         winDocs, winFps, novDocs, novNovel, prCopy0, prSum,
-        dedupRecallMicro, dedupPrecMicro,
-        wall, bytes, stages)
-    } }
+        dedupRecallMicro, dedupPrecMicro, env),
+        s"pairs=$nPairs comps=$comps kept=$kept " +
+          s"bm25=$bm25 spans=$spans packs=$nPacks pack_docs=$packDocs " +
+          s"pack_tokens=$packTokens bpe_merges=${bpeMerges.length} ${env.summary}")
+    }
 
     val r1 = runs.head
-    var failed = false
-    def check(cond: Boolean, msg: String): Unit = {
-      println(s"LLM_SMOKE_CHECK ${if (cond) "ok  " else "FAIL"} $msg")
-      if (!cond) failed = true
-    }
+    def series[T](f: Run => T) = runs.map(r => r.scale -> f(r))
     // absolute invariants hold at the BASE scale too
     check(r1.roundtripBad == 0L,
       s"t53 roundtrip holds at base scale (${r1.roundtripBad} mismatches)")
@@ -315,19 +274,26 @@ object LlmScaleSmoke {
       check(math.abs(r.prSum - 1.0) < 1e-9,
         f"g01 pagerank mass conserved at ${r.scale}x (sum=${r.prSum}%.12f)")
     }
+    run.constant("bm25 top-k output", series(_.bm25))
+    run.nearLinear("substring-span rows", series(_.spans), tol = 0.02)
+    run.exactLinear("span-cut rows (every doc kept once)", series(_.cutRows))
+    run.nearLinear("cut tokens", series(_.cutToks), tol = 0.02)
+    run.nearLinear("containment pairs", series(_.contPairs), tol = 0.02)
+    run.identical("exact percentiles", series(_.pctl))
+    run.identical("binned approx percentiles", series(_.apctl))
+    run.identical("quality-classifier weights (bit for bit)", series(_.qcWeights),
+      (w: Seq[Long]) => s"${w.take(4)}...")
+    // g01: disjoint-copy ranks IDENTICAL at 6 dp
+    run.identical("g01 copy-0 scaled pageranks", series(_.prCopy0),
+      (p: Seq[(Long, Double)]) => s"${p.take(2)} ...")
     runs.tail.foreach { r =>
-      val ratio = r.scale.toDouble / r1.scale
-      def nearLinear(x0: Long, x: Long) = math.abs(x - x0 * ratio) <= x0 * ratio * 0.02
-      check(nearLinear(r1.pairs, r.pairs) && nearLinear(r1.comps, r.comps) &&
-        nearLinear(r1.kept, r.kept),
+      def near(f: Run => Long) = SmokeGates.nearLinear(r1.scale, f(r1), r.scale, f(r), 0.02)
+      def exact(f: Run => Long) = SmokeGates.linear(r1.scale, f(r1), r.scale, f(r))
+      def exactly(x1: Long, x: Long) = SmokeGates.linear(r1.scale, x1, r.scale, x)
+      check(near(_.pairs) && near(_.comps) && near(_.kept),
         s"dedup outputs scale linearly +/-2% at ${r.scale}x " +
           s"(pairs ${r1.pairs}->${r.pairs}, comps ${r1.comps}->${r.comps}, " +
           s"kept ${r1.kept}->${r.kept})")
-      check(r.bm25 == r1.bm25,
-        s"bm25 top-k output constant at ${r.scale}x (${r1.bm25}->${r.bm25})")
-      check(nearLinear(r1.spans, r.spans),
-        s"substring-span rows scale linearly +/-2% at ${r.scale}x " +
-          s"(${r1.spans}->${r.spans})")
       // t59 dedup-quality metrics: the corpus value is the per-copy
       // average (banding hashes differ per prefixed copy), so the
       // gate is a tight stability band — a broken banding or
@@ -339,67 +305,43 @@ object LlmScaleSmoke {
         s"t59 dedup recall/precision stable within 0.5% at ${r.scale}x " +
           s"(recall ${r1.dedupRecallMicro}->${r.dedupRecallMicro} micro, " +
           s"prec ${r1.dedupPrecMicro}->${r.dedupPrecMicro} micro)")
-      check(r.cutRows == math.round(r1.cutRows * ratio),
-        s"span-cut keeps every doc exactly once at ${r.scale}x " +
-          s"(${r1.cutRows}->${r.cutRows})")
-      check(nearLinear(r1.cutToks, r.cutToks),
-        s"cut tokens scale linearly +/-2% at ${r.scale}x (${r1.cutToks}->${r.cutToks})")
-      check(nearLinear(r1.contPairs, r.contPairs),
-        s"containment pairs scale linearly +/-2% at ${r.scale}x " +
-          s"(${r1.contPairs}->${r.contPairs})")
       val perCopy = r.dedup2Bytes.toDouble / r.scale
       val perCopy1 = r1.dedup2Bytes.toDouble / r1.scale
       check(perCopy <= perCopy1 * 6.0,
         f"cut+containment per-copy shuffle bounded at ${r.scale}x " +
           f"(${perCopy / 1048576.0}%.1f MiB/copy vs ${perCopy1 / 1048576.0}%.1f at 1x; " +
           "reduction decay allowed, quadratic growth is not)")
-      check(r.packDocs == math.round(r1.packDocs * ratio) &&
-          r.packTokens == math.round(r1.packTokens * ratio),
+      check(exact(_.packDocs) && exact(_.packTokens),
         s"packing fold sums EXACTLY linear at ${r.scale}x " +
           s"(docs ${r1.packDocs}->${r.packDocs}, tokens ${r1.packTokens}->${r.packTokens})")
       check(r.bpeMerges.map(m => (m._1, m._2)) == r1.bpeMerges.map(m => (m._1, m._2)) &&
-          r.bpeMerges.map(_._3) == r1.bpeMerges.map(m => math.round(m._3 * ratio)),
+          r.bpeMerges.map(_._3).zip(r1.bpeMerges.map(_._3)).forall { case (x, x1) => exactly(x1, x) },
         s"bpe merges IDENTICAL with freqs EXACTLY ${r.scale}x at ${r.scale}x " +
           s"(${r1.bpeMerges.take(3)} -> ${r.bpeMerges.take(3)} ...)")
-      check(r.dsirCounts.toSeq == r1.dsirCounts.map(x =>
-          math.round(x * ratio)).toSeq,
+      check(r.dsirCounts.length == r1.dsirCounts.length &&
+          r.dsirCounts.zip(r1.dsirCounts).forall { case (x, x1) => exactly(x1, x) },
         s"dsir bucket counts EXACTLY ${r.scale}x at ${r.scale}x " +
           s"(sum ${r1.dsirCounts.sum} -> ${r.dsirCounts.sum})")
-      check(r.pctl == r1.pctl,
-        s"exact percentiles IDENTICAL at ${r.scale}x (${r1.pctl} -> ${r.pctl})")
-      check(r.apctl == r1.apctl,
-        s"binned approx percentiles IDENTICAL at ${r.scale}x " +
-          s"(${r1.apctl} -> ${r.apctl})")
       check(r.topTok.map(t => (t._1, t._2)) == r1.topTok.map(t => (t._1, t._2)) &&
-          r.topTok.map(_._3) == r1.topTok.map(t => math.round(t._3 * ratio)),
+          r.topTok.map(_._3).zip(r1.topTok.map(_._3)).forall { case (x, x1) => exactly(x1, x) },
         s"top-10 tokens IDENTICAL with counts EXACTLY ${r.scale}x at ${r.scale}x " +
           s"(${r1.topTok.take(3)} -> ${r.topTok.take(3)} ...)")
-      check(r.qcWeights == r1.qcWeights,
-        s"quality-classifier weights BIT-IDENTICAL at ${r.scale}x " +
-          s"(${r1.qcWeights.take(4)}... -> ${r.qcWeights.take(4)}...)")
       // t53: roundtrip is an ABSOLUTE invariant at every scale
       check(r.roundtripBad == 0L,
         s"t53 BPE decode(encode(text)) == normalized text for every doc at ${r.scale}x " +
           s"(${r.roundtripBad} mismatches)")
       // t52: hosts grow c× while the registrable-domain key collapses
       // the megasite to ONE group at any scale
-      check(r.hostsDistinct * r1.scale == r1.hostsDistinct * r.scale &&
-          r.rdomainsDistinct == 1L,
+      check(exact(_.hostsDistinct) && r.rdomainsDistinct == 1L,
         s"t52 distinct hosts exactly linear (${r1.hostsDistinct}->${r.hostsDistinct}) " +
           s"while registrable domains stay 1 (${r.rdomainsDistinct}) at ${r.scale}x")
       // t55/t56: verbatim-replication totals are EXACTLY linear
-      check(r.winDocs == math.round(r1.winDocs * ratio) &&
-          r.winFps == math.round(r1.winFps * ratio),
+      check(exact(_.winDocs) && exact(_.winFps),
         s"t55 winnowing docs/fingerprints EXACTLY ${r.scale}x at ${r.scale}x " +
           s"(docs ${r1.winDocs}->${r.winDocs}, fps ${r1.winFps}->${r.winFps})")
-      check(r.novDocs == math.round(r1.novDocs * ratio) &&
-          r.novNovel == math.round(r1.novNovel * ratio),
+      check(exact(_.novDocs) && exact(_.novNovel),
         s"t56 novelty docs/novel-grams EXACTLY ${r.scale}x at ${r.scale}x " +
           s"(docs ${r1.novDocs}->${r.novDocs}, novel ${r1.novNovel}->${r.novNovel})")
-      // g01: disjoint-copy ranks IDENTICAL at 6 dp, mass conserved
-      check(r.prCopy0 == r1.prCopy0,
-        s"g01 copy-0 scaled pageranks IDENTICAL at ${r.scale}x " +
-          s"(${r1.prCopy0.take(2)} -> ${r.prCopy0.take(2)} ...)")
       // t54: per-lang survivors track c× within 5% (rates are
       // scale-invariant; fresh ids redraw the md5 gate at those rates)
       check(r.t54Counts.keySet == r1.t54Counts.keySet &&
@@ -423,13 +365,11 @@ object LlmScaleSmoke {
         s"scale=${r.scale} pack fill efficiency: ${r.packs} packs within " +
           s"[$ideal, ${(ideal * 1.25).toLong + 64}] of the budget lower bound")
     }
-    // every consecutive pair is GATED (was: only the two largest
-    // scales, smallest-pair INFO-only) — shared formula, see
-    // [[SmokeGates.gateShuffleLinear]]. Measured r8: 4.17× bytes for
+    // every consecutive pair is GATED. Measured r8: 4.17× bytes for
     // the 3× scale-up — within the bound once the fixed-overhead
     // allowance is counted.
-    SmokeGates.gateShuffleLinear(runs.map(r => (r.scale, r.writeBytes)), check)
-    runs.foreach(r => SmokeGates.gateSkew(r.scale, r.stages, check))
+    run.shuffleLinear(runs.map(r => (r.scale, r.env.writeBytes)))
+    runs.foreach(r => run.skew(r.scale, r.env.stages))
 
     // ---- r13/r14 newcomers: LM scoring (t60/t66), tokenizer encodes
     // (t61/t64), unigram-LM training (t63), composed cleaning (llm01
@@ -439,10 +379,15 @@ object LlmScaleSmoke {
     println("LLM_SMOKE note: t62 eval not separately scaled (synthetic plant; t59 gate covers the dedup-quality surface)")
     val bpeVocab = spark.sparkContext.broadcast(graft.functions.Bpe.defaultVocab)
     val wpVocab = spark.sparkContext.broadcast(graft.functions.WordPiece.defaultVocab)
-    val lmRuns = scales.map { c => Caches.scoped {
-      val docs = Caches.persist(scaledCorpus(base, c)
-        .repartition(spark.sparkContext.defaultParallelism))
-      docs.count()
+    final case class LmRun(scale: Int, t60: (Long, Long), t66: (Long, Long),
+        t68: (Long, Long), bpeToks: Long, wpToks: Long, uni: Seq[graft.operators.UnigramLm.Piece],
+        survivors: Long, gopherPass: Long, linePass: Long, t70counts: Seq[Long],
+        t71: Map[String, Map[String, Long]], t71approx: Map[String, Map[String, Long]],
+        gblPass: Map[String, Long], bloomBytes: Long,
+        t74: Map[String, (Long, Long)], suiteBloomBytes: Long)
+    val lmRuns = run.ladder("LLM_SMOKE_LM") { rung =>
+      val c = rung.scale
+      val (docs, _) = rung.input(copies(base, c)(corpusCopy))
       // t60/t66: copy offsets are multiples of 10, so the %10 ref
       // split replicates per copy; token COUNTS are copy-invariant
       // (the prefix rides inside each token), so output rows and gram
@@ -468,13 +413,9 @@ object LlmScaleSmoke {
       // one-pass KN must not leak grams across languages (a cross-lang
       // join key would show up as nonlinear per-language rows), and
       // terciles stay ntile-balanced within ±1 of n/3 per language
-      val langDocs = graft.sources.Tables.documents(spark, sfDir)
+      val langDocs = graft.sources.Tables.documents(spark, run.sfDir)
         .select("doc_id", "text", "lang")
-      def verbatim71(df: org.apache.spark.sql.DataFrame) =
-        (0 until c).map { k =>
-          if (k == 0) df
-          else df.withColumn("doc_id", col("doc_id") + lit(k * 10000000L))
-        }.reduce(_.unionByName(_))
+      def verbatim71(df: DataFrame) = copies(df, c)(idBlock)
       val t71m = graft.operators.TextModel.ccnetPerLanguageBuckets(
           verbatim71(langDocs.filter(col("doc_id") % 10 === 0)), "lang", "text",
           verbatim71(langDocs.filter(col("doc_id") % 10 =!= 0)), "doc_id", "text")
@@ -518,24 +459,23 @@ object LlmScaleSmoke {
         .collect().map(r => r.getLong(1)).toSeq
       // t61/t64: map-only encodes over VERBATIM c× replication —
       // token totals exactly c× the base's
-      val verbatim = (0 until c).map(_ => base.select(col("text")))
-        .reduce(_.unionByName(_))
-      val bpeToks = verbatim
+      val verbatimText = verbatim(base.select(col("text")), c)
+      val bpeToks = verbatimText
         .select(size(graft.functions.Bpe.bpeTokens(col("text"), bpeVocab)).cast("long").as("n"))
         .agg(sum("n").cast("long")).first().getLong(0)
-      val wpToks = verbatim
+      val wpToks = verbatimText
         .select(size(graft.functions.WordPiece.wordPieceTokens(col("text"), wpVocab))
           .cast("long").as("n"))
         .agg(sum("n").cast("long")).first().getLong(0)
       // t63: unigram-LM training is count-ratio-driven — verbatim c×
       // replication scales every seed count by c, probabilities
       // normalize it away, so the learned table must be IDENTICAL
-      val uni = graft.operators.UnigramLm.train(verbatim.toDF("text"), "text",
+      val uni = graft.operators.UnigramLm.train(verbatimText.toDF("text"), "text",
         maxPieceLen = 4, seedSize = 120, vocabSize = 60, emIters = 2, maxWordLen = 8)
       // llm01 family: the composed cleaner over copy-local inputs
       // (bench replicated with the same copy prefixes, so
       // decontamination is copy-local too)
-      val bench = scaledCorpus(base.filter(col("doc_id") % 97 === 3), c)
+      val bench = copies(base.filter(col("doc_id") % 97 === 3), c)(corpusCopy)
       val survivors = graft.operators.CleanCorpus.clean(
         docs, "doc_id", "text", bench, "text", minQuality = 0.3).count()
       // llm03 (fixed-broadcast Bloom decontamination): the synopsis
@@ -627,37 +567,46 @@ object LlmScaleSmoke {
       // false corpus-wide — the t67 oracle injects them), so the
       // linear gate counts the docs passing the four CONTENT rules
       val gopherPass = graft.operators.QualityRules
-        .gopher(verbatim.withColumn("doc_id", lit(0L)), "doc_id", "text")
+        .gopher(verbatimText.withColumn("doc_id", lit(0L)), "doc_id", "text")
         .filter(col("pass_words") && col("pass_mean_len") &&
           col("pass_symbols") && col("pass_alpha")).count()
       // t69: line rules are map-only too — derive newline structure
       // per row (split at the corpus word 'value'), count full passes
-      val lined = verbatim.withColumn("doc_id", lit(0L))
+      val lined = verbatimText.withColumn("doc_id", lit(0L))
         .withColumn("t0", regexp_replace(col("text"), " value ", "\n"))
       val linePass = graft.operators.QualityRules
         .lineRules(lined, "doc_id", "t0", minTerminalFrac = 0.0)
         .filter(col("pass")).count()
-      println(f"LLM_SMOKE_LM scale=$c%-3d t60=(${t60r.getLong(0)},${t60r.getLong(1)}) " +
-        f"t66=(${t66r.getLong(0)},${t66r.getLong(1)}) " +
-        f"t68=(${t68r.getLong(0)},${t68r.getLong(1)}) bpe_toks=$bpeToks wp_toks=$wpToks " +
-        f"uni_vocab=${uni.size} clean_survivors=$survivors gopher_pass=$gopherPass " +
-        f"line_pass=$linePass")
-      (c, t60r.getLong(0), t60r.getLong(1), t66r.getLong(0), t66r.getLong(1),
-        bpeToks, wpToks, uni, survivors, gopherPass,
-        t68r.getLong(0), t68r.getLong(1), linePass, t70counts, t71m, t71a,
-        gblPass, bloomBytes, t74agg, suiteBloomBytes)
-    } }
+      (LmRun(c, (t60r.getLong(0), t60r.getLong(1)), (t66r.getLong(0), t66r.getLong(1)),
+        (t68r.getLong(0), t68r.getLong(1)), bpeToks, wpToks, uni, survivors, gopherPass,
+        linePass, t70counts, t71m, t71a, gblPass, bloomBytes, t74agg, suiteBloomBytes),
+        s"t60=(${t60r.getLong(0)},${t60r.getLong(1)}) " +
+          s"t66=(${t66r.getLong(0)},${t66r.getLong(1)}) " +
+          s"t68=(${t68r.getLong(0)},${t68r.getLong(1)}) bpe_toks=$bpeToks wp_toks=$wpToks " +
+          s"uni_vocab=${uni.size} clean_survivors=$survivors gopher_pass=$gopherPass " +
+          s"line_pass=$linePass")
+    }
+    def lm[T](f: LmRun => T) = lmRuns.map(r => r.scale -> f(r))
+    run.exactLinear("t67 gopher 4-rule pass count on verbatim copies", lm(_.gopherPass))
+    run.exactLinear("t69 line-rule pass count on verbatim copies", lm(_.linePass))
+    run.exactLinear("t61 byte-BPE token total", lm(_.bpeToks))
+    run.exactLinear("t64 WordPiece token total", lm(_.wpToks))
+    // the synopses stay numBits/8 bytes while the benchmark's gram
+    // volume grows with the scale
+    run.constant("llm03 Bloom synopsis bytes", lm(_.bloomBytes))
+    run.constant("llm04 TOTAL per-suite synopsis bytes", lm(_.suiteBloomBytes))
     val l1 = lmRuns.head
-    lmRuns.tail.foreach { case (c, r60, g60, r66, g66, bt, wt, uni, _, gp, r68, g68, lp, t70c, t71c, t71ac, gbl, bfLen, t74c, sbb) =>
+    lmRuns.tail.foreach { r =>
+      val c = r.scale
+      def exact(x1: Long, x: Long) = SmokeGates.linear(l1.scale, x1, c, x)
       // t71: same language set at every scale; per-language scored
       // rows exactly linear; tercile split ntile-balanced (±1 of n/3)
-      val base71 = l1._15
-      check(t71c.keySet == base71.keySet,
-        s"scale=$c t71 routed language set stable (${base71.keySet}->${t71c.keySet})")
-      t71c.foreach { case (lang, buckets) =>
+      check(r.t71.keySet == l1.t71.keySet,
+        s"scale=$c t71 routed language set stable (${l1.t71.keySet}->${r.t71.keySet})")
+      r.t71.foreach { case (lang, buckets) =>
         val rows = buckets.values.sum
-        val baseRows = base71.get(lang).map(_.values.sum).getOrElse(0L)
-        check(rows * l1._1 == baseRows * c,
+        val baseRows = l1.t71.get(lang).map(_.values.sum).getOrElse(0L)
+        check(exact(baseRows, rows),
           s"scale=$c t71 lang=$lang scored rows EXACTLY linear ($baseRows->$rows)")
         check(buckets.values.forall(b => math.abs(b - rows / 3.0) <= 1.0),
           s"scale=$c t71 lang=$lang terciles within +/-1 of n/3 ($buckets)")
@@ -666,7 +615,7 @@ object LlmScaleSmoke {
         // has c verbatim-copy ties — value labeling keeps a tied run
         // in ONE bucket, ntile splits it, so each of the two
         // boundaries may move up to c docs)
-        val ab = t71ac.getOrElse(lang, Map.empty[String, Long])
+        val ab = r.t71approx.getOrElse(lang, Map.empty[String, Long])
         check(ab.values.sum == rows &&
             Seq("head", "middle", "tail").forall(bk =>
               math.abs(ab.getOrElse(bk, 0L) - buckets.getOrElse(bk, 0L)) <= 2L * c),
@@ -677,43 +626,25 @@ object LlmScaleSmoke {
       // is ntile's ±1 balance around n/3 (exact c× bucket counts only
       // hold when the doc count divides by 3 — a fixture-size change
       // must not fail this gate)
-      val t70tot = t70c.sum
-      check(t70tot == l1._14.sum * c &&
-          t70c.forall(b => math.abs(b - t70tot / 3.0) <= 1.0),
+      val t70tot = r.t70counts.sum
+      check(t70tot == l1.t70counts.sum * c &&
+          r.t70counts.forall(b => math.abs(b - t70tot / 3.0) <= 1.0),
         s"scale=$c t70 scored total EXACTLY linear, buckets within +/-1 of n/3 " +
-          s"(${l1._14}->$t70c)")
-      check(gp * l1._1 == l1._10 * c,
-        s"scale=$c t67 gopher 4-rule pass count EXACTLY linear on verbatim copies " +
-          s"(${l1._10}->$gp)")
-      check(gbl.keySet == l1._17.keySet &&
-          gbl.forall { case (lang, n) => n * l1._1 == l1._17(lang) * c },
+          s"(${l1.t70counts}->${r.t70counts})")
+      check(r.gblPass.keySet == l1.gblPass.keySet &&
+          r.gblPass.forall { case (lang, n) => exact(l1.gblPass(lang), n) },
         s"scale=$c llm02 per-language rule gate pass counts EXACTLY linear " +
-          s"per language on verbatim copies (${l1._17}->$gbl)")
-      check(bfLen == l1._18,
-        s"scale=$c llm03 Bloom synopsis size FIXED as the benchmark grows " +
-          s"${c}x (${l1._18} -> $bfLen bytes)")
-      check(sbb == l1._20,
-        s"scale=$c llm04 TOTAL per-suite synopsis footprint FIXED as each " +
-          s"suite's gram volume grows ${c}x (${l1._20} -> $sbb bytes)")
-      check(t74c.keySet == l1._19.keySet &&
-          t74c.forall { case (suite, (rows, hits)) =>
-            rows * l1._1 == l1._19(suite)._1 * c &&
-              hits * l1._1 == l1._19(suite)._2 * c },
+          s"per language on verbatim copies (${l1.gblPass}->${r.gblPass})")
+      check(r.t74.keySet == l1.t74.keySet &&
+          r.t74.forall { case (suite, (rows, hits)) =>
+            exact(l1.t74(suite)._1, rows) && exact(l1.t74(suite)._2, hits) },
         s"scale=$c t74 per-suite attribution rows and hit totals EXACTLY " +
-          s"linear per suite (${l1._19}->$t74c)")
-      check(lp * l1._1 == l1._13 * c,
-        s"scale=$c t69 line-rule pass count EXACTLY linear on verbatim copies " +
-          s"(${l1._13}->$lp)")
-      check(r60 * l1._1 == l1._2 * c && g60 * l1._1 == l1._3 * c,
-        s"scale=$c t60 scored rows/grams EXACTLY linear ((${l1._2},${l1._3})->($r60,$g60))")
-      check(r66 * l1._1 == l1._4 * c && g66 * l1._1 == l1._5 * c,
-        s"scale=$c t66 scored rows/grams EXACTLY linear ((${l1._4},${l1._5})->($r66,$g66))")
-      check(r68 * l1._1 == l1._11 * c && g68 * l1._1 == l1._12 * c,
-        s"scale=$c t68 scored rows/grams EXACTLY linear ((${l1._11},${l1._12})->($r68,$g68))")
-      check(bt * l1._1 == l1._6 * c,
-        s"scale=$c t61 byte-BPE token total EXACTLY linear (${l1._6}->$bt)")
-      check(wt * l1._1 == l1._7 * c,
-        s"scale=$c t64 WordPiece token total EXACTLY linear (${l1._7}->$wt)")
+          s"linear per suite (${l1.t74}->${r.t74})")
+      Seq(("t60", l1.t60, r.t60), ("t66", l1.t66, r.t66), ("t68", l1.t68, r.t68)).foreach {
+        case (q, (rows1, grams1), (rows, grams)) =>
+          check(exact(rows1, rows) && exact(grams1, grams),
+            s"scale=$c $q scored rows/grams EXACTLY linear (($rows1,$grams1)->($rows,$grams))")
+      }
       // the learned INVENTORY is exactly replication-invariant (every
       // EM ratio and pruning rank is count-ratio-driven); counts are
       // raw corpus counts (×c) EXCEPT unused singles, which the
@@ -721,9 +652,9 @@ object LlmScaleSmoke {
       // normalization total by O(#singles/N), so scores carry a
       // principled micro-nat wobble (measured 3–4 micro at 3×/10×;
       // gated at ≤20)
-      val base8 = l1._8.map(p => p.piece -> p).toMap
-      check(uni.map(_.piece) == l1._8.map(_.piece) &&
-          uni.forall { p =>
+      val base8 = l1.uni.map(p => p.piece -> p).toMap
+      check(r.uni.map(_.piece) == l1.uni.map(_.piece) &&
+          r.uni.forall { p =>
             val b = base8(p.piece)
             val floored = b.count == 1L && p.count == 1L
             // a floored single's OWN score legitimately shifts by
@@ -733,22 +664,19 @@ object LlmScaleSmoke {
                 math.abs(p.scoreMicro - b.scoreMicro) <= 20L)
           },
         s"scale=$c t63 unigram-LM inventory IDENTICAL, counts ${c}x and scores " +
-          s"within 20 micro-nats (floored singles exempt; ${l1._8.size} pieces)")
+          s"within 20 micro-nats (floored singles exempt; ${l1.uni.size} pieces)")
     }
     // llm01 survivors are AFFINE in the copy count (copy 0 keeps the
     // base's quality/stopword profile; prefixed copies share a second
     // profile), so three scales pin the exact line: s(c) = s1 + (c−1)·m
     if (lmRuns.length >= 3) {
-      val s = lmRuns.map(r => (r._1, r._9))
+      val s = lmRuns.map(r => (r.scale, r.survivors))
       val m2 = (s(1)._2 - s(0)._2) / (s(1)._1 - s(0)._1)
       val predicted = s(0)._2 + (s(2)._1 - s(0)._1) * m2
       check(s(2)._2 == predicted,
         s"llm01-family survivors EXACTLY affine in copies " +
           s"(${s.map(_._2).mkString(",")}; predicted ${predicted} at ${s(2)._1}x)")
     }
-
-    println(s"LLM_SMOKE_RESULT ${if (failed) "FAIL" else "PASS"}")
-    spark.stop()
-    if (failed) sys.exit(1)
+    run.finish()
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import graft.multimodal.{MediaRow, Multimodal, Subtitles}
 import graft.queries.QMedia
 import graft.util.Caches
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,47 +28,60 @@ import org.apache.spark.sql.functions._
  */
 object MediaScaleSmoke {
 
+  /** Copy `k` of a media table: media ids offset by k·1000. */
+  def mediaCopy(ds: Dataset[MediaRow], k: Int): Dataset[MediaRow] = {
+    import ds.sparkSession.implicits._
+    ds.map(m => m.copy(media_id = m.media_id + k * 1000L))
+  }
+
+  /** Copy `k` of a dHash code table: media ids offset by k·1000 and the
+    * top 16 bits replaced by a 4×-repeated-nibble copy tag — distinct
+    * tags differ in ≥ 4 bits, so at maxHamming=3 no code of one copy
+    * can pair with a code of another. Copy 0 is tagged too (tag 0), so
+    * the copies come from `imageTag(df, 0)`. */
+  def imageTag(df: DataFrame, k: Int): DataFrame = df
+    .withColumn("media_id", col("media_id") + k * 1000L)
+    .withColumn("dhash", col("dhash").bitwiseAND(lit(0xffffffffffffL))
+      .bitwiseOR(lit(k.toLong * 0x1111L << 48)))
+
+  /** The same tag over the 24-bit audio sub-fingerprints, in bits
+    * 24..39: outside the chunked region, so identical base codes still
+    * COLLIDE as candidates, yet never pair across copies. */
+  def audioTag(df: DataFrame, k: Int): DataFrame = df
+    .withColumn("media_id", col("media_id") + k * 1000L)
+    .withColumn("ahash", col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)))
+
   def main(args: Array[String]): Unit = {
-    val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = graft.GraftSession.local("graft-media-scale-smoke")
+    val run = new SmokeRun("MEDIA", args)
+    import run.{check, scales, spark}
     import spark.implicits._
-    val tally = new LlmScaleSmoke.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    import SmokeRun.copies
 
-    def scaled(ds: Dataset[MediaRow], c: Int): Dataset[MediaRow] =
-      (0 until c).map { k =>
-        if (k == 0) ds
-        else ds.map(m => m.copy(media_id = m.media_id + k * 1000L))
-      }.reduce(_.unionByName(_))
-
-    var failed = false
-    def check(cond: Boolean, msg: String): Unit = {
-      println(s"MEDIA_SMOKE_CHECK ${if (cond) "ok  " else "FAIL"} $msg")
-      if (!cond) failed = true
+    def equiJoin(df: Dataset[_], what: String, c: Int): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      check(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"scale=$c $what")
     }
 
     final case class Run(scale: Int, frames: Long, audioRows: Long,
         audioSum: Long, cueRows: Long, writeBytes: Long)
 
-    val runs = scales.map { c =>
-      tally.snapshotAndReset()
-      val frames = Multimodal.sampleFrames(scaled(QMedia.y4mMedia(spark), c), everyN = 1).count()
-      val audio = Multimodal.pcmAudioStats(scaled(QMedia.aiffMedia(spark), c))
+    val runs = run.ladder() { rung =>
+      val c = rung.scale
+      val frames = Multimodal.sampleFrames(copies(QMedia.y4mMedia(spark), c)(mediaCopy), everyN = 1).count()
+      val audio = Multimodal.pcmAudioStats(copies(QMedia.aiffMedia(spark), c)(mediaCopy))
         .agg(count(lit(1)).cast("long"), sum("sum_abs").cast("long")).first()
-      val cues = Subtitles.cues(scaled(QMedia.srtMedia(spark), c)).count()
-      Thread.sleep(1000) // listener-bus lag
-      val bytes = tally.snapshotAndReset().values.map(_._2).sum
-      println(f"MEDIA_SMOKE scale=$c%-3d frames=$frames audio=${audio.getLong(0)} " +
-        f"audio_sum=${audio.getLong(1)} cues=$cues shuffle_write=${bytes / 1024.0}%.1f KiB")
-      Run(c, frames, audio.getLong(0), audio.getLong(1), cues, bytes)
+      val cues = Subtitles.cues(copies(QMedia.srtMedia(spark), c)(mediaCopy)).count()
+      val bytes = rung.envelope().writeBytes
+      (Run(c, frames, audio.getLong(0), audio.getLong(1), cues, bytes),
+        f"frames=$frames audio=${audio.getLong(0)} " +
+          f"audio_sum=${audio.getLong(1)} cues=$cues shuffle_write=${bytes / 1024.0}%.1f KiB")
     }
 
     val r1 = runs.head
     runs.tail.foreach { r =>
-      check(r.frames * r1.scale == r1.frames * r.scale &&
-          r.audioRows * r1.scale == r1.audioRows * r.scale &&
-          r.audioSum * r1.scale == r1.audioSum * r.scale &&
-          r.cueRows * r1.scale == r1.cueRows * r.scale,
+      def exact(f: Run => Long) = SmokeGates.linear(r1.scale, f(r1), r.scale, f(r))
+      check(exact(_.frames) && exact(_.audioRows) && exact(_.audioSum) && exact(_.cueRows),
         s"scale=${r.scale} frame/audio/cue outputs EXACTLY linear " +
           s"(frames ${r1.frames}->${r.frames}, audio ${r1.audioRows}->${r.audioRows}, " +
           s"sum ${r1.audioSum}->${r.audioSum}, cues ${r1.cueRows}->${r.cueRows})")
@@ -85,180 +98,96 @@ object MediaScaleSmoke {
     // (a range-only join would be a per-media cross product — the
     // classic interval-join scale killer), and its output rows must
     // be EXACTLY linear under disjoint media_id replication.
-    val alignRuns = scales.map { c =>
-      val frames = Multimodal.sampleFrames(scaled(QMedia.y4mMedia(spark), c), everyN = 1)
+    run.exactLinear("m11 aligned rows", scales.map { c =>
+      val frames = Multimodal.sampleFrames(copies(QMedia.y4mMedia(spark), c)(mediaCopy), everyN = 1)
         .map(f => (f.media_id, f.frame_idx, f.frame_idx * 100L))
         .toDF("media_id", "frame_idx", "frame_ms")
-      val cues = Subtitles.cues(scaled(QMedia.alignSrtMedia(spark), c)).toDF()
+      val cues = Subtitles.cues(copies(QMedia.alignSrtMedia(spark), c)(mediaCopy)).toDF()
         .select(col("media_id").as("c_media_id"), col("cue_idx"),
           col("start_ms"), col("end_ms"))
       val joined = frames.join(cues,
         col("media_id") === col("c_media_id") &&
           col("frame_ms") >= col("start_ms") && col("frame_ms") < col("end_ms"))
-      val plan = joined.queryExecution.executedPlan.toString
-      check(!plan.contains("CartesianProduct") &&
-          !plan.contains("BroadcastNestedLoopJoin"),
-        s"scale=$c m11 interval join plans as equi-join on media_id " +
-          "(no cartesian / nested-loop)")
+      equiJoin(joined, "m11 interval join plans as equi-join on media_id " +
+        "(no cartesian / nested-loop)", c)
       (c, joined.count())
-    }
-    val a1 = alignRuns.head
-    alignRuns.tail.foreach { case (c, rows) =>
-      check(rows * a1._1 == a1._2 * c,
-        s"scale=$c m11 aligned rows EXACTLY linear (${a1._2}->$rows)")
+    })
+
+    /** Pair counts over c tagged copies: the candidate join stays a
+      * banded equi-join and no pair crosses copies. */
+    def tagged(what: String, pairsOf: Int => DataFrame): Seq[(Int, Long)] = scales.map { c =>
+      val pairs = pairsOf(c)
+      equiJoin(pairs, s"$what pair join stays a banded equi-join", c)
+      val cross = pairs
+        .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
+      check(cross == 0L, s"scale=$c $what cross-copy pairs exactly zero (got $cross)")
+      (c, pairs.count())
     }
 
     // m12 perceptual near-dup: the REAL decoded dHash codes replicated
-    // into copy spaces whose top 16 bits carry a 4×-repeated-nibble
-    // tag — distinct tags differ in ≥ 4 bits, so at maxHamming=3 a
-    // cross-copy pair is IMPOSSIBLE by construction: pair count must
-    // be exactly linear, cross-copy pairs exactly zero, and the
-    // candidate join must stay a banded equi-join (no cartesian).
+    // into the tagged copy spaces — pair count must be exactly linear,
+    // cross-copy pairs exactly zero, and the candidate join must stay a
+    // banded equi-join (no cartesian).
     Caches.scoped {
-      val baseCodes = Caches.persist(graft.multimodal.ImageHash.frameHashes(
+      val baseCodes = Caches.persist(imageTag(graft.multimodal.ImageHash.frameHashes(
           Multimodal.sampleFrames(QMedia.imageDupMedia(spark), everyN = 1))
-        .select(col("media_id"), col("dhash")))
-      val m12Runs = scales.map { c =>
-        val codes = (0 until c).map { k =>
-          baseCodes.select(
-            (col("media_id") + k * 1000L).as("media_id"),
-            col("dhash").bitwiseAND(lit(0xffffffffffffL))
-              .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
-        }.reduce(_.unionByName(_))
-        val pairs = graft.multimodal.ImageHash
-          .nearDupPairs(codes, "media_id", "dhash", maxHamming = 3)
-        val plan = pairs.queryExecution.executedPlan.toString
-        check(!plan.contains("CartesianProduct") &&
-            !plan.contains("BroadcastNestedLoopJoin"),
-          s"scale=$c m12 pair join stays a banded equi-join")
-        val cross = pairs
-          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-        check(cross == 0L, s"scale=$c m12 cross-copy pairs exactly zero (got $cross)")
-        (c, pairs.count())
-      }
-      val p1 = m12Runs.head
-      m12Runs.tail.foreach { case (c, rows) =>
-        check(rows * p1._1 == p1._2 * c,
-          s"scale=$c m12 pair count EXACTLY linear (${p1._2}->$rows)")
-      }
+        .select(col("media_id"), col("dhash")), 0))
+      run.exactLinear("m12 pair count", tagged("m12", c =>
+        graft.multimodal.ImageHash.nearDupPairs(copies(baseCodes, c)(imageTag),
+          "media_id", "dhash", maxHamming = 3)))
     }
 
-    // m14 audio near-dup: the same copy-tag scheme over the 24-bit
-    // sub-fingerprint codes — tags ride bits 24..39 (outside the
-    // chunked region, so identical base codes still COLLIDE as
-    // candidates) with pairwise Hamming ≥ 4, making cross-copy
-    // SEGMENT matches impossible at maxHamming=3: (pair, delta) row
-    // counts exactly linear, zero cross, and the candidate join must
-    // stay a banded equi-join.
+    // m14 audio near-dup: the same scheme over the 24-bit
+    // sub-fingerprint codes ([[audioTag]]): (pair, delta) row counts
+    // exactly linear, zero cross, banded equi-join.
     Caches.scoped {
       val audioBase = Caches.persist(graft.multimodal.AudioHash
-        .fingerprints(QMedia.wavDupMedia(spark)))
-      val m14Runs = scales.map { c =>
-        val codes = (0 until c).map { k =>
-          audioBase.select(
-            (col("media_id") + k * 1000L).as("media_id"), col("off"),
-            col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
-        }.reduce(_.unionByName(_))
-        val pairs = graft.multimodal.AudioHash
-          .nearDupPairs(codes, maxHamming = 3, minRun = 5)
-        val plan = pairs.queryExecution.executedPlan.toString
-        check(!plan.contains("CartesianProduct") &&
-            !plan.contains("BroadcastNestedLoopJoin"),
-          s"scale=$c m14 segment pair join stays a banded equi-join")
-        val cross = pairs
-          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-        check(cross == 0L, s"scale=$c m14 cross-copy audio pairs exactly zero (got $cross)")
-        (c, pairs.count())
-      }
-      val a14 = m14Runs.head
-      m14Runs.tail.foreach { case (c, rows) =>
-        check(rows * a14._1 == a14._2 * c,
-          s"scale=$c m14 audio (pair, delta) count EXACTLY linear (${a14._2}->$rows)")
-      }
+        .fingerprints(QMedia.wavDupMedia(spark)).select("media_id", "off", "ahash"))
+      run.exactLinear("m14 audio (pair, delta) count", tagged("m14 audio", c =>
+        graft.multimodal.AudioHash.nearDupPairs(copies(audioBase, c)(audioTag),
+          maxHamming = 3, minRun = 5)))
     }
 
     // m15 ingest gate: history AND batch replicated into the same
     // tagged copy spaces — per-copy gating replicates exactly
     // (survivors exactly linear) and a cross-copy history code can
     // never gate a batch row (tags ≥ 4 bits apart)
-    def tagged(df: org.apache.spark.sql.DataFrame, c: Int) =
-      (0 until c).map { k =>
-        df.select((col("media_id") + k * 1000L).as("media_id"),
-          col("dhash").bitwiseAND(lit(0xffffffffffffL))
-            .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
-      }.reduce(_.unionByName(_))
+    def codes(media: Dataset[MediaRow]) = Caches.persist(imageTag(graft.multimodal.ImageHash
+      .frameHashes(Multimodal.sampleFrames(media, everyN = 1)).select("media_id", "dhash"), 0))
     Caches.scoped {
-      val histBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
-          Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
-        .select("media_id", "dhash"))
-      val batchBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
-          Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
-        .select("media_id", "dhash"))
-      val m15Runs = scales.map { c =>
-        val surv = graft.multimodal.ImageHash.incrementalNearDup(
-          tagged(batchBase, c), tagged(histBase, c), maxHamming = 3)
-        (c, surv.count())
-      }
-      val g15 = m15Runs.head
-      m15Runs.tail.foreach { case (c, rows) =>
-        check(rows * g15._1 == g15._2 * c,
-          s"scale=$c m15 ingest survivors EXACTLY linear (${g15._2}->$rows)")
-      }
+      val (histBase, batchBase) = (codes(QMedia.imageMedia(spark)), codes(QMedia.imageIngestMedia(spark)))
+      run.exactLinear("m15 ingest survivors", scales.map { c =>
+        (c, graft.multimodal.ImageHash.incrementalNearDup(
+          copies(batchBase, c)(imageTag), copies(histBase, c)(imageTag), maxHamming = 3).count())
+      })
     }
 
-    // m13 clip near-dup (the r13 newcomer, gated r14): per-frame codes
-    // of the y4m re-encode fixture in the same tagged copy spaces —
-    // within a copy the tag XORs away (frame Hamming identical to copy
-    // 0 → identical clip pairs), across copies every frame pair is ≥ 4
-    // bits apart → matched-fraction 0: clip pairs exactly linear, zero
-    // cross-copy, candidate generation stays a banded equi-join.
+    // m13 clip near-dup: per-frame codes of the y4m re-encode fixture in
+    // the same tagged copy spaces — within a copy the tag XORs away
+    // (frame Hamming identical to copy 0 → identical clip pairs), across
+    // copies every frame pair is ≥ 4 bits apart → matched-fraction 0:
+    // clip pairs exactly linear, zero cross-copy, banded equi-join.
     Caches.scoped {
-      val clipBase = Caches.persist(graft.multimodal.ImageHash.frameHashes(
-          Multimodal.sampleFrames(QMedia.y4mDupMedia(spark), everyN = 1)))
+      val clipBase = Caches.persist(imageTag(graft.multimodal.ImageHash.frameHashes(
+          Multimodal.sampleFrames(QMedia.y4mDupMedia(spark), everyN = 1))
+        .select("media_id", "frame_idx", "dhash"), 0))
       clipBase.count()
-      val m13Runs = scales.map { c =>
-        val codes = (0 until c).map { k =>
-          clipBase.select((col("media_id") + k * 1000L).as("media_id"),
-            col("frame_idx"),
-            col("dhash").bitwiseAND(lit(0xffffffffffffL))
-              .bitwiseOR(lit(k.toLong * 0x1111L << 48)).as("dhash"))
-        }.reduce(_.unionByName(_))
-        val pairs = graft.multimodal.ImageHash
-          .clipNearDupPairs(codes, maxHamming = 3, minFrac = 0.5)
-        val plan = pairs.queryExecution.executedPlan.toString
-        check(!plan.contains("CartesianProduct") &&
-            !plan.contains("BroadcastNestedLoopJoin"),
-          s"scale=$c m13 clip pair join stays a banded equi-join")
-        val cross = pairs
-          .filter(floor(col("id_a") / 1000) =!= floor(col("id_b") / 1000)).count()
-        check(cross == 0L, s"scale=$c m13 cross-copy clip pairs exactly zero (got $cross)")
-        (c, pairs.count())
-      }
-      val g13 = m13Runs.head
-      m13Runs.tail.foreach { case (c, rows) =>
-        check(rows * g13._1 == g13._2 * c,
-          s"scale=$c m13 clip pair count EXACTLY linear (${g13._2}->$rows)")
-      }
+      run.exactLinear("m13 clip pair count", tagged("m13 clip", c =>
+        graft.multimodal.ImageHash.clipNearDupPairs(copies(clipBase, c)(imageTag),
+          maxHamming = 3, minFrac = 0.5)))
     }
 
-    // m16 persisted media index (the r14 newcomer): the STORE gate must
-    // equal the in-memory m15 gate at every scale — write the tagged
-    // history once per scale, probe with the tagged batch.
+    // m16 persisted media index: the STORE gate must equal the in-memory
+    // m15 gate at every scale — write the tagged history once per scale,
+    // probe with the tagged batch.
     Caches.scoped {
-      val histBase16 = Caches.persist(graft.multimodal.ImageHash.frameHashes(
-          Multimodal.sampleFrames(QMedia.imageMedia(spark), everyN = 1))
-        .select("media_id", "dhash"))
-      val batchBase16 = Caches.persist(graft.multimodal.ImageHash.frameHashes(
-          Multimodal.sampleFrames(QMedia.imageIngestMedia(spark), everyN = 1))
-        .select("media_id", "dhash"))
+      val (histBase, batchBase) = (codes(QMedia.imageMedia(spark)), codes(QMedia.imageIngestMedia(spark)))
       scales.foreach { c =>
-        val hist = tagged(histBase16, c)
-        val batch = tagged(batchBase16, c)
+        val hist = copies(histBase, c)(imageTag)
+        val batch = copies(batchBase, c)(imageTag)
         val inMem = graft.multimodal.ImageHash
           .incrementalNearDup(batch, hist, maxHamming = 3).count()
-        val idxPath = s"/tmp/graft_media_smoke_idx_$c"
-        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(idxPath), true)
+        val idxPath = run.freshDir(s"/tmp/graft_media_smoke_idx_$c")
         graft.multimodal.MediaIndex.write(idxPath, hist)
         val surv = graft.multimodal.MediaIndex.gate(spark, idxPath, batch, maxHamming = 3)
         val viaStore = surv.count()
@@ -280,28 +209,19 @@ object MediaScaleSmoke {
     }
 
     // m17 audio sub-fingerprint store: the persisted RUN-CONSISTENT
-    // gate under the same tagged replication — tags ride bits 24..39
-    // (candidates still collide, verification separates copies), so
-    // accepted clips are exactly linear; after upserting the
-    // survivors, re-gating the SAME batch accepts nothing (every
-    // accepted clip self-matches at delta 0 with a full-length run).
+    // gate under the same tagged replication — accepted clips are
+    // exactly linear; after upserting the survivors, re-gating the SAME
+    // batch accepts nothing (every accepted clip self-matches at delta 0
+    // with a full-length run).
     Caches.scoped {
-      val audioHist17 = Caches.persist(graft.multimodal.AudioHash
-        .fingerprints(QMedia.wavHistMedia(spark)))
-      val audioBatch17 = Caches.persist(graft.multimodal.AudioHash
-        .fingerprints(QMedia.wavIngestMedia(spark)))
-      def taggedAudio(df: org.apache.spark.sql.DataFrame, c: Int) =
-        (0 until c).map { k =>
-          df.select((col("media_id") + k * 1000L).as("media_id"), col("off"),
-            col("ahash").bitwiseOR(lit(k.toLong * 0x1111L << 24)).as("ahash"))
-        }.reduce(_.unionByName(_))
-      val m17Runs = scales.map { c =>
-        val p = s"/tmp/graft_media_smoke_audioidx_$c"
-        org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(p), true)
-        graft.multimodal.AudioHash.writeIndex(p, taggedAudio(audioHist17, c))
+      def prints(media: Dataset[MediaRow]) = Caches.persist(graft.multimodal.AudioHash
+        .fingerprints(media).select("media_id", "off", "ahash"))
+      val (audioHist, audioBatch) = (prints(QMedia.wavHistMedia(spark)), prints(QMedia.wavIngestMedia(spark)))
+      run.exactLinear("m17 audio-gate survivors", scales.map { c =>
+        val p = run.freshDir(s"/tmp/graft_media_smoke_audioidx_$c")
+        graft.multimodal.AudioHash.writeIndex(p, copies(audioHist, c)(audioTag))
         val surv = graft.multimodal.AudioHash.gate(
-          spark, p, taggedAudio(audioBatch17, c), maxHamming = 3, minRun = 5)
+          spark, p, copies(audioBatch, c)(audioTag), maxHamming = 3, minRun = 5)
         val accepted = surv.select("media_id").distinct().count()
         graft.multimodal.AudioHash.upsertIndex(p, surv)
         // day-2 idempotence THROUGH a compaction (the m16 discipline):
@@ -311,17 +231,12 @@ object MediaScaleSmoke {
         check(report.filesAfter < report.filesBefore,
           s"scale=$c m17 compact shrinks files (${report.filesBefore}->${report.filesAfter})")
         val regate = graft.multimodal.AudioHash.gate(
-            spark, p, taggedAudio(audioBatch17, c), maxHamming = 3, minRun = 5)
+            spark, p, copies(audioBatch, c)(audioTag), maxHamming = 3, minRun = 5)
           .select("media_id").distinct().count()
         check(regate == 0L,
           s"scale=$c m17 re-gate after upsert+compact accepts nothing (got $regate)")
         (c, accepted)
-      }
-      val g17 = m17Runs.head
-      m17Runs.tail.foreach { case (c, rows) =>
-        check(rows * g17._1 == g17._2 * c,
-          s"scale=$c m17 audio-gate survivors EXACTLY linear (${g17._2}->$rows)")
-      }
+      })
     }
 
     // byte-balanced partitioning: skewed payloads (64 KiB .. 512 KiB)
@@ -341,8 +256,6 @@ object MediaScaleSmoke {
         f"target ${target / 1024.0}%.0f KiB + largest payload ${maxRow / 1024.0}%.0f KiB " +
         f"over ${parts.length} non-empty partitions")
 
-    println(s"MEDIA_SMOKE_RESULT ${if (failed) "FAIL" else "PASS"}")
-    spark.stop()
-    if (failed) sys.exit(1)
+    run.finish()
   }
 }

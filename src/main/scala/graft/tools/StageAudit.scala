@@ -2,8 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.util.Caches
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import scala.collection.mutable.ArrayBuffer
 
 /** Per-stage task-count/duration audit of one registered query —
   * `runMain graft.tools.StageAudit <query> [sfDir]`. Shows where the
@@ -16,20 +14,7 @@ object StageAudit {
     val spark = graft.GraftSession.local("graft-stage-audit")
     try Caches.scoped(SparkEntry.entry(spark).count()) catch { case _: Throwable => () }
 
-    // appended from the listener-bus thread, cleared/read from main —
-    // every access synchronizes on the buffer (the sleeps below only
-    // bound event-delivery lag, they don't make the buffer safe)
-    val stages = ArrayBuffer[(Int, String, Int, Long, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s).getOrElse(-1L)
-        stages.synchronized {
-          stages += ((si.stageId, si.name.takeWhile(_ != '\n').take(60), si.numTasks,
-            wall, si.taskMetrics.executorRunTime))
-        }
-      }
-    })
+    val tally = StageTally(spark)
     // run 1 cold (codegen+JIT), run 2 warm — report run 2's stages
     def timed(): Double = Caches.scoped {
       val t0 = System.nanoTime()
@@ -37,12 +22,11 @@ object StageAudit {
       (System.nanoTime() - t0) / 1e9
     }
     println(f"AUDIT cold ${timed()}%.2f s")
-    Thread.sleep(500)
-    stages.synchronized { stages.clear() }
+    tally.snapshotAndReset()
     println(f"AUDIT total ${timed()}%.2f s")
-    Thread.sleep(500)
-    stages.synchronized { stages.sortBy(-_._4).take(25) }.foreach { case (id, n, tasks, wall, run) =>
-      println(f"AUDIT stage=$id%-4d tasks=$tasks%-3d wall=${wall / 1000.0}%7.2fs cpu=${run / 1000.0}%7.2fs  $n")
+    tally.snapshotAndReset().toSeq.sortBy(-_._2.wallMs).take(25).foreach { case (id, st) =>
+      println(f"AUDIT stage=$id%-4d tasks=${st.tasks}%-3d wall=${st.wallMs / 1000.0}%7.2fs " +
+        f"run=${st.runMs / 1000.0}%7.2fs cpu=${st.cpuNs / 1e9}%7.2fs  ${st.name}")
     }
     spark.stop()
   }

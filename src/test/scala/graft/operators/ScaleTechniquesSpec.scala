@@ -72,14 +72,12 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     val edges = spark.range(n * 200)
       .select((col("id") % n).as("src"), ((col("id") * 7919 + 13) % n).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val tally = new graft.tools.LlmScaleSmoke.ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    val tally = graft.tools.StageTally(spark)
     try {
       def run(iters: Int): Long = {
         tally.snapshotAndReset()
         PageRank.run(nodes, "id", edges, "src", "dst", iterations = iters).count()
-        Thread.sleep(800) // listener-bus lag
-        tally.snapshotAndReset().values.map(_._2).sum
+        tally.snapshotAndReset().values.map(_.shuffleWrite).sum
       }
       val w2 = run(2)
       val w6 = run(6)
@@ -87,12 +85,11 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       // one full edge exchange, measured directly
       tally.snapshotAndReset()
       edges.repartition(col("src")).agg(count(lit(1))).first()
-      Thread.sleep(800)
-      val edgeShuffle = tally.snapshotAndReset().values.map(_._2).sum
+      val edgeShuffle = tally.snapshotAndReset().values.map(_.shuffleWrite).sum
       assert(edgeShuffle > 0, "edge-shuffle measurement must see the exchange")
       assert(perRound < edgeShuffle / 2.0,
         f"per-round shuffle $perRound%.0f B should be well under one edge " +
           f"exchange ($edgeShuffle B) — iterations must not re-shuffle edges")
-    } finally spark.sparkContext.removeSparkListener(tally)
+    } finally tally.close()
   }
 }
