@@ -1,39 +1,81 @@
 package graft.operators
 
 import graft.functions.TextFunctions
-import graft.util.Caches
-import org.apache.spark.sql.DataFrame
+import graft.util.{Caches, Jobs}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
  * Corpus n-gram language-model scoring — the CCNet-style perplexity
  * quality signal (Wenzek et al. 2020 §3.2, public method: documents
  * whose text is improbable under a language model are low-quality or
- * wrong-language). Here the model is a bigram LM with add-k smoothing
- * TRAINED ON THE CORPUS ITSELF (self-perplexity: boilerplate and
- * in-distribution text score low, anomalous text scores high), so the
- * whole computation is engine-portable — no external model file.
+ * wrong-language). Every model trains on a corpus given as a frame
+ * (the scored corpus itself, or a reference snapshot), so the whole
+ * computation is engine-portable — no external model file.
  *
- * Scale shape: bigram and unigram counts are two linear
- * hash-aggregate shuffles over the exploded token stream; scoring
- * joins each document's bigrams against the count tables keyed by the
- * bigram/unigram (linear, vocabulary-bounded build sides are NOT
- * assumed broadcastable) and reduces per document. Per-bigram log
- * probabilities are rounded to integer micro-nats BEFORE the per-doc
- * sum, so the total is exact long arithmetic — independent of float
- * summation order, partitioning, and engine.
+ * Scale shape, shared by every scorer: count tables are linear
+ * hash-aggregate shuffles over the exploded gram stream; scoring joins
+ * each document gram against them on its gram keys (vocabulary-bounded
+ * build sides are NOT assumed broadcastable) and reduces per document.
+ * The scorers share one tokenizer ([[tokenized]]), one gram explode
+ * ([[grams]]) and one per-document reducer ([[perDocument]]): per-gram
+ * −ln P is rounded to integer micro-nats BEFORE the per-doc sum, so
+ * the total is exact long arithmetic, and the mean is rounded half-up
+ * in exact integers — independent of float summation order,
+ * partitioning, and engine. The three Kneser-Ney entry points share
+ * one core ([[knCore]]).
  */
 object TextModel {
 
+  /** The one tokenizer: the canonical text's words as `__toks`,
+    * beside the `keep` columns. */
+  private def tokenized(df: DataFrame, keep: Seq[Column], text: String): DataFrame =
+    df.select(keep :+
+      TextFunctions.tokens(TextFunctions.canonicalText(col(text))).as("__toks"): _*)
+
+  /** One row per n-gram OCCURRENCE of `__toks` (explode preserves
+    * multiplicity — a repeated gram is evidence each time it
+    * appears), beside the `keep` columns; n = 1 explodes the words. */
+  private def grams(toks: DataFrame, keep: Seq[String], n: Int, as: String): DataFrame =
+    toks.select(keep.map(col) :+ explode(
+      if (n == 1) col("__toks") else TextFunctions.shinglesFromTokens(col("__toks"), n)
+    ).as(as): _*)
+
+  // gram-position helpers over space-joined n-grams
+  private def prefix(g: Column, n: Int): Column = substring_index(g, " ", n)
+  private def suffix(g: Column, n: Int): Column = substring_index(g, " ", -n)
+  // words i..j (1-based) of an n-gram: suffix to drop the head, then
+  // prefix to keep the span
+  private def span(g: Column, i: Int, j: Int, n: Int): Column =
+    prefix(suffix(g, n - i + 1), j - i + 1)
+
+  /** The one per-document reducer: each gram's probability `p` becomes
+    * −ln p in rounded integer micro-nats, and each `keys` group gets its
+    * gram count `nName` and `avg_neg_logp`, the mean rounded half-up to
+    * the micro-nat in exact integers, ((2·Σm + n) div 2n) / 10⁶. No
+    * double is ever rounded at a tie, so the oracle's integer replay
+    * agrees on every row. */
+  private[operators] def perDocument(
+      scored: DataFrame, keys: Seq[Column], nName: String, p: Column): DataFrame =
+    scored.withColumn("__nlp_micro", round(-log(p) * 1e6).cast("long"))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as(nName),
+        (expr("(2 * sum(__nlp_micro) + count(1)) div (2 * count(1))") / 1e6)
+          .as("avg_neg_logp"))
+
   /**
    * Per-document mean negative log-probability (natural log,
-   * micro-nat precision) under the corpus bigram model:
+   * micro-nat precision) under the bigram model TRAINED ON THE CORPUS
+   * ITSELF (self-perplexity: boilerplate and in-distribution text
+   * score low, anomalous text scores high):
    *
    *   P(w2 | w1) = (c(w1 w2) + k) / (c(w1) + k·V)
    *
-   * with V = |unigram vocabulary|. Documents with fewer than 2 tokens
-   * have no bigrams and are absent from the output (they carry no
-   * evidence either way — callers decide their fate).
+   * with V = |unigram vocabulary| — [[bigramCrossPerplexity]] with the
+   * corpus as its own reference (every bigram is in its own table, so
+   * the cross form's unseen-gram fallback never fires). Documents with
+   * fewer than 2 tokens have no bigrams and are absent from the output
+   * (they carry no evidence either way — callers decide their fate).
    *
    * Returns (id, n_bigrams, avg_neg_logp) — `avg_neg_logp` rises with
    * how surprising the document is to the corpus; e^avg_neg_logp is
@@ -41,37 +83,8 @@ object TextModel {
    */
   def bigramSelfPerplexity(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Double = 0.5): DataFrame = {
-    require(k > 0.0, "smoothing k must be positive")
-    val toks = docs.select(col(idCol).as("id"),
-      TextFunctions.tokens(TextFunctions.canonicalText(col(textCol))).as("__toks"))
-    // one row per bigram OCCURRENCE (explode preserves multiplicity —
-    // a repeated bigram is evidence each time it appears)
-    val bigrams = toks
-      .select(col("id"), explode(TextFunctions.shinglesFromTokens(col("__toks"), 2)).as("bg"))
-      .select(col("id"), col("bg"),
-        substring_index(col("bg"), " ", 1).as("w1"))
-    val bgCounts = bigrams.groupBy("bg").agg(count(lit(1)).as("c_bg"))
-    val uniCounts = toks
-      .select(explode(col("__toks")).as("w1"))
-      .groupBy("w1").agg(count(lit(1)).as("c_w1"))
-    val vocab = uniCounts.agg(count(lit(1)).cast("double").as("v"))
-
-    val scored = bigrams
-      .join(bgCounts, Seq("bg"))
-      .join(uniCounts, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      // -ln P in integer micro-nats, rounded per bigram: the per-doc
-      // sum below is then exact long arithmetic
-      .withColumn("__nlp_micro",
-        round(-log((col("c_bg") + k) / (col("c_w1") + lit(k) * col("v"))) * 1e6)
-          .cast("long"))
-    scored.groupBy(col("id").as(idCol))
-      .agg(
-        count(lit(1)).as("n_bigrams"),
-        round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp"))
-  }
+      k: Double = 0.5): DataFrame =
+    bigramCrossPerplexity(docs, textCol, docs, idCol, textCol, k)
 
   /**
    * CROSS-corpus perplexity — the actual CCNet/Wenzek et al. 2020
@@ -82,47 +95,31 @@ object TextModel {
    * ((0 + k) / (0 + k·V)) — the same add-k limit, never a null or a
    * division blowup.
    *
-   * Same determinism and scale scheme as [[bigramSelfPerplexity]]:
-   * per-bigram −ln P in rounded integer micro-nats so the per-doc sum
-   * is exact Long arithmetic; the LM side collapses to
-   * vocabulary-sized count tables joined on the bigram/unigram keys
-   * (shuffle joins, not broadcast — a reference LM over a web-scale
-   * corpus is itself large), and the 1-row vocabulary size rides a
-   * broadcast crossJoin.
+   * The LM side collapses to vocabulary-sized count tables joined on
+   * the bigram/unigram keys (shuffle joins, not broadcast — a reference
+   * LM over a web-scale corpus is itself large), and the 1-row
+   * vocabulary size rides a broadcast crossJoin.
    */
   def bigramCrossPerplexity(
       reference: DataFrame, refTextCol: String,
       docs: DataFrame, idCol: String, textCol: String,
       k: Double = 0.5): DataFrame = {
     require(k > 0.0, "smoothing k must be positive")
-    val refToks = reference.select(
-      TextFunctions.tokens(TextFunctions.canonicalText(col(refTextCol))).as("__toks"))
-    val refBg = refToks
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c_bg"))
-    val refUni = refToks
-      .select(explode(col("__toks")).as("w1"))
-      .groupBy("w1").agg(count(lit(1)).as("c_w1"))
+    val refToks = tokenized(reference, Nil, refTextCol)
+    val refBg = grams(refToks, Nil, 2, "bg").groupBy("bg").agg(count(lit(1)).as("c_bg"))
+    val refUni = grams(refToks, Nil, 1, "w1").groupBy("w1").agg(count(lit(1)).as("c_w1"))
     val vocab = refUni.agg(count(lit(1)).cast("double").as("v"))
 
-    val toks = docs.select(col(idCol).as("id"),
-      TextFunctions.tokens(TextFunctions.canonicalText(col(textCol))).as("__toks"))
-    val bigrams = toks
-      .select(col("id"), explode(TextFunctions.shinglesFromTokens(col("__toks"), 2)).as("bg"))
-      .select(col("id"), col("bg"), substring_index(col("bg"), " ", 1).as("w1"))
-    bigrams
-      .join(refBg, Seq("bg"), "left")
-      .join(refUni, Seq("w1"), "left")
-      .na.fill(0L, Seq("c_bg", "c_w1"))
-      .crossJoin(broadcast(vocab))
-      .withColumn("__nlp_micro",
-        round(-log((col("c_bg") + k) / (col("c_w1") + lit(k) * col("v"))) * 1e6)
-          .cast("long"))
-      .groupBy(col("id").as(idCol))
-      .agg(
-        count(lit(1)).as("n_bigrams"),
-        round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp"))
+    val bigrams = grams(tokenized(docs, Seq(col(idCol).as("id")), textCol), Seq("id"), 2, "bg")
+      .select(col("id"), col("bg"), prefix(col("bg"), 1).as("w1"))
+    perDocument(
+      bigrams
+        .join(refBg, Seq("bg"), "left")
+        .join(refUni, Seq("w1"), "left")
+        .na.fill(0L, Seq("c_bg", "c_w1"))
+        .crossJoin(broadcast(vocab)),
+      Seq(col("id").as(idCol)), "n_bigrams",
+      (col("c_bg") + k) / (col("c_w1") + lit(k) * col("v")))
   }
 
   /**
@@ -149,10 +146,7 @@ object TextModel {
    * each document trigram against the trigram table once, the bigram
    * table twice (context w1w2 and backoff w2w3), and the unigram
    * table twice (w2 and w3) — all shuffle equi-joins on the n-gram
-   * key (an LM over a web-scale reference is itself large — never
-   * assumed broadcastable); N and V ride a 1-row broadcast crossJoin.
-   * Per-trigram −ln S is rounded to integer micro-nats BEFORE the
-   * per-doc sum — exact Long arithmetic, engine-portable.
+   * key; N and V ride a 1-row broadcast crossJoin.
    *
    * Documents with fewer than 3 tokens have no trigrams and are
    * absent from the output, as in the bigram forms.
@@ -163,31 +157,19 @@ object TextModel {
       alpha: Double = 0.4, k: Double = 0.5): DataFrame = {
     require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
     require(k > 0.0, "smoothing k must be positive")
-    val refToks = reference.select(
-      TextFunctions.tokens(TextFunctions.canonicalText(col(refTextCol))).as("__toks"))
-    val refTri = refToks
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), 3)).as("tg"))
-      .groupBy("tg").agg(count(lit(1)).as("c_tri"))
-    val refBg = refToks
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("c_bg"))
-    val refUni = refToks
-      .select(explode(col("__toks")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c_w"))
+    val refToks = tokenized(reference, Nil, refTextCol)
+    val refTri = grams(refToks, Nil, 3, "tg").groupBy("tg").agg(count(lit(1)).as("c_tri"))
+    val refBg = grams(refToks, Nil, 2, "bg").groupBy("bg").agg(count(lit(1)).as("c_bg"))
+    val refUni = grams(refToks, Nil, 1, "w").groupBy("w").agg(count(lit(1)).as("c_w"))
     val scal = refUni.agg(
       count(lit(1)).cast("double").as("v"),
       sum(col("c_w")).cast("double").as("n_tokens"))
 
-    val toks = docs.select(col(idCol).as("id"),
-      TextFunctions.tokens(TextFunctions.canonicalText(col(textCol))).as("__toks"))
-    val tris = toks
-      .select(col("id"), explode(TextFunctions.shinglesFromTokens(col("__toks"), 3)).as("tg"))
-      .select(col("id"), col("tg"),
-        substring_index(col("tg"), " ", 2).as("ctx12"),
-        substring_index(col("tg"), " ", -2).as("suf23"),
-        substring_index(substring_index(col("tg"), " ", -2), " ", 1).as("w2"),
-        substring_index(col("tg"), " ", -1).as("w3"))
-    tris
+    val tg = col("tg")
+    val tris = grams(tokenized(docs, Seq(col(idCol).as("id")), textCol), Seq("id"), 3, "tg")
+      .select(col("id"), tg, prefix(tg, 2).as("ctx12"), suffix(tg, 2).as("suf23"),
+        span(tg, 2, 2, 3).as("w2"), suffix(tg, 1).as("w3"))
+    val joined = tris
       .join(refTri, Seq("tg"), "left")
       .join(refBg.toDF("ctx12", "c_ctx"), Seq("ctx12"), "left")
       .join(refBg.toDF("suf23", "c_suf"), Seq("suf23"), "left")
@@ -195,19 +177,13 @@ object TextModel {
       .join(refUni.toDF("w3", "c_w3"), Seq("w3"), "left")
       .na.fill(0L, Seq("c_tri", "c_ctx", "c_suf", "c_w2", "c_w3"))
       .crossJoin(broadcast(scal))
-      // c(w1w2w3) > 0 ⟹ c(w1w2) > 0 and c(w2w3) > 0 ⟹ c(w2) > 0, so
-      // neither in-tier division can hit zero
-      .withColumn("__score",
-        when(col("c_tri") > 0, col("c_tri") / col("c_ctx"))
-          .when(col("c_suf") > 0, (lit(alpha) * col("c_suf")) / col("c_w2"))
-          .otherwise((lit(alpha) * lit(alpha) * (col("c_w3") + k)) /
-            (col("n_tokens") + lit(k) * col("v"))))
-      .withColumn("__nlp_micro", round(-log(col("__score")) * 1e6).cast("long"))
-      .groupBy(col("id").as(idCol))
-      .agg(
-        count(lit(1)).as("n_trigrams"),
-        round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp"))
+    // c(w1w2w3) > 0 ⟹ c(w1w2) > 0 and c(w2w3) > 0 ⟹ c(w2) > 0, so
+    // neither in-tier division can hit zero
+    perDocument(joined, Seq(col("id").as(idCol)), "n_trigrams",
+      when(col("c_tri") > 0, col("c_tri") / col("c_ctx"))
+        .when(col("c_suf") > 0, (lit(alpha) * col("c_suf")) / col("c_w2"))
+        .otherwise((lit(alpha) * lit(alpha) * (col("c_w3") + k)) /
+          (col("n_tokens") + lit(k) * col("v"))))
   }
 
   /**
@@ -236,16 +212,8 @@ object TextModel {
    * only at document ends): its λ would be 0 and a zero-probability
    * hole would open at c₅ = 0.
    *
-   * Scale shape: the reference LM is NINE count tables — 5-gram and
-   * 4-gram raw counts plus continuation/λ tables derived from DISTINCT
-   * n-gram types at each order (every one a linear hash aggregate over
-   * the exploded gram stream). Scoring joins each document 5-gram
-   * against them by its nested gram keys — all shuffle equi-joins
-   * (web-scale LM tables are never assumed broadcastable); the two
-   * scalars (distinct-bigram total, vocabulary) ride a 1-row broadcast
-   * crossJoin. Per-5-gram −ln P is rounded to integer micro-nats
-   * BEFORE the per-doc sum — exact Long arithmetic, engine-portable;
-   * the t66 oracle replays every tier term-for-term.
+   * Scale shape: see [[knCore]]; the t66 oracle replays every tier
+   * term-for-term.
    *
    * Documents with fewer than 5 tokens have no 5-grams and are absent
    * from the output, as in the lower-order forms.
@@ -255,7 +223,7 @@ object TextModel {
       docs: DataFrame, idCol: String, textCol: String,
       discount: Double = 0.75, k: Double = 0.5): DataFrame =
     knCore(reference, None, refTextCol, docs, idCol, None, textCol,
-      discount, k)
+      Some(discount), k)
 
   /**
    * The PER-LANGUAGE form of [[knFivegramCrossPerplexity]] — the CCNet
@@ -276,116 +244,149 @@ object TextModel {
       docs: DataFrame, idCol: String, docLangCol: String, textCol: String,
       discount: Double = 0.75, k: Double = 0.5): DataFrame =
     knCore(reference, Some(refLangCol), refTextCol,
-      docs, idCol, Some(docLangCol), textCol, discount, k)
+      docs, idCol, Some(docLangCol), textCol, Some(discount), k)
 
-  /** Shared interpolated-KN scorer: single-model when the lang
-    * columns are None (count tables keyed by gram alone, the 1-row
-    * scalars broadcast by crossJoin — byte-identical to the pre-r16
-    * single-model plan), per-language otherwise (every key gains the
-    * lang column; the per-language scalars ride a |langs|-row
-    * broadcast equi-join). */
+  /**
+   * MODIFIED Kneser-Ney 5-gram cross-perplexity (Chen & Goodman 1999
+   * §3, the KenLM DEFAULT — what CCNet literally ships): the
+   * [[knFivegramCrossPerplexity]] recursion with THREE count-dependent
+   * discounts per order instead of one fixed value. Per order, the
+   * discounts D1/D2/D3+ come closed-form from that order's
+   * count-of-counts ([[mknDiscounts]] — estimated over raw 5-gram
+   * counts at the top, continuation counts below), the discount
+   * applied to a gram depends on its own count bucket, and the
+   * interpolation weight is the bucket-weighted
+   * (D1·N1(ctx•) + D2·N2(ctx•) + D3·N3+(ctx•)) / denom — so contexts
+   * whose continuations are mostly singletons (hapax-heavy, poorly
+   * estimated) hand MORE mass to the lower order, which is the entire
+   * point of the modification.
+   *
+   * Count-of-counts are the ONLY driver-side values (sixteen longs —
+   * a KB-scale synopsis in the house discipline); the discounts they
+   * induce enter the plan as literals, exactly like the ANN
+   * centroids. Everything else is [[knCore]]'s plan. The t68 oracle
+   * recomputes the same discounts from the same integer counts with
+   * the same arithmetic shape and replays every tier.
+   */
+  def modifiedKnFivegramCrossPerplexity(
+      reference: DataFrame, refTextCol: String,
+      docs: DataFrame, idCol: String, textCol: String,
+      k: Double = 0.5): DataFrame =
+    knCore(reference, None, refTextCol, docs, idCol, None, textCol, None, k)
+
+  /** The Kneser-Ney scorer under all three entry points: one fixed
+    * `discount` at every order, or, when it is None, modified KN's
+    * per-order discount triples estimated from count-of-counts.
+    * Single-model when the lang columns are None (count tables keyed
+    * by gram alone, the 1-row scalars broadcast by crossJoin),
+    * per-language otherwise (every key gains the lang column; the
+    * per-language scalars ride a |langs|-row broadcast equi-join).
+    *
+    * The reference LM is ten count tables, every one a linear hash
+    * aggregate: raw 5-gram counts `t5` and 4-gram context counts `c4`;
+    * continuation counts `cont4`..`cont1` from DISTINCT n-gram types;
+    * and one bucket table per context order holding N1/N2/N3+ of its
+    * continuations' counts (N1₊ = their sum is plain KN's λ) and,
+    * below the top, the denominator Σcont. Scoring joins each
+    * document 5-gram against them by its nested gram keys — shuffle
+    * equi-joins (web-scale LM tables are never assumed broadcastable);
+    * the two scalars (distinct-bigram total, vocabulary) ride a
+    * broadcast. */
   private def knCore(
       reference: DataFrame, refLangCol: Option[String], refTextCol: String,
       docs: DataFrame, idCol: String, docLangCol: Option[String], textCol: String,
-      discount: Double, k: Double): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"discount must be in (0,1), got $discount")
+      discount: Option[Double], k: Double): DataFrame = {
+    discount.foreach(d => require(d > 0.0 && d < 1.0,
+      s"discount must be in (0,1), got $d"))
     require(k > 0.0, "smoothing k must be positive")
     require(refLangCol.isDefined == docLangCol.isDefined,
       "lang routing needs a lang column on BOTH sides")
-    import org.apache.spark.sql.Column
     val routed = refLangCol.isDefined
     // the extra grouping/join key when routing; empty when not
     val langKey: Seq[String] = if (routed) Seq("__lang") else Seq.empty
     def keyed(first: String): Seq[String] = first +: langKey
-    def grp(df: DataFrame, cs: Column*): org.apache.spark.sql.RelationalGroupedDataset =
-      df.groupBy(cs ++ langKey.map(col): _*)
+    def grp(df: DataFrame, cs: Column*) = df.groupBy(cs ++ langKey.map(col): _*)
+    // the estimated path reads these tables in its count-of-counts
+    // jobs and again when scoring
+    def held(df: DataFrame): DataFrame =
+      if (discount.isEmpty) Caches.persist(df) else df
 
-    // ---- gram-position helpers over space-joined n-grams ----------
-    def prefix(g: Column, n: Int): Column = substring_index(g, " ", n)
-    def suffix(g: Column, n: Int): Column = substring_index(g, " ", -n)
-    // words i..j (1-based) of an n-gram: suffix to drop the head, then
-    // prefix to keep the span
-    def span(g: Column, i: Int, j: Int, n: Int): Column =
-      prefix(suffix(g, n - i + 1), j - i + 1)
+    val refToks = tokenized(reference, refLangCol.map(col(_).as("__lang")).toSeq, refTextCol)
+    def refGrams(n: Int): DataFrame = grams(refToks, langKey, n, "g")
+    def types(n: Int): DataFrame = refGrams(n).select(keyed("g").map(col): _*).distinct()
+    def cont(df: DataFrame, n: Int, key: String, name: String): DataFrame =
+      grp(df, suffix(col("g"), n).as(key)).agg(count(lit(1)).as(name))
 
-    val refToks = reference.select(
-      (refLangCol.map(c => Seq(col(c).as("__lang"))).getOrElse(Seq.empty) :+
-        TextFunctions.tokens(TextFunctions.canonicalText(col(refTextCol))).as("__toks")): _*)
-    def refGrams(n: Int): DataFrame = refToks
-      .select((langKey.map(col) :+
-        explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g")): _*)
-
-    // ---- the nine reference tables --------------------------------
-    // top order: raw counts
-    val t5 = grp(refGrams(5), col("g")).agg(count(lit(1)).as("c5"))
+    // ---- the count tables -------------------------------------------
+    val t5 = held(grp(refGrams(5), col("g")).agg(count(lit(1)).as("c5")))
     val c4 = grp(refGrams(4), col("g")).agg(count(lit(1)).as("c4"))
       .withColumnRenamed("g", "ctx4")
-    // λ₅: distinct continuations of each 4-gram context (rows of t5
-    // are distinct types, so count(*) per prefix IS the distinct count)
-    val lam5 = grp(t5, prefix(col("g"), 4).as("ctx4"))
-      .agg(count(lit(1)).as("lam5"))
-    // order 4: continuation counts from distinct 5-gram types
-    val cont4 = grp(t5, suffix(col("g"), 4).as("g4s"))
-      .agg(count(lit(1)).as("cont4"))
-    val mid4 = grp(t5, span(col("g"), 2, 4, 5).as("ctx3"))
-      .agg(count(lit(1)).as("denom4"),
-        countDistinct(suffix(col("g"), 1)).as("lam4"))
-    // order 3: from distinct 4-gram types. (Deriving this from the c4
-    // count table's keys was TRIED this round and measured SLOWER on
-    // llm02 — the aggregation subtree is not exchange-reused across
-    // its three consumers, so each paid the count-agg AND its own
-    // re-aggregation shuffle where the direct distinct pays one.)
-    val t4types = refGrams(4).select(keyed("g").map(col): _*).distinct()
-    val cont3 = grp(t4types, suffix(col("g"), 3).as("g3s"))
-      .agg(count(lit(1)).as("cont3"))
-    val mid3 = grp(t4types, span(col("g"), 2, 3, 4).as("ctx2"))
-      .agg(count(lit(1)).as("denom3"),
-        countDistinct(suffix(col("g"), 1)).as("lam3"))
-    // order 2: from distinct 3-gram types
-    val t3types = refGrams(3).select(keyed("g").map(col): _*).distinct()
-    val cont2 = grp(t3types, suffix(col("g"), 2).as("g2s"))
-      .agg(count(lit(1)).as("cont2"))
-    val mid2 = grp(t3types, span(col("g"), 2, 2, 3).as("w4k"))
-      .agg(count(lit(1)).as("denom2"),
-        countDistinct(suffix(col("g"), 1)).as("lam2"))
-    // base: continuation unigrams from distinct bigram types
-    val t2types = refGrams(2).select(keyed("g").map(col): _*).distinct()
-    val cont1 = grp(t2types, suffix(col("g"), 1).as("w5k"))
-      .agg(count(lit(1)).as("cont1"))
-    val refWords = refToks.select((langKey.map(col) :+
-      explode(col("__toks")).as("w")): _*)
-    val scalars =
-      if (routed)
-        t2types.groupBy("__lang").agg(count(lit(1)).cast("double").as("denom1"))
-          .join(refWords.groupBy("__lang")
-            .agg(countDistinct(col("w")).cast("double").as("v")), Seq("__lang"))
-      else
-        t2types.agg(count(lit(1)).cast("double").as("denom1"))
-          .crossJoin(refWords.agg(countDistinct(col("w")).cast("double").as("v")))
+    // continuation counts: the 4-gram suffixes of distinct 5-gram
+    // types, and so on down. (Deriving order 3 from the c4 count
+    // table's keys was measured SLOWER on llm02 — that aggregation
+    // subtree is not exchange-reused across its three consumers.)
+    val cont4 = held(cont(t5, 4, "g4s", "cont4"))
+    val cont3 = held(cont(types(4), 3, "g3s", "cont3"))
+    val cont2 = held(cont(types(3), 2, "g2s", "cont2"))
+    val t2types = types(2)
+    val cont1 = cont(t2types, 1, "w5k", "cont1")
+    def countIf(hit: Column): Column = sum(when(hit, 1L).otherwise(0L))
+    // per context: N1/N2/N3+ of its continuations' counts and, below
+    // the top (whose denominator is the raw c4), the denominator Σcnt
+    def buckets(df: DataFrame, ctx: Column, cnt: String, tag: String,
+        denom: Boolean): DataFrame = {
+      val ns = Seq(countIf(col(cnt) === 1).as(s"n1$tag"),
+        countIf(col(cnt) === 2).as(s"n2$tag"), countIf(col(cnt) >= 3).as(s"n3p$tag"))
+      val aggs = if (denom) sum(col(cnt)).as(s"denom$tag") +: ns else ns
+      grp(df, ctx).agg(aggs.head, aggs.tail: _*)
+    }
+    val top = buckets(t5, prefix(col("g"), 4).as("ctx4"), "c5", "t", denom = false)
+    val mid4 = buckets(cont4, prefix(col("g4s"), 3).as("ctx3"), "cont4", "4", denom = true)
+    val mid3 = buckets(cont3, prefix(col("g3s"), 2).as("ctx2"), "cont3", "3", denom = true)
+    val mid2 = buckets(cont2, prefix(col("g2s"), 1).as("w4k"), "cont2", "2", denom = true)
+    val scalars = {
+      val denom1 = grp(t2types).agg(count(lit(1)).cast("double").as("denom1"))
+      val v = grp(types(1)).agg(count(lit(1)).cast("double").as("v"))
+      if (routed) denom1.join(v, langKey) else denom1.crossJoin(v)
+    }
 
-    // ---- score the target documents -------------------------------
-    val toks = docs.select(
-      (Seq(col(idCol).as("id")) ++
-        docLangCol.map(c => Seq(col(c).as("__lang"))).getOrElse(Seq.empty) :+
-        TextFunctions.tokens(TextFunctions.canonicalText(col(textCol))).as("__toks")): _*)
-    val grams = toks
-      .select((keyed("id").map(col) :+
-        explode(TextFunctions.shinglesFromTokens(col("__toks"), 5)).as("g")): _*)
-      .select((keyed("id").map(col) ++ Seq(col("g"),
-        prefix(col("g"), 4).as("ctx4"),
-        suffix(col("g"), 4).as("g4s"),
-        span(col("g"), 2, 4, 5).as("ctx3"),
-        suffix(col("g"), 3).as("g3s"),
-        span(col("g"), 3, 4, 5).as("ctx2"),
-        suffix(col("g"), 2).as("g2s"),
-        span(col("g"), 4, 4, 5).as("w4k"),
-        suffix(col("g"), 1).as("w5k"))): _*)
+    // ---- per-order discount triples: top, 4, 3, 2 -------------------
+    val Seq(discTop, disc4, disc3, disc2) = discount match {
+      case Some(d) => Seq.fill(4)((d, d, d))
+      case None =>
+        def countOfCounts(df: DataFrame, cnt: String): (Double, Double, Double) = {
+          val r = df.agg(countIf(col(cnt) === 1),
+            countIf(col(cnt) === 2), countIf(col(cnt) === 3), countIf(col(cnt) === 4)).first()
+          mknDiscounts(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+        }
+        // t5 first ON ITS OWN (its job fills the t5 cache that cont4's
+        // scan reads), then the three lower orders OVERLAPPED (each is
+        // its own persisted table with no shared uncached parent, so
+        // no first-touch race)
+        countOfCounts(t5, "c5") +: Jobs.inParallel(Seq(
+          () => countOfCounts(cont4, "cont4"),
+          () => countOfCounts(cont3, "cont3"),
+          () => countOfCounts(cont2, "cont2")))
+    }
 
-    val joined0 = grams
+    // ---- score the target documents ---------------------------------
+    val toks = tokenized(docs,
+      col(idCol).as("id") +: docLangCol.map(col(_).as("__lang")).toSeq, textCol)
+    val g = col("g")
+    val fivegrams = grams(toks, keyed("id"), 5, "g")
+      .select((keyed("id").map(col) ++ Seq(g,
+        prefix(g, 4).as("ctx4"),
+        suffix(g, 4).as("g4s"),
+        span(g, 2, 4, 5).as("ctx3"),
+        suffix(g, 3).as("g3s"),
+        span(g, 3, 4, 5).as("ctx2"),
+        suffix(g, 2).as("g2s"),
+        span(g, 4, 4, 5).as("w4k"),
+        suffix(g, 1).as("w5k"))): _*)
+    val joined0 = fivegrams
       .join(t5, keyed("g"), "left")
       .join(c4, keyed("ctx4"), "left")
-      .join(lam5, keyed("ctx4"), "left")
+      .join(top, keyed("ctx4"), "left")
       .join(cont4, keyed("g4s"), "left")
       .join(mid4, keyed("ctx3"), "left")
       .join(cont3, keyed("g3s"), "left")
@@ -393,39 +394,51 @@ object TextModel {
       .join(cont2, keyed("g2s"), "left")
       .join(mid2, keyed("w4k"), "left")
       .join(cont1, keyed("w5k"), "left")
-      .na.fill(0L, Seq("c5", "c4", "lam5", "cont4", "denom4", "lam4",
-        "cont3", "denom3", "lam3", "cont2", "denom2", "lam2", "cont1"))
+      .na.fill(0L, Seq("c5", "c4", "n1t", "n2t", "n3pt",
+        "cont4", "denom4", "n14", "n24", "n3p4",
+        "cont3", "denom3", "n13", "n23", "n3p3",
+        "cont2", "denom2", "n12", "n22", "n3p2", "cont1"))
     val joined =
-      if (routed) joined0.join(broadcast(scalars), Seq("__lang"))
+      if (routed) joined0.join(broadcast(scalars), langKey)
       else joined0.crossJoin(broadcast(scalars))
 
-    // one tier: (max(num − D, 0) + D·lam·lower) / denom when the
-    // context was seen, else fall through — the SAME textual shape the
-    // oracle uses, so double arithmetic associates identically
-    val dL = lit(discount)
-    def tier(num: Column, lam: Column, denom: Column, lower: Column): Column =
-      when(denom > 0,
-        (greatest(num - dL, lit(0.0)) + dL * lam * lower) / denom)
+    // one tier: (max(cnt − D(cnt), 0) + mass·lower) / denom when the
+    // context was seen with a counted continuation, else fall through.
+    // Below the top, denom > 0 already implies N1₊ > 0; at the top a
+    // context seen only at document ends has c4 > 0 but N1₊ = 0, and
+    // would score a c5 = 0 gram exactly 0. The discount follows the
+    // gram's count bucket and the mass is D1·N1 + D2·N2 + D3·N3+.
+    // Equal discounts (plain KN) take D and D·N1₊ directly: the same
+    // doubles at D = 0.75, but the bucketed form measured ~3.5% slower
+    // on the corpus pipeline (plans/textmodel/corpus_ab_summary.txt).
+    def tier(cnt: Column, tag: String, denom: Column,
+        d: (Double, Double, Double), lower: Column): Column = {
+      val (d1, d2, d3) = d
+      val (n1, n2, n3) = (col(s"n1$tag"), col(s"n2$tag"), col(s"n3p$tag"))
+      val n1p = n1 + n2 + n3
+      val (dCnt, mass) =
+        if (d1 == d2 && d2 == d3) (lit(d1), lit(d1) * n1p)
+        else (when(cnt >= 3, d3).when(cnt === 2, d2).when(cnt === 1, d1).otherwise(0.0),
+          lit(d1) * n1 + lit(d2) * n2 + lit(d3) * n3)
+      when(denom > 0 && n1p > 0, (greatest(cnt - dCnt, lit(0.0)) + mass * lower) / denom)
         .otherwise(lower)
+    }
     val p1 = (col("cont1") + k) / (col("denom1") + lit(k) * col("v"))
-    val p2 = tier(col("cont2"), col("lam2"), col("denom2"), p1)
-    val p3 = tier(col("cont3"), col("lam3"), col("denom3"), p2)
-    val p4 = tier(col("cont4"), col("lam4"), col("denom4"), p3)
-    // top tier also needs lam5 > 0 (context seen only at document
-    // ends distributes no mass — a c5=0 gram would score exactly 0)
-    val p5 = when(col("c4") > 0 && col("lam5") > 0,
-      (greatest(col("c5") - dL, lit(0.0)) + dL * col("lam5") * p4) / col("c4"))
-      .otherwise(p4)
+    val p2 = tier(col("cont2"), "2", col("denom2"), disc2, p1)
+    val p3 = tier(col("cont3"), "3", col("denom3"), disc3, p2)
+    val p4 = tier(col("cont4"), "4", col("denom4"), disc4, p3)
+    val p5 = tier(col("c5"), "t", col("c4"), discTop, p4)
 
-    val scored = joined
-      .withColumn("__nlp_micro", round(-log(p5) * 1e6).cast("long"))
-    (if (routed)
-        scored.groupBy(col("id").as(idCol), col("__lang").as(docLangCol.get))
-      else scored.groupBy(col("id").as(idCol)))
-      .agg(
-        count(lit(1)).as("n_fivegrams"),
-        round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp"))
+    val out = perDocument(joined,
+      col("id").as(idCol) +: docLangCol.map(col("__lang").as(_)).toSeq, "n_fivegrams", p5)
+    if (discount.isDefined) out
+    else {
+      // the doc-sized result materializes while the count tables are
+      // still cached; they release now, not at the end of the query
+      val scored = Caches.cut(out)
+      Seq(t5, cont4, cont3, cont2).foreach(Caches.release)
+      scored
+    }
   }
 
   /**
@@ -537,176 +550,4 @@ object TextModel {
         math.max(0.0, 2.0 - 3.0 * y * n3 / n2),
         math.max(0.0, 3.0 - 4.0 * y * n4 / n3))
     } else (0.75, 0.75, 0.75)
-
-  /**
-   * MODIFIED Kneser-Ney 5-gram cross-perplexity (Chen & Goodman 1999
-   * §3, the KenLM DEFAULT — what CCNet literally ships): the
-   * [[knFivegramCrossPerplexity]] recursion with THREE count-dependent
-   * discounts per order instead of one fixed value. Per order, the
-   * discounts D1/D2/D3+ come closed-form from that order's
-   * count-of-counts ([[mknDiscounts]] — estimated over raw 5-gram
-   * counts at the top, continuation counts below), the discount
-   * applied to a gram depends on its own count bucket, and the
-   * interpolation weight is the bucket-weighted
-   * (D1·N1(ctx•) + D2·N2(ctx•) + D3·N3+(ctx•)) / denom — so contexts
-   * whose continuations are mostly singletons (hapax-heavy, poorly
-   * estimated) hand MORE mass to the lower order, which is the entire
-   * point of the modification.
-   *
-   * Count-of-counts are the ONLY driver-side values (sixteen longs —
-   * a KB-scale synopsis in the house discipline); the discounts they
-   * induce enter the plan as literals, exactly like the ANN
-   * centroids. Everything else keeps the t66 shape: nine+ count
-   * tables, all linear hash aggregates; scoring via shuffle
-   * equi-joins on the nested gram keys; per-gram −ln P in integer
-   * micro-nats. The t68 oracle recomputes the same discounts from the
-   * same integer counts with the same arithmetic shape and replays
-   * every tier.
-   */
-  def modifiedKnFivegramCrossPerplexity(
-      reference: DataFrame, refTextCol: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Double = 0.5): DataFrame = {
-    require(k > 0.0, "smoothing k must be positive")
-    import org.apache.spark.sql.Column
-
-    def prefix(g: Column, n: Int): Column = substring_index(g, " ", n)
-    def suffix(g: Column, n: Int): Column = substring_index(g, " ", -n)
-    def span(g: Column, i: Int, j: Int, n: Int): Column =
-      prefix(suffix(g, n - i + 1), j - i + 1)
-
-    val refToks = reference.select(
-      TextFunctions.tokens(TextFunctions.canonicalText(col(refTextCol))).as("__toks"))
-    def refGrams(n: Int): DataFrame = refToks
-      .select(explode(TextFunctions.shinglesFromTokens(col("__toks"), n)).as("g"))
-
-    // ---- numerator tables (t66 shapes) -----------------------------
-    val t5 = Caches.persist(refGrams(5).groupBy("g").agg(count(lit(1)).as("c5")))
-    val c4 = refGrams(4).groupBy("g").agg(count(lit(1)).as("c4"))
-      .withColumnRenamed("g", "ctx4")
-    val cont4 = Caches.persist(t5.groupBy(suffix(col("g"), 4).as("g4s"))
-      .agg(count(lit(1)).as("cont4")))
-    val t4types = refGrams(4).select(col("g")).distinct()
-    val cont3 = Caches.persist(t4types.groupBy(suffix(col("g"), 3).as("g3s"))
-      .agg(count(lit(1)).as("cont3")))
-    val t3types = refGrams(3).select(col("g")).distinct()
-    val cont2 = Caches.persist(t3types.groupBy(suffix(col("g"), 2).as("g2s"))
-      .agg(count(lit(1)).as("cont2")))
-    val t2types = refGrams(2).select(col("g")).distinct()
-    val cont1 = t2types.groupBy(suffix(col("g"), 1).as("w5k"))
-      .agg(count(lit(1)).as("cont1"))
-    val scalars = t2types.agg(count(lit(1)).cast("double").as("denom1"))
-      .crossJoin(refToks.select(explode(col("__toks")).as("w"))
-        .agg(countDistinct(col("w")).cast("double").as("v")))
-
-    // ---- per-order discounts from count-of-counts (driver scalars) -
-    def countOfCounts(df: DataFrame, cnt: String): (Long, Long, Long, Long) = {
-      val r = df.agg(
-        sum(when(col(cnt) === 1, 1L).otherwise(0L)),
-        sum(when(col(cnt) === 2, 1L).otherwise(0L)),
-        sum(when(col(cnt) === 3, 1L).otherwise(0L)),
-        sum(when(col(cnt) === 4, 1L).otherwise(0L))).first()
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-    }
-    // t5 first ON ITS OWN (its job materializes the t5 cache that
-    // cont4's scan reads), then the three independent lower-order
-    // count-of-counts jobs OVERLAPPED (guide §2.6; cont4/cont3/cont2
-    // are each their own persisted table with no shared uncached
-    // parent, so no first-touch race) — 4 sequential driver-blocking
-    // collects become 1 + one overlapped round
-    val (d51, d52, d53) = (mknDiscounts _).tupled(countOfCounts(t5, "c5"))
-    val lower = graft.util.Jobs.inParallel(Seq(
-      () => countOfCounts(cont4, "cont4"),
-      () => countOfCounts(cont3, "cont3"),
-      () => countOfCounts(cont2, "cont2")))
-    val (d41, d42, d43) = (mknDiscounts _).tupled(lower(0))
-    val (d31, d32, d33) = (mknDiscounts _).tupled(lower(1))
-    val (d21, d22, d23) = (mknDiscounts _).tupled(lower(2))
-
-    // ---- per-context bucket tables (N1/N2/N3+ of the continuations) -
-    def buckets(df: DataFrame, key: Column, cnt: String,
-        ctxName: String, tag: String): DataFrame =
-      df.groupBy(key.as(ctxName)).agg(
-        sum(col(cnt)).as(s"denom$tag"),
-        sum(when(col(cnt) === 1, 1L).otherwise(0L)).as(s"n1$tag"),
-        sum(when(col(cnt) === 2, 1L).otherwise(0L)).as(s"n2$tag"),
-        sum(when(col(cnt) >= 3, 1L).otherwise(0L)).as(s"n3p$tag"))
-    // top order: the denominator is the RAW context count c4, so the
-    // bucket table carries buckets only (joined alongside c4)
-    val top = t5.groupBy(prefix(col("g"), 4).as("ctx4")).agg(
-      sum(when(col("c5") === 1, 1L).otherwise(0L)).as("n1t"),
-      sum(when(col("c5") === 2, 1L).otherwise(0L)).as("n2t"),
-      sum(when(col("c5") >= 3, 1L).otherwise(0L)).as("n3pt"))
-    val mid4 = buckets(cont4, prefix(col("g4s"), 3), "cont4", "ctx3", "4")
-    val mid3 = buckets(cont3, prefix(col("g3s"), 2), "cont3", "ctx2", "3")
-    val mid2 = buckets(cont2, prefix(col("g2s"), 1), "cont2", "w4k", "2")
-
-    // ---- score the target documents --------------------------------
-    val toks = docs.select(col(idCol).as("id"),
-      TextFunctions.tokens(TextFunctions.canonicalText(col(textCol))).as("__toks"))
-    val grams = toks
-      .select(col("id"), explode(TextFunctions.shinglesFromTokens(col("__toks"), 5)).as("g"))
-      .select(col("id"), col("g"),
-        prefix(col("g"), 4).as("ctx4"),
-        suffix(col("g"), 4).as("g4s"),
-        span(col("g"), 2, 4, 5).as("ctx3"),
-        suffix(col("g"), 3).as("g3s"),
-        span(col("g"), 3, 4, 5).as("ctx2"),
-        suffix(col("g"), 2).as("g2s"),
-        span(col("g"), 4, 4, 5).as("w4k"),
-        suffix(col("g"), 1).as("w5k"))
-
-    val joined = grams
-      .join(t5, Seq("g"), "left")
-      .join(c4, Seq("ctx4"), "left")
-      .join(top, Seq("ctx4"), "left")
-      .join(cont4, Seq("g4s"), "left")
-      .join(mid4, Seq("ctx3"), "left")
-      .join(cont3, Seq("g3s"), "left")
-      .join(mid3, Seq("ctx2"), "left")
-      .join(cont2, Seq("g2s"), "left")
-      .join(mid2, Seq("w4k"), "left")
-      .join(cont1, Seq("w5k"), "left")
-      .na.fill(0L, Seq("c5", "c4", "n1t", "n2t", "n3pt",
-        "cont4", "denom4", "n14", "n24", "n3p4",
-        "cont3", "denom3", "n13", "n23", "n3p3",
-        "cont2", "denom2", "n12", "n22", "n3p2", "cont1"))
-      .crossJoin(broadcast(scalars))
-
-    // D(cnt): the discount the gram's own count bucket earns; the SAME
-    // textual shape the oracle uses
-    def dOf(cnt: Column, d1: Double, d2: Double, d3: Double): Column =
-      when(cnt >= 3, d3).when(cnt === 2, d2).when(cnt === 1, d1).otherwise(0.0)
-    def tier(cnt: Column, n1c: Column, n2c: Column, n3pc: Column,
-        denom: Column, d1: Double, d2: Double, d3: Double,
-        lower: Column): Column =
-      when(denom > 0,
-        (greatest(cnt - dOf(cnt, d1, d2, d3), lit(0.0)) +
-          (lit(d1) * n1c + lit(d2) * n2c + lit(d3) * n3pc) * lower) / denom)
-        .otherwise(lower)
-    val p1 = (col("cont1") + k) / (col("denom1") + lit(k) * col("v"))
-    val p2 = tier(col("cont2"), col("n12"), col("n22"), col("n3p2"),
-      col("denom2"), d21, d22, d23, p1)
-    val p3 = tier(col("cont3"), col("n13"), col("n23"), col("n3p3"),
-      col("denom3"), d31, d32, d33, p2)
-    val p4 = tier(col("cont4"), col("n14"), col("n24"), col("n3p4"),
-      col("denom4"), d41, d42, d43, p3)
-    val p5 = when(col("c4") > 0 && (col("n1t") + col("n2t") + col("n3pt")) > 0,
-      (greatest(col("c5") - dOf(col("c5"), d51, d52, d53), lit(0.0)) +
-        (lit(d51) * col("n1t") + lit(d52) * col("n2t") + lit(d53) * col("n3pt")) * p4) /
-        col("c4"))
-      .otherwise(p4)
-
-    val out = Caches.cut(joined
-      .withColumn("__nlp_micro", round(-log(p5) * 1e6).cast("long"))
-      .groupBy(col("id").as(idCol))
-      .agg(
-        count(lit(1)).as("n_fivegrams"),
-        round((sum(col("__nlp_micro")).cast("double") / count(lit(1))) / 1e6, 6)
-          .as("avg_neg_logp")))
-    // the doc-sized result materialized while the count tables were
-    // still cached; they release now, not at the end of the query
-    Seq(t5, cont4, cont3, cont2).foreach(Caches.release)
-    out
-  }
 }

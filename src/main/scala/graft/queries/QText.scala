@@ -38,6 +38,14 @@ object QText {
 
   private val CTOKS = ctoksOf("text")
 
+  /** DuckDB mirror of [[graft.operators.TextModel]]'s per-document
+    * reducer over the integer micro-nat column `m`: the mean rounded
+    * half-up to the micro-nat in exact integers, (2·Σm + n) // 2n.
+    * No double is rounded at a tie (a double-path round(x, 6) and
+    * Spark's half-up can disagree there by 1e-6). */
+  private val AVG_NEG_LOGP =
+    "CAST((2 * CAST(SUM(m) AS BIGINT) + count(*)) // (2 * count(*)) AS DOUBLE) / 1000000.0"
+
   /** Recursive-CTE replica of the t09 dup graph (word-trigram Jaccard
     * ≥ 0.5, shingle df ≤ 1000) plus connected components with min-id
     * representatives (`comp(id, component)`) — shared by t09 and the
@@ -299,7 +307,7 @@ object QText {
          |    THEN (GREATEST(c5 - 0.75, 0) + 0.75 * lam5 * p4) / c4 ELSE p4 END AS p5 FROM p4c),
          |scs AS (SELECT doc_id, lang, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c),
          |ppl AS (SELECT doc_id, lang,
-         |    round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |    $AVG_NEG_LOGP AS avg_neg_logp
          |  FROM scs GROUP BY 1, 2),
          |nt AS MATERIALIZED (SELECT doc_id, lang,
          |    ntile(3) OVER (PARTITION BY lang ORDER BY avg_neg_logp, doc_id) AS b
@@ -612,7 +620,7 @@ object QText {
        |    THEN (GREATEST(c5 - 0.75, 0) + 0.75 * lam5 * p4) / c4 ELSE p4 END AS p5 FROM p4c),
        |sc AS (SELECT doc_id, lang, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c),
        |ppl AS MATERIALIZED (SELECT doc_id, lang,
-       |    round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+       |    $AVG_NEG_LOGP AS avg_neg_logp
        |  FROM sc GROUP BY 1, 2)""".stripMargin
 
   /** DuckDB replay of [[graft.functions.Bpe]]'s priority merge walk,
@@ -1147,10 +1155,9 @@ object QText {
          |    THEN (GREATEST(cont4 - 0.75, 0) + 0.75 * lam4 * p3) / denom4 ELSE p3 END AS p4 FROM p3c),
          |p5c AS (SELECT doc_id, CASE WHEN c4 > 0 AND lam5 > 0
          |    THEN (GREATEST(c5 - 0.75, 0) + 0.75 * lam5 * p4) / c4 ELSE p4 END AS p5 FROM p4c),
-         |ppl AS MATERIALIZED (SELECT doc_id,
-         |    round((CAST(SUM(CAST(round(-ln(p5) * 1000000.0) AS BIGINT)) AS DOUBLE)
-         |      / count(*)) / 1000000.0, 6) AS anp
-         |  FROM p5c GROUP BY doc_id)
+         |sc AS (SELECT doc_id, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c),
+         |ppl AS MATERIALIZED (SELECT doc_id, $AVG_NEG_LOGP AS anp
+         |  FROM sc GROUP BY doc_id)
          |SELECT f.doc_id, f.quality, f.lang, pii.has_pii,
          |  CASE WHEN f.doc_id NOT IN (SELECT doc_id FROM uq) THEN 'drop_domain_quota'
          |       WHEN NOT f.g_ok THEN 'drop_gopher'
@@ -2893,7 +2900,7 @@ object QText {
          |  JOIN unic ON split_part(bgr.bg, ' ', 1) = unic.w1
          |  CROSS JOIN v)
          |SELECT doc_id, count(*) AS n_bigrams,
-         |  round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |  $AVG_NEG_LOGP AS avg_neg_logp
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       graft.operators.TextModel.bigramSelfPerplexity(
           Tables.documents(s, dir), "doc_id", "text", k = 0.5)
@@ -2925,7 +2932,7 @@ object QText {
          |  LEFT JOIN tru ON split_part(bgr.bg, ' ', 1) = tru.w1
          |  CROSS JOIN v)
          |SELECT doc_id, count(*) AS n_bigrams,
-         |  round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |  $AVG_NEG_LOGP AS avg_neg_logp
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       graft.operators.TextModel.bigramCrossPerplexity(
@@ -3183,18 +3190,11 @@ object QText {
          |  LEFT JOIN tru u3 ON keys.w3 = u3.w
          |  CROSS JOIN sv)
          |SELECT doc_id, count(*) AS n_trigrams,
-         |  CAST((2 * CAST(SUM(m) AS BIGINT) + count(*)) // (2 * count(*)) AS DOUBLE)
-         |    / 1000000.0 AS avg_neg_logp
+         |  $AVG_NEG_LOGP AS avg_neg_logp
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      // ORACLE ROUNDING NOTE (found red at sf0.001 on inherited HEAD,
-      // not introduced this round): one doc's mean micro-nat count
-      // lands EXACTLY on a .5 boundary, where DuckDB's double-path
-      // round(x, 6) and Spark's BigDecimal HALF_UP disagree by 1e-6.
-      // The oracle now rounds in exact integer arithmetic —
-      // (2·sum + n) // (2n) is half-up over the exact rational, which
-      // equals Spark's HALF_UP on the midpoint and the old value on
-      // every non-midpoint row (m ≥ 0 always: every backoff score
-      // ≤ 1). Spark side untouched; re-proved green at every sf.
+      // at sf0.001 one doc's mean micro-nat count lands EXACTLY on a
+      // .5 boundary: both sides round it in exact integers
+      // (AVG_NEG_LOGP and TextModel's reducer), never as a double
       val docs = Tables.documents(s, dir)
       graft.operators.TextModel.trigramBackoffCrossPerplexity(
           docs.filter(col("doc_id") % 10 === 0), "text",
@@ -3270,7 +3270,7 @@ object QText {
          |    THEN (GREATEST(c5 - 0.75, 0) + 0.75 * lam5 * p4) / c4 ELSE p4 END AS p5 FROM p4c),
          |sc AS (SELECT doc_id, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c)
          |SELECT doc_id, count(*) AS n_fivegrams,
-         |  round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |  $AVG_NEG_LOGP AS avg_neg_logp
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = Tables.documents(s, dir)
       graft.operators.TextModel.knFivegramCrossPerplexity(
@@ -3388,7 +3388,7 @@ object QText {
          |      + (d51 * n1t + d52 * n2t + d53 * n3pt) * p4) / c4 ELSE p4 END AS p5 FROM p4c),
          |sc AS (SELECT doc_id, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c)
          |SELECT doc_id, count(*) AS n_fivegrams,
-         |  round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |  $AVG_NEG_LOGP AS avg_neg_logp
          |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // post-scan rebalance of the SCORING side only (the t32/t65
       // idiom): at bench SFs the table is ONE parquet row group, so
@@ -3476,7 +3476,7 @@ object QText {
          |    THEN (GREATEST(c5 - 0.75, 0) + 0.75 * lam5 * p4) / c4 ELSE p4 END AS p5 FROM p4c),
          |sc AS (SELECT doc_id, CAST(round(-ln(p5) * 1000000.0) AS BIGINT) AS m FROM p5c),
          |ppl AS (SELECT doc_id,
-         |    round((CAST(SUM(m) AS DOUBLE) / count(*)) / 1000000.0, 6) AS avg_neg_logp
+         |    $AVG_NEG_LOGP AS avg_neg_logp
          |  FROM sc GROUP BY doc_id),
          |nt AS (SELECT doc_id, avg_neg_logp,
          |    ntile(3) OVER (ORDER BY avg_neg_logp, doc_id) AS b

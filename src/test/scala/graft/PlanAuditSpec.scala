@@ -609,6 +609,24 @@ class PlanAuditSpec extends AnyFunSuite {
     assert("LeftOuter".r.findAllIn(p).length >= 10, p)
   }
 
+  test("KN: plain and modified score through one join chain; no distinct-count aggregate") {
+    // plain KN's λ and denominators come from the continuation tables'
+    // bucket aggregates, so no count(DISTINCT) is left in its plan;
+    // modified KN scores inside its cut, whose checkpoint plan reports
+    // through withAction
+    import org.apache.spark.sql.functions.col
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val (ref, tgt) = (docs.filter(col("doc_id") % 10 === 0), docs.filter(col("doc_id") % 10 =!= 0))
+    val plain = executions(graft.operators.TextModel.knFivegramCrossPerplexity(
+      ref, "text", tgt, "doc_id", "text").collect())
+    val modified = graft.util.Caches.scoped(executions(
+      graft.operators.TextModel.modifiedKnFivegramCrossPerplexity(
+        ref, "text", tgt, "doc_id", "text").collect()))
+    assert(plain.map(KnPlan.distinctAggregates).sum === 0)
+    val joins = (plain.map(KnPlan.joins).max, modified.map(KnPlan.joins).max)
+    assert(joins._1 >= 10 && joins._1 === joins._2, s"plain, modified joins: $joins")
+  }
+
   test("m12: the dHash pair join is a banded equi-join; decode stays out of the exchange") {
     val p = plan("m12_image_neardup_dhash")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
@@ -630,19 +648,23 @@ class PlanAuditSpec extends AnyFunSuite {
     * plan the session reports while `run` executes: the query's own
     * action plus each eager checkpoint and driver-side collect it
     * triggers (`Dataset.localCheckpoint` reports through `withAction`). */
-  private def documentScans(run: => Unit): Int = {
+  private def documentScans(run: => Unit): Int =
+    executions(run).map(DocumentScans.in).sum
+
+  /** Every query execution the session reports while `run` executes. */
+  private def executions(run: => Unit): Seq[QueryExecution] = {
     val sc = spark.sparkContext
-    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        scans.addAndGet(DocumentScans.in(qe))
+        done.add(qe)
       override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
     }
     ListenerBusDrain(sc)
     spark.listenerManager.register(listener)
     try { run; ListenerBusDrain(sc) }
     finally spark.listenerManager.unregister(listener)
-    scans.get
+    done.toArray(Array.empty[QueryExecution]).toSeq
   }
 
   test("llm01/llm02: the per-document gates are columns, so the pipelines scan " +
@@ -918,5 +940,16 @@ private object DocumentScans extends AdaptiveSparkPlanHelper {
   def in(qe: QueryExecution): Int = collectWithSubqueries(qe.executedPlan) {
     case s: FileSourceScanExec
         if s.relation.location.rootPaths.exists(_.toString.contains("documents")) => s
+  }.size
+}
+
+/** Plan nodes of the KN scorers' executions, AQE stages included. */
+private object KnPlan extends AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+  import org.apache.spark.sql.execution.joins.BaseJoinExec
+  def joins(qe: QueryExecution): Int =
+    collect(qe.executedPlan) { case j: BaseJoinExec => j }.size
+  def distinctAggregates(qe: QueryExecution): Int = collect(qe.executedPlan) {
+    case a: BaseAggregateExec if a.aggregateExpressions.exists(_.isDistinct) => a
   }.size
 }

@@ -1542,6 +1542,19 @@ class OperatorSpecs extends AnyFunSuite {
     assert(modified === plain)
   }
 
+  test("perDocument: the mean micro-nat rounds half-up in exact integers") {
+    // 24,517,023 micro-nats over 6 grams is 4.0861705 exactly, a tie at
+    // the sixth decimal whose nearest double lies just below it
+    def mean(ms: Seq[Long]): (Long, Double) = {
+      val r = TextModel.perDocument(ms.map(m => (1L, m)).toDF("id", "m"),
+          Seq(col("id")), "n", exp(-col("m") / 1e6))
+        .as[(Long, Long, Double)].head()
+      (r._2, r._3)
+    }
+    assert(mean(Seq.fill(3)(4086170L) ++ Seq.fill(3)(4086171L)) === ((6L, 4.086171)))
+    assert(mean(Seq.fill(4)(4086170L) ++ Seq.fill(2)(4086171L)) === ((6L, 4.08617)))
+  }
+
   test("knFivegramCrossPerplexity: in-domain text scores below shuffled gibberish") {
     val ref = Seq.tabulate(30)(i =>
       (i.toLong, "the quick brown fox jumps over the lazy dog every single day"))
