@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Banding
+
 /**
  * Audio fingerprinting for near-dup detection — the energy-difference
  * signature (the Haitsma–Kalker 2002 "audio fingerprint" SHAPE,
@@ -158,20 +160,10 @@ object AudioHash {
     }.toDF("media_id", "off", "ahash")
   }
 
-  /** The 4×6-bit banding of one sub-fingerprint frame — pigeonhole:
+  /** The 4×6-bit banding of the 24-bit sub-fingerprint — pigeonhole:
     * two codes within Hamming 3 agree exactly on ≥ 1 chunk, so the
-    * chunk equi-join proposes every qualifying segment pair. `bkey`
-    * fuses (chunk index, chunk value) into one join key: chunk
-    * position is part of the key, and a single-column key is exactly
-    * what a bucketed history scan co-locates on. Extra columns pass
-    * through. */
-  private def banded(codes: DataFrame, codeCol: String): DataFrame =
-    codes.select(col("*"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col(codeCol), i * 6).bitwiseAND(lit(0x3fL))): _*))
-        .as(Seq("chunk", "chunk_val")))
-      .withColumn("bkey", col("chunk") * lit(64L) + col("chunk_val"))
-      .drop("chunk", "chunk_val")
+    * `bkey` equi-join proposes every qualifying segment pair. */
+  private val Narrow = Banding(6, 4)
 
   /**
    * Near-dup pairs by the two-stage sub-fingerprint decision:
@@ -185,7 +177,7 @@ object AudioHash {
    * candidate (pair, delta) alignments.
    *
    * TWO CANDIDATE MODES — the recall/scale dial:
-   *  - banded (default): 4×6-bit chunk equi-join, per-segment Hamming
+   *  - banded (default): 4×6-bit `bkey` equi-join, per-segment Hamming
    *    ≤ `maxHamming`. Complete to Hamming 3 PER SEGMENT, but a 6-bit
    *    chunk collides for ~6% of random window pairs — at billions of
    *    windows the candidate volume is quadratic-ish. Right for
@@ -205,8 +197,7 @@ object AudioHash {
       minRun: Int = 5, maxAvgHam: Int = 6,
       exactCandidates: Boolean = false,
       maxCodeFreq: Int = DefaultMaxCodeFreq): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band chunking guarantees recall only to Hamming 3")
+    Narrow.requireRecall(maxHamming)
     require(minRun >= 1, "minRun must be >= 1")
     val cand =
       if (exactCandidates) {
@@ -225,17 +216,11 @@ object AudioHash {
             col("a.ahash") === col("b.ahash") && col("a.media_id") < col("b.media_id"))
           .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
             col("a.off").as("off_a"), col("b.off").as("off_b"))
-      } else {
-        val chunked = banded(codes, "ahash")
-        val a = chunked.as("a")
-        val b = chunked.as("b")
-        a.join(b,
-            col("a.bkey") === col("b.bkey") && col("a.media_id") < col("b.media_id"))
-          .filter(bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))) <= maxHamming)
+      } else
+        Narrow.nearPairs(codes, "media_id", "ahash", maxHamming)
           .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"),
             col("a.off").as("off_a"), col("b.off").as("off_b"))
           .distinct() // ≤ 4 chunks can propose the same segment pair
-      }
     val grouped = cand
       .groupBy(col("id_a"), col("id_b"), (col("off_a") - col("off_b")).as("delta"))
       .agg(count(lit(1)).as("matched"))
@@ -260,7 +245,7 @@ object AudioHash {
         col("ahash").as("__code_b")), Seq("id_b", "off_b"))
       .groupBy("id_a", "id_b", "delta", "matched")
       .agg(count(lit(1)).as("overlap"),
-        sum(bit_count(col("__code_a").bitwiseXOR(col("__code_b"))).cast("long"))
+        sum(Banding.hamming(col("__code_a"), col("__code_b")).cast("long"))
           .as("total_ham"))
       .filter(col("total_ham") <= lit(maxAvgHam) * col("overlap"))
       .select("id_a", "id_b", "delta", "matched", "overlap", "total_ham")
@@ -286,7 +271,7 @@ object AudioHash {
       storeStride: Int = BlockSamples): Unit =
     MediaIndex.write(path, thinned(codes, storeStride).select(
         col("media_id"), col("ahash").as("dhash"), col("off")),
-      MediaIndex.Banding(6, 4), buckets,
+      Narrow, buckets,
       // the stride is part of the store's IDENTITY (minRun counts
       // stored positions — a mixed-grid store would need ~stride× the
       // overlap for sparse-era clips and verdicts would silently skew),
@@ -405,10 +390,9 @@ object AudioHash {
       maxHamming: Int, minRun: Int, maxAvgHam: Int,
       exactCandidates: Boolean = false,
       maxCodeFreq: Int = DefaultMaxCodeFreq): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band chunking guarantees recall only to Hamming 3")
+    Narrow.requireRecall(maxHamming)
     val (hist, banding) = MediaIndex.bands(spark, path)
-    require(banding == MediaIndex.Banding(6, 4),
+    require(banding == Narrow,
       s"not an audio sub-fingerprint index (banding $banding)")
     val segs =
       if (exactCandidates)
@@ -439,16 +423,13 @@ object AudioHash {
                 col("dhash").as("__h_code")), "__h_code", maxCodeFreq),
             col("__b_code") === col("__h_code"))
           .select("bid", "hid", "b_off", "h_off")
-      else {
-        val h = hist.select(col("media_id").as("hid"), col("dhash").as("__h_code"),
-          col("off").as("h_off"), col("bkey"))
-        banded(batch.select(
-            col("media_id").as("bid"), col("ahash").as("__b_code"),
-            col("off").as("b_off")), "__b_code")
-          .join(h, Seq("bkey"))
-          .filter(bit_count(col("__b_code").bitwiseXOR(col("__h_code"))) <= maxHamming)
+      else
+        Narrow.probe(
+            batch.select(col("media_id").as("bid"), col("ahash").as("__b_code"),
+              col("off").as("b_off")), "__b_code",
+            hist.select(col("media_id").as("hid"), col("dhash").as("__h_code"),
+              col("off").as("h_off"), col("bkey")), "__h_code", maxHamming)
           .select("bid", "hid", "b_off", "h_off").distinct()
-      }
     val cand = segs
       .groupBy(col("bid").as("id_a"), col("hid").as("id_b"),
         (col("b_off") - col("h_off")).as("delta"))

@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Banding
+
 /**
  * Perceptual image fingerprinting — dHash (difference hash, public
  * technique: resample to a tiny luma grid, emit one bit per
@@ -10,8 +12,8 @@ import org.apache.spark.sql.functions._
  * corpus" story: re-encodes, recompressions, and light retouches of
  * the same picture produce byte-distinct payloads but near-identical
  * dHash codes, so near-dup detection reduces to Hamming distance over
- * 64-bit integers — the exact machinery the text side already runs
- * for SimHash ([[graft.operators.Dedup.simhashNearDupPairs]]).
+ * 64-bit integers — the one chunk banding ([[graft.operators.Banding]])
+ * the text side runs for SimHash ([[graft.operators.Dedup.simhashNearDupPairs]]).
  *
  * Determinism: the resample is the house nearest-neighbor kernel
  * ([[Multimodal.resizeFrame]] — pure integer index arithmetic
@@ -56,13 +58,18 @@ object ImageHash {
 
   /**
    * Near-dup pairs with Hamming distance ≤ `maxHamming` over 64-bit
-   * codes, banded: the code splits into four 16-bit chunks, and by
-   * pigeonhole two codes within Hamming 3 agree exactly on at least
-   * one chunk — so a chunk-equality join finds EVERY such pair
-   * (engine ≡ exhaustive, which is precisely what the m12 oracle
-   * checks) while candidate generation stays an equi-join on
-   * (chunk, value) buckets, never a cross join.
+   * codes, banded ([[MediaIndex.Wide]]): the code splits into four
+   * 16-bit chunks, and by pigeonhole two codes within Hamming 3 agree
+   * exactly on at least one chunk — so the `bkey` equi-join finds
+   * EVERY such pair (engine ≡ exhaustive, which is precisely what the
+   * m12 oracle checks) while candidate generation never cross-joins.
    */
+  def nearDupPairs(
+      codes: DataFrame, idCol: String, hashCol: String,
+      maxHamming: Int): DataFrame =
+    MediaIndex.Wide.hammingPairs(codes, idCol, hashCol, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
+
   /**
    * CLIP-level near-dup pairs over per-frame codes — the video form
    * of [[nearDupPairs]] (public keyframe-matching approach: two clips
@@ -78,26 +85,17 @@ object ImageHash {
    * `matched_b`); `sim` = max(matched_a/n_a, matched_b/n_b), kept
    * when ≥ `minFrac`.
    *
-   * Scale shape: candidate clip pairs come from the SAME banded
-   * frame-chunk equi-join as the image form (pigeonhole: any
-   * qualifying pair has a frame pair within Hamming 3, which shares a
-   * 16-bit chunk — so the banded engine equals the oracle's
-   * exhaustive pairing), and the verification join touches only
-   * candidate pairs' frames — clip-length-bounded, never a corpus
-   * cross join.
+   * Scale shape: candidate clip pairs are the clip pairs with at
+   * least one frame pair within `maxHamming`, from the SAME banded
+   * frame join as the image form (a pair without one has sim 0, below
+   * any `minFrac`, so the banded engine equals the oracle's exhaustive
+   * pairing), and the verification join touches only candidate pairs'
+   * frames — clip-length-bounded, never a corpus cross join.
    */
   def clipNearDupPairs(
       codes: DataFrame, maxHamming: Int, minFrac: Double): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band chunking guarantees recall only to Hamming 3")
     require(minFrac > 0.0 && minFrac <= 1.0, "minFrac must be in (0, 1]")
-    val chunked = codes.select(col("media_id"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col("dhash"), i * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("media_id", "chunk", "chunk_val")
-    val cand = chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.media_id") < col("b.media_id"))
+    val cand = MediaIndex.Wide.nearPairs(codes, "media_id", "dhash", maxHamming)
       .select(col("a.media_id").as("id_a"), col("b.media_id").as("id_b"))
       .distinct()
     val fa = codes.select(col("media_id").as("id_a"),
@@ -105,7 +103,7 @@ object ImageHash {
     val fb = codes.select(col("media_id").as("id_b"),
       col("frame_idx").as("fb"), col("dhash").as("hb"))
     val cross = cand.join(fa, Seq("id_a")).join(fb, Seq("id_b"))
-      .withColumn("ham", bit_count(col("ha").bitwiseXOR(col("hb"))))
+      .withColumn("ham", Banding.hamming(col("ha"), col("hb")))
     def matched(frameCol: String, out: String): DataFrame = cross
       .groupBy("id_a", "id_b", frameCol).agg(min(col("ham")).as("mh"))
       .groupBy("id_a", "id_b")
@@ -129,52 +127,16 @@ object ImageHash {
    * `dhash`) whose code is NOT within `maxHamming` of ANY `history`
    * code. The daily-crawl shape: yesterday's corpus is an append-only
    * code table (8 bytes/image — at 100 TB of pixels the index is
-   * GB-scale), today's batch probes it via the banded chunk
-   * equi-join, and survivors' bands are appended for tomorrow.
-   * Within-batch duplicates are deliberately untouched —
+   * GB-scale), today's batch probes it via the banded `bkey`
+   * equi-join ([[MediaIndex.probeDrops]], the probe the persisted
+   * [[MediaIndex.gate]] runs), and survivors' bands are appended for
+   * tomorrow. Within-batch duplicates are deliberately untouched —
    * [[nearDupPairs]]'s job, composed when wanted.
    */
   def incrementalNearDup(
-      batch: DataFrame, history: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band chunking guarantees recall only to Hamming 3")
-    def bandedOf(df: DataFrame, id: String): DataFrame =
-      df.select(col("media_id").as(id), col("dhash").as(s"__h_$id"),
-        posexplode(array((0 until 4).map(i =>
-          shiftright(col("dhash"), i * 16).bitwiseAND(lit(0xffffL))): _*)))
-        .toDF(id, s"__h_$id", "chunk", "chunk_val")
-    val cand = bandedOf(batch, "bid")
-      .join(bandedOf(history, "hid"), Seq("chunk", "chunk_val"))
-      .select(col("bid"), col("__h_bid"), col("hid"), col("__h_hid"))
-      .distinct()
-    val drops = cand
-      .withColumn("hamming", bit_count(col("__h_bid").bitwiseXOR(col("__h_hid"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("bid").as("media_id")).distinct()
-    batch.join(drops, Seq("media_id"), "left_anti")
-  }
-
-  def nearDupPairs(
-      codes: DataFrame, idCol: String, hashCol: String,
-      maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4-band chunking guarantees recall only to Hamming 3")
-    val chunked = codes.select(
-      col(idCol).as("id"), col(hashCol).as("code"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col(hashCol), i * 16).bitwiseAND(lit(0xffffL))): _*)))
-      .toDF("id", "code", "chunk", "chunk_val")
-    val a = chunked.as("a")
-    val b = chunked.as("b")
-    a.join(b,
-        col("a.chunk") === col("b.chunk") && col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.code").as("code_a"), col("b.code").as("code_b"))
-      .distinct()
-      .withColumn("hamming",
-        bit_count(col("code_a").bitwiseXOR(col("code_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
+      batch: DataFrame, history: DataFrame, maxHamming: Int): DataFrame =
+    batch.join(
+      MediaIndex.probeDrops(batch, MediaIndex.bandedOf(history, MediaIndex.Wide),
+        MediaIndex.Wide, maxHamming),
+      Seq("media_id"), "left_anti")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.{BucketedTables, StoreManifest}
+import graft.operators.Banding
 
 /**
  * Persisted perceptual-code ingest index — the MEDIA twin of
@@ -13,7 +14,7 @@ import graft.io.{BucketedTables, StoreManifest}
  * with the full write/gate/upsert/compact lifecycle instead of a
  * caller-managed frame. At 100 TB of pixels the index is GB-scale.
  *
- * BANDING IS PARAMETERIZED by [[Banding]] (chunk width × chunk
+ * BANDING IS PARAMETERIZED by [[graft.operators.Banding]] (chunk width × chunk
  * count): [[Wide]] = 4×16-bit for full 64-bit codes (dHash), and
  * narrower codes band at their own width — [[AudioHash]]'s 24-bit
  * sub-fingerprints use 4×6-bit. Banding a code NARROWER than the
@@ -41,33 +42,31 @@ import graft.io.{BucketedTables, StoreManifest}
  *    window offset) pass through untouched for operators that layer
  *    their own verification on [[bands]].
  *
- * Determinism: banding and verification reuse the exact chunking and
- * Hamming forms of [[ImageHash.incrementalNearDup]], so [[gate]] over
- * the persisted index is row-identical to the in-memory operator
- * against the same history codes — spec-pinned, and the m16/m17
- * oracles replay the full two-batch lifecycles in SQL.
+ * Determinism: [[gate]] and [[ImageHash.incrementalNearDup]] run one
+ * probe ([[probeDrops]]), so [[gate]] over the persisted index is
+ * row-identical to the in-memory operator against the same history
+ * codes — spec-pinned, and the m16/m17 oracles replay the full
+ * two-batch lifecycles in SQL.
  */
 object MediaIndex {
-
-  /** One banding scheme: `nChunks` chunks of `chunkBits` bits each,
-    * lowest chunk first. Pigeonhole recall holds to Hamming
-    * `nChunks − 1`. */
-  final case class Banding(chunkBits: Int, nChunks: Int) {
-    require(chunkBits >= 1 && nChunks >= 2 && chunkBits * nChunks <= 64,
-      s"banding $chunkBits×$nChunks must fit a 64-bit code")
-    def mask: Long = (1L << chunkBits) - 1
-    def maxHammingRecall: Int = nChunks - 1
-  }
 
   /** Full 64-bit codes (dHash): 4×16-bit chunks. */
   val Wide: Banding = Banding(16, 4)
 
   private[multimodal] def bandedOf(codes: DataFrame, b: Banding): DataFrame =
-    codes.select(col("*"),
-      posexplode(array((0 until b.nChunks).map(i =>
-        shiftright(col("dhash"), i * b.chunkBits).bitwiseAND(lit(b.mask))): _*))
-        .as(Seq("chunk", "chunk_val")))
-      .withColumn("bkey", col("chunk") * lit(1L << b.chunkBits) + col("chunk_val"))
+    b.banded(codes, "dhash")
+
+  /** The ids of the `batch` codes (media_id, dhash) within `maxHamming`
+    * of a code of the banded history `hist` (dhash, bkey, …): banded
+    * batch ⋈ history on `bkey`, then the Hamming filter, then the
+    * distinct drop ids — the one probe of [[gateDrops]] and
+    * [[ImageHash.incrementalNearDup]]. */
+  private[multimodal] def probeDrops(
+      batch: DataFrame, hist: DataFrame, banding: Banding, maxHamming: Int): DataFrame =
+    banding.probe(
+        batch.select(col("media_id").as("bid"), col("dhash").as("__h_bid")), "__h_bid",
+        hist.select(col("dhash").as("__h_hid"), col("bkey")), "__h_hid", maxHamming)
+      .select(col("bid").as("media_id")).distinct()
 
   /** Materialize the index for an initial corpus of `(media_id,
     * dhash, …)` codes under `banding`. A re-write on an existing path
@@ -100,8 +99,7 @@ object MediaIndex {
     * legacy chunk-partitioned layout — banding without the `bkey`
     * column, a plain parquet append — so the gate→upsert lifecycle
     * keeps working on existing indexes until a [[compact]] migrates
-    * them to the bucketed layout (the [[graft.operators.DedupIndex]]
-    * fallback discipline). */
+    * them to the bucketed layout. */
   def upsert(path: String, codes: DataFrame): Unit = {
     val spark = codes.sparkSession
     val m = StoreManifest.current(spark, path)
@@ -133,7 +131,7 @@ object MediaIndex {
       case Some(b) => BucketedTables.read(spark, dir, "bkey", "media_id", b)
       case None => // pre-r15 store: chunk-partitioned parquet, no bkey column
         spark.read.parquet(dir)
-          .withColumn("bkey", col("chunk") * lit(1L << banding.chunkBits) + col("chunk_val"))
+          .withColumn("bkey", banding.bkey(col("chunk"), col("chunk_val")))
     }
     (df, banding)
   }
@@ -161,17 +159,8 @@ object MediaIndex {
   private[graft] def gateDrops(
       spark: SparkSession, path: String, batch: DataFrame,
       maxHamming: Int): DataFrame = {
-    val (histAll, banding) = bands(spark, path)
-    require(maxHamming >= 0 && maxHamming <= banding.maxHammingRecall,
-      s"${banding.nChunks}-band chunking guarantees recall only to " +
-        s"Hamming ${banding.maxHammingRecall}")
-    val hist = histAll.select(
-      col("dhash").as("__h_hid"), col("bkey"))
-    bandedOf(batch, banding)
-      .select(col("media_id").as("bid"), col("dhash").as("__h_bid"), col("bkey"))
-      .join(hist, Seq("bkey"))
-      .filter(bit_count(col("__h_bid").bitwiseXOR(col("__h_hid"))) <= maxHamming)
-      .select(col("bid").as("media_id")).distinct()
+    val (hist, banding) = bands(spark, path)
+    probeDrops(batch, hist, banding, maxHamming)
   }
 
   /** One compaction summary from [[compact]]. */
@@ -194,8 +183,7 @@ object MediaIndex {
     val raw = compactInput(spark, s"$path/bands/v$v")
     val cur =
       if (raw.columns.contains("bkey")) raw
-      else raw.withColumn("bkey",
-        col("chunk") * lit(1L << banding.chunkBits) + col("chunk_val"))
+      else raw.withColumn("bkey", banding.bkey(col("chunk"), col("chunk_val")))
     BucketedTables.write(
       cur, s"$path/bands/v${v + 1}", "bkey", "media_id", m.getOrElse("buckets", 8))
     // the full manifest carries through (any parameterizer's extra

@@ -186,6 +186,16 @@ object Dedup {
   /** The shared exact-Jaccard pair machinery over one (id, sh) frame. */
   private def jaccardPairsFromShingles(
       sh0: DataFrame, threshold: Double): DataFrame = {
+    val (inter, sizes) = selfIntersections(sh0)
+    jaccardVerified(inter, sizes, sizes, threshold).select("id_a", "id_b", "jaccard")
+  }
+
+  /** The all-pairs shingle machinery of [[jaccardPairsFromShingles]]
+    * and [[ngramContainmentPairs]] over one (id, sh) frame: its
+    * per-doc sizes (id, n_sh) and the shared-shingle counts
+    * (id_a, id_b, n_inter) of every pair with id_a < id_b that shares
+    * a shingle. */
+  private def selfIntersections(sh0: DataFrame): (DataFrame, DataFrame) = {
     // persisted: referenced by the size aggregate AND both sides of
     // the pair join — without it the tokenize+explode+distinct
     // pipeline re-runs up to 3× (exchange reuse is not guaranteed
@@ -196,22 +206,47 @@ object Dedup {
     // would race to compute the same uncached partitions (duplicate
     // tokenize+explode+distinct runs)
     sh.count()
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val a = sh.as("a")
-    val b = sh.as("b")
-    val inter = a
-      .join(b, col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
+    val inter = sh.as("a")
+      .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+    (inter, shingleSetSizes(sh))
+  }
+
+  /** Per-doc shingle-set sizes (id, n_sh) of an (id, sh) frame. */
+  private[operators] def shingleSetSizes(sh: DataFrame): DataFrame =
+    sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+
+  /** Candidate pairs' shared-shingle counts (id_a, id_b, n_inter) with
+    * both sides' set sizes attached as n_a and n_b (size frames are
+    * (id, n_sh)). */
+  private def withSizes(inter: DataFrame, sizesA: DataFrame, sizesB: DataFrame): DataFrame =
+    inter.join(sizesA.toDF("id_a", "n_a"), "id_a").join(sizesB.toDF("id_b", "n_b"), "id_b")
+
+  /** The one exact-Jaccard verdict: the pairs of `inter` (id_a, id_b,
+    * n_inter) whose `jaccard` = round(n_inter / (n_a + n_b − n_inter),
+    * 6) reaches `threshold`, sizes looked up in `sizesA`/`sizesB`
+    * (id, n_sh). */
+  private[operators] def jaccardVerified(
+      inter: DataFrame, sizesA: DataFrame, sizesB: DataFrame, threshold: Double): DataFrame =
+    withSizes(inter, sizesA, sizesB)
       .withColumn("jaccard",
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")), 6))
       .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+
+  /** Shared-shingle counts (id_a, id_b, n_inter) of the candidate
+    * pairs `cand` (id_a, id_b), id_a's shingles from `shA` and id_b's
+    * from `shB` (both (id, sh)). The second join keys on (id_b, sh):
+    * per candidate pair this streams the intersection instead of
+    * materializing the n_a × n_b product. */
+  private def candidateIntersections(
+      cand: DataFrame, shA: DataFrame, shB: DataFrame): DataFrame =
+    cand
+      .join(shA.toDF("id_a", "sh"), "id_a")
+      .join(shB.toDF("id_b", "sh"), Seq("id_b", "sh"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_inter"))
 
   /**
    * Asymmetric n-gram CONTAINMENT pairs: `n_inter / min(|A|, |B|)` —
@@ -225,16 +260,8 @@ object Dedup {
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, n: Int, threshold: Double,
       maxShingleDf: Option[Int] = Some(1000)): DataFrame = {
-    val sh = Caches.persist(shingled(df, idCol, textCol, n, maxShingleDf))
-    sh.count() // materialize before the three-consumer fan-out
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+    val (inter, sizes) = selfIntersections(shingled(df, idCol, textCol, n, maxShingleDf))
+    withSizes(inter, sizes, sizes)
       .withColumn("containment",
         round(col("n_inter").cast("double") / least(col("n_a"), col("n_b")), 6))
       .filter(col("containment") >= threshold)
@@ -301,21 +328,27 @@ object Dedup {
   /** Candidate generation from an existing (id, sh) frame. */
   def minhashLshCandidatesFromShingles(
       sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
-    val sigs = minhashSignaturesFromShingles(sh, numHashes)
-    val banded = sigs.select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
-      .toDF("id", "band", "bucket")
-    val x = banded.as("x")
-    val y = banded.as("y")
-    x.join(y,
-        col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-          col("x.id") < col("y.id"))
+    val banded = minhashBands(sh, numHashes, bands)
+    banded.as("x")
+      .join(banded.as("y"), col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
+  }
+
+  /** The one MinHash band key: (id, band, bucket) per signature band,
+    * `bucket` = md5 of the band index and the band's `numHashes/bands`
+    * minima. The band index is part of the hash, so two docs share a
+    * bucket string iff they agree on one whole band (up to md5
+    * collision) and a candidate join keys on `bucket` alone — the one
+    * key a bucketed band table ([[DedupIndex]]) co-locates on. */
+  private[operators] def minhashBands(sh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val r = numHashes / bands
+    minhashSignaturesFromShingles(sh, numHashes).select(
+      col("id"),
+      posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => md5(concat_ws(",", b, slice(col("sig"), b * r + 1, lit(r)))))))
+      .toDF("id", "band", "bucket")
   }
 
   /** Full MinHash-LSH dedup: LSH candidates verified with exact n-gram
@@ -348,27 +381,15 @@ object Dedup {
   private def lshPairsFromShingles(
       sh0: DataFrame, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
     // one shingle scan feeds signatures, sizes and the intersection
-    // join — persist it (see ngramJaccardPairs note). Column order is
-    // normalized first: the DF-cap's semi-join puts the key column
-    // first, and the intersection join below renames POSITIONALLY.
+    // join — persist it (see selfIntersections). Column order
+    // is normalized first: the DF-cap's semi-join puts the key column
+    // first, and the intersection join renames POSITIONALLY.
     val sh = Caches.persist(sh0.select("id", "sh"))
-    sh.count() // see ngramJaccardPairs: defuse the concurrent-first-touch race
-    val cands = minhashLshCandidatesFromShingles(sh, numHashes, bands)
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    // second join keys on (id_b, sh): per candidate pair this streams the
-    // intersection instead of materializing the n_a × n_b product
-    val inter = cands
-      .join(sh.toDF("id_a", "sh"), "id_a")
-      .join(sh.toDF("id_b", "sh"), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 6))
-      .filter(col("jaccard") >= threshold)
+    sh.count() // see selfIntersections: defuse the concurrent-first-touch race
+    val sizes = shingleSetSizes(sh)
+    jaccardVerified(
+        candidateIntersections(minhashLshCandidatesFromShingles(sh, numHashes, bands), sh, sh),
+        sizes, sizes, threshold)
       .select("id_a", "id_b", "jaccard")
   }
 
@@ -395,36 +416,17 @@ object Dedup {
   def incrementalNearDupLsh(
       batch: DataFrame, history: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val shB = Caches.persist(shingled(batch, idCol, textCol, shingleN))
     val shH = Caches.persist(shingled(history, idCol, textCol, shingleN))
+    def bucketsOf(sh: DataFrame, id: String): DataFrame =
+      minhashBands(sh, numHashes, bands).select(col("id").as(id), col("bucket"))
+    val cand = bucketsOf(shB, "id_a").join(bucketsOf(shH, "id_b"), Seq("bucket"))
+      .select("id_a", "id_b").distinct()
     shB.count(); shH.count() // defuse the concurrent-first-touch race
-    def bandedOf(sh: DataFrame): DataFrame =
-      minhashSignaturesFromShingles(sh, numHashes).select(
-        col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => md5(concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
-        .toDF("id", "band", "bucket")
-    val cand = bandedOf(shB).toDF("bid", "band", "bucket")
-      .join(bandedOf(shH).toDF("hid", "band", "bucket"), Seq("band", "bucket"))
-      .select("bid", "hid").distinct()
-    val szB = shB.groupBy("id").agg(count(lit(1)).as("n_a"))
-      .withColumnRenamed("id", "bid")
-    val szH = shH.groupBy("id").agg(count(lit(1)).as("n_b"))
-      .withColumnRenamed("id", "hid")
-    // keyed on (hid, sh): streams the intersection per candidate pair
-    val inter = cand
-      .join(shB.toDF("bid", "sh"), "bid")
-      .join(shH.toDF("hid", "sh"), Seq("hid", "sh"))
-      .groupBy("bid", "hid")
-      .agg(count(lit(1)).as("n_inter"))
-    val drops = Caches.persist(inter.join(szB, "bid").join(szH, "hid")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("bid").as(idCol)).distinct())
+    val drops = Caches.persist(
+      jaccardVerified(candidateIntersections(cand, shB, shH),
+          shingleSetSizes(shB), shingleSetSizes(shH), threshold)
+        .select(col("id_a").as(idCol)).distinct())
     // materialize the (small: drop-ids only) verdict; it and the two
     // shingle caches live until the caller's scope ends, so a
     // foreachBatch ingestion loop opens one scope per batch
@@ -444,34 +446,17 @@ object Dedup {
         .as("simhash"))
 
   /**
-   * SimHash near-dup pairs with Hamming distance ≤ maxHamming
-   * (maxHamming ≤ 3 with 4 bands, by pigeonhole: two signatures within
-   * Hamming 3 of each other agree exactly on at least one of the four
-   * 15-bit chunks, so a chunk-equality join finds every such pair).
+   * SimHash near-dup pairs with Hamming distance ≤ maxHamming: the
+   * 60-bit signature bands into four 15-bit chunks ([[Banding]]), so
+   * by pigeonhole the chunk join finds every pair within Hamming 3.
    */
   def simhashNearDupPairs(
-      df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame = {
-    require(maxHamming <= 3, "4-band chunking guarantees recall only to Hamming 3")
-    val sigs = simhashSignatures(df, idCol, textCol)
-    val chunked = sigs.select(
-      col("id"), col("simhash"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col("simhash"), i * 15).bitwiseAND(lit(0x7fffL))): _*)))
-      .toDF("id", "simhash", "chunk", "chunk_val")
-    val a = chunked.as("a")
-    val b = chunked.as("b")
-    a.join(b,
-        col("a.chunk") === col("b.chunk") && col("a.chunk_val") === col("b.chunk_val") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.simhash").as("sig_a"), col("b.simhash").as("sig_b"))
-      .distinct()
-      // built-in bit_count(xor) — codegen'd, no UDF
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
+      df: DataFrame, idCol: String, textCol: String, maxHamming: Int): DataFrame =
+    SimhashBanding.hammingPairs(
+      simhashSignatures(df, idCol, textCol), "id", "simhash", maxHamming)
+
+  /** 4×15-bit chunks: the whole 60-bit SimHash. */
+  private val SimhashBanding = Banding(15, 4)
 
   /**
    * Embedding near-dup pairs, brute force: all pairs with cosine ≥

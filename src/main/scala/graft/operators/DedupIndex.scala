@@ -22,14 +22,15 @@ import graft.util.Caches
  * rewrite all tables and publish them atomically):
  *  - `bands/v<N>/` — (id, band, bucket) written as a BUCKETED table
  *    hash-partitioned on `bucket`, where the bucket string is
- *    `md5(band, slice…)` — the band INDEX is part of the hash
- *    (manifest `band_enc=2`), so the batch probe is a SINGLE-KEY join
+ *    `md5(band, slice…)` ([[Dedup.minhashBands]], the one MinHash
+ *    band key) — the band INDEX is part of the hash (manifest
+ *    `band_enc=2`), so the batch probe is a SINGLE-KEY join
  *    on `bucket` and the history band scan is consumed with ZERO
  *    exchange (V1 bucketed joins co-locate only on the exact bucket
  *    column; a band-equality residual does not survive Catalyst — it
  *    folds back into the join keys and disables the bucketed scan).
- *    Candidate set identical to the (band, bucket) equi-join: same
- *    bucket string ⟺ same band and same slice content;
+ *    Same bucket string ⟺ same band and same slice content (up to
+ *    md5 collision);
  *  - `shingles/v<N>/` — (id, sh): the verification side, written as a
  *    BUCKETED table (hash-bucketed by `sh`, sorted by `id` inside each
  *    bucket file; bucket count in the manifest, catalog entry
@@ -45,10 +46,14 @@ import graft.util.Caches
  *    a candidate-bounded lookup, NEVER a re-aggregation of the full
  *    history shingle table (the r13 scale finding).
  *
- * Determinism: banding and verification reuse the EXACT public
- * kernels of [[Dedup]] ([[Dedup.shingled]],
- * [[Dedup.minhashSignaturesFromShingles]], the band-md5 form), so
- * [[gate]] over the persisted index is row-identical to
+ * Every store is in this one layout: [[write]] records the table
+ * versions, `buckets`/`band_buckets`, `band_enc=2`, the shingle unit
+ * and the grid, and an operation on a store whose manifest lacks one
+ * of those keys fails at once, naming it.
+ *
+ * Determinism: banding and verification are [[Dedup]]'s own kernels
+ * ([[Dedup.shingled]], the one MinHash band key, the one exact-Jaccard
+ * verifier), so [[gate]] over the persisted index is row-identical to
  * [[Dedup.incrementalNearDupLsh]] against the same history corpus —
  * spec-pinned, and the t65 oracle replays the full two-batch
  * lifecycle in SQL.
@@ -61,36 +66,22 @@ object DedupIndex {
     * idiom of [[Dedup.connectedComponents]]. */
   private val MaxDriverHids = 50000
 
-  /** The banded-bucket table of a (already shingled) corpus. With
-    * `encodeBand` (the r15 store layout, manifest `band_enc=2`) the
-    * BAND INDEX is baked into the md5 — `md5(band, slice…)` — so a
-    * candidate needs the same band AND content to share a bucket
-    * string and the probe can join on `bucket` ALONE: the single-key
-    * join is what lets the bucketed history scan co-locate (a
-    * residual band-equality filter does NOT survive Catalyst — the
-    * optimizer folds it back into the join keys, the two-key join no
-    * longer matches the bucket spec, and the planner disables the
-    * bucketed scan; caught by the plan audit on the real probe).
-    * Without it, the plain content-md5 of
-    * [[Dedup.incrementalNearDupLsh]]'s inline form (pre-r15 stores). */
-  private def bandedOf(
-      sh: DataFrame, numHashes: Int, bands: Int,
-      encodeBand: Boolean = true): DataFrame = {
-    val r = numHashes / bands
-    Dedup.minhashSignaturesFromShingles(sh, numHashes).select(
-      col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b =>
-          if (encodeBand) md5(concat_ws(",", b, slice(col("sig"), b * r + 1, lit(r))))
-          else md5(concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
-      .toDF("id", "band", "bucket")
-  }
+  /** The manifest keys of the one store layout, all written by [[write]]
+    * and carried by [[compact]]. */
+  private val LayoutKeys = Seq("bands", "shingles", "sizes", "buckets", "band_buckets",
+    "band_enc", "char_shingles", "shingle_n", "num_hashes", "bands_n")
 
-  /** Per-doc shingle-set sizes of one (already shingled) batch — rows
-    * = docs, not shingles; the aggregation is paid ONCE at
-    * write/upsert time, never re-paid per gate. */
-  private def sizesOf(sh: DataFrame): DataFrame =
-    sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
+  /** The current snapshot of the store at `path`, checked to be in the
+    * layout [[write]] produces. */
+  private def manifest(spark: SparkSession, path: String): Map[String, Int] = {
+    val m = StoreManifest.current(spark, path)
+    for (k <- LayoutKeys) require(m.contains(k),
+      s"DedupIndex store at $path has no `$k` in its manifest: not a store in the " +
+        "layout DedupIndex.write produces; re-write it")
+    require(m("band_enc") == 2,
+      s"DedupIndex store at $path has band_enc=${m("band_enc")}, not 2; re-write it")
+    m
+  }
 
   /** Write one shingle-table version BUCKETED by `sh` — the steady-
     * state join key — sorted by `id` within each bucket file (tight
@@ -105,10 +96,6 @@ object DedupIndex {
       spark: SparkSession, path: String, v: Int, buckets: Int): DataFrame =
     graft.io.BucketedTables.read(spark, s"$path/shingles/v$v", "sh", "id", buckets)
 
-  /** Materialize the index for an initial corpus. A re-write on an
-    * existing path publishes FRESH versions (readers on the old
-    * snapshot are undisturbed until the commit; superseded dirs are
-    * dropped post-commit with the grace window). */
   /** The store's shingle unit, chosen at [[write]] time and recorded
     * in the manifest (`char_shingles`) so upserts and gates can never
     * probe a store with the OTHER unit's shingles (the AudioHash
@@ -122,30 +109,31 @@ object DedupIndex {
     if (char) Dedup.charShingled(df, idCol, textCol, n)
     else Dedup.shingled(df, idCol, textCol, n)
 
-  private def charOf(m: Map[String, Int]): Boolean =
-    m.get("char_shingles").contains(1)
-
-  /** Grid-parameter guard: the r17 manifest discipline records the
-    * shingle UNIT so a store can't silently mix word- and char-gram
-    * grids; `shingle_n`/`num_hashes`/`bands` are the same hazard class
-    * (a differing upsert-time gram size appends shingles on an
+  /** Grid-parameter guard: the manifest records the shingle UNIT so a
+    * store can't silently mix word- and char-gram grids;
+    * `shingle_n`/`num_hashes`/`bands` are the same hazard class (a
+    * differing upsert-time gram size appends shingles on an
     * incompatible grid, a differing band count derives signatures that
     * never collide with the stored buckets — nothing fails loudly, the
     * gate just stops catching duplicates). Recorded at [[write]],
-    * REQUIRED to match on every [[upsert]]/[[gate]]; legacy stores
-    * written before the keys existed accept any caller value (the
-    * `char_shingles` getOrElse discipline). */
-  private def requireGrid(
-      m: Map[String, Int], shingleN: Int, numHashes: Int, bands: Int): Unit =
-    // (`bands_n`: the `bands` manifest key already names the banded
-    // TABLE's version — table-version keys are positional in the
-    // StoreKit layout)
+    * REQUIRED to match on every [[upsert]]/[[gate]]/[[ingest]].
+    * (`bands_n`: the `bands` manifest key already names the banded
+    * TABLE's version — table-version keys are positional in the
+    * StoreKit layout.) */
+  private def gridManifest(
+      spark: SparkSession, path: String,
+      shingleN: Int, numHashes: Int, bands: Int): Map[String, Int] = {
+    val m = manifest(spark, path)
     Seq("shingle_n" -> shingleN, "num_hashes" -> numHashes, "bands_n" -> bands)
-      .foreach { case (k, v) =>
-        m.get(k).foreach(stored => require(stored == v,
-          s"DedupIndex grid mismatch: store was written with $k=$stored, caller passed $v"))
-      }
+      .foreach { case (k, v) => require(m(k) == v,
+        s"DedupIndex grid mismatch: store was written with $k=${m(k)}, caller passed $v") }
+    m
+  }
 
+  /** Materialize the index for an initial corpus. A re-write on an
+    * existing path publishes FRESH versions (readers on the old
+    * snapshot are undisturbed until the commit; superseded dirs are
+    * dropped post-commit with the grace window). */
   def write(
       path: String, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, buckets: Int = 8,
@@ -161,10 +149,10 @@ object DedupIndex {
     // of three sequential write latencies per store build
     writeShingles(sh, path, sv, buckets)
     graft.util.Jobs.inParallel(Seq(
-      () => sizesOf(sh).coalesce(1).write.mode("overwrite")
+      () => Dedup.shingleSetSizes(sh).coalesce(1).write.mode("overwrite")
         .parquet(s"$path/sizes/v$zv"),
-      () => graft.io.BucketedTables.write(
-        bandedOf(sh, numHashes, bands), s"$path/bands/v$bv", "bucket", "id", buckets)))
+      () => graft.io.BucketedTables.write(Dedup.minhashBands(sh, numHashes, bands),
+        s"$path/bands/v$bv", "bucket", "id", buckets)))
     StoreManifest.commit(spark, path,
       Map("bands" -> bv, "shingles" -> sv, "sizes" -> zv,
         "buckets" -> buckets, "band_buckets" -> buckets, "band_enc" -> 2,
@@ -184,29 +172,26 @@ object DedupIndex {
   def upsert(
       path: String, docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int): Unit = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val spark = docs.sparkSession
-    val m = StoreManifest.current(spark, path)
-    requireGrid(m, shingleN, numHashes, bands)
+    val m = gridManifest(docs.sparkSession, path, shingleN, numHashes, bands)
     // the shingle UNIT comes from the store's own manifest — an
     // upsert can never silently mix word- and char-shingled grids
-    val sh = Caches.persist(shinglesOf(docs, idCol, textCol, shingleN, charOf(m)))
-    // first append materializes the sh cache; sizes + bands appends
-    // then overlap (different directories — see [[write]]'s note)
+    append(path, m,
+      Caches.persist(shinglesOf(docs, idCol, textCol, shingleN, m("char_shingles") == 1)))
+  }
+
+  /** Append one persisted (id, sh) frame's shingles, sizes and bands to
+    * the snapshot `m` — the one append of [[upsert]] and [[ingest]].
+    * The first append materializes the `sh` cache; the sizes and bands
+    * appends then overlap (different directories — [[write]]'s note). */
+  private def append(path: String, m: Map[String, Int], sh: DataFrame): Unit = {
     graft.io.BucketedTables.append(
       sh, s"$path/shingles/v${m("shingles")}", "sh", "id", m("buckets"))
-    val banded = bandedOf(sh, numHashes, bands,
-      encodeBand = m.get("band_enc").contains(2))
     graft.util.Jobs.inParallel(Seq(
-      () => sizesOf(sh).coalesce(1).write.mode("append")
+      () => Dedup.shingleSetSizes(sh).coalesce(1).write.mode("append")
         .parquet(s"$path/sizes/v${m("sizes")}"),
-      () => m.get("band_buckets") match {
-        case Some(bb) => graft.io.BucketedTables.append(
-          banded, s"$path/bands/v${m("bands")}", "bucket", "id", bb)
-        case None => // pre-r15 store: band-partitioned plain parquet
-          banded.write.mode("append").partitionBy("band")
-            .parquet(s"$path/bands/v${m("bands")}")
-      }))
+      () => graft.io.BucketedTables.append(
+        Dedup.minhashBands(sh, m("num_hashes"), m("bands_n")),
+        s"$path/bands/v${m("bands")}", "bucket", "id", m("band_buckets"))))
   }
 
   /**
@@ -256,68 +241,41 @@ object DedupIndex {
       spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, threshold: Double): DataFrame = {
-    val m = StoreManifest.current(spark, path)
+    val m = gridManifest(spark, path, shingleN, numHashes, bands)
     val (dropsF, shB) = gatePartsWithShingles(
-      spark, path, m, batch, idCol, textCol, shingleN, numHashes, bands, threshold)
+      spark, path, m, batch, idCol, textCol, shingleN, threshold)
     val surv = graft.io.StoreKit.snapshotStableSurvivors(batch, idCol, dropsF)
     // survivor shingles = the gate's cached frame, id-filtered (the
     // checkpoint above froze the survivor set, so the semi-join is
     // snapshot-stable too)
-    val shSurv = Caches.persist(shB.join(
-        surv.select(col(idCol).as("id")), Seq("id"), "left_semi"))
-    // first append materializes the shSurv cache; sizes + bands
-    // appends then overlap (different directories — [[write]]'s note)
-    graft.io.BucketedTables.append(
-      shSurv, s"$path/shingles/v${m("shingles")}", "sh", "id", m("buckets"))
-    val banded = bandedOf(shSurv, numHashes, bands,
-      encodeBand = m.get("band_enc").contains(2))
-    graft.util.Jobs.inParallel(Seq(
-      () => sizesOf(shSurv).coalesce(1).write.mode("append")
-        .parquet(s"$path/sizes/v${m("sizes")}"),
-      () => m.get("band_buckets") match {
-        case Some(bb) => graft.io.BucketedTables.append(
-          banded, s"$path/bands/v${m("bands")}", "bucket", "id", bb)
-        case None => banded.write.mode("append").partitionBy("band")
-          .parquet(s"$path/bands/v${m("bands")}")
-      }))
+    append(path, m, Caches.persist(shB.join(
+      surv.select(col(idCol).as("id")), Seq("id"), "left_semi")))
     surv
   }
 
-  /** The candidate probe join of one gate. r15 stores (`band_enc=2`)
-    * carry the band index INSIDE the bucket md5, so the probe is a
+  /** The candidate probe join of one gate: the band index is INSIDE
+    * the bucket md5 ([[Dedup.minhashBands]]), so the probe is a
     * single-key join on `bucket` — exactly the bucket column, which is
-    * what lets the bucketed history scan co-locate with ZERO exchange
-    * (identical candidate set: same bucket string ⟺ same band and
-    * same slice content, up to md5 collision). Pre-r15 stores keep
-    * the original (band, bucket) two-key join — correct, just
-    * shuffling. Split out pre-persist so the plan audit inspects the
-    * REAL probe plan. */
-  private[graft] def candProbe(
-      histBands: DataFrame, batchBands: DataFrame, bandInBucket: Boolean): DataFrame = {
-    val b = batchBands.toDF("bid", "band", "bucket")
-    (if (bandInBucket) b.join(histBands.drop("hband"), Seq("bucket"))
-     else b.join(histBands, Seq("bucket")).filter(col("band") === col("hband")))
+    * what lets the bucketed history scan co-locate with ZERO exchange.
+    * Split out pre-persist so the plan audit inspects the REAL probe
+    * plan. */
+  private[graft] def candProbe(histBands: DataFrame, batchBands: DataFrame): DataFrame =
+    batchBands.toDF("bid", "band", "bucket").join(histBands, Seq("bucket"))
       .select("bid", "hid").distinct()
-  }
 
-  /** The band table of one committed snapshot `m`, renamed for
-    * [[candProbe]] — bucketed read when the store has the r15 layout. */
+  /** The bucketed band table of one committed snapshot `m`, as
+    * (hid, bucket) for [[candProbe]]. */
   private[graft] def histBandsFrame(
       spark: SparkSession, path: String, m: Map[String, Int]): DataFrame =
-    (m.get("band_buckets") match {
-      case Some(bb) => graft.io.BucketedTables.read(
-        spark, s"$path/bands/v${m("bands")}", "bucket", "id", bb)
-      case None => // pre-r15 store: band-partitioned plain parquet
-        spark.read.parquet(s"$path/bands/v${m("bands")}")
-    }).select(col("id").as("hid"), col("band").as("hband"), col("bucket"))
+    graft.io.BucketedTables.read(
+        spark, s"$path/bands/v${m("bands")}", "bucket", "id", m("band_buckets"))
+      .select(col("id").as("hid"), col("bucket"))
 
   /** The batch's banded buckets, shaped for [[candProbe]]. */
   private[graft] def batchBandsFrame(
       batch: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int,
-      encodeBand: Boolean = true): DataFrame =
-    bandedOf(Dedup.shingled(batch, idCol, textCol, shingleN), numHashes, bands,
-      encodeBand)
+      shingleN: Int, numHashes: Int, bands: Int): DataFrame =
+    Dedup.minhashBands(Dedup.shingled(batch, idCol, textCol, shingleN), numHashes, bands)
 
   /** The drop-id frame of one [[gate]] call BEFORE the checkpoint —
     * split out so the plan audit can inspect the physical plan of the
@@ -328,9 +286,9 @@ object DedupIndex {
       idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int,
       threshold: Double): DataFrame = {
-    val m = StoreManifest.current(spark, path) // ONE snapshot per gate
-    gatePartsWithShingles(
-      spark, path, m, batch, idCol, textCol, shingleN, numHashes, bands, threshold)._1
+    // ONE snapshot per gate
+    val m = gridManifest(spark, path, shingleN, numHashes, bands)
+    gatePartsWithShingles(spark, path, m, batch, idCol, textCol, shingleN, threshold)._1
   }
 
   /** [[gateParts]] against an already-resolved manifest snapshot,
@@ -339,22 +297,14 @@ object DedupIndex {
     * re-shingling. */
   private def gatePartsWithShingles(
       spark: SparkSession, path: String, m: Map[String, Int], batch: DataFrame,
-      idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int,
+      idCol: String, textCol: String, shingleN: Int,
       threshold: Double): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    requireGrid(m, shingleN, numHashes, bands)
-    val histBands = histBandsFrame(spark, path, m)
-    val histShFull = m.get("buckets") match {
-      case Some(b) => shinglesTable(spark, path, m("shingles"), b).toDF("hid", "sh")
-      case None => // pre-r14 store: plain parquet, no bucket metadata
-        spark.read.parquet(s"$path/shingles/v${m("shingles")}").toDF("hid", "sh")
-    }
     // batch shingles take the STORE's recorded unit (word vs char)
-    val shB = Caches.persist(shinglesOf(batch, idCol, textCol, shingleN, charOf(m)))
+    val shB = Caches.persist(
+      shinglesOf(batch, idCol, textCol, shingleN, m("char_shingles") == 1))
     shB.count()
-    val enc2 = m.get("band_enc").contains(2)
-    val cand = Caches.persist(candProbe(histBands, bandedOf(shB, numHashes, bands, enc2), enc2))
+    val cand = Caches.persist(candProbe(histBandsFrame(spark, path, m),
+      Dedup.minhashBands(shB, m("num_hashes"), m("bands_n"))))
     // limit-probed hybrid: candidate id sets are batch-neighborhood-
     // sized in steady state — collect them and let the parquet reader
     // prune history row groups; fall back to a distributed semi-join
@@ -365,14 +315,10 @@ object DedupIndex {
       if (probed.length <= MaxDriverHids)
         history.filter(col("hid").isin(probed.toIndexedSeq: _*))
       else history.join(candHids, Seq("hid"), "left_semi")
-    val histSh = pruneToCandidates(histShFull)
-    val szB = sizesOf(shB).toDF("bid", "n_a")
-    val szH = pruneToCandidates(m.get("sizes") match {
-      case Some(zv) =>
-        spark.read.parquet(s"$path/sizes/v$zv").toDF("hid", "n_b")
-      case None => // pre-r14 store: one-off recount (the old behavior)
-        histShFull.groupBy("hid").agg(count(lit(1)).as("n_b"))
-    })
+    val histSh = pruneToCandidates(
+      shinglesTable(spark, path, m("shingles"), m("buckets")).toDF("hid", "sh"))
+    val szH = pruneToCandidates(
+      spark.read.parquet(s"$path/sizes/v${m("sizes")}").toDF("hid", "n_sh"))
     // intersection counts via a join on `sh` ALONE — the bucket key —
     // so the bucketed history scan is consumed with NO exchange (V1
     // bucketed joins co-locate only when the join keys equal the
@@ -392,14 +338,10 @@ object DedupIndex {
       .join(cand.select("bid").distinct(), Seq("bid"), "left_semi")
       .join(histSh, Seq("sh"))
       .join(cand, Seq("bid", "hid"), "left_semi")
-      .groupBy("bid", "hid")
+      .groupBy(col("bid").as("id_a"), col("hid").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val drops = inter.join(szB, "bid").join(szH, "hid")
-      .withColumn("jaccard",
-        round(col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("bid").as(idCol)).distinct()
+    val drops = Dedup.jaccardVerified(inter, Dedup.shingleSetSizes(shB), szH, threshold)
+      .select(col("id_a").as(idCol)).distinct()
     (drops, shB)
   }
 
@@ -416,33 +358,23 @@ object DedupIndex {
   def compact(spark: SparkSession, path: String): CompactReport = {
     import graft.io.StoreKit.{compactInput, parquetFileCount}
     def files(dir: String): Long = parquetFileCount(spark, dir)
-    val cur = StoreManifest.current(spark, path)
-    val (bv, sv) = (cur("bands"), cur("shingles"))
-    val zv = cur.getOrElse("sizes", 0)
-    val buckets = cur.getOrElse("buckets", 8)
+    val cur = manifest(spark, path)
+    val (bv, sv, zv) = (cur("bands"), cur("shingles"), cur("sizes"))
     val bBefore = files(s"$path/bands/v$bv")
     val sBefore = files(s"$path/shingles/v$sv")
     // plain-parquet rewrite inputs (see StoreKit.compactInput)
-    val bandsCur = compactInput(spark, s"$path/bands/v$bv")
-    graft.io.BucketedTables.write(
-      bandsCur, s"$path/bands/v${bv + 1}", "bucket", "id", buckets)
+    graft.io.BucketedTables.write(compactInput(spark, s"$path/bands/v$bv"),
+      s"$path/bands/v${bv + 1}", "bucket", "id", cur("band_buckets"))
     val shCur = compactInput(spark, s"$path/shingles/v$sv")
-    writeShingles(shCur, path, sv + 1, buckets)
-    // sizes: recompute from the compacted shingles (a pre-r14 store
-    // gains its sizes table here; appends collapse to one file)
-    sizesOf(shCur.toDF("id", "sh")).coalesce(1)
+    writeShingles(shCur, path, sv + 1, cur("buckets"))
+    // sizes: recounted from the compacted shingles (appends collapse
+    // to one file)
+    Dedup.shingleSetSizes(shCur.toDF("id", "sh")).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/sizes/v${zv + 1}")
+    // the shingle unit and grid parameters are part of the store's
+    // identity: every key but the table versions carries through
     StoreManifest.commit(spark, path,
-      Map("bands" -> (bv + 1), "shingles" -> (sv + 1),
-        "sizes" -> (zv + 1), "buckets" -> buckets, "band_buckets" -> buckets,
-        "band_enc" -> cur.getOrElse("band_enc", 1),
-        // the shingle unit and grid parameters are part of the store's
-        // identity — carried through compaction like the banding
-        // encoding (absent on legacy stores: carry the absence, don't
-        // invent values)
-        "char_shingles" -> cur.getOrElse("char_shingles", 0))
-        ++ Seq("shingle_n", "num_hashes", "bands_n")
-          .flatMap(k => cur.get(k).map(k -> _)).toMap)
+      cur ++ Map("bands" -> (bv + 1), "shingles" -> (sv + 1), "sizes" -> (zv + 1)))
     Seq("bands" -> (bv + 1), "shingles" -> (sv + 1), "sizes" -> (zv + 1))
       .foreach { case (t, v) => graft.io.StoreKit.reclaim(spark, path, t, v) }
     CompactReport(bBefore, files(s"$path/bands/v${bv + 1}"),

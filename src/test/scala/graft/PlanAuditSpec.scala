@@ -860,8 +860,7 @@ class PlanAuditSpec extends AnyFunSuite {
           graft.operators.DedupIndex.histBandsFrame(spark, dPath,
             graft.io.StoreManifest.current(spark, dPath)),
           graft.operators.DedupIndex.batchBandsFrame(
-            docs.filter(col("doc_id") % 10 >= 6), "doc_id", "text", 3, 12, 4),
-          bandInBucket = true),
+            docs.filter(col("doc_id") % 10 >= 6), "doc_id", "text", 3, 12, 4)),
         "t65 dedup band probe")
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)

@@ -238,4 +238,27 @@ class DedupIndexSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("no committed manifest"))
   }
+
+  test("a store not in the current layout fails at once, naming the missing manifest key") {
+    import graft.io.StoreManifest
+    val path = Files.createTempDirectory("graft_dedupidx_layout").toString
+    DedupIndex.write(path, hist, "doc_id", "text", 3, 12, 4)
+    val current = StoreManifest.current(spark, path)
+    val ops: Seq[(String, () => Any)] = Seq(
+      "gate" -> (() => DedupIndex.gate(spark, path, bA, "doc_id", "text", 3, 12, 4, 0.5)),
+      "upsert" -> (() => DedupIndex.upsert(path, bA, "doc_id", "text", 3, 12, 4)),
+      "ingest" -> (() => DedupIndex.ingest(spark, path, bA, "doc_id", "text", 3, 12, 4, 0.5)),
+      "compact" -> (() => DedupIndex.compact(spark, path)))
+    for (key <- Seq("band_enc", "buckets", "sizes")) {
+      StoreManifest.commit(spark, path, current - key)
+      for ((op, run) <- ops) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"`$key`"), s"$op without $key: ${e.getMessage}")
+      }
+    }
+    // nothing was written: the current layout reads as before
+    StoreManifest.commit(spark, path, current)
+    assert(ids(DedupIndex.gate(spark, path, bA, "doc_id", "text", 3, 12, 4, 0.5)) ===
+      ids(Dedup.incrementalNearDupLsh(bA, hist, "doc_id", "text", 3, 12, 4, 0.5)))
+  }
 }
